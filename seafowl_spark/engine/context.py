@@ -3,8 +3,9 @@ catalog and deltalite storage.
 
 Query lifecycle mirrors the reference (SURVEY.md §3.1): per statement we
 (a) refresh the visible catalog into temp views (reference reload_schema,
-src/context/mod.rs:89-112 — cheap here because temp views are plan
-aliases), (b) rewrite time-travel sugar, (c) hand reads to `spark.sql`
+src/context/mod.rs:89-112 — every table's log is read, but only names
+whose version moved are rebound; see engine/bindings.py), (b) rewrite
+time-travel sugar, (c) hand reads to `spark.sql`
 (Catalyst = DataFusion's role), and (d) interpret DDL/DML ourselves,
 eagerly, returning row-count style results (reference executes DML during
 physical planning, physical.rs:68-73).
@@ -28,7 +29,7 @@ from hashlib import sha256
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
 
-from . import parser
+from . import bindings, parser
 from .catalog import (
     DEFAULT_DB,
     DEFAULT_SCHEMA,
@@ -38,8 +39,8 @@ from .catalog import (
     CatalogError,
     TableEntry,
 )
-from .deltalite import DeltaLiteTable, DeltaLiteError
-from .types import columns_to_schema
+from .deltalite import DeltaLiteTable, DeltaLiteError, Snapshot
+from .types import columns_to_schema, to_ddl
 
 
 class ExecutionError(Exception):
@@ -160,10 +161,11 @@ class SeafowlContext:
         self.catalog = Catalog(catalog_path or os.path.join(self.data_dir, "catalog.sqlite"))
         self.database = DEFAULT_DB
         self.search_schema = DEFAULT_SCHEMA
-        # per-reload snapshot properties (uuid -> dict): lets
-        # information_schema surface constraints without replaying every
-        # table's log a second time per statement
-        self._props_cache: dict = {}
+        # per-reload (entry, snapshot) by table uuid, in catalog order:
+        # information_schema, system tables and scan pruning read
+        # properties and file lists without replaying every table's log a
+        # second time per statement
+        self._snaps: dict[str, tuple[TableEntry, Snapshot]] = {}
         # per-reload snapshot fingerprints for indexed tables (avoids a
         # second full log replay per statement in system.search_indexes)
         self._snap_fp_cache: dict = {}
@@ -176,7 +178,8 @@ class SeafowlContext:
         # source specs for staging tables that support time travel
         # (iceberg: re-resolvable at any snapshot)
         self.staging_specs: dict[str, tuple[str, str, dict]] = {}
-        self._registered_views: set[str] = set()
+        # system/information_schema names not yet built this reload
+        self._lazy_views: dict = {}
         # Statement execution is serialized: the threaded frontends share one
         # context, and view refresh / search-path / catalog writes are shared
         # state. Heavy work stays parallel — execute() only ANALYZES (plans
@@ -263,7 +266,7 @@ class SeafowlContext:
 
         mv_rows = []
         for e in self.catalog.tables(self.database):
-            props = self._props_cache.get(e.uuid)
+            props = self._cached_props(e.uuid)
             if props is None:
                 t = DeltaLiteTable(self.spark, self.table_root(e))
                 props = t.snapshot().properties if t.exists() else {}
@@ -322,7 +325,7 @@ class SeafowlContext:
 
         si_rows = []
         for e in self.catalog.tables(self.database):
-            props = self._props_cache.get(e.uuid)
+            props = self._cached_props(e.uuid)
             t = None
             if props is None:
                 t = DeltaLiteTable(self.spark, self.table_root(e))
@@ -386,6 +389,11 @@ class SeafowlContext:
             "search_indexes": self.spark.createDataFrame(si_rows, si_schema),
         }
 
+    def _cached_props(self, uuid: str) -> dict | None:
+        """The table's properties as this statement's reload read them."""
+        hit = self._snaps.get(uuid)
+        return hit[1].properties if hit else None
+
     def _information_schema(self) -> dict[str, DataFrame]:
         """information_schema.{tables,columns} over the metastore (A20; the
         reference inherits DataFusion's information_schema provider)."""
@@ -397,7 +405,7 @@ class SeafowlContext:
                 table_name=e.name,
                 table_type=(
                     "VIEW"
-                    if (self._props_cache.get(e.uuid) or {}).get(VIEW_PROP)
+                    if (self._cached_props(e.uuid) or {}).get(VIEW_PROP)
                     else "BASE TABLE"
                 ),
             )
@@ -426,9 +434,8 @@ class SeafowlContext:
         # per table per statement
         tc_rows, cc_rows = [], []
         for e in entries:
-            if e.uuid in self._props_cache:
-                props = self._props_cache[e.uuid]
-            else:
+            props = self._cached_props(e.uuid)
+            if props is None:
                 try:
                     props = DeltaLiteTable(
                         self.spark, self.table_root(e)
@@ -479,21 +486,33 @@ class SeafowlContext:
         }
 
     def reload_views(self) -> dict[str, str]:
-        """Register every visible table as temp view(s); returns the mapping
-        qualified-name -> view-name used for query rewriting.
+        """Bind every visible catalog name to a temp view; returns the
+        mapping qualified-name -> view-name used for query rewriting.
 
-        Views registered on a previous reload that are no longer visible
-        (dropped tables, database switch) are deregistered — the same
-        always-fresh-catalog semantics as the reference's reload_schema.
+        Every table's log is read on every statement, so freshness is the
+        reference's always-fresh reload_schema (src/context/mod.rs:89-112),
+        writers in other processes included. The Spark side is NOT redone
+        per statement: the session's binding registry (engine/bindings.py)
+        keys each name by what it holds, and to_df, temp-view registration
+        and view re-analysis run only for names whose key moved — a table
+        whose snapshot version moved, a view whose own version, rewritten
+        SQL or any dependency's key moved. Names no longer visible
+        (dropped tables, database switch, rename) are unbound.
         """
+        reg = bindings.for_session(self.spark)
+        with reg.lock:
+            return self._reload_views(reg)
+
+    def _reload_views(self, reg: bindings.Bindings) -> dict[str, str]:
         mapping: dict[str, str] = {}
-        self._props_cache = {}
         self._snap_fp_cache = {}
-        # logical views register AFTER every table/staging/system name is
-        # in the mapping (their defining queries may reference any of
-        # them); catalog order = creation order, so a view over an
-        # earlier view expands too
-        deferred_views: list[tuple[TableEntry, str, str, str | None]] = []
+        self._snaps = {}
+        # logical views bind AFTER every table/staging/system name is in
+        # the mapping (their defining queries may reference any of them)
+        deferred_views: list[tuple[str, int, str, str, str | None]] = []
+        # lower-cased names this reload keeps bound; reload-owned names
+        # outside it are stale
+        visible: set[str] = set()
         entries = self.catalog.tables(self.database)
         # case-fold sibling groups: when "Foo" and "foo" both exist, only
         # the exact-lowercase one may own the bare temp-view name (the
@@ -511,18 +530,16 @@ class SeafowlContext:
             )
 
         for e in entries:
-            t = DeltaLiteTable(self.spark, self.table_root(e))
+            root = os.path.abspath(self.table_root(e))
+            t = DeltaLiteTable(self.spark, root)
             snap = t.snapshot()
-            self._props_cache[e.uuid] = snap.properties
+            self._snaps[e.uuid] = (e, snap)
             if (snap.properties or {}).get("search_indexes"):
                 from .search_index import snapshot_fp as _sfp
 
                 self._snap_fp_cache[e.uuid] = _sfp(snap)
             view_sql = (snap.properties or {}).get(VIEW_PROP)
             mangled = _mangle(e.schema, e.name)
-            if view_sql is None:
-                df = t.to_df(_snap=snap)
-                df.createOrReplaceTempView(mangled)
             mapping[f"{e.schema}.{e.name}"] = mangled
             mapping[f"{e.database}.{e.schema}.{e.name}"] = mangled
             # ANSI double-quoted reference forms, ONLY for names that need
@@ -531,7 +548,7 @@ class SeafowlContext:
             # avoids touching plain double-quoted STRING literals, which
             # Spark SQL still parses as strings). A plain-charset name
             # containing UPPERCASE also needs the quoted forms: "Foo"
-    # and "foo" are distinct case-sensitive identifiers in the
+            # and "foo" are distinct case-sensitive identifiers in the
             # dialect, while Spark's temp-view namespace is
             # case-insensitive — such names get the hash-suffixed mangle
             # and resolve only via the mapping.
@@ -559,12 +576,19 @@ class SeafowlContext:
                 and not _casefold_collision(e)
                 else None
             )
+            names = [n for n in (mangled, plain) if n]
+            visible.update(n.lower() for n in names)
             if view_sql is not None:
-                deferred_views.append((e, view_sql, mangled, plain))
-            elif plain:
-                df.createOrReplaceTempView(plain)
+                deferred_views.append((root, snap.version, view_sql, mangled, plain))
+                continue
+            key = ("table", root, snap.version)
+            if any(reg.key(n) != key for n in names):
+                df = t.to_df(_snap=snap)
+                for n in names:
+                    reg.bind(n, key, df)
         for name, df in self.staging.items():
-            df.createOrReplaceTempView(name)
+            reg.bind(name, ("staging", id(df)), df)
+            visible.add(name.lower())
             mapping[f"{STAGING_SCHEMA}.{name}"] = name
         # system.* / information_schema.* register LAZILY (r14, guide §5/
         # §1.2): these are driver-built createDataFrames whose rebuild +
@@ -586,104 +610,103 @@ class SeafowlContext:
             mangled = _mangle("information_schema", name)
             self._lazy_views[mangled] = ("information_schema", name)
             mapping[f"information_schema.{name}"] = mangled
-        # fixpoint expansion: catalog order is (schema, name), NOT
-        # dependency order — a view named before one it reads would bind
-        # a stale (or missing) temp view. Every pass expands whatever
-        # now resolves; registered views unlock their dependents on the
-        # next pass; views still failing at the fixpoint are broken.
-        # First, drop ALL deferred views' temp views from the previous
-        # reload so no pass can silently bind a stale plan.
-        for _e, _sql, mangled, plain in deferred_views:
-            for name_ in (mangled, plain):
-                if name_:
-                    try:
-                        self.spark.catalog.dropTempView(name_)
-                    except Exception:
-                        pass
-        # stale temp views from the PREVIOUS reload must go BEFORE the
-        # fixpoint, not after: a renamed base table leaves its old name's
-        # temp view behind (rename is catalog-only, the files survive), and
-        # a view whose defining query references the old name would
-        # otherwise expand against that stale registration and silently
-        # SUCCEED on the first statement after the rename — then fail on
-        # the next. Text-based views must break deterministically when
-        # their name no longer resolves.
-        # Spark's temp-view namespace is case-INSENSITIVE while the set
-        # diff here is case-sensitive: dropping stale 'Foo' when 'foo'
-        # was just registered would remove the NEW view. Compare folded.
-        current = set(mapping.values()) | {
-            e.name for e in entries if e.schema == self.search_schema
+        visible.update(self._lazy_views)
+        # stale names go BEFORE any view expands: a renamed base table
+        # leaves its old name bound (rename is catalog-only, the files
+        # survive), and a view whose defining query references the old
+        # name must break deterministically, not expand against it
+        for name in reg.stale(visible):
+            reg.drop(name)
+        # persisted UDFs register before views expand, so a view over a
+        # replaced function re-analyzes against the new definition
+        funcs = self._register_functions()
+        self._expand_views(reg, deferred_views, mapping, funcs)
+        return mapping
+
+    def _expand_views(self, reg, deferred_views, mapping, funcs) -> None:
+        """Bind the logical views of one reload, each after the views it
+        reads. A view re-analyzes only when its key moved: its own
+        (root, version), its rewritten SQL, the session conf that analysis
+        captures, the definitions of the functions it names, or the key of
+        any name it reads (bindings.referenced_names over the rewritten
+        SQL — a view over a view invalidates transitively). A view reading
+        a system table always re-analyzes (those frames rebuild per
+        statement). Views that fail to expand are unbound and drop out of
+        the mapping, so only statements REFERENCING them fail."""
+        if not deferred_views:
+            return
+        conf = tuple(
+            self.spark.conf.get(k)
+            for k in ("spark.sql.session.timeZone", "spark.sql.ansi.enabled")
+        )
+        unfinished = {
+            n.lower() for *_, m, p in deferred_views for n in (m, p) if n
         }
-        current_fold = {c.lower() for c in current}
-        for stale in self._registered_views:
-            if stale.lower() in current_fold:
-                continue
-            try:
-                self.spark.catalog.dropTempView(stale)
-            except Exception:  # noqa: BLE001
-                pass
-        # cheap textual topo-sort first: order views so ones mentioning
-        # another deferred view's name expand after it — the common DAG
-        # then converges in ONE pass and the fixpoint below is only the
-        # fallback (missed textual deps, e.g. quoted forms)
-        names_of: list[set[str]] = []
-        for e, _sql, _m, plain in deferred_views:
-            forms = {f"{e.schema}.{e.name}", f"{e.database}.{e.schema}.{e.name}"}
-            if plain:
-                forms.add(plain)
-            names_of.append(forms)
-        dep_count = []
-        for i, (_e, view_sql, _m, _p) in enumerate(deferred_views):
-            n = 0
-            for j, forms in enumerate(names_of):
-                if j != i and any(
-                    re.search(rf"(?<![\w.]){re.escape(f)}\b", view_sql)
-                    for f in forms
-                ):
-                    n += 1
-            dep_count.append(n)
-        pending = [
-            v for _, v in sorted(
-                zip(dep_count, deferred_views), key=lambda p: p[0]
-            )
-        ]
-        while pending:
-            progressed = False
+        # over-detected dependencies can form a cycle (a column spelled
+        # like another view): once no view can progress, the remaining
+        # views are unbound and tried regardless of order, so none can
+        # expand against a stale binding
+        forced = False
+        todo = deferred_views
+        while todo:
+            progressed = blocked = False
             still = []
-            for item in pending:
-                e, view_sql, mangled, plain = item
+            for item in todo:
+                root, version, view_sql, mangled, plain = item
+                names = [n for n in (mangled, plain) if n]
+                own = {n.lower() for n in names}
                 try:
                     view_rw = self._rewrite_names(view_sql, mapping)
-                    # a logical view over system/info-schema tables must
-                    # materialize its lazy deps before analysis (r14)
-                    self._ensure_lazy_views(view_rw)
-                    df = self.spark.sql(view_rw)
-                    df.createOrReplaceTempView(mangled)
-                    if plain:
-                        df.createOrReplaceTempView(plain)
-                    progressed = True
-                except Exception:
+                except ExecutionError:
                     still.append(item)
-            pending = still
+                    continue
+                deps = sorted(
+                    bindings.referenced_names(view_rw, reg.names() | unfinished)
+                    - own
+                )
+                if not forced and unfinished.intersection(deps):
+                    blocked = True
+                    still.append(item)
+                    continue
+                key = (
+                    "view", root, version, view_rw, conf,
+                    tuple(
+                        (n, funcs[n]) for n in sorted(
+                            bindings.referenced_names(view_rw, funcs)
+                        )
+                    ),
+                    tuple(
+                        (d, object() if d in self._lazy_views else reg.key(d))
+                        for d in deps
+                    ),
+                )
+                if any(reg.key(n) != key for n in names):
+                    try:
+                        self._ensure_lazy_views(view_rw)
+                        df = self.spark.sql(view_rw)
+                    except Exception:
+                        still.append(item)
+                        continue
+                    for n in names:
+                        reg.bind(n, key, df)
+                unfinished -= own
+                progressed = True
+            todo = still
             if not progressed:
-                break
-        for e, view_sql, mangled, plain in pending:
-            # broken view (e.g. a dropped base table): unregister its
-            # names so only statements REFERENCING it fail (with an
-            # unresolved-relation error), not every statement
+                if forced or not blocked:
+                    break
+                forced = True
+                for *_, mangled, plain in todo:
+                    for n in (mangled, plain):
+                        if n:
+                            reg.drop(n)
+        for *_, mangled, plain in todo:
+            # broken view (e.g. a dropped base table)
+            for n in (mangled, plain):
+                if n:
+                    reg.drop(n)
             for k in [k for k, v in mapping.items() if v == mangled]:
                 del mapping[k]
-        registered = set(mapping.values()) | {
-            e.name for e in entries if e.schema == self.search_schema
-        }
-        registered_fold = {r.lower() for r in registered}
-        for stale in self._registered_views:
-            # folded comparison: dropTempView resolves case-insensitively
-            if stale.lower() not in registered_fold:
-                self.spark.catalog.dropTempView(stale)
-        self._registered_views = registered
-        self._register_functions()
-        return mapping
 
     def _ensure_lazy_views(self, rewritten_sql: str) -> None:
         """Materialize any lazily-registered system/information_schema
@@ -691,9 +714,7 @@ class SeafowlContext:
         reload_views). Mangled names are unique tokens, so a substring
         probe is exact; builds happen at most once per reload, at the
         same catalog state an eager per-statement build saw."""
-        lazy = getattr(self, "_lazy_views", None)
-        if not lazy:
-            return
+        lazy = self._lazy_views
         hits = [m for m in lazy if m in rewritten_sql]
         if not hits:
             return
@@ -708,7 +729,9 @@ class SeafowlContext:
                 if info_frames is None:
                     info_frames = self._information_schema()
                 df = info_frames[name]
-            df.createOrReplaceTempView(mangled)
+            bindings.for_session(self.spark).bind(
+                mangled, ("system", object()), df
+            )
 
     def _rewrite_names(self, sql: str, mapping: dict[str, str]) -> str:
         """Replace qualified table references with mangled view names,
@@ -829,18 +852,21 @@ class SeafowlContext:
 
     # ------------------------------------------------------------ functions
 
-    def _register_functions(self) -> None:
+    def _register_functions(self) -> dict[str, dict]:
         """Re-register persisted UDFs on the session (reference re-registers
-        from catalog in reload_schema, src/context/mod.rs:101-112)."""
+        from catalog in reload_schema, src/context/mod.rs:101-112); returns
+        their specs by lower-cased name."""
         from .udf import UdfError, register_udf
 
-        for name, spec in self.catalog.functions(self.database).items():
+        funcs = self.catalog.functions(self.database)
+        for name, spec in funcs.items():
             try:
                 register_udf(self.spark, name, spec, allow_python=self.allow_python_udfs)
             except UdfError:
                 # persisted function whose language is disabled/unavailable in
                 # this session: skip registration; using it errors at analysis
                 continue
+        return {name.lower(): spec for name, spec in funcs.items()}
 
     # ------------------------------------------------------------ execution
 
@@ -887,7 +913,7 @@ class SeafowlContext:
             self.spark.conf.set(conf_key, prev)
 
     def execute_statement(self, sql: str) -> DataFrame | None:
-        with self._exec_lock:
+        with self._exec_lock, self._session_lock():
             stmt = parser.parse_statement(sql)
             handler = getattr(self, f"_exec_{stmt.kind}", None)
             if handler is None:
@@ -898,8 +924,15 @@ class SeafowlContext:
     def query(self, sql: str) -> DataFrame:
         # same dialect + lock as execute(): "x" must parse as an
         # identifier through BOTH entry points, not just execute()
-        with self._exec_lock, self._ansi_dialect():
+        with self._exec_lock, self._session_lock(), self._ansi_dialect():
             return self._exec_query(parser.Statement("query", sql))
+
+    def _session_lock(self):
+        """Statements on one SparkSession run one at a time, whichever
+        context runs them: the temp-view bindings (engine/bindings.py)
+        and the scoped ANSI conf are session state every context on it
+        shares. Taken after ``_exec_lock``, never before."""
+        return bindings.for_session(self.spark).lock
 
     # ---- reads
 
@@ -929,42 +962,44 @@ class SeafowlContext:
                 else:
                     df = t.to_df(timestamp=ts)
             df.createOrReplaceTempView(alias)
-        mapping = self.reload_views()
+        scan_aliases: list[str] = []
         try:
             # spark.sql analyzes eagerly: the returned plan holds resolved
-            # relations, so the per-query snapshot views can be dropped here
+            # relations, so the per-query aliases can be dropped here
+            mapping = self.reload_views()
             rewritten = self._rewrite_names(sql, mapping)
             self._ensure_lazy_views(rewritten)
-            self._maybe_prune_scans(rewritten)
+            rewritten, scan_aliases = self._maybe_prune_scans(rewritten)
             return self.spark.sql(rewritten)
         finally:
-            for alias, _, _ in travels:
-                self.spark.catalog.dropTempView(alias)
-            for alias in si_aliases:
+            for alias in [a for a, _, _ in travels] + si_aliases + scan_aliases:
                 self.spark.catalog.dropTempView(alias)
 
-    def _maybe_prune_scans(self, sql: str) -> None:
+    def _maybe_prune_scans(self, sql: str) -> tuple[str, list[str]]:
         """Stats-level scan pruning for iceberg and delta staging tables
         (the reference gets the equivalent from DataFusion's
         PruningPredicate over its providers): iceberg prunes from manifest
         column bounds, delta from per-add stats JSON.
 
         Only fires for the provably-safe shape — a single SELECT over one
-        staging table with a WHERE clause (no set ops, no
-        subqueries, no joins) — and re-registers that table's view over
-        the predicate-pruned file list for this query. Pruning itself is
-        conservative (engine/pruning.py): a file is dropped only when its
-        manifest column bounds prove no row can match. Everything else
-        falls through to the full view registered by reload_views.
+        table with a WHERE clause (no set ops, no subqueries, no joins).
+        The predicate-pruned frame binds under a per-statement alias that
+        replaces the relation in the returned SQL; the caller drops the
+        alias once the statement is analyzed. The shared name keeps the
+        binding reload_views gave it. Pruning itself is conservative
+        (engine/pruning.py): a file is dropped only when its manifest
+        column bounds prove no row can match. Everything else — and an
+        engine table whose every file survives — reads the full view.
+        Returns (sql, aliases to drop).
 
         Scale: skips whole data files driver-side from manifest metadata
         before Spark plans the scan — at 100 TB this is the difference
         between opening every parquet footer and opening only candidates.
         """
         if re.search(r"(?i)\b(UNION|INTERSECT|EXCEPT|JOIN)\b", sql):
-            return
+            return sql, []
         if len(re.findall(r"(?i)\bSELECT\b", sql)) != 1:
-            return
+            return sql, []
         s = sql.strip().rstrip("; \n")
         # a bare LIMIT is an over-fetch cap; under ORDER BY it would
         # truncate BEFORE the sort — never push those
@@ -984,8 +1019,8 @@ class SeafowlContext:
             # every top-level conjunct is provably shippable against the
             # table's schema (_where_fully_shippable).
             m = re.match(
-                rf"(?is)^\s*SELECT\s+[\w\s,.*`]+?\sFROM\s+`?{re.escape(name)}`?"
-                rf"(?:\s+(?:AS\s+)?\w+)?(?:\s+WHERE\s+(?P<where>.+?))?"
+                rf"(?is)^\s*SELECT\s+[\w\s,.*`]+?\sFROM\s+(?P<rel>`?{re.escape(name)}`?)"
+                rf"(?:\s+(?:AS\s+)?(?P<alias>\w+))?(?:\s+WHERE\s+(?P<where>.+?))?"
                 rf"\s+LIMIT\s+(?P<n>\d+)\s*$",
                 s,
             )
@@ -1007,25 +1042,27 @@ class SeafowlContext:
                 )
             except Exception:
                 continue
-            df.createOrReplaceTempView(name)
+            return self._bind_scan_alias(s, m, name, df)
         candidates: list[tuple[str, Any]] = []
         for name, (fmt, location, options) in self.staging_specs.items():
             if fmt in ("iceberg", "delta", "deltatable"):
                 candidates.append((name, (fmt, location, options)))
-        for e in self.catalog.tables(self.database):
+        for e, snap in self._snaps.values():
+            if (snap.properties or {}).get(VIEW_PROP) is not None:
+                continue  # a logical view stores no files: nothing to prune
             # engine-native tables prune by the footer stats their adds
             # already carry — the read-side twin of DML pruning
-            candidates.append((_mangle(e.schema, e.name), e))
+            candidates.append((_mangle(e.schema, e.name), (e, snap)))
             if e.schema == self.search_schema:
-                candidates.append((e.name, e))
+                candidates.append((e.name, (e, snap)))
         for name, spec in candidates:
             pat = re.compile(
-                rf"(?is)^\s*SELECT\s+.*?\sFROM\s+`?{re.escape(name)}`?"
+                rf"(?is)^\s*SELECT\s+.*?\sFROM\s+(?P<rel>`?{re.escape(name)}`?)"
                 rf"(?:\s+(?:AS\s+)?(?P<alias>[A-Za-z_]\w*))?"
                 rf"\s+WHERE\s+(?P<pred>.*?)"
                 rf"(?:\s+(?:GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT|WINDOW)\b.*)?$"
             )
-            m = pat.match(sql.strip().rstrip("; \n"))
+            m = pat.match(s)
             if not m:
                 continue
             pred = m.group("pred")
@@ -1033,7 +1070,7 @@ class SeafowlContext:
                 # qualified refs -> bare names for the stats evaluator
                 pred = re.sub(rf"(?<![\w.`])`?{re.escape(q)}`?\.", "", pred)
             try:
-                if isinstance(spec, tuple):
+                if len(spec) == 3:
                     fmt, location, options = spec
                     if fmt == "iceberg":
                         from ..sources.iceberg import read_iceberg
@@ -1048,12 +1085,29 @@ class SeafowlContext:
                             self.spark, location, predicate_sql=pred
                         )
                 else:
-                    df = DeltaLiteTable(
-                        self.spark, self.table_root(spec)
-                    ).to_df(predicate_sql=pred)
+                    e, snap = spec
+                    t = DeltaLiteTable(self.spark, self.table_root(e))
+                    if len(t.pruned_files(snap, pred)) == len(snap.files):
+                        return sql, []  # nothing to skip: the bound view serves it
+                    df = t.to_df(predicate_sql=pred, _snap=snap)
             except Exception:
                 continue  # best-effort: the full view is already registered
-            df.createOrReplaceTempView(name)
+            return self._bind_scan_alias(s, m, name, df)
+        return sql, []
+
+    @staticmethod
+    def _bind_scan_alias(sql: str, m: re.Match, name: str, df) -> tuple[str, list[str]]:
+        """Bind ``df`` under a fresh per-statement alias and splice it over
+        the relation ``m`` matched in ``sql``. Without an alias in the
+        query the relation keeps its old name as one, so qualified column
+        references still resolve."""
+        import uuid as _uuid
+
+        alias = f"__sfs_scan_{_uuid.uuid4().hex[:12]}"
+        df.createOrReplaceTempView(alias)
+        a, b = m.span("rel")
+        swap = f"`{alias}`" if m.group("alias") else f"`{alias}` AS `{name}`"
+        return sql[:a] + swap + sql[b:], [alias]
 
     def _staging_travel(self, name: str, ts: str) -> DataFrame:
         """Time travel over an iceberg staging table: FOR TIMESTAMP AS OF
@@ -1309,7 +1363,7 @@ class SeafowlContext:
         spark_schema = columns_to_schema(stmt.columns)
         entry = self.catalog.create_table(
             db, schema, name,
-            ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in spark_schema.fields),
+            to_ddl(spark_schema.fields),
         )
         t = DeltaLiteTable.create(
             self.spark,
@@ -1327,7 +1381,7 @@ class SeafowlContext:
         df = self._exec_query(parser.Statement("query", stmt.query))
         entry = self.catalog.create_table(
             db, schema, name,
-            ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields),
+            to_ddl(df.schema.fields),
         )
         t = DeltaLiteTable.create(self.spark, self.table_root(entry), df.schema)
         t.append(df, operation="CTAS")
@@ -1507,9 +1561,7 @@ class SeafowlContext:
         )
         entry = self.catalog.create_table(
             db, schema, name,
-            ", ".join(
-                f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-            ),
+            to_ddl(df.schema.fields),
         )
         t = DeltaLiteTable.create(
             self.spark,
@@ -1637,10 +1689,7 @@ class SeafowlContext:
             DeltaLiteTable(self.spark, self.table_root(existing)).drop_data()
         entry = self.catalog.create_table(
             db, schema, name,
-            ", ".join(
-                f"{f.name} {f.dataType.simpleString()}"
-                for f in df.schema.fields
-            ),
+            to_ddl(df.schema.fields),
         )
         t = DeltaLiteTable.create(
             self.spark,
@@ -2622,8 +2671,9 @@ class SeafowlContext:
             if stmt.if_exists:
                 return
             raise
-        DeltaLiteTable(self.spark, self.table_root(entry)).drop_data()
-        self.spark.catalog.dropTempView(name)
+        root = self.table_root(entry)
+        DeltaLiteTable(self.spark, root).drop_data()
+        bindings.for_session(self.spark).drop_root(os.path.abspath(root))
 
     def _exec_drop_schema(self, stmt) -> None:
         db, _, name = parser.parse_qualified(stmt.name)

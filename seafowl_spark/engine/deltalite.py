@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .types import quote_ident, to_ddl, type_sql
+
 MAX_ROWS_PER_FILE = 1_048_576  # reference src/config/schema.rs:283
 LOG_DIR = "_log"
 # engage per-file PK-membership pruning above this many coarse-hit rows
@@ -524,13 +526,29 @@ class DeltaLiteTable:
         Python-worker round trip — profiled as the one 32-task stage of
         the first CDC micro-batch (empty merge target), ~7 s of task
         time for zero rows. A constant-folded empty relation plans to
-        zero tasks and lets joins against it see an exact 0-row count."""
-        from ..functions import local_df
-
-        ddl = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
+        zero tasks and lets joins against it see an exact 0-row count.
+        Types render in Spark's SQL form, which quotes nested field
+        names (``STRUCT<`x y`: INT>``)."""
+        cols = ", ".join(
+            f"CAST(NULL AS {type_sql(f.dataType)}) AS {quote_ident(f.name)}"
+            for f in schema.fields
         )
-        return local_df(self.spark, [], ddl)
+        return self.spark.sql(f"SELECT {cols}").where("1=0")
+
+    def pruned_files(self, snap: Snapshot, predicate_sql: str | None) -> list[AddFile]:
+        """The live files of ``snap`` a read filtered by ``predicate_sql``
+        must scan: stats + bloom + bucket file skipping for reads — the
+        same conservative path UPDATE/DELETE rewrites use. Bucket
+        membership matters most here: min/max is powerless on a hashed
+        layout, so without it a point lookup on the bucket key scanned
+        every bucket (review find, r11)."""
+        if not predicate_sql:
+            return snap.files
+        files = self._prune(snap, predicate_sql)
+        hot = self._bucket_hits(snap, predicate_sql)
+        if hot is not None:
+            files = [f for f in files if f.bucket is None or f.bucket in hot]
+        return files
 
     def to_df(
         self,
@@ -540,22 +558,11 @@ class DeltaLiteTable:
         _snap: Snapshot | None = None,
     ) -> DataFrame:
         # _snap: caller already resolved the snapshot (reload_views reads
-        # every table per statement — one log replay, not two)
+        # every table's log per statement, and calls this only for tables
+        # whose version moved — one log replay, not two)
         snap = _snap if _snap is not None else self.snapshot(version, timestamp)
         schema = T.StructType.fromDDL(snap.schema_ddl)
-        files = snap.files
-        if predicate_sql:
-            # stats + bloom + bucket file skipping for reads — the same
-            # conservative path UPDATE/DELETE rewrites use. Bucket
-            # membership matters most here: min/max is powerless on a
-            # hashed layout, so without it a point lookup on the bucket
-            # key scanned every bucket (review find, r11)
-            files = self._prune(snap, predicate_sql)
-            hot = self._bucket_hits(snap, predicate_sql)
-            if hot is not None:
-                files = [
-                    f for f in files if f.bucket is None or f.bucket in hot
-                ]
+        files = self.pruned_files(snap, predicate_sql)
         if not files:
             return self._empty_df(schema)
         return self._scan_files(files, schema)
@@ -864,7 +871,7 @@ class DeltaLiteTable:
         t.store.makedirs(t.root)
         if t.exists():
             raise DeltaLiteError(f"table already exists at {root}")
-        ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema.fields)
+        ddl = to_ddl(schema.fields)
         meta: dict = {"schema_ddl": ddl}
         if properties:
             by = properties.get("bucket_by")
@@ -1385,11 +1392,7 @@ class DeltaLiteTable:
         props = dict(snap.properties)
         if name in zlist:
             props["zorder_by"] = [c for c in zlist if c != name]
-        new_ddl = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in schema.fields
-            if f.name != name
-        )
+        new_ddl = to_ddl(f for f in schema.fields if f.name != name)
         props["dropped_columns"] = list(
             (snap.properties.get("dropped_columns") or [])
         ) + [name]
@@ -2179,7 +2182,7 @@ class DeltaLiteTable:
         if not names:
             raise DeltaLiteError(f"no parquet files to convert in {root}")
         df = spark.read.parquet(t._data_url(names[0]))
-        ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
+        ddl = to_ddl(df.schema.fields)
         adds = []
         for n in names:
             full = os.path.join(t.root, n)

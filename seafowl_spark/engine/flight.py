@@ -33,6 +33,7 @@ import pyarrow as pa
 import pyarrow.flight as flight
 
 from ..streaming.sync import ColumnDescriptor, SyncSchema, SyncWriter
+from . import bindings
 from .context import SeafowlContext
 from .server import AccessPolicy
 
@@ -88,7 +89,11 @@ class SeafowlFlightServer(flight.FlightServerBase):
                 else:
                     raise flight.FlightServerError(f"unsupported inline table format {fmt!r}")
                 specs[name] = (fmt, spec["path"])
-                df.createOrReplaceTempView(name)
+                # through the session's binding registry, so the next
+                # reload rebinds a catalog table this name shadows
+                bindings.for_session(self.ctx.spark).bind(
+                    name, ("inline", object()), df
+                )
             ins = self._inline_insert(query, specs)
             if ins is not None:
                 return ins

@@ -93,3 +93,30 @@ def columns_to_schema(cols: list[tuple[str, str]]) -> T.StructType:
     return T.StructType(
         [T.StructField(name, parse_sql_type(t), nullable=True) for name, t in cols]
     )
+
+
+def quote_ident(name: str) -> str:
+    """Backtick-quote one identifier for Spark SQL."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def type_sql(dt: T.DataType) -> str:
+    """Spark's SQL rendering of a type (JVM ``DataType.sql``, which the
+    Python types lack): nested struct field names are quoted, so a field
+    such as ``x y`` round-trips through a CAST or DDL string, where
+    ``simpleString()`` would emit an unparseable ``struct<x y:int>``."""
+    if isinstance(dt, T.StructType):
+        return "STRUCT<" + ", ".join(
+            f"{quote_ident(f.name)}: {type_sql(f.dataType)}" for f in dt.fields
+        ) + ">"
+    if isinstance(dt, T.ArrayType):
+        return f"ARRAY<{type_sql(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"MAP<{type_sql(dt.keyType)}, {type_sql(dt.valueType)}>"
+    return dt.simpleString()
+
+
+def to_ddl(fields) -> str:
+    """DDL column list for ``fields`` (StructFields) that parses back to the
+    same names and types, nested and special-character names included."""
+    return ", ".join(f"{quote_ident(f.name)} {type_sql(f.dataType)}" for f in fields)
