@@ -26,6 +26,7 @@ src/config/schema.rs:283) with zstd parquet.
 from __future__ import annotations
 
 import base64
+import datetime
 import json
 import os
 import re
@@ -35,10 +36,13 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 
 from .types import quote_ident, to_ddl, type_sql
 
@@ -68,6 +72,82 @@ def _fp_norm(col):
 
 class DeltaLiteError(Exception):
     pass
+
+
+# ------------------------------------------------------- merge change sets
+# A change set the driver already holds (a pandas or Arrow frame, or a
+# Spark LocalRelation) gives merge its pre-join facts without a Spark job.
+
+
+def _local_changes(
+    spark: SparkSession, changes, schema: T.StructType, delete_col: str | None
+) -> tuple[DataFrame, pa.Table]:
+    """A pandas or Arrow change set as (Spark LocalRelation, Arrow table),
+    typed by the target schema. Flag columns (``__set_<col>``, the delete
+    column) are booleans; other columns outside the schema are dropped,
+    as the merge projection would ignore them."""
+    names = changes.column_names if isinstance(changes, pa.Table) else list(changes.columns)
+    fields = [
+        schema[c] if c in schema.names else T.StructField(c, T.BooleanType())
+        for c in names
+        if c in schema.names or c == delete_col or c.startswith("__set_")
+    ]
+    change_schema = T.StructType(fields)
+    arrow_schema = to_arrow_schema(change_schema)
+    if isinstance(changes, pa.Table):
+        table = changes.select(change_schema.names).cast(arrow_schema)
+    else:
+        pdf = changes[change_schema.names]
+        tz = spark.conf.get("spark.sql.session.timeZone")
+        for f in change_schema.fields:
+            # naive timestamps are session-local, as in createDataFrame
+            col = pdf[f.name]
+            if isinstance(f.dataType, T.TimestampType) and col.dtype.kind == "M" \
+                    and col.dt.tz is None:
+                pdf = pdf.assign(**{f.name: col.dt.tz_localize(tz)})
+        table = pa.Table.from_pandas(pdf, schema=arrow_schema, preserve_index=False)
+    return spark.createDataFrame(table, schema=change_schema), table
+
+
+def _local_relation_keys(changes: DataFrame, pk_cols: list[str]) -> pa.Table | None:
+    """The PK columns of a LocalRelation change set as an Arrow table
+    (``collect`` on a LocalRelation runs no job), else None."""
+    plan = changes._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() != "LocalRelation":
+        return None
+    keys = changes.select(*pk_cols)
+    cols = list(zip(*keys.collect())) or [()] * len(pk_cols)
+    arrays = []
+    for f, vals in zip(keys.schema.fields, cols):
+        if isinstance(f.dataType, T.TimestampType):  # Row datetimes are local
+            vals = [v if v is None else v.astimezone() for v in vals]
+        arrays.append(pa.array(vals, type=to_arrow_type(f.dataType)))
+    return pa.table(arrays, names=pk_cols)
+
+
+def _py_value(v):
+    # as a Spark Row carries it: TIMESTAMP values are naive local time
+    if isinstance(v, datetime.datetime) and v.tzinfo is not None:
+        return v.astimezone().replace(tzinfo=None)
+    return v
+
+
+def _local_pk_bounds(keys: pa.Table, pk_cols: list[str]) -> dict:
+    """The min/max per PK column and the NULL-PK flag, as the Spark
+    aggregate in ``merge`` returns them (NaN orders above every double)."""
+    out = {"__null_pk": any(keys[c].null_count for c in pk_cols)}
+    for c in pk_cols:
+        col = keys[c]
+        mm = pc.min_max(col)
+        mn, mx = _py_value(mm["min"].as_py()), _py_value(mm["max"].as_py())
+        if pa.types.is_floating(col.type):
+            nans = pc.sum(pc.is_nan(col)).as_py() or 0
+            if nans:
+                mx = float("nan")
+                if nans == len(col) - col.null_count:
+                    mn = mx
+        out[f"min_{c}"], out[f"max_{c}"] = mn, mx
+    return out
 
 
 # ---------------------------------------------------------------- blooms
@@ -1650,7 +1730,7 @@ class DeltaLiteTable:
     def _fine_prune(
         self,
         hit: list[AddFile],
-        changes: DataFrame,
+        rows: list,
         pk_cols: list[str],
         snap: Snapshot | None = None,
     ) -> list[AddFile]:
@@ -1667,15 +1747,12 @@ class DeltaLiteTable:
         spans the full PK range so min/max is powerless — a file whose
         ``bloom_by`` bitmap provably lacks EVERY change value for some
         PK column drops. Bit positions are computed once per value, so
-        the probe costs |values| md5s + 4-bit tests per (file, value)."""
+        the probe costs |values| md5s + 4-bit tests per (file, value).
+
+        ``rows`` are the change set's distinct PK rows (at most
+        FINE_GRAINED_MAX_PK_VALUES + 1 of them), indexable by column."""
         import bisect
 
-        rows = (
-            changes.select(*pk_cols)
-            .distinct()
-            .limit(FINE_GRAINED_MAX_PK_VALUES + 1)
-            .collect()
-        )
         if len(rows) > FINE_GRAINED_MAX_PK_VALUES:
             return hit  # too many PKs to probe cheaply; keep coarse result
         # change values must compare against FOOTER-STATS representations
@@ -1770,7 +1847,7 @@ class DeltaLiteTable:
 
     def merge(
         self,
-        changes: DataFrame,
+        changes,
         pk_cols: list[str],
         delete_col: str | None = None,
         app_txn: dict | None = None,
@@ -1781,8 +1858,22 @@ class DeltaLiteTable:
         change-set's PK range, FULL OUTER JOIN base<->changes on PK, take
         changed values where present, drop deletes, rewrite pruned files.
 
-        `changes` must contain the PK columns plus any subset of value
-        columns; rows with delete_col=true are deletes.
+        `changes` is a Spark, pandas or Arrow frame holding the PK columns
+        plus any subset of value columns (with optional ``__set_<col>``
+        CHANGED masks); rows with delete_col=true are deletes.
+
+        Pre-join facts — the min/max PK bounds, the NULL-PK rejection,
+        the bucket set of a bucketed table, and the PK list for the fine
+        prune — come from where the change set lives:
+
+        * a pandas or Arrow frame, or a Spark LocalRelation, is already on
+          the driver: bounds and the NULL check are computed there (Arrow
+          kernels), the fine-prune PK list is its distinct keys, and the
+          bucket set is a projection over the LocalRelation, which Spark
+          evaluates without a job;
+        * any other Spark DataFrame (SQL MERGE, matview refresh, streaming
+          micro-batches) gets them from ONE aggregate job; the fine-prune
+          PK list is a second, distinct-PK job, run only when engaged.
 
         Scale: only files whose PK stats intersect the change set rewrite;
         when the coarse min/max hit still covers > ``fine_grained_rows``
@@ -1792,45 +1883,64 @@ class DeltaLiteTable:
         """
         snap = self.snapshot()
         schema = T.StructType.fromDDL(snap.schema_ddl)
-        # ONE aggregate job over the change set computes everything the
-        # driver needs before the join (r14, guide §1/§5 — each action
-        # re-executes the caller's change-derivation subtree, e.g. the
-        # CDC micro-batch's dedup window, so three separate jobs here
-        # tripled that work): the coarse min/max PK bounds (reference
-        # planner.rs:552-628), the NULL-PK violation flag (previously its
-        # own limit(1).count() scan), and for bucketed tables the exact
-        # hot-bucket set (previously a distinct().collect() job; bounded
-        # by the table's bucket count).
-        null_pk_any = None
-        for c in pk_cols:
-            p = F.col(c).isNull()
-            null_pk_any = p if null_pk_any is None else (null_pk_any | p)
-        aggs = [
-            *[F.min(c).alias(f"min_{c}") for c in pk_cols],
-            *[F.max(c).alias(f"max_{c}") for c in pk_cols],
-            F.max(null_pk_any).alias("__null_pk"),
-        ]
+        keys = None  # the change set's PK columns, when driver-held
+        if not isinstance(changes, DataFrame):
+            changes, keys = _local_changes(self.spark, changes, schema, delete_col)
+        else:
+            keys = _local_relation_keys(changes, pk_cols)
         spec = snap.bucket_spec
-        probe_buckets = spec is not None and all(
-            c in changes.columns for c in spec[0]
-        )
-        if probe_buckets:
+        bucket = None
+        if spec is not None and all(c in changes.columns for c in spec[0]):
             # exact bucket membership: hashing spreads PKs across each
             # file's full range, so min/max is powerless here — but every
             # file belongs to one bucket, and only buckets the change set
             # hashes into can contain matching rows
             bcols, n = spec
-            aggs.append(
-                F.collect_set(
-                    F.pmod(
-                        F.xxhash64(
-                            *[F.col(c).cast(schema[c].dataType) for c in bcols]
-                        ),
-                        F.lit(n),
-                    ).cast("int")
-                ).alias("__hot_buckets")
-            )
-        bounds = changes.agg(*aggs).collect()[0]
+            bucket = F.pmod(
+                F.xxhash64(*[F.col(c).cast(schema[c].dataType) for c in bcols]),
+                F.lit(n),
+            ).cast("int")
+        hot = None
+        if keys is not None:
+            bounds = _local_pk_bounds(keys, pk_cols)
+            if bucket is not None:  # a projection over the LocalRelation: no job
+                hot = {r[0] for r in changes.select(bucket).collect()}
+
+            def pk_rows():
+                distinct = keys.group_by(pk_cols).aggregate([]).to_pylist()
+                return [{c: _py_value(r[c]) for c in pk_cols} for r in distinct]
+        else:
+            # ONE aggregate job over the change set (r14, guide §1/§5 —
+            # each action re-executes the caller's change-derivation
+            # subtree, e.g. the CDC micro-batch's dedup window)
+            null_pk_any = None
+            for c in pk_cols:
+                p = F.col(c).isNull()
+                null_pk_any = p if null_pk_any is None else (null_pk_any | p)
+            aggs = [
+                *[F.min(c).alias(f"min_{c}") for c in pk_cols],
+                *[F.max(c).alias(f"max_{c}") for c in pk_cols],
+                F.max(null_pk_any).alias("__null_pk"),
+            ]
+            if bucket is not None:
+                aggs.append(F.collect_set(bucket).alias("__hot_buckets"))
+            bounds = changes.agg(*aggs).collect()[0]
+            if bucket is not None:
+                hot = set(bounds["__hot_buckets"] or [])
+
+            def pk_rows():
+                return (
+                    changes.select(*pk_cols)
+                    .distinct()
+                    .limit(FINE_GRAINED_MAX_PK_VALUES + 1)
+                    .collect()
+                )
+
+        # NULL-in-PK rejection (review find, r11): a NULL in ANY key
+        # column can never join (NULL-safe equality is deliberately NOT
+        # used — the reference keys on non-null PKs), so such a change
+        # row would survive the full-outer join unmatched and smuggle a
+        # NULL-keyed/all-NULL row into the table.
         if bounds["__null_pk"]:
             raise DeltaLiteError(
                 f"MERGE change set contains NULL in primary key column(s) "
@@ -1843,24 +1953,16 @@ class DeltaLiteTable:
                 continue
             parts.append(f"{c} >= {mn} AND {c} <= {mx}")
         hit = self._prune(snap, " AND ".join(parts) if parts else None)
-        if hit and probe_buckets:
-            hot = set(bounds["__hot_buckets"] or [])
+        if hit and hot is not None:
             hit = [f for f in hit if f.bucket is None or f.bucket in hot]
         if hit and sum(f.rows for f in hit) > fine_grained_rows:
-            hit = self._fine_prune(hit, changes, pk_cols, snap=snap)
+            hit = self._fine_prune(hit, pk_rows(), pk_cols, snap=snap)
         hit_paths = self._retire(hit)
         if hit:
             base = self._scan_files(hit, schema)
         else:
             base = self._empty_df(schema)
 
-        # NULL-in-PK rejection (review find, r11): a NULL in ANY key
-        # column can never join (NULL-safe equality is deliberately NOT
-        # used — the reference keys on non-null PKs), so such a change
-        # row would survive the full-outer join unmatched and smuggle a
-        # NULL-keyed/all-NULL row into the table. The check rides the
-        # combined aggregate above (__null_pk) — same raise, one fewer
-        # job.
         ch = changes
         if delete_col is None:
             delete_col = "__delete__"

@@ -1265,7 +1265,11 @@ def q_stream_sync_endstate(
             bexpr = F.when(F.col("seq") < bounds[k], F.lit(k)).otherwise(bexpr)
         part_dir = os.path.join(work, "parts")
         (
-            ch.withColumn("__b", bexpr)
+            # a NULL LSN falls through every WHEN into the last batch;
+            # it has no place in the order, so drop it as the per-range
+            # filter loop did
+            ch.where(F.col("seq").isNotNull())
+            .withColumn("__b", bexpr)
             .repartition(F.col("__b"))
             .write.mode("overwrite")
             .partitionBy("__b")

@@ -12,14 +12,19 @@ Pipeline (mirrors SURVEY.md §2.E):
    thresholds trip (reference defaults: 3 GiB buffer, 600 s max lag,
    100 syncs/table, 100k rows per squashed sync — config/schema.rs:337-347,
    writer.rs:29),
-2. squash the buffered batches into one net change per final PK, resolving
-   PK chains in arrival order (reference planner.rs:130-421 builds
-   UNION/FULL-JOIN plans for this; the buffer is bounded at squash size, so
-   an O(buffer) driver-side pass is the same scale envelope as the
-   reference's single-node DataFusion plans),
-3. apply via deltalite MERGE: stats-prune target files by the change-set's
-   PK range, FULL OUTER JOIN base<->changes on PK, rewrite only pruned
-   files (planner.rs:449-548) — this step is distributed Spark,
+2. squash the buffered batches on the driver into one net change per final
+   PK (``SyncWriter._squash``). The result equals applying the batches one
+   by one in arrival order, so it does not depend on where flushes fall.
+   Chain-free buffers squash in a few vectorized pandas passes; buffers
+   with PK chains (A->B renames) take the arrival-order loop, the
+   reference semantics. The reference builds UNION / FULL OUTER JOIN plans
+   for this (planner.rs:130-421); the buffer is bounded by
+   ``MAX_ROWS_PER_SYNC``, so it is already driver-sized,
+3. apply via deltalite MERGE, handing it the squashed pandas frame: the
+   pre-join facts (PK bounds, NULL-PK check, bucket set) come from that
+   frame without a Spark job, then a FULL OUTER JOIN base<->changes on the
+   PK rewrites only the pruned files (planner.rs:449-548) — the only
+   distributed step,
 4. record (origin, sequence) in the commit for exactly-once resume
    (reference SyncCommitInfo, sync/mod.rs:47-88): re-delivered sequences
    are skipped.
@@ -27,9 +32,12 @@ Pipeline (mirrors SURVEY.md §2.E):
 
 from __future__ import annotations
 
+import functools
 import time
+from collections.abc import Mapping
 from dataclasses import dataclass, field
 
+import numpy as np
 import pandas as pd
 
 from ..engine.deltalite import DeltaLiteTable
@@ -96,10 +104,161 @@ class _Buffer:
     origin: str | None = None
 
 
-# buffers at or above this many rows squash as a Spark job instead of a
-# driver-side pandas pass (the pandas path stays for small flushes, where
-# job-scheduling overhead would dominate)
-SPARK_SQUASH_MIN_ROWS = 100_000
+class NetChange(tuple):
+    """The squash result, ``(upserts, deletes, pk_cols, value_cols)``.
+
+    ``upserts`` maps each upserted final PK tuple to the columns its row
+    sets; ``deletes`` holds the final PK tuples to delete. ``frame`` is the
+    same net change as one merge-ready pandas frame: the PK columns, each
+    value column with its ``__set_<col>`` mask, and ``__delete__``.
+    """
+
+    frame: pd.DataFrame
+
+    def __new__(cls, frame: pd.DataFrame, pk_cols: list[str], value_cols: list[str]):
+        dropped = frame["__delete__"].to_numpy(dtype=bool)
+        deletes = set(zip(*(frame[c].to_numpy()[dropped].tolist() for c in pk_cols)))
+        upserts = _Upserts(frame[~dropped], pk_cols, value_cols)
+        self = super().__new__(cls, (upserts, deletes, pk_cols, value_cols))
+        self.frame = frame
+        return self
+
+
+class _Upserts(Mapping):
+    """``{pk tuple: {column: value}}`` over the upsert rows of a squashed
+    frame, listing only the columns each row sets."""
+
+    def __init__(self, frame: pd.DataFrame, pk_cols: list[str], value_cols: list[str]):
+        self._frame, self._pk_cols, self._value_cols = frame, pk_cols, value_cols
+
+    @functools.cached_property
+    def _pos(self) -> dict[tuple, int]:
+        keys = zip(*(self._frame[c].tolist() for c in self._pk_cols))
+        return {k: i for i, k in enumerate(keys)}
+
+    def __getitem__(self, pk):
+        row = self._frame.iloc[self._pos[pk]]
+        return {c: row[c] for c in self._value_cols if row[f"__set_{c}"]}
+
+    def __iter__(self):
+        return iter(self._pos)
+
+    def __len__(self):
+        return len(self._frame)
+
+
+def _rows_in_arrival_order(batches, pk_cols: list[str], value_cols: list[str]):
+    """Every buffered row as one array per field, in arrival order: the
+    old/new PK values (``old:<pk>``/``new:<pk>``), ``has_old``/``has_new``
+    (all PK columns of that side non-null), and per value column its value
+    and ``set:<col>`` (the row assigns it: described, and CHANGED unless
+    the flag is false or NULL)."""
+    parts = []
+    for schema, pdf in batches:
+        src = {
+            role: {d.target: d.name for d in schema.cols(role)}
+            for role in (ROLE_OLD_PK, ROLE_NEW_PK, ROLE_VALUE, ROLE_CHANGED)
+        }
+        n = len(pdf)
+        # positional (.to_numpy) extraction: batch slices may carry a
+        # non-zero-based index
+        part = {}
+        for side, role in (("old", ROLE_OLD_PK), ("new", ROLE_NEW_PK)):
+            cols = [pdf[src[role][c]] for c in pk_cols]
+            part[f"has_{side}"] = np.logical_and.reduce([col.notna().to_numpy() for col in cols])
+            for c, col in zip(pk_cols, cols):
+                part[f"{side}:{c}"] = col.to_numpy(dtype=object)
+        for c in value_cols:
+            name, flag = src[ROLE_VALUE].get(c), src[ROLE_CHANGED].get(c)
+            if name is None:
+                part[c] = np.full(n, None, dtype=object)
+                part[f"set:{c}"] = np.zeros(n, dtype=bool)
+                continue
+            part[c] = pdf[name].to_numpy(dtype=object)
+            part[f"set:{c}"] = (
+                np.ones(n, dtype=bool)
+                if flag is None
+                else pdf[flag].astype("boolean").to_numpy(dtype=bool, na_value=False)
+            )
+        parts.append(part)
+    return {k: np.concatenate([p[k] for p in parts]) for k in parts[0]}
+
+
+def _squash_vectorized(rows, pk_cols: list[str], value_cols: list[str]) -> dict:
+    """Chain-free squash: per PK the last op decides delete-vs-upsert, and
+    each value column takes its last assignment after the key's last
+    delete. A key deleted earlier in the buffer restarts from an empty
+    row, so its unassigned columns are set to NULL."""
+    keep = rows["has_old"] | rows["has_new"]  # drop malformed rows
+    rows = {k: v[keep] for k, v in rows.items()}
+    is_del = ~rows["has_new"]
+    key = {c: np.where(rows["has_new"], rows[f"new:{c}"], rows[f"old:{c}"]) for c in pk_cols}
+    codes = pd.DataFrame(key).groupby(pk_cols, sort=False).ngroup().to_numpy()
+    n_keys = int(codes.max()) + 1 if len(codes) else 0
+    pos = np.arange(len(codes))
+
+    def last(mask):  # per key: position of the last row where mask holds, or -1
+        out = np.full(n_keys, -1, dtype=np.int64)
+        np.maximum.at(out, codes[mask], pos[mask])
+        return out
+
+    final = last(np.ones(len(codes), dtype=bool))
+    last_del = last(is_del)
+    after_del = pos > last_del[codes]
+    out = {c: key[c][final] for c in pk_cols}
+    for c in value_cols:
+        at = last(rows[f"set:{c}"] & after_del)
+        out[c] = np.where(at >= 0, rows[c][at], None)
+        out[f"__set_{c}"] = (at >= 0) | (last_del >= 0)
+    out["__delete__"] = is_del[final]
+    return out
+
+
+def _squash_in_order(rows, pk_cols: list[str], value_cols: list[str]) -> dict:
+    """Arrival-order squash, the reference semantics and the path for
+    buffers with PK chains: an A->B rename moves A's pending row to B and
+    deletes A. Same results as ``_squash_vectorized`` on chain-free
+    buffers."""
+    state: dict[tuple, dict] = {}
+    deletes: set[tuple] = set()
+    reset: set[tuple] = set()  # keys removed earlier in the buffer
+    olds = zip(*(rows[f"old:{c}"] for c in pk_cols))
+    news = zip(*(rows[f"new:{c}"] for c in pk_cols))
+    for i, (old_pk, new_pk) in enumerate(zip(olds, news)):
+        if not rows["has_new"][i]:
+            if rows["has_old"][i]:  # delete
+                state.pop(old_pk, None)
+                deletes.add(old_pk)
+                reset.add(old_pk)
+            continue  # malformed row: neither insert nor delete
+        vals = {c: rows[c][i] for c in value_cols if rows[f"set:{c}"][i]}
+        if rows["has_old"][i] and old_pk != new_pk:  # pk-changing update
+            state[new_pk] = {**state.pop(old_pk, {}), **vals}
+            deletes.add(old_pk)
+            if old_pk in reset:
+                reset.add(new_pk)
+            reset.add(old_pk)
+        else:
+            state.setdefault(new_pk, {}).update(vals)
+        deletes.discard(new_pk)
+
+    keys = list(state) + [k for k in deletes if k not in state]
+    out = {c: _objects(k[j] for k in keys) for j, c in enumerate(pk_cols)}
+    for c in value_cols:
+        out[c] = _objects(state.get(k, {}).get(c) for k in keys)
+        out[f"__set_{c}"] = np.array(
+            [k in state and (c in state[k] or k in reset) for k in keys], dtype=bool
+        )
+    out["__delete__"] = np.array([k not in state for k in keys], dtype=bool)
+    return out
+
+
+def _objects(values) -> np.ndarray:
+    """A 1-d object array (``np.array`` would nest list-valued cells)."""
+    values = list(values)
+    arr = np.empty(len(values), dtype=object)
+    arr[:] = values
+    return arr
 
 
 class SyncWriter:
@@ -112,16 +271,13 @@ class SyncWriter:
         max_lag_s: float = MAX_REPLICATION_LAG_S,
         max_syncs: int = MAX_SYNCS_PER_TABLE,
         max_rows: int = MAX_ROWS_PER_SYNC,
-        spark_squash_min_rows: int = SPARK_SQUASH_MIN_ROWS,
     ):
         self.spark = spark
         self.max_bytes = max_bytes
         self.max_lag_s = max_lag_s
         self.max_syncs = max_syncs
         self.max_rows = max_rows
-        self.spark_squash_min_rows = spark_squash_min_rows
         self._buffers: dict[str, _Buffer] = {}
-
     # --------------------------------------------------------------- ingest
 
     def enqueue(
@@ -161,204 +317,32 @@ class SyncWriter:
     # --------------------------------------------------------------- squash
 
     @staticmethod
-    def _squash(batches: list[tuple[SyncSchema, pd.DataFrame]]):
-        """Net effect of the buffered changes, in arrival order.
+    def _squash(
+        batches: list[tuple[SyncSchema, pd.DataFrame]],
+        columns: list[str] | None = None,
+    ) -> NetChange:
+        """Net effect of the buffered changes: one row per final PK, equal
+        to applying the batches one by one in arrival order.
 
-        Returns (upserts: {pk_tuple: {col: value}}, deletes: set[pk_tuple],
-        pk_cols, value_cols). PK chains (A->B renames) collapse; the
-        reference does this with UNION / FULL OUTER JOIN plans
-        (planner.rs:130-286) plus insert/update/delete classification
-        (planner.rs:291-421) — semantics identical here.
+        ``columns`` lists the target's value columns (default: the columns
+        the batches describe). A column no batch describes is only ever
+        set by a reset: a key deleted and re-inserted within the buffer
+        gets NULL there, as it would across two flushes. Chain-free
+        buffers squash vectorized; PK chains (A->B renames) take the
+        arrival-order loop. The reference builds UNION / FULL OUTER JOIN
+        plans for this (planner.rs:130-421).
         """
-        state: dict[tuple, dict] = {}
-        deletes: set[tuple] = set()
-        pk_cols: list[str] = []
-        value_cols: list[str] = []
-
-        for schema, pdf in batches:
-            pk_cols = schema.pk_targets
-            old_cols = {d.target: d.name for d in schema.cols(ROLE_OLD_PK)}
-            new_cols = {d.target: d.name for d in schema.cols(ROLE_NEW_PK)}
-            val_cols = {d.target: d.name for d in schema.cols(ROLE_VALUE)}
-            chg_cols = {d.target: d.name for d in schema.cols(ROLE_CHANGED)}
-            for c in val_cols:
-                if c not in value_cols:
-                    value_cols.append(c)
-
-            for row in pdf.itertuples(index=False):
-                r = row._asdict() if hasattr(row, "_asdict") else dict(zip(pdf.columns, row))
-                old_pk = tuple(r[old_cols[c]] for c in pk_cols)
-                new_pk = tuple(r[new_cols[c]] for c in pk_cols)
-                has_old = not any(pd.isna(v) for v in old_pk)
-                has_new = not any(pd.isna(v) for v in new_pk)
-
-                if has_old and not has_new:  # delete
-                    state.pop(old_pk, None)
-                    deletes.add(old_pk)
-                    continue
-                if not has_new:
-                    continue  # malformed row: neither insert nor delete
-
-                # collect changed values for this row
-                vals = {}
-                for tgt, src in val_cols.items():
-                    flag_col = chg_cols.get(tgt)
-                    if flag_col is not None and not bool(r[flag_col]):
-                        continue  # unchanged: don't clobber
-                    vals[tgt] = r[src]
-
-                if has_old and old_pk != new_pk:  # pk-changing update
-                    prior = state.pop(old_pk, {})
-                    deletes.add(old_pk)
-                    prior.update(vals)
-                    vals = prior
-                elif has_old:
-                    prior = state.get(old_pk, {})
-                    prior.update(vals)
-                    vals = prior
-                deletes.discard(new_pk)
-                state[new_pk] = vals
-        return state, deletes, pk_cols, value_cols
-
-    # ------------------------------------------------------- spark squash
-
-    @staticmethod
-    def _has_pk_chains(batches: list[tuple[SyncSchema, pd.DataFrame]]) -> bool:
-        """True if any row renames its PK (old != new, both present) —
-        chain resolution is inherently sequential, so those buffers take
-        the arrival-order pandas path (same envelope as the reference's
-        single-node squash plans)."""
-        for schema, pdf in batches:
-            old_cols = {d.target: d.name for d in schema.cols(ROLE_OLD_PK)}
-            new_cols = {d.target: d.name for d in schema.cols(ROLE_NEW_PK)}
-            for tgt in schema.pk_targets:
-                o, n = pdf[old_cols[tgt]], pdf[new_cols[tgt]]
-                if bool((o.notna() & n.notna() & (o != n)).any()):
-                    return True
-        return False
-
-    def _flush_spark(self, table_root: str, buf: _Buffer) -> None:
-        """Distributed last-change-per-PK squash (SURVEY Phase 7 / VERDICT
-        r1 flag: the pandas squash is a driver pass; above the row
-        threshold this expresses the same semantics as one Spark window +
-        aggregate job, then merges).
-
-        Semantics identical to ``_squash`` for chain-free buffers: per
-        final PK, the last operation decides delete-vs-upsert, and each
-        CHANGED value column takes its most recent post-delete assignment.
-        """
-        import numpy as np
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-        from pyspark.sql.window import Window
-
-        t = DeltaLiteTable(self.spark, table_root)
-        target_schema = t.schema()
-        pk_cols = buf.batches[0][0].pk_targets
-        value_cols: list[str] = []
-        for schema, _ in buf.batches:
-            for d in schema.cols(ROLE_VALUE):
-                if d.target not in value_cols and d.target in target_schema.names:
-                    value_cols.append(d.target)
-
-        # normalize every batch to one canonical frame driver-side (cheap
-        # column relabeling; the data already lives here) with a global
-        # arrival sequence — the heavy squash runs in Spark
-        frames = []
-        seq0 = 0
-        for schema, pdf in buf.batches:
-            old_cols = {d.target: d.name for d in schema.cols(ROLE_OLD_PK)}
-            new_cols = {d.target: d.name for d in schema.cols(ROLE_NEW_PK)}
-            val_cols = {d.target: d.name for d in schema.cols(ROLE_VALUE)}
-            chg_cols = {d.target: d.name for d in schema.cols(ROLE_CHANGED)}
-            out = pd.DataFrame()
-            out["__seq"] = np.arange(seq0, seq0 + len(pdf), dtype="int64")
-            seq0 += len(pdf)
-            # positional (.to_numpy) extraction: batch slices may carry a
-            # non-zero-based index and pandas column assignment aligns on it
-            for c in pk_cols:
-                out[f"__old_{c}"] = pdf[old_cols[c]].to_numpy(dtype=object)
-                out[f"__new_{c}"] = pdf[new_cols[c]].to_numpy(dtype=object)
-            for c in value_cols:
-                if c in val_cols:
-                    out[f"__val_{c}"] = pdf[val_cols[c]].to_numpy(dtype=object)
-                    flag = chg_cols.get(c)
-                    out[f"__set_{c}"] = (
-                        pdf[flag].astype(bool).to_numpy() if flag is not None else True
-                    )
-                else:
-                    out[f"__val_{c}"] = None
-                    out[f"__set_{c}"] = False
-            frames.append(out)
-        pdf_all = pd.concat(frames, ignore_index=True)
-
-        fields = [T.StructField("__seq", T.LongType(), False)]
-        for c in pk_cols:
-            dt = target_schema[c].dataType
-            fields += [T.StructField(f"__old_{c}", dt), T.StructField(f"__new_{c}", dt)]
-        for c in value_cols:
-            fields += [
-                T.StructField(f"__val_{c}", target_schema[c].dataType),
-                T.StructField(f"__set_{c}", T.BooleanType(), False),
-            ]
-        df = self.spark.createDataFrame(
-            pdf_all.where(pdf_all.notna(), None), T.StructType(fields)
+        pk_cols = batches[-1][0].pk_targets
+        value_cols = list(columns) if columns is not None else list(
+            dict.fromkeys(d.target for s, _ in batches for d in s.cols(ROLE_VALUE))
         )
-
-        has_old = None
-        has_new = None
-        for c in pk_cols:
-            o, n = F.col(f"__old_{c}").isNotNull(), F.col(f"__new_{c}").isNotNull()
-            has_old = o if has_old is None else (has_old & o)
-            has_new = n if has_new is None else (has_new & n)
-        df = df.where(has_new | has_old)  # drop malformed rows (neither)
-        df = df.select(
-            "__seq",
-            (has_old & ~has_new).alias("__is_del"),
-            *[
-                F.coalesce(F.col(f"__new_{c}"), F.col(f"__old_{c}")).alias(c)
-                for c in pk_cols
-            ],
-            *[F.col(f"__val_{c}") for c in value_cols],
-            *[F.col(f"__set_{c}") for c in value_cols],
+        rows = _rows_in_arrival_order(batches, pk_cols, value_cols)
+        both = rows["has_old"] & rows["has_new"]
+        chains = any(
+            (rows[f"old:{c}"][both] != rows[f"new:{c}"][both]).any() for c in pk_cols
         )
-        # one shuffle on the PK; the window and the aggregate reuse it
-        w = Window.partitionBy(*pk_cols)
-        df = df.withColumn(
-            "__last_del",
-            F.coalesce(
-                F.max(F.when(F.col("__is_del"), F.col("__seq"))).over(w), F.lit(-1)
-            ),
-        )
-
-        def _post_del(c: str):
-            return F.col(f"__set_{c}") & (F.col("__seq") > F.col("__last_del"))
-
-        agg = df.groupBy(*pk_cols).agg(
-            F.max_by("__is_del", "__seq").alias("__delete__"),
-            *[
-                F.max_by(
-                    F.col(f"__val_{c}"), F.when(_post_del(c), F.col("__seq"))
-                ).alias(c)
-                for c in value_cols
-            ],
-            *[
-                F.coalesce(F.max(F.when(_post_del(c), F.lit(True))), F.lit(False)).alias(
-                    f"__set_{c}"
-                )
-                for c in value_cols
-            ],
-        )
-        t.merge(
-            agg,
-            pk_cols,
-            delete_col="__delete__",
-            app_txn=(
-                {"app_id": buf.origin, "version": buf.last_sequence}
-                if buf.origin is not None
-                else None
-            ),
-        )
+        squash = _squash_in_order if chains else _squash_vectorized
+        return NetChange(pd.DataFrame(squash(rows, pk_cols, value_cols)), pk_cols, value_cols)
 
     # --------------------------------------------------------------- flush
 
@@ -366,49 +350,15 @@ class SyncWriter:
         buf = self._buffers.pop(table_root, None)
         if buf is None or not buf.batches:
             return
-        total_rows = sum(len(b) for _, b in buf.batches)
-        if total_rows >= self.spark_squash_min_rows and not self._has_pk_chains(
-            buf.batches
-        ):
-            self._flush_spark(table_root, buf)
-            return
-        upserts, deletes, pk_cols, value_cols = self._squash(buf.batches)
-
         t = DeltaLiteTable(self.spark, table_root)
-        target_schema = t.schema()
-        rows = []
-        for pk, vals in upserts.items():
-            row = dict(zip(pk_cols, pk))
-            row.update({c: vals.get(c) for c in value_cols})
-            # per-column set masks so partial updates never clobber
-            row.update({f"__set_{c}": c in vals for c in value_cols})
-            row["__delete__"] = False
-            rows.append(row)
-        for pk in deletes:
-            if pk in upserts:
-                continue
-            row = dict(zip(pk_cols, pk))
-            row.update({c: None for c in value_cols})
-            row.update({f"__set_{c}": False for c in value_cols})
-            row["__delete__"] = True
-            rows.append(row)
-        if not rows:
+        pk_cols = buf.batches[-1][0].pk_targets
+        net = self._squash(
+            buf.batches, [c for c in t.schema().names if c not in pk_cols]
+        )
+        if net.frame.empty:
             return
-
-        import pyspark.sql.types as T
-
-        vcols = [c for c in value_cols if c in target_schema.names]
-        fields = [target_schema[c] for c in pk_cols + vcols]
-        change_schema = T.StructType(
-            list(fields)
-            + [T.StructField(f"__set_{c}", T.BooleanType(), False) for c in vcols]
-            + [T.StructField("__delete__", T.BooleanType(), False)]
-        )
-        changes = self.spark.createDataFrame(
-            pd.DataFrame(rows), schema=change_schema
-        )
         t.merge(
-            changes,
+            net.frame,
             pk_cols,
             delete_col="__delete__",
             app_txn=(

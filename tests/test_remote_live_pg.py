@@ -398,7 +398,9 @@ class TestPreferTlsFallback:
             timeout=5,
             sslmode="prefer",
         )
-        assert results["startup_seen"].is_set()
+        # the server thread sets the event after its sendall returns,
+        # which can be after the client has already read the reply
+        assert results["startup_seen"].wait(5)
         conn.close()
 
     def test_require_does_not_fall_back(self):

@@ -742,3 +742,25 @@ class TestStreamSyncEndstate:
             .collect()
         }
         assert got == expect and got
+
+    def test_null_lsn_row_is_dropped(self, spark, tmp_path):
+        """A change with a NULL LSN has no batch: it is dropped, not merged
+        into the last batch (where it would set pk 99's end state)."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from seafowl_spark.queries.pipeline import q_stream_sync_endstate
+
+        sf = tmp_path / "sf"
+        sf.mkdir()
+        pq.write_table(
+            pa.table({
+                "o_orderkey": pa.array([1, 2, 3, 4, 5, 6, None], pa.int64()),
+                "o_custkey": pa.array([10, 11, 10, 12, 11, 13, 99], pa.int64()),
+                "o_totalprice": [1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 9.9],
+            }),
+            str(sf / "orders.parquet"),
+        )
+        out = q_stream_sync_endstate(spark, str(sf), work_dir=str(tmp_path / "w"))
+        got = sorted((r["pk"], r["last_seq"], r["val"]) for r in out.collect())
+        assert got == [(10, 3, 3.0), (11, 5, 5.0), (12, 4, 4.0), (13, 6, 6.0)]

@@ -160,15 +160,15 @@ class TestSyncApply:
 
 
 class TestSparkSquash:
-    """The distributed flush path (spark_squash_min_rows=0 forces it):
-    identical semantics to the pandas squash for chain-free buffers, and
-    automatic fallback to the arrival-order pandas pass for PK chains."""
+    """Cases written for the retired Spark squash path, now run on the one
+    driver-side squash: chain-free buffers squash vectorized, PK chains
+    take the arrival-order loop."""
 
     def _root(self, ctx):
         return ctx.table_root(ctx.catalog.get_table("default", "public", "s"))
 
     def _writer(self, ctx):
-        return SyncWriter(ctx.spark, max_rows=10_000, spark_squash_min_rows=0)
+        return SyncWriter(ctx.spark, max_rows=10_000)
 
     def test_insert_update_delete_spark_path(self, target):
         ctx = target
@@ -247,8 +247,8 @@ class TestSparkSquash:
         assert rows(out) == [(1, "fresh", 7.0)]
 
     def test_pk_chain_falls_back_to_pandas(self, target):
-        """Renames force the sequential path even at threshold 0; the
-        result matches the chain-squash semantics."""
+        """Renames take the arrival-order loop; the result matches the
+        chain-squash semantics."""
         ctx = target
         w = self._writer(ctx)
         b1 = pd.DataFrame({"old_pk": [1], "new_pk": [10], "a": ["moved"], "b": [1.0]})
@@ -260,10 +260,12 @@ class TestSparkSquash:
         out = ctx.execute("SELECT pk, a, b FROM s ORDER BY pk")
         assert rows(out) == [(2, "two", 2.0), (10, "moved2", 9.9)]
 
-    def test_equivalent_to_pandas_squash(self, ctx):
+    def test_equivalent_to_pandas_squash(self, ctx, monkeypatch):
         """Randomized chain-free buffers produce identical tables through
-        both flush paths."""
+        the vectorized squash and the arrival-order loop."""
         import random as _random
+
+        from seafowl_spark.streaming import sync
 
         rng = _random.Random(123)
         ops = []
@@ -279,18 +281,299 @@ class TestSparkSquash:
         pdf = pd.DataFrame(ops, columns=["old_pk", "new_pk", "a", "b"])
 
         outs = {}
-        for mode, threshold in (("pandas", 10**9), ("spark", 0)):
+        for mode in ("vectorized", "in_order"):
+            if mode == "in_order":
+                monkeypatch.setattr(sync, "_squash_vectorized", sync._squash_in_order)
             ctx.execute(f"DROP TABLE IF EXISTS sq_{mode}")
             ctx.execute(f"CREATE TABLE sq_{mode} (pk bigint, a varchar, b double)")
             ctx.execute(f"INSERT INTO sq_{mode} VALUES (0, 'base', 0.0), (5, 'five', 5.0)")
-            w = SyncWriter(ctx.spark, max_rows=10_000, spark_squash_min_rows=threshold)
+            w = SyncWriter(ctx.spark, max_rows=10_000)
             root = ctx.table_root(ctx.catalog.get_table("default", "public", f"sq_{mode}"))
             half = len(pdf) // 2
             w.enqueue(root, full_schema(), pdf.iloc[:half], origin="o1", sequence=1)
             w.enqueue(root, full_schema(), pdf.iloc[half:], origin="o1", sequence=2)
             w.flush_all()
             outs[mode] = rows(ctx.execute(f"SELECT pk, a, b FROM sq_{mode} ORDER BY pk"))
-        assert outs["pandas"] == outs["spark"]
+        assert outs["vectorized"] == outs["in_order"]
+
+
+def changed_schema():
+    return SyncSchema(
+        [
+            CD("old_pk", "old_pk", "pk"),
+            CD("new_pk", "new_pk", "pk"),
+            CD("a", "value", "a"),
+            CD("a_changed", "changed", "a"),
+            CD("b", "value", "b"),
+            CD("b_changed", "changed", "b"),
+        ]
+    )
+
+
+class TestFlushBoundaries:
+    """One flush of a buffer equals flushing after every batch."""
+
+    def _root(self, ctx, name="s"):
+        return ctx.table_root(ctx.catalog.get_table("default", "public", name))
+
+    def _change(self, old, new, a=None, a_set=True, b=None, b_set=True):
+        return {"old_pk": old, "new_pk": new, "a": a, "a_changed": a_set,
+                "b": b, "b_changed": b_set}
+
+    def test_reinsert_after_delete_starts_from_empty_row(self, target):
+        """delete(1), then insert(1) leaving ``a`` unchanged: ``a`` is NULL,
+        as when the delete is flushed first — not the deleted row's value."""
+        ctx = target
+        w = SyncWriter(ctx.spark, max_rows=10_000)
+        b1 = pd.DataFrame([self._change(1, None, a_set=False, b_set=False)])
+        b2 = pd.DataFrame([self._change(None, 1, a_set=False, b=7.0)])
+        w.enqueue(self._root(ctx), changed_schema(), b1, origin="o1", sequence=1)
+        w.enqueue(self._root(ctx), changed_schema(), b2, origin="o1", sequence=2)
+        w.flush_all()
+        out = ctx.execute("SELECT pk, a, b FROM s WHERE pk = 1")
+        assert rows(out) == [(1, None, 7.0)]
+
+    def test_insert_over_pending_update_keeps_it(self, target):
+        """update(1, a='x'), then insert(1) leaving ``a`` unchanged: the
+        insert lands on the updated row and ``a`` stays 'x'."""
+        ctx = target
+        w = SyncWriter(ctx.spark, max_rows=10_000)
+        b1 = pd.DataFrame([self._change(1, 1, a="x", b_set=False)])
+        b2 = pd.DataFrame([self._change(None, 1, a_set=False, b=3.0)])
+        w.enqueue(self._root(ctx), changed_schema(), b1, origin="o1", sequence=1)
+        w.enqueue(self._root(ctx), changed_schema(), b2, origin="o1", sequence=2)
+        w.flush_all()
+        out = ctx.execute("SELECT pk, a, b FROM s WHERE pk = 1")
+        assert rows(out) == [(1, "x", 3.0)]
+
+    def _stream(self, rng, n_batches, batch_rows, n_keys):
+        """Chain-free change batches: inserts, same-key updates and deletes
+        over a small key space (so keys are deleted and re-inserted), with
+        random CHANGED flags and some malformed rows."""
+        batches = []
+        for _ in range(n_batches):
+            recs = []
+            for _ in range(batch_rows):
+                pk = rng.randrange(n_keys)
+                kind = rng.choice(["ins", "ins", "upd", "upd", "del", "bad"])
+                a = rng.choice([None, f"v{rng.randrange(100)}"])
+                b = rng.choice([None, float(rng.randrange(100))])
+                a_set, b_set = rng.random() < 0.7, rng.random() < 0.7
+                if kind == "del":
+                    recs.append(self._change(pk, None, a, a_set, b, b_set))
+                elif kind == "bad":
+                    recs.append(self._change(None, None, a, a_set, b, b_set))
+                else:
+                    old = pk if kind == "upd" else None
+                    recs.append(self._change(old, pk, a, a_set, b, b_set))
+            batches.append(pd.DataFrame(recs))
+        return batches
+
+    @pytest.mark.parametrize("seed", [11, 12, 13])
+    def test_one_flush_equals_flush_per_batch(self, ctx, seed):
+        """Property over seeded random chain-free streams. The table has a
+        column no batch describes (``c``): a key deleted and re-inserted
+        within one flush gets NULL there, as across two flushes."""
+        import random as _random
+
+        batches = self._stream(_random.Random(seed), n_batches=4, batch_rows=25, n_keys=10)
+        outs = []
+        for mode in ("one", "each"):
+            name = f"fb_{mode}"
+            ctx.execute(f"CREATE TABLE {name} (pk bigint, a varchar, b double, c int)")
+            ctx.execute(
+                f"INSERT INTO {name} SELECT id AS pk, concat('base', id) AS a, "
+                f"CAST(id AS double) AS b, CAST(id * 10 AS int) AS c FROM range(0, 10, 2)"
+            )
+            w = SyncWriter(ctx.spark, max_rows=10_000)
+            root = self._root(ctx, name)
+            for i, batch in enumerate(batches):
+                w.enqueue(root, changed_schema(), batch, origin="o1", sequence=i + 1)
+                if mode == "each":
+                    w.flush_all()
+            w.flush_all()
+            outs.append(rows(ctx.execute(f"SELECT pk, a, b, c FROM {name}")))
+        assert outs[0] == outs[1]
+
+    def test_squash_result_shape(self):
+        """``_squash(...)[0]``/``[1]`` are sized collections of upserted and
+        deleted PK tuples; ``frame`` is the merge-ready change set."""
+        batch = pd.DataFrame(
+            {"old_pk": [None, 1, 2, None], "new_pk": [3, 1, None, None],
+             "a": ["three", "ONE", None, "bad"], "b": [3.0, 1.5, None, 0.0]}
+        )
+        net = SyncWriter._squash([(full_schema(), batch)])
+        upserts, deletes, pk_cols, value_cols = net
+        assert sorted(upserts) == [(1,), (3,)] and len(upserts) == 2
+        assert upserts[(3,)] == {"a": "three", "b": 3.0}
+        assert deletes == {(2,)}
+        assert (pk_cols, value_cols) == (["pk"], ["a", "b"])
+        assert list(net.frame.columns) == [
+            "pk", "a", "__set_a", "b", "__set_b", "__delete__"
+        ]
+        assert len(net.frame) == 3
+
+
+class TestDriverMergeFacts:
+    """A driver-held change set gives merge its pre-join facts without a
+    Spark job, and those facts equal the Spark aggregate's."""
+
+    def _jobs_before_write(self, ctx, monkeypatch, fn):
+        from seafowl_spark.engine.deltalite import DeltaLiteTable
+
+        sc = ctx.spark.sparkContext
+        tracker = sc.statusTracker()
+        group = f"pre_join_{id(fn)}"
+        seen = []
+        write = DeltaLiteTable._write_data
+
+        def spy(self, *args, **kwargs):
+            seen.append(len(tracker.getJobIdsForGroup(group)))
+            return write(self, *args, **kwargs)
+
+        monkeypatch.setattr(DeltaLiteTable, "_write_data", spy)
+        sc.setJobGroup(group, "pre-join job count")
+        try:
+            fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        assert len(seen) == 1
+        return seen[0]
+
+    def test_chain_free_flush_runs_no_job_before_join(self, ctx, monkeypatch):
+        import numpy as np
+
+        ctx.execute("CREATE TABLE big (pk bigint, a varchar, b double)")
+        ctx.execute(
+            "INSERT INTO big SELECT id AS pk, concat('r', id) AS a, "
+            "CAST(id AS double) AS b FROM range(20000)"
+        )
+        root = ctx.table_root(ctx.catalog.get_table("default", "public", "big"))
+        rng = np.random.default_rng(7)
+        upd = rng.choice(20000, 3000, replace=False)
+        old = list(upd[:2000]) + list(upd[2000:]) + [None] * 2000
+        new = list(upd[:2000]) + [None] * 1000 + list(range(20000, 22000))
+        batch = pd.DataFrame(
+            {"old_pk": pd.array(old, "Int64"), "new_pk": pd.array(new, "Int64"),
+             "a": [f"u{i}" for i in range(5000)], "b": np.arange(5000, dtype=float)}
+        )
+        w = SyncWriter(ctx.spark, max_rows=10_000)
+        w.enqueue(root, full_schema(), batch, origin="o1", sequence=1)
+        assert self._jobs_before_write(ctx, monkeypatch, w.flush_all) == 0
+        out = ctx.execute("SELECT count(*) AS n, count(a) AS na FROM big")
+        assert rows(out) == [(21000, 21000)]
+
+    def test_local_relation_takes_driver_path(self, ctx, monkeypatch):
+        """A Spark DataFrame whose plan is a LocalRelation is driver-held
+        too: no job before the join, same table as the aggregate path."""
+        ctx.execute("CREATE TABLE lr (pk bigint, ts timestamp, a varchar)")
+        ctx.execute(
+            "INSERT INTO lr VALUES (1, TIMESTAMP '2024-01-01 10:00:00', 'one'), "
+            "(2, TIMESTAMP '2024-01-02 10:00:00', 'two')"
+        )
+        t = ctx.delta_table("lr")
+        changes = ctx.spark.createDataFrame(
+            pd.DataFrame({"pk": [2, 3], "ts": pd.to_datetime(["2024-02-02", "2024-03-03"]),
+                          "a": ["TWO", "three"]}),
+            schema="pk bigint, ts timestamp, a string",
+        )
+        merge = lambda: t.merge(changes, ["pk", "ts"])  # noqa: E731
+        assert self._jobs_before_write(ctx, monkeypatch, merge) == 0
+        assert rows(ctx.execute("SELECT pk, CAST(ts AS date) AS d, a FROM lr")) == rows(
+            ctx.spark.sql(
+                "SELECT * FROM VALUES (1, DATE '2024-01-01', 'one'), "
+                "(2, DATE '2024-01-02', 'two'), (2, DATE '2024-02-02', 'TWO'), "
+                "(3, DATE '2024-03-03', 'three') AS v(pk, d, a)"
+            )
+        )
+
+    def test_spark_dataframe_merge_keeps_its_aggregate(self, ctx, monkeypatch):
+        """A computed (non-local) Spark change set still runs the one
+        aggregate job before the join."""
+        ctx.execute("CREATE TABLE sp (pk bigint, a varchar)")
+        ctx.execute("INSERT INTO sp VALUES (1, 'one'), (2, 'two')")
+        t = ctx.delta_table("sp")
+        changes = ctx.spark.range(1, 3).selectExpr("id AS pk", "'x' AS a").repartition(2)
+        jobs = self._jobs_before_write(ctx, monkeypatch, lambda: t.merge(changes, ["pk"]))
+        assert jobs >= 1
+        assert rows(ctx.execute("SELECT pk, a FROM sp")) == [(1, "x"), (2, "x")]
+
+    @pytest.mark.parametrize(
+        "ddl,values",
+        [
+            ("bigint", [5, -3, 2**40, 7]),
+            ("int", [5, -3, 2**20, 7]),
+            ("string", ["m", "B", "zz", "é", "a"]),
+            ("date", ["2024-03-01", "1999-12-31", "2030-01-01"]),
+        ],
+    )
+    def test_bounds_match_spark_aggregate(self, spark, ddl, values):
+        import datetime
+
+        from pyspark.sql import functions as F
+        from pyspark.sql import types as T
+
+        from seafowl_spark.engine.deltalite import _local_changes, _local_pk_bounds
+
+        if ddl == "date":
+            values = [datetime.date.fromisoformat(v) for v in values]
+        schema = T.StructType.fromDDL(f"pk {ddl}, v string")
+        for vals in (values, values + [None]):
+            pdf = pd.DataFrame({"pk": pd.Series(vals, dtype=object), "v": "x"})
+            df, table = _local_changes(spark, pdf, schema, None)
+            got = _local_pk_bounds(table, ["pk"])
+            want = df.repartition(2).agg(
+                F.min("pk").alias("min_pk"), F.max("pk").alias("max_pk"),
+                F.max(F.col("pk").isNull()).alias("__null_pk"),
+            ).collect()[0].asDict()
+            assert got == want
+            assert df.schema["pk"].dataType == schema["pk"].dataType
+            # an Arrow frame takes the same path
+            _, from_arrow = _local_changes(spark, table, schema, None)
+            assert _local_pk_bounds(from_arrow, ["pk"]) == want
+
+    def test_null_pk_rejected_from_driver_frame(self, ctx):
+        from seafowl_spark.engine.deltalite import DeltaLiteError
+
+        ctx.execute("CREATE TABLE np (pk bigint, a varchar)")
+        ctx.execute("INSERT INTO np VALUES (1, 'one')")
+        t = ctx.delta_table("np")
+        changes = pd.DataFrame({"pk": pd.array([2, None], "Int64"), "a": ["x", "y"]})
+        with pytest.raises(DeltaLiteError, match="NULL in primary key"):
+            t.merge(changes, ["pk"])
+
+    def test_bucket_set_matches_spark_aggregate(self, ctx, monkeypatch):
+        """Bucketed table: the driver path's bucket set (a jobless
+        projection) prunes the same files as the aggregate's collect_set,
+        and the merge launches no job before the join."""
+        outs = {}
+        for mode in ("driver", "spark"):
+            name = f"bk_{mode}"
+            ctx.execute(
+                f"CREATE TABLE {name} (pk bigint, a varchar) "
+                f"WITH ('bucket_by' 'pk', 'buckets' '8')"
+            )
+            ctx.execute(
+                f"INSERT INTO {name} SELECT id AS pk, concat('r', id) AS a FROM range(200)"
+            )
+            t = ctx.delta_table(name)
+            pdf = pd.DataFrame(
+                {"pk": [3, 17, 250], "a": ["x", "y", "z"],
+                 "__delete__": [False, True, False]}
+            )
+            if mode == "driver":
+                merge = lambda: t.merge(pdf, ["pk"], delete_col="__delete__")  # noqa: E731
+                assert self._jobs_before_write(ctx, monkeypatch, merge) == 0
+            else:
+                changes = ctx.spark.createDataFrame(pdf).repartition(2)
+                t.merge(changes, ["pk"], delete_col="__delete__")
+            commit = t.read_commit(t.latest_version())
+            outs[mode] = (
+                len(commit.removes),
+                rows(ctx.execute(f"SELECT pk, a FROM {name} WHERE pk IN (3, 17, 250)")),
+            )
+        assert outs["driver"] == outs["spark"]
+        assert outs["driver"][0] < 8  # the untouched buckets were not rewritten
 
 
 class TestFineGrainedPruning:
