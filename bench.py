@@ -125,10 +125,10 @@ ERA_BASELINE_END_SEC = 1.17
 # r11 (the r10 verdict's task #1): a drift-probe ratio above this means
 # the HOST is too contended for cross-round comparison to mean anything
 # (the sealed r10 run read 1.9x on code byte-identical to r9 and
-# published a false "regressed" — judge-arbitrated in
-# tools/bench_arbitrate_r10_flags.md). The probe retries once (transient
-# spikes pass on retry); if it still exceeds the gate every cross-round
-# verdict renders "environment-invalid", never "regressed", and later
+# published a false "regressed"; the arbitration's verdict: the engine
+# got faster, the record measured a contended host). The probe retries
+# once (transient spikes pass on retry); if it still exceeds the gate
+# every cross-round verdict renders "environment-invalid", never "regressed", and later
 # rounds' prev_round_comparison skips this record as an anchor.
 DRIFT_INVALID_GATE = 1.5
 # r11 follow-up: contention BELOW the invalid gate still skews the
@@ -872,7 +872,8 @@ def main() -> None:
     # Cross-round history: the uniform r2->r4 "slowdown" was the host (r2
     # code re-run on the r5 host was 2.5x its recorded numbers); the r5->r6
     # +22% was arbitrated in r7 by running both rounds' exact code
-    # head-to-head on the r7 host (see tools/bench_arbitrate_r5_r6.md) —
+    # head-to-head on the r7 host (verdict: host drift plus q_time_window's
+    # absorbed get_json_object work, no code regression) —
     # normalize by drift_probe.ratio before reading anything across rounds.
     note = (
         f"vs r6 (single-shot, normalized): {moved}x -> "

@@ -183,7 +183,7 @@ class SeafowlContext:
         # Statement execution is serialized: the threaded frontends share one
         # context, and view refresh / search-path / catalog writes are shared
         # state. Heavy work stays parallel — execute() only ANALYZES (plans
-        # are lazy); actions (toLocalIterator/toArrow) run outside the lock.
+        # are lazy); the result fetch (engine/results.py) runs outside the lock.
         self._exec_lock = threading.RLock()
 
     # ------------------------------------------------------------ resolution

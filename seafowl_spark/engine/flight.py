@@ -18,9 +18,9 @@ Same control flow as the reference's Flight SQL handler:
   sync writer (reference DataSyncCommand over do_put, handler.rs:136-237);
   the ``flush`` action forces a merge.
 
-Scale note: results materialize driver-side as Arrow before streaming
-(fine for serving-layer result sets); a partition-streaming do_get is the
-future path for bulk exports.
+Scale note: a result is fetched in one Spark job and held driver-side as
+Arrow before streaming (engine/results.py, the fetch HTTP and pgwire use
+too); a partition-streaming do_get is the future path for bulk exports.
 """
 
 from __future__ import annotations
@@ -33,7 +33,7 @@ import pyarrow as pa
 import pyarrow.flight as flight
 
 from ..streaming.sync import ColumnDescriptor, SyncSchema, SyncWriter
-from . import bindings
+from . import bindings, results
 from .context import SeafowlContext
 from .server import AccessPolicy
 
@@ -100,7 +100,7 @@ class SeafowlFlightServer(flight.FlightServerBase):
         # search_path rides the call (applied under the context's execution
         # lock) instead of mutating shared ctx state across threads
         df = self.ctx.execute(query, search_path=command.get("search_path"))
-        return df.toArrow()
+        return results.fetch(df)
 
     def _inline_insert(self, query: str, specs: dict[str, tuple[str, str]]):
         """INSERT INTO an inline ICEBERG table (reference

@@ -33,7 +33,7 @@ import threading
 
 from pyspark.sql import types as T
 
-from . import parser
+from . import parser, results
 from .context import SeafowlContext
 from .server import AccessPolicy
 
@@ -66,6 +66,9 @@ def _msg(tag: bytes, payload: bytes) -> bytes:
 
 def _cstr(s: str) -> bytes:
     return s.encode() + b"\x00"
+
+
+_NULL = struct.pack("!i", -1)  # DataRow field length of a NULL
 
 
 class _Handler(socketserver.BaseRequestHandler):
@@ -389,24 +392,25 @@ class _Handler(socketserver.BaseRequestHandler):
         sock.sendall(_msg(b"3", b""))  # CloseComplete
 
     def _send_rows(self, sock: socket.socket, df, limit: int | None = None) -> int:
-        fields = df.schema.fields
+        """Send ``df``'s rows as text DataRows; ``limit`` (Execute's
+        max_rows) becomes a LIMIT on the plan. One Spark job fetches the
+        Arrow result and each batch's DataRows go out in one sendall, so
+        the driver holds the Arrow result plus one batch of messages."""
+        ncols = struct.pack("!H", len(df.columns))
         n = 0
-        for row in df.toLocalIterator(prefetchPartitions=True):
-            if limit is not None and n >= limit:
-                break
-            n += 1
-            body = struct.pack("!H", len(fields))
-            for v in row:
-                if v is None:
-                    body += struct.pack("!i", -1)
-                else:
-                    if isinstance(v, bool):
-                        text = "t" if v else "f"
+        for batch in results.row_batches(results.fetch(df, limit), df.schema):
+            msgs = []
+            for row in batch:
+                body = [ncols]
+                for v in row:
+                    if v is None:
+                        body.append(_NULL)
                     else:
-                        text = str(v)
-                    b = text.encode()
-                    body += struct.pack("!i", len(b)) + b
-            sock.sendall(_msg(b"D", body))
+                        b = (("t" if v else "f") if isinstance(v, bool) else str(v)).encode()
+                        body.append(struct.pack("!i", len(b)) + b)
+                msgs.append(_msg(b"D", b"".join(body)))
+            sock.sendall(b"".join(msgs))
+            n += len(msgs)
         return n
 
     def _simple_query(self, sock: socket.socket, sql: str):

@@ -22,9 +22,11 @@ independent ("any" | "off" | sha256 hex).
 
 Serving model: one hot SparkSession + SeafowlContext behind a threaded
 stdlib HTTP server — the Spark driver is the coordinator exactly as the
-reference's tokio process is, and rows stream to the client via
-toLocalIterator (partition-at-a-time, no full materialization on the
-driver; reference streams RecordBatches the same way, http.rs:128-155).
+reference's tokio process is. A read runs as one Spark job that ships the
+whole result to the driver as Arrow record batches (engine/results.py);
+the driver holds that Arrow result plus the encoded JSON-lines body, which
+it builds batch by batch (the reference encodes RecordBatches the same
+way, http.rs:128-155) and sends with its Content-Length.
 """
 
 from __future__ import annotations
@@ -41,7 +43,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import DataFrame
 
-from . import parser
+from . import parser, results
 from .context import SeafowlContext
 from .types import to_ddl
 
@@ -74,15 +76,20 @@ def _json_default(v):
     return str(v)
 
 
+# json.dumps(obj, default=_json_default), without a new encoder per row
+_ENCODE = json.JSONEncoder(default=_json_default).encode
+
+
 def _rows_to_jsonlines(df: DataFrame) -> "bytes":
-    buf = io.BytesIO()
+    """Run ``df`` and encode its rows as JSON lines: one Spark job fetches
+    the Arrow result, then each batch's rows become one JSON object per
+    line. The driver holds the Arrow result, one batch of Python rows and
+    the body."""
     cols = df.columns
-    # partition-at-a-time pull: bounded driver memory
-    for row in df.toLocalIterator(prefetchPartitions=True):
-        obj = {c: row[i] for i, c in enumerate(cols)}
-        buf.write(json.dumps(obj, default=_json_default).encode())
-        buf.write(b"\n")
-    return buf.getvalue()
+    buf = io.StringIO()
+    for batch in results.row_batches(results.fetch(df), df.schema):
+        buf.write("".join([_ENCODE(dict(zip(cols, row))) + "\n" for row in batch]))
+    return buf.getvalue().encode()
 
 
 def _arrow_schema_param(df: DataFrame) -> str:
@@ -95,8 +102,6 @@ class Metrics:
     config/context.rs setup_metrics)."""
 
     def __init__(self):
-        import threading
-
         self._lock = threading.Lock()
         self.counters = {
             "queries_total": 0,
@@ -119,6 +124,15 @@ class Metrics:
 
 
 METRICS = Metrics()
+
+
+def _count_query(t0: float) -> float:
+    """Count one executed statement (POST or GET answered 200) and its
+    seconds since ``t0``; returns those seconds."""
+    elapsed = time.perf_counter() - t0
+    METRICS.inc("queries_total")
+    METRICS.inc("query_seconds_total", elapsed)
+    return elapsed
 
 
 class SeafowlHandler(BaseHTTPRequestHandler):
@@ -270,6 +284,7 @@ class SeafowlHandler(BaseHTTPRequestHandler):
             t0 = time.perf_counter()
             df = self.ctx.execute(stmts[0])
             body = _rows_to_jsonlines(df)
+            elapsed = _count_query(t0)
             self._send(
                 200,
                 body,
@@ -278,10 +293,11 @@ class SeafowlHandler(BaseHTTPRequestHandler):
                     "ETag": etag,
                     "Cache-Control": self.cache_control,
                     "Vary": f"Authorization, Content-Type, Origin, {QUERY_HEADER}",
-                    "X-Seafowl-Query-Time": f"{time.perf_counter() - t0:.3f}",
+                    "X-Seafowl-Query-Time": f"{elapsed:.3f}",
                 },
             )
         except Exception as exc:  # noqa: BLE001
+            METRICS.inc("query_errors_total")
             self._error(400, str(exc)[:2000])
 
     def _run_query(self):
@@ -301,18 +317,18 @@ class SeafowlHandler(BaseHTTPRequestHandler):
         try:
             t0 = time.perf_counter()
             df = self.ctx.execute(query)
-            METRICS.inc("queries_total")
             if df is None:
+                _count_query(t0)
                 self._send(200, b"", {"Content-Type": "application/json"})
                 return
             body = _rows_to_jsonlines(df)
-            METRICS.inc("query_seconds_total", time.perf_counter() - t0)
+            elapsed = _count_query(t0)
             self._send(
                 200,
                 body,
                 {
                     "Content-Type": f"application/json; arrow-schema={_arrow_schema_param(df)}",
-                    "X-Seafowl-Query-Time": f"{time.perf_counter() - t0:.3f}",
+                    "X-Seafowl-Query-Time": f"{elapsed:.3f}",
                 },
             )
         except Exception as exc:  # noqa: BLE001

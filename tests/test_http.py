@@ -200,6 +200,54 @@ class TestHttp:
                 assert r.read() == b"ready"
 
 
+class TestMetrics:
+    """/metrics counts every executed statement and every failed one the
+    same way on POST and GET; a 304 counts only as a cache hit."""
+
+    @staticmethod
+    def _counters(port):
+        with urllib.request.urlopen(f"http://127.0.0.1:{port}/metrics") as r:
+            text = r.read().decode()
+        return {
+            name[len("seafowl_"):]: float(value)
+            for name, value in (
+                line.split() for line in text.splitlines() if not line.startswith("#")
+            )
+        }
+
+    def _delta(self, port, fn):
+        before = self._counters(port)
+        fn()
+        after = self._counters(port)
+        return {k: after[k] - before[k] for k in after if after[k] != before[k]}
+
+    def test_post_and_get_counted_alike(self, server):
+        port = server.port
+        write = self._delta(port, lambda: _post_q(port, "CREATE TABLE m (x int)"))
+        assert set(write) == {"queries_total", "query_seconds_total"}
+        assert write["queries_total"] == 1 and write["query_seconds_total"] > 0
+
+        read = self._delta(port, lambda: _post_q(port, "SELECT * FROM m"))
+        assert set(read) == {"queries_total", "query_seconds_total"}
+        assert read["queries_total"] == 1
+
+        q = "SELECT x FROM m"
+        got = {}
+        ok = self._delta(port, lambda: got.update(r=_get_q(port, q)))
+        assert got["r"][0] == 200
+        assert set(ok) == {"queries_total", "query_seconds_total"}
+        assert ok["queries_total"] == 1 and ok["query_seconds_total"] > 0
+
+        etag = got["r"][2]["ETag"]
+        hit = self._delta(port, lambda: got.update(r=_get_q(port, q, etag=etag)))
+        assert got["r"][0] == 304
+        assert hit == {"cache_hits_total": 1}
+
+        bad = self._delta(port, lambda: got.update(r=_get_q(port, "SELECT nope FROM m")))
+        assert got["r"][0] == 400
+        assert bad == {"query_errors_total": 1}
+
+
 class TestUploadLimit:
     def test_oversized_upload_rejected(self, ctx):
         """upload_data_max_length (reference schema.rs:251): a body over

@@ -1,6 +1,7 @@
 """Isolated per-query bench probe — the arbitration protocol the r7/r8
-flag verdicts used (tools/bench_arbitrate_t_exact_dedup.md,
-bench_arbitrate_r8_flags.md), packaged as a tool: fresh process, bench
+flag verdicts used (both closed the flags as environmental: t_exact_dedup
+and s_ann_cosine_bruteforce ran at or below their anchors in isolation),
+packaged as a tool: fresh process, bench
 warm-up, min-of-5 for ONE query, the frozen drift probe on the same hot
 session, and the cross-round normalized value.
 
