@@ -18,11 +18,13 @@ before parsing — same effect as the reference's schema providers.
 from __future__ import annotations
 
 import base64
+import json
 import os
 import re
 import threading
+from collections import Counter
 from contextlib import contextmanager
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Any
 from hashlib import sha256
 
@@ -85,6 +87,17 @@ def _mangle(schema: str, name: str) -> str:
     return f"{safe}_{hashlib.md5(raw.encode()).hexdigest()[:8]}"
 
 
+# temp-view name -> (schema, name) of every lazily built introspection frame
+_LAZY_NAMES = {
+    _mangle(schema, name): (schema, name)
+    for schema, names in (
+        (SYSTEM_SCHEMA, _SYSTEM_TABLE_NAMES),
+        ("information_schema", _INFO_SCHEMA_NAMES),
+    )
+    for name in names
+}
+
+
 # One WHERE conjunct that Spark reliably offers to pushFilters AND
 # sources/remote.filter_to_sql reliably ships: a plain column compared to a
 # plain literal (no casts, no functions, no disjunction). Identifier may be
@@ -145,6 +158,21 @@ class StatementResult:
 
     operation: str
     rows_affected: int | None = None
+
+
+@dataclass
+class Reads:
+    """What one statement reads (SeafowlContext._reads)."""
+
+    # uuid -> (entry, head snapshot) of every catalog entry read, views
+    # and the entries they read included
+    tables: dict[str, tuple[TableEntry, Snapshot]] = field(default_factory=dict)
+    # (table uuid, index, built_version, file_fp) of each search_index() read
+    indexes: set[tuple[str, str, int, str]] = field(default_factory=set)
+    # lower-cased name -> spec of each persisted function named
+    functions: dict[str, dict] = field(default_factory=dict)
+    system: bool = False  # reads a system.* or information_schema.* frame
+    staging: bool = False  # reads a staging table (those carry no version)
 
 
 class SeafowlContext:
@@ -503,42 +531,23 @@ class SeafowlContext:
         with reg.lock:
             return self._reload_views(reg)
 
-    def _reload_views(self, reg: bindings.Bindings) -> dict[str, str]:
+    def _name_mapping(
+        self, entries: list[TableEntry]
+    ) -> tuple[dict[str, str], list[tuple[TableEntry, str, str | None]]]:
+        """Every spelling a statement may use for a visible relation,
+        mapped to its temp-view name, plus each catalog entry's (mangled,
+        plain) temp-view names. reload_views binds by it and _reads
+        resolves by it, so the ETag sees exactly the names the rewriter
+        resolves."""
         mapping: dict[str, str] = {}
-        self._snap_fp_cache = {}
-        self._snaps = {}
-        # logical views bind AFTER every table/staging/system name is in
-        # the mapping (their defining queries may reference any of them)
-        deferred_views: list[tuple[str, int, str, str, str | None]] = []
-        # lower-cased names this reload keeps bound; reload-owned names
-        # outside it are stale
-        visible: set[str] = set()
-        entries = self.catalog.tables(self.database)
+        named: list[tuple[TableEntry, str, str | None]] = []
+        ident = r"[A-Za-z_][A-Za-z0-9_]*"
         # case-fold sibling groups: when "Foo" and "foo" both exist, only
         # the exact-lowercase one may own the bare temp-view name (the
         # unquoted-reference fold target, PG-style); the sibling stays
         # reachable through its case-sensitive quoted forms
-        lower_groups: dict[tuple, int] = {}
-        for x in entries:
-            key = (x.schema, x.name.lower())
-            lower_groups[key] = lower_groups.get(key, 0) + 1
-
-        def _casefold_collision(x) -> bool:
-            return (
-                lower_groups[(x.schema, x.name.lower())] > 1
-                and x.name != x.name.lower()
-            )
-
+        lower_groups = Counter((x.schema, x.name.lower()) for x in entries)
         for e in entries:
-            root = os.path.abspath(self.table_root(e))
-            t = DeltaLiteTable(self.spark, root)
-            snap = t.snapshot()
-            self._snaps[e.uuid] = (e, snap)
-            if (snap.properties or {}).get("search_indexes"):
-                from .search_index import snapshot_fp as _sfp
-
-                self._snap_fp_cache[e.uuid] = _sfp(snap)
-            view_sql = (snap.properties or {}).get(VIEW_PROP)
             mangled = _mangle(e.schema, e.name)
             mapping[f"{e.schema}.{e.name}"] = mangled
             mapping[f"{e.database}.{e.schema}.{e.name}"] = mangled
@@ -552,13 +561,8 @@ class SeafowlContext:
             # dialect, while Spark's temp-view namespace is
             # case-insensitive — such names get the hash-suffixed mangle
             # and resolve only via the mapping.
-            plain = r"[A-Za-z_][A-Za-z0-9_]*"
-            s_quoted = (
-                not re.fullmatch(plain, e.schema) or e.schema != e.schema.lower()
-            )
-            n_quoted = (
-                not re.fullmatch(plain, e.name) or e.name != e.name.lower()
-            )
+            s_quoted = not re.fullmatch(ident, e.schema) or e.schema != e.schema.lower()
+            n_quoted = not re.fullmatch(ident, e.name) or e.name != e.name.lower()
             if s_quoted or n_quoted:
                 mapping[f'"{e.schema}"."{e.name}"'] = mangled
             if s_quoted:
@@ -572,10 +576,40 @@ class SeafowlContext:
             plain = (
                 e.name
                 if e.schema == self.search_schema
-                and re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", e.name)
-                and not _casefold_collision(e)
+                and re.fullmatch(ident, e.name)
+                and not (
+                    lower_groups[(e.schema, e.name.lower())] > 1
+                    and e.name != e.name.lower()
+                )
                 else None
             )
+            named.append((e, mangled, plain))
+        for name in self.staging:
+            mapping[f"{STAGING_SCHEMA}.{name}"] = name
+        for mangled, (schema, name) in _LAZY_NAMES.items():
+            mapping[f"{schema}.{name}"] = mangled
+        return mapping, named
+
+    def _reload_views(self, reg: bindings.Bindings) -> dict[str, str]:
+        self._snap_fp_cache = {}
+        self._snaps = {}
+        # logical views bind AFTER every table/staging/system name is in
+        # the mapping (their defining queries may reference any of them)
+        deferred_views: list[tuple[str, int, str, str, str | None]] = []
+        # lower-cased names this reload keeps bound; reload-owned names
+        # outside it are stale
+        visible: set[str] = set()
+        mapping, named = self._name_mapping(self.catalog.tables(self.database))
+        for e, mangled, plain in named:
+            root = os.path.abspath(self.table_root(e))
+            t = DeltaLiteTable(self.spark, root)
+            snap = t.snapshot()
+            self._snaps[e.uuid] = (e, snap)
+            if (snap.properties or {}).get("search_indexes"):
+                from .search_index import snapshot_fp as _sfp
+
+                self._snap_fp_cache[e.uuid] = _sfp(snap)
+            view_sql = (snap.properties or {}).get(VIEW_PROP)
             names = [n for n in (mangled, plain) if n]
             visible.update(n.lower() for n in names)
             if view_sql is not None:
@@ -589,27 +623,18 @@ class SeafowlContext:
         for name, df in self.staging.items():
             reg.bind(name, ("staging", id(df)), df)
             visible.add(name.lower())
-            mapping[f"{STAGING_SCHEMA}.{name}"] = name
         # system.* / information_schema.* register LAZILY (r14, guide §5/
         # §1.2): these are driver-built createDataFrames whose rebuild +
         # re-registration ran on EVERY statement (profiled: 9 frames per
         # reload, ~26% of q_matview_refresh's statement time) while the
         # overwhelming majority of statements never read them. The NAMES
-        # go into the rewrite mapping eagerly — the rewriter needs them —
-        # and the frames build the first time a statement's rewritten SQL
+        # are in the rewrite mapping — the rewriter needs them — and the
+        # frames build the first time a statement's rewritten SQL
         # actually references one (_ensure_lazy_views), i.e. at the same
         # catalog state a per-statement eager build would have seen
         # (reload and execution happen inside one statement, nothing
         # mutates between them).
-        self._lazy_views = {}
-        for name in _SYSTEM_TABLE_NAMES:
-            mangled = _mangle(SYSTEM_SCHEMA, name)
-            self._lazy_views[mangled] = (SYSTEM_SCHEMA, name)
-            mapping[f"{SYSTEM_SCHEMA}.{name}"] = mangled
-        for name in _INFO_SCHEMA_NAMES:
-            mangled = _mangle("information_schema", name)
-            self._lazy_views[mangled] = ("information_schema", name)
-            mapping[f"information_schema.{name}"] = mangled
+        self._lazy_views = dict(_LAZY_NAMES)
         visible.update(self._lazy_views)
         # stale names go BEFORE any view expands: a renamed base table
         # leaves its old name bound (rename is catalog-only, the files
@@ -711,11 +736,11 @@ class SeafowlContext:
     def _ensure_lazy_views(self, rewritten_sql: str) -> None:
         """Materialize any lazily-registered system/information_schema
         temp views the REWRITTEN statement references (r14 — see
-        reload_views). Mangled names are unique tokens, so a substring
-        probe is exact; builds happen at most once per reload, at the
-        same catalog state an eager per-statement build saw."""
+        reload_views), detected as _reads detects them; builds happen at
+        most once per reload, at the same catalog state an eager
+        per-statement build saw."""
         lazy = self._lazy_views
-        hits = [m for m in lazy if m in rewritten_sql]
+        hits = bindings.referenced_names(rewritten_sql, lazy)
         if not hits:
             return
         sys_frames = info_frames = None
@@ -941,11 +966,7 @@ class SeafowlContext:
         if meta is not None:
             return meta
         sql, travels = parser.extract_time_travel(stmt.text)
-        sql, si_aliases = (
-            self._expand_search_index_calls(sql)
-            if "search_index" in sql.lower()
-            else (sql, [])
-        )
+        sql, si_aliases = self._expand_search_index_calls(sql)
         for alias, name, ts in travels:
             _, schema_name, tbl = parser.parse_qualified(name)
             if schema_name == STAGING_SCHEMA:
@@ -1233,8 +1254,6 @@ class SeafowlContext:
             entry = self._resolve(m.group(1))
             t = DeltaLiteTable(self.spark, self.table_root(entry))
             snap = t.snapshot()
-            import json as _json
-
             rows = [
                 Row(
                     format="deltalite",
@@ -1245,7 +1264,7 @@ class SeafowlContext:
                     size_bytes=sum(f.size_bytes for f in snap.files),
                     num_rows=snap.num_rows,
                     num_deletion_vectors=sum(1 for f in snap.files if f.dv),
-                    properties=_json.dumps(snap.properties, sort_keys=True),
+                    properties=json.dumps(snap.properties, sort_keys=True),
                 )
             ]
             return self.spark.createDataFrame(
@@ -2443,6 +2462,22 @@ class SeafowlContext:
         r"'((?:[^']|'')*)'\s*,\s*(\d+)\s*\)"
     )
 
+    def _search_calls(self, sql: str) -> list[re.Match]:
+        """The ``search_index(...)`` calls of ``sql``. The call's own
+        argument strings are part of the match, but a call TEXT inside an
+        unrelated string literal or quoted identifier is not a call: a
+        match counts iff it starts outside every span of the parser's
+        quote scanner (the tokenizer _rewrite_names splits with, so an
+        apostrophe inside a double-quoted identifier never reads as a
+        literal boundary)."""
+        if "search_index" not in sql.lower():
+            return []
+        spans = parser.scan_quotes(sql)
+        return [
+            m for m in self._SEARCH_CALL.finditer(sql)
+            if not any(a <= m.start() < b for _k, a, b in spans)
+        ]
+
     def _expand_search_index_calls(self, sql: str) -> tuple[str, list[str]]:
         """Rewrite ``search_index('tbl', 'idx', 'query', k)`` relations to
         temp views holding the top-k lookup result (result_id, score,
@@ -2457,37 +2492,23 @@ class SeafowlContext:
         outer query's references are LocalTableScans. A statement fanning
         N queries over one index (the q_index_serving shape: 12 calls
         over 4 indexes) runs 4 probe plans, not 12."""
+        # pass 1: collect the calls, grouped by (table, index, k)
+        calls: list[tuple[int, str, str, str, int]] = [  # (start, ...)
+            (
+                m.start(),
+                m.group(1).replace("''", "'"),
+                m.group(2).replace("''", "'"),
+                m.group(3).replace("''", "'"),
+                int(m.group(4)),
+            )
+            for m in self._search_calls(sql)
+        ]
+        if not calls:
+            return sql, []
         import uuid as _uuid
 
         from .search_index import index_dir, load_specs, lookup, lookup_many
 
-        # the CALL's own argument strings are part of the match, but a
-        # search_index(...) TEXT sitting inside an unrelated string
-        # literal (or quoted identifier) must not rewrite. The parser's
-        # quote scanner — the same tokenizer _rewrite_names splits with —
-        # yields every quoted span, so a match is legit iff its
-        # `search_index` token starts OUTSIDE all of them; quote-parity
-        # counting is gone (it misread an apostrophe inside a
-        # double-quoted identifier as a literal boundary).
-        _spans = parser.scan_quotes(sql)
-
-        def _in_literal(pos: int) -> bool:
-            return any(a <= pos < b for _k, a, b in _spans)
-
-        # pass 1: collect legit calls, grouped by (table, index, k)
-        calls: list[tuple[int, str, str, str, int]] = []  # (start, ...)
-        for m in self._SEARCH_CALL.finditer(sql):
-            if _in_literal(m.start()):
-                continue
-            calls.append(
-                (
-                    m.start(),
-                    m.group(1).replace("''", "'"),
-                    m.group(2).replace("''", "'"),
-                    m.group(3).replace("''", "'"),
-                    int(m.group(4)),
-                )
-            )
         groups: dict[tuple[str, str, int], list[int]] = {}
         for ci, (_s, tbl, idx, _q, k) in enumerate(calls):
             groups.setdefault((tbl, idx, k), []).append(ci)
@@ -2614,8 +2635,6 @@ class SeafowlContext:
         self._record(entry, t)
 
     def _exec_create_function(self, stmt) -> None:
-        import json
-
         from .udf import validate_spec
 
         try:
@@ -3041,56 +3060,97 @@ class SeafowlContext:
 
     # ------------------------------------------------------------ ETag
 
-    def etag_for_query(self, sql: str) -> str:
-        """SHA-256 over the (uuid, version) of every catalog table the query
-        references — the reference hashes scanned Delta table URIs+versions
-        (src/frontend/http.rs:63-105). Text-level reference detection is a
-        conservative superset of the plan walk.
+    def _reads(self, sql: str) -> Reads:
+        """Which relations ``sql`` reads, answered by the name resolution
+        statements use: time travel stripped (a traveled table counts
+        through the alias it re-exposes, as before), names rewritten by
+        reload_views' own mapping, then ``bindings.referenced_names`` over
+        the rewritten SQL — the detector view expansion keys on. A view
+        adds whatever its SQL reads, transitively, and stays in the set
+        itself. Reads only the catalog and Delta logs: no Spark, no
+        reload."""
+        sql, _ = parser.extract_time_travel(sql)
+        mapping, named = self._name_mapping(self.catalog.tables(self.database))
+        owner = {n.lower(): e for e, *names in named for n in names if n}
+        staging = {n.lower() for n in self.staging}
+        funcs = {
+            n.lower(): spec for n, spec in self.catalog.functions(self.database).items()
+        }
+        known = owner.keys() | staging | _LAZY_NAMES.keys()
+        out = Reads()
 
-        r10: a query routed through ``search_index()`` additionally mixes
-        each referenced index's identity (built_version + artifact file
-        fingerprint) into the hash — the reference's cache-invalidation
-        contract extended to index artifacts, EXPLICITLY rather than via
-        the incidental fact that index DDL commits a table version: a
-        REFRESH SEARCH INDEX must flip cached GETs even though the
-        table's data files are untouched."""
-        sql2, travels = parser.extract_time_travel(sql)
-        touched: set[tuple[str, int]] = set()
-        for e in self.catalog.tables(self.database):
-            pats = [rf"\b{e.schema}\.{e.name}\b", rf"\b{e.database}\.{e.schema}\.{e.name}\b"]
-            if e.schema == self.search_schema:
-                pats.append(rf"(?<![A-Za-z0-9_.]){e.name}(?![A-Za-z0-9_.])")
-            if any(re.search(p, sql2, re.IGNORECASE) for p in pats):
+        def snapshot(e: TableEntry) -> Snapshot:
+            if e.uuid not in out.tables:
                 t = DeltaLiteTable(self.spark, self.table_root(e))
-                touched.add((e.uuid, t.latest_version()))
-        touched_idx: set[tuple[str, str, int, str]] = set()
-        if "search_index" in sql2.lower():
-            from .search_index import load_specs as _si_load
+                out.tables[e.uuid] = (e, t.snapshot())
+            return out.tables[e.uuid][1]
 
-            spans = parser.scan_quotes(sql2)
-
-            def _in_quoted(pos: int) -> bool:
-                return any(a <= pos < b for _k, a, b in spans)
-
-            for m in self._SEARCH_CALL.finditer(sql2):
-                if _in_quoted(m.start()):
+        todo = [self._rewrite_names(sql, mapping)]
+        while todo:
+            rewritten = todo.pop()
+            hits = bindings.referenced_names(rewritten, known)
+            out.system |= not hits.isdisjoint(_LAZY_NAMES)
+            out.staging |= not hits.isdisjoint(staging)
+            for n in bindings.referenced_names(rewritten, funcs):
+                out.functions[n] = funcs[n]
+            for n in hits & owner.keys():
+                if owner[n].uuid in out.tables:
                     continue
-                tbl = m.group(1).replace("''", "'")
-                idx = m.group(2).replace("''", "'")
+                view_sql = (snapshot(owner[n]).properties or {}).get(VIEW_PROP)
+                if view_sql is None:
+                    continue
                 try:
-                    entry = self._resolve(tbl)
-                    t = DeltaLiteTable(self.spark, self.table_root(entry))
-                    touched.add((entry.uuid, t.latest_version()))
-                    spec = _si_load(t.snapshot().properties or {}).get(idx)
-                except Exception:  # noqa: BLE001 — the query itself will
-                    continue  # surface the real unresolved-relation error
-                if spec is not None:
-                    touched_idx.add(
-                        (entry.uuid, idx, spec.built_version, spec.file_fp)
-                    )
-        h = sha256()
-        for u, v in sorted(touched):
-            h.update(f"{u}@{v};".encode())
-        for u, i, bv, fp in sorted(touched_idx):
-            h.update(f"{u}:{i}@{bv}:{fp};".encode())
+                    todo.append(self._rewrite_names(view_sql, mapping))
+                except ExecutionError:
+                    pass  # a broken view fails the statements that read it
+        for m in self._search_calls(sql):
+            from .search_index import load_specs
+
+            tbl = m.group(1).replace("''", "'")
+            idx = m.group(2).replace("''", "'")
+            try:
+                entry = self._resolve(tbl)
+                spec = load_specs(snapshot(entry).properties or {}).get(idx)
+            except Exception:  # noqa: BLE001 — the query itself will
+                continue  # surface the real unresolved-relation error
+            if spec is not None:
+                out.indexes.add((entry.uuid, idx, spec.built_version, spec.file_fp))
+        return out
+
+    def etag_for_query(self, sql: str) -> str:
+        """SHA-256 over what the query reads (``_reads``): a cached GET
+        revalidates to 304 only while its result cannot have changed. The
+        reference hashes the Delta tables its plan scans, views inlined
+        (src/frontend/http.rs:63-105); this hash covers:
+
+        * the (uuid, head version) of every entry read, views and what
+          they read included;
+        * each ``search_index()`` read's built_version and artifact file
+          fingerprint (a REFRESH leaves the table's data files alone);
+        * the spec of every persisted function named;
+        * for a system.* or information_schema.* read, the (schema, name,
+          uuid, version) of every table in the database and the dropped
+          tables — those frames describe the whole catalog;
+        * for a staging read, a fresh value: staging tables carry no
+          version, so such a GET never answers 304.
+
+        An unchanged read hashes the same across calls and restarts. Runs
+        under the execution lock, so a concurrent per-call search_path
+        never leaks into the resolution."""
+        with self._exec_lock:
+            r = self._reads(sql)
+            h = sha256()
+            for u, (_e, snap) in sorted(r.tables.items()):
+                h.update(f"{u}@{snap.version};".encode())
+            for u, i, bv, fp in sorted(r.indexes):
+                h.update(f"{u}:{i}@{bv}:{fp};".encode())
+            for n, spec in sorted(r.functions.items()):
+                h.update(f"fn {n}={json.dumps(spec, sort_keys=True)};".encode())
+            if r.system:
+                for e in self.catalog.tables(self.database):
+                    v = DeltaLiteTable(self.spark, self.table_root(e)).latest_version()
+                    h.update(f"{e.schema}.{e.name}:{e.uuid}@{v};".encode())
+                h.update(repr(sorted(self.catalog.dropped_tables())).encode())
+            if r.staging:
+                h.update(os.urandom(16))
         return h.hexdigest()

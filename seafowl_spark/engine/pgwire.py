@@ -15,9 +15,11 @@ Minimal but real protocol v3 implementation on stdlib sockets:
   materializes a portal by substituting parameter values (text format
   always; binary for bool/int2/int4/int8/float4/float8), Describe ('D')
   answers ParameterDescription/RowDescription (planning the statement the
-  way the reference's prepare does), Execute ('E') streams DataRows +
-  CommandComplete, Close ('C') and Sync ('S') complete the flow; errors
-  put the session in aborted-until-Sync state per the protocol,
+  way the reference's prepare does), Execute ('E') streams DataRows —
+  at most ``max_rows`` of them, then PortalSuspended while rows remain,
+  CommandComplete at the end — Close ('C') and Sync ('S') complete the
+  flow; errors put the session in aborted-until-Sync state per the
+  protocol,
 * Terminate ('X') closes cleanly.
 
 Like the reference, results are fully planned before the row description is
@@ -31,6 +33,7 @@ import socketserver
 import struct
 import threading
 
+import pyarrow as pa
 from pyspark.sql import types as T
 
 from . import parser, results
@@ -100,7 +103,16 @@ class _Handler(socketserver.BaseRequestHandler):
         # extended-protocol session state
         self._stmts: dict[str, tuple[str, list[int]]] = {}
         self._portals: dict[str, str] = {}
+        # portal -> (rows not yet sent, schema): a read portal's result,
+        # fetched by its first Execute and sent max_rows at a time
+        self._results: dict[str, tuple[pa.Table, T.StructType]] = {}
         self._aborted = False  # error seen: skip until Sync
+        try:
+            self._serve(sock)
+        finally:
+            self._results.clear()
+
+    def _serve(self, sock: socket.socket):
         buf = b""
         while True:
             data = sock.recv(65536)
@@ -310,6 +322,7 @@ class _Handler(socketserver.BaseRequestHandler):
                     literals.append(self._text_param_literal(oid, raw.decode()))
             # result format codes ignored: we always send text
             self._portals[portal] = self._substitute_params(sql, oids, literals)
+            self._results.pop(portal, None)
             sock.sendall(_msg(b"2", b""))  # BindComplete
         except Exception as exc:  # noqa: BLE001
             self._ext_error(sock, f"Bind failed: {exc}")
@@ -363,42 +376,59 @@ class _Handler(socketserver.BaseRequestHandler):
             self._ext_error(sock, f"Describe failed: {exc}")
 
     def _execute_msg(self, sock: socket.socket, payload: bytes):
+        """Run the portal. A read's first Execute fetches the whole result
+        in one Spark job and keeps it on the portal; each Execute sends
+        the next ``max_rows`` rows (all of them when 0), then
+        PortalSuspended while rows remain or CommandComplete, as
+        PostgreSQL does."""
         try:
             portal, pos = self._cstr_at(payload, 0)
             (max_rows,) = struct.unpack_from("!i", payload, pos)
             if portal not in self._portals:
                 raise ValueError(f"unknown portal {portal!r}")
-            sql = self._portals[portal]
-            writes = any(
-                not parser.is_read_only(s) for s in parser.split_statements(sql)
-            )
-            if writes and not self.policy.can_write(self._token):
-                raise PermissionError("write access denied")
-            if not writes and not self.policy.can_read(self._token):
-                raise PermissionError("read access denied")
-            df = self._execute(sql)
-            if df is None or writes:
-                sock.sendall(_msg(b"C", _cstr("OK")))
-                return
-            n = self._send_rows(sock, df, limit=max_rows if max_rows > 0 else None)
-            sock.sendall(_msg(b"C", _cstr(f"SELECT {n}")))
+            if portal not in self._results:
+                sql = self._portals[portal]
+                writes = any(
+                    not parser.is_read_only(s) for s in parser.split_statements(sql)
+                )
+                if writes and not self.policy.can_write(self._token):
+                    raise PermissionError("write access denied")
+                if not writes and not self.policy.can_read(self._token):
+                    raise PermissionError("read access denied")
+                df = self._execute(sql)
+                if df is None or writes:
+                    sock.sendall(_msg(b"C", _cstr("OK")))
+                    return
+                self._results[portal] = (results.fetch(df), df.schema)
+            rest, schema = self._results[portal]
+            n = rest.num_rows if max_rows <= 0 else min(max_rows, rest.num_rows)
+            self._send_rows(sock, rest.slice(0, n), schema)
+            rest = rest.slice(n) if n < rest.num_rows else rest.schema.empty_table()
+            self._results[portal] = (rest, schema)
+            if rest.num_rows:
+                sock.sendall(_msg(b"s", b""))  # PortalSuspended
+            else:
+                sock.sendall(_msg(b"C", _cstr(f"SELECT {n}")))
         except Exception as exc:  # noqa: BLE001
             self._ext_error(sock, f"Execute failed: {exc}")
 
     def _close_msg(self, sock: socket.socket, payload: bytes):
         kind = payload[0:1]
         name, _ = self._cstr_at(payload, 1)
-        (self._stmts if kind == b"S" else self._portals).pop(name, None)
+        if kind == b"S":
+            self._stmts.pop(name, None)
+        else:
+            self._portals.pop(name, None)
+            self._results.pop(name, None)
         sock.sendall(_msg(b"3", b""))  # CloseComplete
 
-    def _send_rows(self, sock: socket.socket, df, limit: int | None = None) -> int:
-        """Send ``df``'s rows as text DataRows; ``limit`` (Execute's
-        max_rows) becomes a LIMIT on the plan. One Spark job fetches the
-        Arrow result and each batch's DataRows go out in one sendall, so
-        the driver holds the Arrow result plus one batch of messages."""
-        ncols = struct.pack("!H", len(df.columns))
+    def _send_rows(self, sock: socket.socket, table: pa.Table, schema: T.StructType) -> int:
+        """Send the rows of a fetched result as text DataRows; each Arrow
+        batch's DataRows go out in one sendall, so the driver holds the
+        Arrow result plus one batch of messages."""
+        ncols = struct.pack("!H", len(schema.fields))
         n = 0
-        for batch in results.row_batches(results.fetch(df, limit), df.schema):
+        for batch in results.row_batches(table, schema):
             msgs = []
             for row in batch:
                 body = [ncols]
@@ -430,7 +460,7 @@ class _Handler(socketserver.BaseRequestHandler):
                 sock.sendall(_msg(b"C", _cstr("OK")))
                 return
             self._row_description(sock, df)
-            n = self._send_rows(sock, df)
+            n = self._send_rows(sock, results.fetch(df), df.schema)
             sock.sendall(_msg(b"C", _cstr(f"SELECT {n}")))
         except Exception as exc:  # noqa: BLE001
             self._send_error(sock, str(exc))

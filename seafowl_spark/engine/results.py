@@ -29,17 +29,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 
-def fetch(df: DataFrame, limit: int | None = None) -> pa.Table:
-    """The result of ``df`` (its first ``limit`` rows if given), fetched
-    in one Spark job. The limit is part of the plan, so rows past it are
-    never computed or shipped.
+def fetch(df: DataFrame) -> pa.Table:
+    """The result of ``df``, fetched in one Spark job.
 
     This is ``df.toArrow()`` without its final cast to the Python-built
     Arrow schema: the JVM's batches already carry that schema under the
     engine's UTC session, and the cast rejects a NULL struct whose fields
     are NOT NULL (every NULL variant)."""
-    if limit is not None:
-        df = df.limit(limit)
     return pa.Table.from_batches(df._collect_as_arrow(empty_list_if_zero_records=False))
 
 

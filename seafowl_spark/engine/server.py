@@ -9,9 +9,13 @@ Endpoints (same shapes as the reference):
 * ``GET /q/<sha256-of-query>`` with the query in the ``X-Seafowl-Query``
   header (or ``{"query": ...}`` body) — READ-ONLY; the URL hash must match
   the query text (CDN cache keying, reference http.rs:291-324); response
-  carries ``ETag`` derived from the scanned tables' versions plus
-  ``Cache-Control``; ``If-None-Match`` match returns ``304`` WITHOUT
-  executing the query (reference http.rs:349-360).
+  carries ``Cache-Control`` and an ``ETag`` over what the statement reads,
+  resolved by the same name resolution it executes with: every table and
+  view it names, each view closed over what its own SQL reads (the
+  reference's plan scan sees through views the same way), plus the
+  search indexes and functions it uses (``SeafowlContext.etag_for_query``);
+  ``If-None-Match`` match returns ``304`` WITHOUT executing the query
+  (reference http.rs:349-360).
 * ``POST /upload/<schema>/<table>`` — multipart CSV/Parquet upload, creates
   the table if absent then appends (reference http.rs:380-487).
 * ``GET /healthz``.
@@ -31,6 +35,7 @@ way, http.rs:128-155) and sends with its Content-Length.
 
 from __future__ import annotations
 
+import datetime
 import io
 import json
 import re
@@ -38,6 +43,7 @@ import threading
 import time
 import urllib.parse
 from contextlib import contextmanager
+from decimal import Decimal
 from hashlib import sha256
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
@@ -80,6 +86,20 @@ def _json_default(v):
 _ENCODE = json.JSONEncoder(default=_json_default).encode
 
 
+def _str_keys(v):
+    """``v`` with its decimal, date and timestamp map keys written as
+    ``str(k)``, the way _json_default writes such values: json takes only
+    str, int, float, bool and None keys."""
+    if isinstance(v, dict):
+        return {
+            str(k) if isinstance(k, (Decimal, datetime.date)) else k: _str_keys(x)
+            for k, x in v.items()
+        }
+    if isinstance(v, (list, tuple)):
+        return [_str_keys(x) for x in v]
+    return v
+
+
 def _rows_to_jsonlines(df: DataFrame) -> "bytes":
     """Run ``df`` and encode its rows as JSON lines: one Spark job fetches
     the Arrow result, then each batch's rows become one JSON object per
@@ -88,7 +108,12 @@ def _rows_to_jsonlines(df: DataFrame) -> "bytes":
     cols = df.columns
     buf = io.StringIO()
     for batch in results.row_batches(results.fetch(df), df.schema):
-        buf.write("".join([_ENCODE(dict(zip(cols, row))) + "\n" for row in batch]))
+        try:
+            buf.write("".join([_ENCODE(dict(zip(cols, row))) + "\n" for row in batch]))
+        except TypeError:  # a map keyed by a type json cannot key by
+            buf.write("".join(
+                [_ENCODE(_str_keys(dict(zip(cols, row)))) + "\n" for row in batch]
+            ))
     return buf.getvalue().encode()
 
 

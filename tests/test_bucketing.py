@@ -143,34 +143,3 @@ class TestBucketedLayout:
         ctx.execute("INSERT INTO bt VALUES (2, 'b')")
         assert t.to_df(version=v1).count() == 1
         assert t.snapshot(version=v1).bucket_spec == (["pk"], 4)
-
-
-class TestColocatedJoin:
-    def test_bucketed_join_has_no_shuffle(self, spark, tmp_path):
-        from seafowl_spark.operators.bucketing import (
-            assert_no_shuffle,
-            colocated_join,
-            materialize_bucketed,
-        )
-
-        left = spark.range(0, 1000).selectExpr("id AS k", "id * 2 AS a")
-        right = spark.range(0, 1000).selectExpr("id AS k", "id * 3 AS b")
-        materialize_bucketed(left, "colo_left", ["k"], num_buckets=4)
-        materialize_bucketed(right, "colo_right", ["k"], num_buckets=4)
-        try:
-            joined = colocated_join(spark, "colo_left", "colo_right", on=["k"])
-            # disable broadcast so the co-location is what kills the
-            # shuffle, not a broadcast of the small test input
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            try:
-                assert_no_shuffle(joined)
-                assert joined.count() == 1000
-                # sanity: the same join over unbucketed frames DOES shuffle
-                plain = left.join(right, on=["k"])
-                with pytest.raises(AssertionError):
-                    assert_no_shuffle(plain)
-            finally:
-                spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        finally:
-            spark.sql("DROP TABLE IF EXISTS colo_left")
-            spark.sql("DROP TABLE IF EXISTS colo_right")

@@ -499,3 +499,103 @@ class TestHttpMatViewClone:
         ]
         status, _, _ = _post_q(port, "DROP VIEW hv")
         assert status == 200
+
+
+class TestETagFollowsReads:
+    """The ETag covers what the statement reads, not the names its text
+    spells: a cached GET revalidates to 200 with the new rows whenever a
+    relation it reads through a view, a quoted name, a catalog frame or a
+    function changed."""
+
+    def _cycle(self, port, setup, query, write):
+        """GET, revalidate (304), ``write``, revalidate again: returns the
+        last GET's status and rows."""
+        _post_q(port, setup)
+        code, body, headers = _get_q(port, query)
+        assert code == 200, body
+        etag = headers["ETag"]
+        assert _get_q(port, query, etag=etag)[0] == 304
+        _post_q(port, write)
+        code, body, headers = _get_q(port, query, etag=etag)
+        assert headers.get("ETag") != etag
+        return code, [json.loads(line) for line in body.strip().split("\n") if line]
+
+    def test_write_to_view_base_table(self, server):
+        code, got = self._cycle(
+            server.port,
+            "CREATE TABLE vb (x int); INSERT INTO vb VALUES (1); "
+            "CREATE VIEW vv AS SELECT x FROM vb",
+            "SELECT count(*) AS n FROM vv",
+            "INSERT INTO vb VALUES (2)",
+        )
+        assert (code, got) == (200, [{"n": 2}])
+
+    def test_write_under_view_over_view(self, server):
+        code, got = self._cycle(
+            server.port,
+            "CREATE TABLE vb (x int); INSERT INTO vb VALUES (1); "
+            "CREATE VIEW v1 AS SELECT x FROM vb; "
+            "CREATE VIEW v2 AS SELECT x FROM v1",
+            "SELECT count(*) AS n FROM v2",
+            "INSERT INTO vb VALUES (2)",
+        )
+        assert (code, got) == (200, [{"n": 2}])
+
+    def test_write_to_quoted_name(self, server):
+        code, got = self._cycle(
+            server.port,
+            'CREATE TABLE "a+b" (x int); INSERT INTO "a+b" VALUES (1)',
+            'SELECT count(*) AS n FROM "a+b"',
+            'INSERT INTO "a+b" VALUES (2)',
+        )
+        assert (code, got) == (200, [{"n": 2}])
+
+    def test_system_table_versions_after_insert(self, server):
+        code, got = self._cycle(
+            server.port,
+            "CREATE TABLE sv (x int)",
+            "SELECT count(*) AS n FROM system.table_versions",
+            "INSERT INTO sv VALUES (1)",
+        )
+        assert (code, got) == (200, [{"n": 2}])
+
+    def test_information_schema_after_create_table(self, server):
+        code, got = self._cycle(
+            server.port,
+            "CREATE TABLE i1 (x int)",
+            "SELECT count(*) AS n FROM information_schema.tables",
+            "CREATE TABLE i2 (x int)",
+        )
+        assert (code, got) == (200, [{"n": 2}])
+
+    def test_create_or_replace_function(self, server):
+        import base64
+
+        def spec(k):
+            source = f"def f(x):\n    return x * {k}\n"
+            return json.dumps({
+                "entrypoint": "f",
+                "language": "python",
+                "input_types": ["bigint"],
+                "return_type": "bigint",
+                "data": base64.b64encode(source.encode()).decode(),
+                "volatility": "immutable",
+            })
+
+        code, got = self._cycle(
+            server.port,
+            f"CREATE FUNCTION dbl AS '{spec(2)}'",
+            "SELECT dbl(2) AS r",
+            f"CREATE OR REPLACE FUNCTION dbl AS '{spec(3)}'",
+        )
+        assert (code, got) == (200, [{"r": 6}])
+
+    def test_get_with_regex_metacharacter_table(self, server):
+        _post_q(
+            server.port,
+            'CREATE TABLE "a(b" (x int); CREATE TABLE g (x int); '
+            "INSERT INTO g VALUES (1)",
+        )
+        code, body, _ = _get_q(server.port, "SELECT x FROM g")
+        assert code == 200, body
+        assert json.loads(body) == {"x": 1}

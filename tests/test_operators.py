@@ -1,36 +1,6 @@
-"""Custom distributed operators: skew-salted join equivalence."""
+"""Custom distributed operators."""
 
 from pyspark.sql import functions as F
-
-from seafowl_spark.operators.skew import salted_join
-from tests.conftest import rows
-
-
-class TestSaltedJoin:
-    def test_inner_equivalence_with_hot_key(self, spark):
-        # hot key: 90% of left rows share key 7
-        left = spark.range(0, 1000).select(
-            F.when(F.col("id") % 10 != 0, 7).otherwise(F.col("id")).alias("k"),
-            F.col("id").alias("v"),
-        )
-        right = spark.range(0, 50).select(
-            F.col("id").alias("k"), (F.col("id") * 100).alias("w")
-        )
-        plain = left.join(right, "k").groupBy("k").agg(
-            F.count(F.lit(1)).alias("n"), F.sum("v").alias("sv"), F.sum("w").alias("sw")
-        )
-        salted = salted_join(left, right, "k").groupBy("k").agg(
-            F.count(F.lit(1)).alias("n"), F.sum("v").alias("sv"), F.sum("w").alias("sw")
-        )
-        assert rows(plain) == rows(salted)
-
-    def test_left_join_preserves_unmatched(self, spark):
-        left = spark.range(0, 20).select(F.col("id").alias("k"))
-        right = spark.range(0, 5).select(F.col("id").alias("k"), F.lit("m").alias("tag"))
-        out = salted_join(left, right, "k", how="left")
-        got = rows(out)
-        assert len(got) == 20
-        assert sum(1 for _, tag in got if tag is None) == 15
 
 
 class TestApproxDistinct:

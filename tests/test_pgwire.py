@@ -253,6 +253,27 @@ class TestPgWireExtended:
         _, _, rows, errors = client.collect(client.sync())
         assert not errors and rows == [("1",), ("2",)]
 
+    def test_execute_in_chunks_suspends_portal(self, pg):
+        """Execute(max_rows) sends that many rows, then PortalSuspended
+        while rows remain; the next Execute resumes where it stopped and
+        the last one ends with CommandComplete. Close drops the portal."""
+        ctx, client = pg
+        self._seed(client)
+        client.parse("stc", "SELECT x FROM ext ORDER BY x")
+        client.bind("p", "stc", [])
+        client.execute("p", max_rows=2)
+        client.execute("p", max_rows=2)
+        msgs = client.sync()
+        tags, _, rows, errors = client.collect(msgs)
+        assert not errors and rows == [("1",), ("2",), ("3",)]
+        assert tags == [b"1", b"2", b"D", b"D", b"s", b"D", b"C", b"Z"]
+        assert (b"C", b"SELECT 1\x00") in msgs
+        client._send(b"C", b"Pp\x00")
+        client.execute("p")
+        tags, _, _, errors = client.collect(client.sync())
+        assert b"3" in tags  # CloseComplete
+        assert len(errors) == 1 and b"unknown portal" in errors[0]
+
     def test_error_aborts_until_sync(self, pg):
         ctx, client = pg
         self._seed(client)

@@ -158,10 +158,12 @@ class RawPg:
         self.send(b"Q", sql.encode() + b"\x00")
         return self.until_ready()
 
-    def execute(self, sql, max_rows):
+    def execute(self, sql, *max_rows):
+        """Parse, bind, one Execute per ``max_rows`` value, Sync."""
         self.send(b"P", b"\x00" + sql.encode() + b"\x00" + struct.pack("!H", 0))
         self.send(b"B", b"\x00\x00" + struct.pack("!HH", 0, 0))
-        self.send(b"E", b"\x00" + struct.pack("!i", max_rows))
+        for n in max_rows:
+            self.send(b"E", b"\x00" + struct.pack("!i", n))
         self.send(b"S", b"")
         return self.until_ready()
 
@@ -325,6 +327,30 @@ def four_files(ctx):
     return expect
 
 
+def test_http_map_keys_json_cannot_key_by(http):
+    """Maps keyed by decimal, date or timestamp encode their keys as the
+    str() the encoder gives such values (json.dumps rejects those keys),
+    nested ones included."""
+    code, body = _post(
+        http.port,
+        "SELECT map(CAST(1.5 AS DECIMAL(3,1)), 'a') AS m_dec, "
+        "map(DATE '2024-01-01', 1) AS m_date, "
+        "map(TIMESTAMP_NTZ '2024-01-02 03:04:05', 2) AS m_ts, "
+        "array(map(DATE '2024-02-29', 3)) AS arr_m, "
+        "named_struct('m', map(CAST(2 AS DECIMAL(2,0)), 4)) AS st_m, "
+        "map('k', 5) AS m_str",
+    )
+    assert code == 200
+    assert json.loads(body) == {
+        "m_dec": {"1.5": "a"},
+        "m_date": {"2024-01-01": 1},
+        "m_ts": {"2024-01-02 03:04:05": 2},
+        "arr_m": [{"2024-02-29": 3}],
+        "st_m": [{"2": 4}],
+        "m_str": {"k": 5},
+    }
+
+
 class TestOneJobPerRead:
     """A read over four result partitions launches exactly one Spark job,
     whichever frontend serves it (the row iterator ran one per partition)."""
@@ -360,11 +386,13 @@ class TestOneJobPerRead:
         from seafowl_spark.engine.pgwire import _Handler
 
         jobs = _count_jobs(monkeypatch, spark, _Handler, ["_execute_msg"], "jc_pge")
-        msgs = pgc.execute(FOUR_FILE_READ, max_rows=2)
-        rows = _row_texts(msgs)
-        assert len(rows) == 2
-        assert all((int(x), s) in four_files for x, s in rows)
-        assert b"C" + struct.pack("!I", 13) + b"SELECT 2\x00" in msgs
+        msgs = pgc.execute(FOUR_FILE_READ, 2, 0)
+        # the first Execute sends 2 rows and suspends the portal, the
+        # second sends the other 11 from the result the first one fetched
+        tags = [m[:1] for m in msgs]
+        assert tags == [b"1", b"2"] + [b"D"] * 2 + [b"s"] + [b"D"] * 11 + [b"C", b"Z"]
+        assert sorted((int(x), s) for x, s in _row_texts(msgs)) == four_files
+        assert b"C" + struct.pack("!I", 14) + b"SELECT 11\x00" in msgs
         assert jobs() == 1
 
 

@@ -457,6 +457,15 @@ class TestFunctions:
 
 
 class TestETag:
+    def test_lazy_name_tuples_match_built_frames(self, ctx):
+        """_reads and the rewrite mapping know the introspection frames by
+        these tuples; they must name exactly the frames that get built."""
+        from seafowl_spark.engine.context import _INFO_SCHEMA_NAMES, _SYSTEM_TABLE_NAMES
+
+        seed(ctx)
+        assert sorted(_SYSTEM_TABLE_NAMES) == sorted(ctx._system_tables())
+        assert sorted(_INFO_SCHEMA_NAMES) == sorted(ctx._information_schema())
+
     def test_etag_changes_on_write(self, ctx):
         seed(ctx)
         e1 = ctx.etag_for_query("SELECT * FROM t")
@@ -464,6 +473,18 @@ class TestETag:
         assert e1 == e2
         ctx.execute("INSERT INTO t (c_int) VALUES (99)")
         assert ctx.etag_for_query("SELECT * FROM t") != e1
+
+    def test_etag_staging_read_never_repeats(self, ctx, tmp_path):
+        """Staging tables carry no version, so a read of one never
+        revalidates to 304."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        p = str(tmp_path / "s.parquet")
+        pq.write_table(pa.table({"x": [1]}), p)
+        ctx.execute(f"CREATE EXTERNAL TABLE ext STORED AS PARQUET LOCATION '{p}'")
+        q = "SELECT * FROM staging.ext"
+        assert ctx.etag_for_query(q) != ctx.etag_for_query(q)
 
     def test_etag_ignores_untouched_tables(self, ctx):
         seed(ctx)

@@ -89,209 +89,6 @@ class TestWindowedStream:
         ]
 
 
-class TestStatefulSessionize:
-    def test_state_survives_micro_batches(self, spark, tmp_path):
-        """applyInPandasWithState: session counters continue across
-        micro-batches through the state store."""
-        import json as _json
-
-        from seafowl_spark.streaming.stateful import sessionize_stream
-
-        src = tmp_path / "sess_src"
-        src.mkdir()
-        ckpt = str(tmp_path / "sess_ckpt")
-        # batch 0: user 1 has two events 10s apart (one session)
-        (src / "b0.json").write_text(
-            "\n".join(
-                _json.dumps(x)
-                for x in [
-                    {"user_id": 1, "ts_sec": 100.0},
-                    {"user_id": 1, "ts_sec": 110.0},
-                    {"user_id": 2, "ts_sec": 50.0},
-                ]
-            )
-        )
-
-        captured: list = []
-
-        def run_batch():
-            stream = spark.readStream.schema("user_id bigint, ts_sec double").json(str(src))
-            q = (
-                sessionize_stream(stream, gap_seconds=60.0)
-                .writeStream.foreachBatch(
-                    lambda df, _id: captured.extend(df.collect())
-                )
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-
-        run_batch()
-        got = {r.user_id: (r.session_id, r.n_events) for r in captured}
-        assert got[1] == (1, 2) and got[2] == (1, 1)
-
-        # batch 1: user 1 event within gap (extends session 1), then one far
-        # beyond the gap (opens session 2); user 2 silent (state retained)
-        (src / "b1.json").write_text(
-            "\n".join(
-                _json.dumps(x)
-                for x in [
-                    {"user_id": 1, "ts_sec": 150.0},
-                    {"user_id": 1, "ts_sec": 10000.0},
-                ]
-            )
-        )
-        captured.clear()
-        run_batch()
-        latest = {r.user_id: (r.session_id, r.n_events) for r in captured}
-        # user 1 is now in session 2 with 1 event (150.0 extended session 1
-        # to 3 events, then 10000.0 opened session 2)
-        assert latest[1] == (2, 1)
-
-
-class TestIcebergSink:
-    def test_stream_appends_iceberg_snapshots(self, spark, tmp_path):
-        """Each micro-batch commits one iceberg snapshot; replayed batch
-        ids are skipped (checkpoint-recovery idempotence)."""
-        import glob
-        import json as _json
-        import os
-
-        from seafowl_spark.sources.iceberg import read_iceberg
-        from seafowl_spark.streaming.sinks import foreach_batch_iceberg
-
-        src = tmp_path / "ice_src"
-        src.mkdir()
-        tbl = str(tmp_path / "ice_tbl")
-        (src / "b0.json").write_text(
-            json.dumps({"k": 1, "v": "a"}) + "\n" + json.dumps({"k": 2, "v": "b"}) + "\n"
-        )
-        stream = spark.readStream.schema("k bigint, v string").json(str(src))
-        q = (
-            stream.writeStream.foreachBatch(foreach_batch_iceberg(tbl))
-            .option("checkpointLocation", str(tmp_path / "ice_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-        def latest_meta():
-            return sorted(
-                glob.glob(os.path.join(tbl, "metadata", "v*.metadata.json")),
-                key=lambda p: int(os.path.basename(p)[1:].split(".")[0]),
-            )[-1]
-
-        out = read_iceberg(spark, latest_meta()).collect()
-        assert sorted(r["k"] for r in out) == [1, 2]
-
-        # second micro-batch appends a snapshot
-        (src / "b1.json").write_text(json.dumps({"k": 3, "v": "c"}) + "\n")
-        q2 = (
-            stream.writeStream.foreachBatch(foreach_batch_iceberg(tbl))
-            .option("checkpointLocation", str(tmp_path / "ice_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q2.awaitTermination(120)
-        out = read_iceberg(spark, latest_meta()).collect()
-        assert sorted(r["k"] for r in out) == [1, 2, 3]
-        meta = _json.load(open(latest_meta()))
-        ids = [s["summary"].get("stream-batch-id") for s in meta["snapshots"]]
-        assert ids == ["0", "1"]
-
-        # a replayed batch id must be a no-op
-        sink = foreach_batch_iceberg(tbl)
-        sink(spark.createDataFrame([(9, "dup")], "k bigint, v string"), 1)
-        meta = _json.load(open(latest_meta()))
-        assert len(meta["snapshots"]) == 2
-        out = read_iceberg(spark, latest_meta()).collect()
-        assert sorted(r["k"] for r in out) == [1, 2, 3]
-
-
-class TestStreamingDedup:
-    def test_exact_dedup_across_batches(self, spark, tmp_path):
-        import json
-
-        from seafowl_spark.streaming.dedup import dedup_stream
-
-        src = tmp_path / "dd_src"
-        src.mkdir()
-        rows_b0 = [
-            {"doc_id": 1, "ts": "2024-01-01 00:00:01", "v": "a"},
-            {"doc_id": 1, "ts": "2024-01-01 00:00:01", "v": "a-dup"},
-            {"doc_id": 2, "ts": "2024-01-01 00:00:02", "v": "b"},
-        ]
-        (src / "b0.json").write_text("\n".join(json.dumps(r) for r in rows_b0))
-
-        stream = (
-            spark.readStream.schema("doc_id bigint, ts string, v string")
-            .json(str(src))
-            .withColumn("ts", F.to_timestamp("ts"))
-        )
-        out_dir = tmp_path / "dd_out"
-        deduped = dedup_stream(stream, ["doc_id", "ts"], "ts", "1 hour")
-        q = (
-            deduped.writeStream.format("parquet")
-            .option("path", str(out_dir))
-            .option("checkpointLocation", str(tmp_path / "dd_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        # duplicate again in a second batch: state drops it too
-        (src / "b1.json").write_text(
-            json.dumps({"doc_id": 2, "ts": "2024-01-01 00:00:02", "v": "b-dup"})
-            + "\n"
-            + json.dumps({"doc_id": 3, "ts": "2024-01-01 00:00:03", "v": "c"})
-        )
-        q2 = (
-            deduped.writeStream.format("parquet")
-            .option("path", str(out_dir))
-            .option("checkpointLocation", str(tmp_path / "dd_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q2.awaitTermination(120)
-        got = sorted(
-            (r.doc_id, r.v)
-            for r in spark.read.parquet(str(out_dir)).collect()
-        )
-        assert got == [(1, "a"), (2, "b"), (3, "c")]
-
-    def test_dedup_within_watermark_restamped(self, spark, tmp_path):
-        import json
-
-        from seafowl_spark.streaming.dedup import dedup_stream_within_watermark
-
-        src = tmp_path / "dw_src"
-        src.mkdir()
-        # same doc_id redelivered with a DIFFERENT timestamp
-        rows0 = [
-            {"doc_id": 7, "ts": "2024-01-01 00:00:01", "v": "first"},
-            {"doc_id": 7, "ts": "2024-01-01 00:00:09", "v": "retry"},
-        ]
-        (src / "b0.json").write_text("\n".join(json.dumps(r) for r in rows0))
-        stream = (
-            spark.readStream.schema("doc_id bigint, ts string, v string")
-            .json(str(src))
-            .withColumn("ts", F.to_timestamp("ts"))
-        )
-        out_dir = tmp_path / "dw_out"
-        q = (
-            dedup_stream_within_watermark(stream, ["doc_id"], "ts", "1 hour")
-            .writeStream.format("parquet")
-            .option("path", str(out_dir))
-            .option("checkpointLocation", str(tmp_path / "dw_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = [r.v for r in spark.read.parquet(str(out_dir)).collect()]
-        assert got == ["first"]
-
-
 class TestStreamingModelScoring:
     def test_nb_model_scores_a_stream(self, spark, tmp_path):
         """Classifier-as-stream-stage: a model trained batch-side scores a
