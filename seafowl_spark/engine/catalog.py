@@ -11,6 +11,21 @@ schema `public`, reserved in-memory `staging` schema for external tables and
 read-only `system` schema for virtual tables (src/catalog/mod.rs:21-23,
 src/provider.rs:25-54). Table directories are UUID-named so RENAME is a
 catalog-only operation (A11, reference physical.rs:635-665).
+
+Journal. A file catalog runs in WAL mode with ``synchronous=FULL``. Every
+committed statement writes the catalog at least once (its new Delta
+versions go into ``table_versions``), so the commit cost is on the write
+path of every DML statement, upload, CREATE and CDC flush. SQLite's default
+rollback journal creates, syncs and deletes ``<db>-journal`` on each
+commit; on ext4 each of those directory operations waits for a filesystem
+journal commit, and one single-row commit took a median 52 ms on a 4-core
+ext4 host (TRUNCATE 54 ms, PERSIST 0.13 ms, WAL 0.04 ms; a raw ``fsync``
+there takes 0.03 ms). WAL appends to ``<db>-wal`` instead and, with
+``synchronous=FULL``, syncs it on every commit, so a committed row survives
+power loss exactly as under the rollback journal. WAL also lets readers
+run beside the writer, across threads and across processes that share the
+file. An in-memory catalog (``:memory:``) has no journal file and keeps
+SQLite's ``memory`` mode.
 """
 
 from __future__ import annotations
@@ -87,12 +102,23 @@ class TableEntry:
 
 class Catalog:
     """SQLite-backed metastore. Thread-safe via one lock (the reference
-    serializes through sqlx pools; our write volume is tiny)."""
+    serializes through sqlx pools; our write volume is tiny).
+
+    A file catalog runs in WAL mode with ``synchronous=FULL`` (the module
+    docstring gives the measured reason and the durability it keeps). A
+    statement's Delta versions are mirrored with one
+    :meth:`record_versions` call, so one statement is one catalog
+    commit."""
 
     def __init__(self, path: str):
         self._conn = sqlite3.connect(path, check_same_thread=False)
         self._lock = threading.Lock()
         with self._lock:
+            # outside any transaction: SQLite ignores a journal-mode
+            # change inside one. WAL is persistent in the file itself;
+            # synchronous is per connection, so it is set on every open.
+            self._conn.execute("PRAGMA journal_mode=WAL")
+            self._conn.execute("PRAGMA synchronous=FULL")
             self._conn.executescript(_DDL)
             self._conn.execute(
                 "INSERT OR IGNORE INTO databases VALUES (?, ?)",
@@ -313,13 +339,26 @@ class Catalog:
             self._conn.commit()
             return entry
 
-    def record_version(self, table_uuid: str, version: int, timestamp_ms: int, operation: str) -> None:
-        """Mirror each deltalite commit into the catalog (reference
-        create_new_version, delta.rs:415-423 + system_tables.rs:132-210)."""
+    def recorded_version(self, table_uuid: str) -> int | None:
+        """The highest version mirrored for a table (None: none yet) —
+        the high-water mark the next :meth:`record_versions` starts
+        above. VACUUM prunes rows below the latest version, never the
+        latest itself, so the mark never moves backwards."""
+        return self._conn.execute(
+            "SELECT max(version) FROM table_versions WHERE uuid=?", (table_uuid,)
+        ).fetchone()[0]
+
+    def record_versions(self, table_uuid: str, rows: list[tuple[int, int, str]]) -> None:
+        """Mirror deltalite commits ``(version, timestamp_ms, operation)``
+        into the catalog in ONE transaction (reference create_new_version,
+        delta.rs:415-423 + system_tables.rs:132-210). Idempotent per
+        version, so two engines recording the same commit agree."""
+        if not rows:
+            return
         with self._lock:
-            self._conn.execute(
+            self._conn.executemany(
                 "INSERT OR IGNORE INTO table_versions VALUES (?, ?, ?, ?)",
-                (table_uuid, version, timestamp_ms, operation),
+                [(table_uuid, v, ts, op) for (v, ts, op) in rows],
             )
             self._conn.commit()
 

@@ -97,6 +97,11 @@ _LAZY_NAMES = {
     for name in names
 }
 
+# _rewrite_names' case guard: an unqualified double-quoted plain identifier
+_GUARD_PAT = re.compile(
+    r'(?<![A-Za-z0-9_.`])"([A-Za-z_][A-Za-z0-9_]*)"(?![A-Za-z0-9_.`])'
+)
+
 
 # One WHERE conjunct that Spark reliably offers to pushFilters AND
 # sources/remote.filter_to_sql reliably ships: a plain column compared to a
@@ -208,6 +213,8 @@ class SeafowlContext:
         self.staging_specs: dict[str, tuple[str, str, dict]] = {}
         # system/information_schema names not yet built this reload
         self._lazy_views: dict = {}
+        # _rewrite_names' patterns for the last (search schema, mapping)
+        self._rewrite_cache: tuple | None = None
         # Statement execution is serialized: the threaded frontends share one
         # context, and view refresh / search-path / catalog writes are shared
         # state. Heavy work stays parallel — execute() only ANALYZES (plans
@@ -771,6 +778,25 @@ class SeafowlContext:
         parts = parser.split_on_string_literals(sql)
         if not mapping:
             return sql
+        pats, guard, guard_repl = self._rewrite_patterns(mapping)
+        for i in range(0, len(parts), 2):
+            for pat, repl in pats:
+                parts[i] = pat.sub(repl, parts[i])
+            if guard:
+                parts[i] = _GUARD_PAT.sub(guard_repl, parts[i])
+        return "".join(parts)
+
+    def _rewrite_patterns(self, mapping: dict[str, str]):
+        """The compiled alternations, fold tables and case guard for one
+        (mapping, search_schema). A statement rewrites several times
+        (``_reads``, ``_exec_query``, each view expansion) against the
+        same mapping, which only changes with the catalog, so they are
+        built once and kept until either input changes (the key keeps
+        the mapping's order: fold-collision winners depend on it)."""
+        key = (self.search_schema, tuple(mapping.items()))
+        cached = self._rewrite_cache
+        if cached is not None and cached[0] == key:
+            return cached[1]
         # Bare identifiers match case-insensitively (the engine's unquoted
         # names fold, like the reference dialect's); double-quoted forms
         # are CASE-SENSITIVE identifiers — "Foo" and "foo" are distinct
@@ -851,9 +877,6 @@ class SeafowlContext:
             nm = k[len(pref):]
             if "." not in nm and re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", nm):
                 guard.setdefault(nm.lower(), {})[nm] = v
-        guard_pat = re.compile(
-            r'(?<![A-Za-z0-9_.`])"([A-Za-z_][A-Za-z0-9_]*)"(?![A-Za-z0-9_.`])'
-        )
 
         def _guard_repl(m: re.Match) -> str:
             inner = m.group(1)
@@ -868,12 +891,9 @@ class SeafowlContext:
                 f"{sorted(variants)}?)"
             )
 
-        for i in range(0, len(parts), 2):
-            for pat, repl in pats:
-                parts[i] = pat.sub(repl, parts[i])
-            if guard:
-                parts[i] = guard_pat.sub(_guard_repl, parts[i])
-        return "".join(parts)
+        built = (pats, guard, _guard_repl)
+        self._rewrite_cache = (key, built)
+        return built
 
     # ------------------------------------------------------------ functions
 
@@ -2721,20 +2741,19 @@ class SeafowlContext:
     # ---- DML
 
     def _record(self, entry: TableEntry, t: DeltaLiteTable) -> None:
-        # mirror EVERY not-yet-recorded commit, not just the latest: a
-        # CTAS lands two commits (CREATE + data) before its single
-        # _record call, and skipping v0 left system.table_versions
-        # missing a version that time travel can reach
-        recorded = {
-            v for (_, v, _, _) in self.catalog.table_versions(entry.uuid)
-        }
-        for v in range(t.latest_version() + 1):
-            if v in recorded:
-                continue
-            c = t.read_commit(v)
-            self.catalog.record_version(
-                entry.uuid, c.version, c.timestamp_ms, c.operation
-            )
+        # mirror EVERY commit above the catalog's high-water mark, not
+        # just the latest: a CTAS lands two commits (CREATE + data)
+        # before its single _record call, and skipping v0 left
+        # system.table_versions missing a version that time travel can
+        # reach. Starting at the mark (not at 0) reads only the new
+        # commit files and keeps versions VACUUM pruned out of the
+        # catalog; all of them land in one catalog transaction.
+        mark = self.catalog.recorded_version(entry.uuid)
+        start = 0 if mark is None else mark + 1
+        commits = [t.read_commit(v) for v in range(start, t.latest_version() + 1)]
+        self.catalog.record_versions(
+            entry.uuid, [(c.version, c.timestamp_ms, c.operation) for c in commits]
+        )
 
     def _exec_insert(self, stmt) -> None:
         entry = self._resolve(stmt.name)

@@ -16,7 +16,9 @@ Same control flow as the reference's Flight SQL handler:
 * ``do_put`` with a command ``{"path", "origin", "sequence_number",
   "pk": [...], "descriptors": [...]}`` ingests CDC change batches into the
   sync writer (reference DataSyncCommand over do_put, handler.rs:136-237);
-  the ``flush`` action forces a merge.
+  the ``flush`` action forces a merge. Whenever a put or the action
+  flushes a catalog table, its new versions are mirrored into the catalog
+  in one transaction.
 
 Scale note: a result is fetched in one Spark job and held driver-side as
 Arrow before streaming (engine/results.py, the fetch HTTP and pgwire use
@@ -34,6 +36,7 @@ import pyarrow.flight as flight
 
 from ..streaming.sync import ColumnDescriptor, SyncSchema, SyncWriter
 from . import bindings, results
+from .catalog import TableEntry
 from .context import SeafowlContext
 from .server import AccessPolicy
 
@@ -49,6 +52,9 @@ class SeafowlFlightServer(flight.FlightServerBase):
         self.ctx = ctx
         self.policy = policy or AccessPolicy()
         self.sync_writer = SyncWriter(ctx.spark)
+        # catalog entry of each table root a put buffered by name, so a
+        # flush records the versions it commits in the catalog
+        self._sync_entries: dict[str, TableEntry] = {}
         self._results: dict[str, pa.Table] = {}
         self._lock = threading.Lock()
 
@@ -186,33 +192,36 @@ class SeafowlFlightServer(flight.FlightServerBase):
             [ColumnDescriptor(d["name"], d["role"], d["target"]) for d in cmd["descriptors"]]
         )
         batch = reader.read_all().to_pandas()
-        entry = None
-        if "." in cmd.get("table", "") or cmd.get("table"):
+        if cmd.get("table"):
             entry = self.ctx._resolve(cmd["table"])
             root = self.ctx.table_root(entry)
+            self._sync_entries[root] = entry
         else:
             root = cmd["path"]
-        self.sync_writer.enqueue(
+        flushed = self.sync_writer.enqueue(
             root,
             schema,
             batch,
             origin=cmd.get("origin", "flight"),
             sequence=int(cmd.get("sequence_number", 0)),
         )
+        if flushed:
+            self._record(root)
+
+    def _record(self, root: str) -> None:
+        """Mirror the versions a flush committed into the catalog, through
+        the same path statements use (a put that flushed nothing touches
+        neither the catalog nor the log)."""
+        entry = self._sync_entries.get(root)
         if entry is not None:
             from .deltalite import DeltaLiteTable
 
-            # record the version if a flush happened during enqueue
-            t = DeltaLiteTable(self.ctx.spark, root)
-            self.ctx.catalog.record_version(
-                entry.uuid, t.latest_version(),
-                t.read_commit(t.latest_version()).timestamp_ms,
-                t.read_commit(t.latest_version()).operation,
-            )
+            self.ctx._record(entry, DeltaLiteTable(self.ctx.spark, root))
 
     def do_action(self, context, action):
         if action.type == "flush":
-            self.sync_writer.flush_all()
+            for root in self.sync_writer.flush_all():
+                self._record(root)
             return [flight.Result(b"ok")]
         if action.type == "healthz":
             return [flight.Result(b"ok")]

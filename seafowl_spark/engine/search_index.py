@@ -52,6 +52,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections import deque
 from dataclasses import dataclass, field
 
 INDEX_PROP = "search_indexes"
@@ -622,8 +623,10 @@ def lookup(spark, path: str, spec: IndexSpec, query_text: str, k: int):
 # plans executed here. When SFS_CAPTURE_PROBE_PLANS is set (tests only;
 # explainString costs driver ms per probe plan, so it never runs
 # un-asked), each batch plan's formatted explain is appended for the
-# gates in tests/test_plans.py::TestIndexServing to inspect.
-CAPTURED_PROBE_PLANS: list[str] = []
+# gates in tests/test_plans.py::TestIndexServing to inspect. Bounded:
+# a long-lived server that inherits the variable keeps only the newest
+# plans instead of growing on every lookup.
+CAPTURED_PROBE_PLANS: deque[str] = deque(maxlen=64)
 
 
 def _maybe_capture_probe_plan(df) -> None:

@@ -288,16 +288,18 @@ class SyncWriter:
         origin: str,
         sequence: int,
     ) -> bool:
-        """Add a change batch; returns True if the table was flushed."""
+        """Add a change batch; returns True if the table was flushed (by a
+        threshold, or because the batch switched origins)."""
         t = DeltaLiteTable(self.spark, table_root)
         last = t.last_app_txn_version(origin)
         if last is not None and sequence <= last:
             return False  # duplicate delivery: exactly-once skip
 
+        flushed = False
         buf = self._buffers.setdefault(table_root, _Buffer())
         if buf.origin not in (None, origin):
             # one origin per buffered table window keeps sequence tracking sane
-            self.flush(table_root)
+            flushed = self.flush(table_root)
             buf = self._buffers.setdefault(table_root, _Buffer())
         buf.origin = origin
         buf.last_sequence = sequence
@@ -310,9 +312,8 @@ class SyncWriter:
             or sum(len(b) for _, b in buf.batches) >= self.max_rows
             or time.time() - buf.first_ts >= self.max_lag_s
         ):
-            self.flush(table_root)
-            return True
-        return False
+            return self.flush(table_root) or flushed
+        return flushed
 
     # --------------------------------------------------------------- squash
 
@@ -346,17 +347,19 @@ class SyncWriter:
 
     # --------------------------------------------------------------- flush
 
-    def flush(self, table_root: str) -> None:
+    def flush(self, table_root: str) -> bool:
+        """Merge the table's buffered changes; returns True if that
+        committed a new version."""
         buf = self._buffers.pop(table_root, None)
         if buf is None or not buf.batches:
-            return
+            return False
         t = DeltaLiteTable(self.spark, table_root)
         pk_cols = buf.batches[-1][0].pk_targets
         net = self._squash(
             buf.batches, [c for c in t.schema().names if c not in pk_cols]
         )
         if net.frame.empty:
-            return
+            return False
         t.merge(
             net.frame,
             pk_cols,
@@ -367,10 +370,11 @@ class SyncWriter:
                 else None
             ),
         )
+        return True
 
-    def flush_all(self) -> None:
-        for root in list(self._buffers):
-            self.flush(root)
+    def flush_all(self) -> list[str]:
+        """Flush every buffered table; returns the roots that committed."""
+        return [root for root in list(self._buffers) if self.flush(root)]
 
 
 # --------------------------------------------------------------------------

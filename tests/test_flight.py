@@ -91,6 +91,85 @@ class TestFlightSync:
         out = ctx.execute("SELECT pk, v FROM ft ORDER BY pk")
         assert rows(out) == [(1, "ONE"), (2, "two")]
 
+    @staticmethod
+    def _put(client, table: str, sequence: int, pk: float, v: str) -> None:
+        cmd = {
+            "table": table,
+            "origin": "test-origin",
+            "sequence_number": sequence,
+            "descriptors": [
+                {"name": "old_pk", "role": "old_pk", "target": "pk"},
+                {"name": "new_pk", "role": "new_pk", "target": "pk"},
+                {"name": "v", "role": "value", "target": "v"},
+            ],
+        }
+        batch = pa.Table.from_pandas(
+            pd.DataFrame({"old_pk": [None], "new_pk": [pk], "v": [v]})
+        )
+        desc = flight.FlightDescriptor.for_command(json.dumps(cmd).encode())
+        writer, _ = client.do_put(desc, batch.schema)
+        writer.write_table(batch)
+        writer.close()
+
+    def test_flush_action_records_its_versions(self, server):
+        """The flush action's merge used to stay out of
+        system.table_versions until the next put, and a put recorded only
+        the latest version, so the first flush's version was never
+        listed."""
+        ctx, srv, client = server
+        ctx.execute("CREATE TABLE c (pk bigint, v text)")
+        self._put(client, "c", 1, 1.0, "one")
+        client.do_action(flight.Action("flush", b""))
+        self._put(client, "c", 2, 2.0, "two")
+        client.do_action(flight.Action("flush", b""))
+        assert rows(ctx.execute("SELECT pk, v FROM c")) == [(1, "one"), (2, "two")]
+        out = ctx.execute(
+            "SELECT version, operation FROM system.table_versions "
+            "WHERE table_name = 'c' ORDER BY version"
+        )
+        assert [r[0] for r in out.collect()] == [0, 1, 2]
+
+    def test_put_without_flush_skips_catalog_and_log(self, server, monkeypatch):
+        """A put that only buffers resolves its table name and runs the
+        sync writer's exactly-once check, and nothing else: it used to
+        write the catalog and list the table's log three times after
+        every put."""
+        from seafowl_spark.engine.catalog import Catalog
+        from seafowl_spark.sources.store import LocalStore
+        from seafowl_spark.streaming.sync import SyncWriter
+
+        ctx, srv, client = server
+        ctx.execute("CREATE TABLE c (pk bigint, v text)")
+        calls: list[str] = []
+        for name, fn in list(vars(Catalog).items()):
+            if callable(fn) and not name.startswith("_"):
+                monkeypatch.setattr(
+                    Catalog, name,
+                    lambda self, *a, _n=name, _f=fn, **k: calls.append(_n) or _f(self, *a, **k),
+                )
+        in_enqueue = []
+        log_lists = []
+        orig_list, orig_enqueue = LocalStore.list, SyncWriter.enqueue
+
+        def counting_list(self, prefix):
+            if prefix.rstrip("/").endswith("_delta_log") and not in_enqueue:
+                log_lists.append(prefix)
+            return orig_list(self, prefix)
+
+        def marked_enqueue(self, *a, **k):
+            in_enqueue.append(1)
+            try:
+                return orig_enqueue(self, *a, **k)
+            finally:
+                in_enqueue.pop()
+
+        monkeypatch.setattr(LocalStore, "list", counting_list)
+        monkeypatch.setattr(SyncWriter, "enqueue", marked_enqueue)
+        self._put(client, "c", 1, 1.0, "one")
+        assert calls == ["get_table"]  # name resolution only
+        assert log_lists == []
+        assert srv.sync_writer._buffers  # buffered, not flushed
+
 
 class TestFlightTypesRoundtrip:
     def test_ddl_types_roundtrip(self, server):

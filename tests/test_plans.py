@@ -520,6 +520,31 @@ class TestIndexServing:
             n_probed = len((m.group(1) or m.group(2)).split(","))
             assert n_probed < max(n_all, 2), (n_probed, n_all)
 
+    def test_probe_plan_capture_is_bounded(self, monkeypatch):
+        """A server that inherits SFS_CAPTURE_PROBE_PLANS keeps only the
+        newest maxlen plans (the list used to grow on every lookup)."""
+        from types import SimpleNamespace
+
+        from seafowl_spark.engine import search_index as si
+
+        monkeypatch.setenv("SFS_CAPTURE_PROBE_PLANS", "1")
+        n = si.CAPTURED_PROBE_PLANS.maxlen
+        seq = iter(range(2 * n))
+        utils = SimpleNamespace(explainString=lambda qe, mode: f"plan {next(seq)}")
+        df = SimpleNamespace(
+            _sc=SimpleNamespace(_jvm=SimpleNamespace(PythonSQLUtils=utils)),
+            _jdf=SimpleNamespace(queryExecution=lambda: None),
+        )
+        si.CAPTURED_PROBE_PLANS.clear()
+        try:
+            for _ in range(2 * n):
+                si._maybe_capture_probe_plan(df)
+            assert list(si.CAPTURED_PROBE_PLANS) == [
+                f"plan {i}" for i in range(n, 2 * n)
+            ]
+        finally:
+            si.CAPTURED_PROBE_PLANS.clear()
+
 class TestRegistryWideHygiene:
     def test_no_cartesian_no_row_python_anywhere(self, spark, registry):
         """Registry-wide invariant sweep: NO graded query may plan a
