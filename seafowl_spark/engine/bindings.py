@@ -29,6 +29,8 @@ from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import parser
+
 # key kinds that reload_views owns: a reload unbinds such a name once the
 # catalog it reads no longer shows it
 RELOAD_KINDS = frozenset({"table", "view", "staging", "system"})
@@ -41,14 +43,18 @@ _CREATE_LOCK = threading.Lock()
 def referenced_names(sql: str, names: Iterable[str]) -> set[str]:
     """The lower-cased members of ``names`` that ``sql`` may read.
 
-    A name counts when it equals an identifier token of ``sql``
-    case-insensitively (mangled view names and bare search-schema names
-    are single tokens); a name that is not a single token counts when it
-    occurs anywhere in the text. This over-detects on purpose — a column,
-    alias or literal spelled like a table counts too — because a superset
-    only costs a re-expansion, while a missed name serves stale rows."""
-    tokens = {t.lower() for t in _TOKEN.findall(sql)}
-    low = sql.lower()
+    A name counts when it equals an identifier token of ``sql`` outside
+    its single-quoted string literals, case-insensitively (mangled view
+    names and bare search-schema names are single tokens); a name that is
+    not a single token counts when it occurs anywhere in that text. This
+    over-detects on purpose — a column or alias spelled like a table
+    counts too — because a superset only costs a re-expansion, while a
+    missed name serves stale rows. A literal is a value, never a read:
+    ``search_index('t', ...)`` reads are found from the call itself
+    (``SeafowlContext._search_calls``)."""
+    code = " ".join(parser.split_on_string_literals(sql)[::2])
+    tokens = {t.lower() for t in _TOKEN.findall(code)}
+    low = code.lower()
     out = set()
     for n in names:
         nl = n.lower()

@@ -22,9 +22,11 @@ Pipeline (mirrors SURVEY.md §2.E):
    ``MAX_ROWS_PER_SYNC``, so it is already driver-sized,
 3. apply via deltalite MERGE, handing it the squashed pandas frame: the
    pre-join facts (PK bounds, NULL-PK check, bucket set) come from that
-   frame without a Spark job, then a FULL OUTER JOIN base<->changes on the
-   PK rewrites only the pruned files (planner.rs:449-548) — the only
-   distributed step,
+   frame, then a FULL OUTER JOIN base<->changes on the PK rewrites only
+   the pruned files (planner.rs:449-548). On an unbucketed table whose
+   rewrite fits one output file, merge runs that join and write on the
+   driver in Arrow, so such a flush launches no Spark job at all; a
+   bucketed table or a larger rewrite runs the join in Spark,
 4. record (origin, sequence) in the commit for exactly-once resume
    (reference SyncCommitInfo, sync/mod.rs:47-88): re-delivered sequences
    are skipped.
@@ -289,19 +291,30 @@ class SyncWriter:
         sequence: int,
     ) -> bool:
         """Add a change batch; returns True if the table was flushed (by a
-        threshold, or because the batch switched origins)."""
-        t = DeltaLiteTable(self.spark, table_root)
-        last = t.last_app_txn_version(origin)
+        threshold, or because the batch switched origins).
+
+        Exactly-once: a buffer window (one origin's puts into one table
+        between flushes) reads the origin's committed sequence from the
+        log on its first put only, so a restart or another writer is seen
+        there; a later put is a duplicate when its sequence is at or below
+        the window's last one."""
+        buf = self._buffers.get(table_root)
+        if buf is not None and buf.origin == origin:
+            # every put since the window's log read had a higher sequence,
+            # so the last one bounds what is committed or buffered
+            last = buf.last_sequence
+        else:
+            last = DeltaLiteTable(self.spark, table_root).last_app_txn_version(origin)
         if last is not None and sequence <= last:
             return False  # duplicate delivery: exactly-once skip
 
         flushed = False
-        buf = self._buffers.setdefault(table_root, _Buffer())
-        if buf.origin not in (None, origin):
+        if buf is not None and buf.origin != origin:
             # one origin per buffered table window keeps sequence tracking sane
             flushed = self.flush(table_root)
-            buf = self._buffers.setdefault(table_root, _Buffer())
-        buf.origin = origin
+            buf = None
+        if buf is None:
+            buf = self._buffers[table_root] = _Buffer(origin=origin)
         buf.last_sequence = sequence
         buf.batches.append((schema, batch))
         buf.bytes += int(batch.memory_usage(deep=True).sum())

@@ -193,8 +193,14 @@ class TestBindingCost:
         assert bindings.for_session(other) is not bindings.for_session(spark)
 
     def test_referenced_names_over_detects(self):
-        sql = "SELECT `__sfs__public__t`.x, T2.y FROM `__sfs__public__t`, T2 WHERE 'x-y' = ''"
-        names = ["__sfs__public__t", "t2", "x-y", "t3"]
+        """Names count wherever the SQL text outside string literals spells
+        them (a column or alias spelled like a table too); a literal is a
+        value, ``''`` escapes included."""
+        sql = (
+            "SELECT `__sfs__public__t`.x, T2.y, `x-y` FROM `__sfs__public__t`, T2 "
+            "WHERE name = 't3' AND 'it''s t4' <> 'x+y'"
+        )
+        names = ["__sfs__public__t", "t2", "x-y", "t3", "t4", "x+y"]
         assert bindings.referenced_names(sql, names) == {"__sfs__public__t", "t2", "x-y"}
 
 

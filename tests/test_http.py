@@ -590,6 +590,35 @@ class TestETagFollowsReads:
         )
         assert (code, got) == (200, [{"r": 6}])
 
+    def test_string_literal_is_not_a_read(self, server):
+        """A literal spelled like a table reads nothing: a write to that
+        table keeps the query's ETag, so its cached GET stays a 304."""
+        _post_q(
+            server.port,
+            "CREATE TABLE la (x int, name varchar); CREATE TABLE lb (x int); "
+            "INSERT INTO la VALUES (1, 'lb'), (2, 'it''s lb')",
+        )
+        q = "SELECT x FROM la WHERE name = 'lb' OR name = 'it''s lb'"
+        code, body, headers = _get_q(server.port, q)
+        assert code == 200, body
+        etag = headers["ETag"]
+        _post_q(server.port, "INSERT INTO lb VALUES (1)")
+        code, _, headers = _get_q(server.port, q, etag=etag)
+        assert (code, headers.get("ETag")) == (304, etag)
+
+    def test_search_index_read_follows_its_table(self, server):
+        """The table a search_index() call names as a literal is still a
+        read: a write to it moves the ETag."""
+        code, got = self._cycle(
+            server.port,
+            "CREATE TABLE st (doc_id BIGINT, text STRING); "
+            "INSERT INTO st VALUES (1, 'spark merge'), (2, 'batch filter'); "
+            "CREATE SEARCH INDEX si ON st (text) USING BM25",
+            "SELECT count(*) AS n FROM search_index('st', 'si', 'spark', 5)",
+            "INSERT INTO st VALUES (3, 'spark scan')",
+        )
+        assert code == 200
+
     def test_get_with_regex_metacharacter_table(self, server):
         _post_q(
             server.port,

@@ -132,6 +132,48 @@ class TestSyncApply:
         out = ctx.execute("SELECT a FROM s WHERE pk = 1")
         assert rows(out) == [("x",)]
 
+    def test_log_read_once_per_buffer_window(self, target, monkeypatch):
+        """Only a window's first put reads the log for the exactly-once
+        check; later puts check against the window's last sequence, and
+        re-deliveries inside the window are skipped too."""
+        from seafowl_spark.engine.deltalite import DeltaLiteTable
+
+        ctx = target
+        w = self._writer(ctx)
+        reads = []
+        read_commit = DeltaLiteTable.read_commit
+        monkeypatch.setattr(
+            DeltaLiteTable, "read_commit",
+            lambda self, v: reads.append(v) or read_commit(self, v),
+        )
+        per_put = []
+        for seq in (1, 2, 3):
+            batch = pd.DataFrame({"old_pk": [None], "new_pk": [10 + seq], "a": ["n"], "b": [0.0]})
+            before = len(reads)
+            w.enqueue(self._root(ctx), full_schema(), batch, origin="o1", sequence=seq)
+            per_put.append(len(reads) - before)
+        assert per_put == [2, 0, 0]  # CREATE and INSERT, read once
+        dup = pd.DataFrame({"old_pk": [None], "new_pk": [99], "a": ["dup"], "b": [0.0]})
+        assert w.enqueue(self._root(ctx), full_schema(), dup, origin="o1", sequence=2) is False
+        w.flush_all()
+        # the next window reads the log again, flush included
+        before = len(reads)
+        assert w.enqueue(self._root(ctx), full_schema(), dup, origin="o1", sequence=3) is False
+        assert len(reads) > before
+        assert rows(ctx.execute("SELECT pk FROM s")) == [(1,), (2,), (11,), (12,), (13,)]
+
+    def test_window_sees_another_writers_commit(self, target):
+        """A new window reads the log, so a sequence another writer
+        committed meanwhile is skipped."""
+        ctx = target
+        first, second = self._writer(ctx), self._writer(ctx)
+        batch = pd.DataFrame({"old_pk": [1], "new_pk": [1], "a": ["x"], "b": [0.0]})
+        first.enqueue(self._root(ctx), full_schema(), batch, origin="o1", sequence=7)
+        first.flush_all()
+        again = pd.DataFrame({"old_pk": [1], "new_pk": [1], "a": ["late"], "b": [0.0]})
+        assert second.enqueue(self._root(ctx), full_schema(), again, origin="o1", sequence=7) is False
+        assert not second._buffers
+
     def test_merge_prunes_untouched_files(self, target):
         """Only files whose PK range intersects the change set rewrite."""
         ctx = target
