@@ -2,9 +2,10 @@
 catalog and deltalite storage.
 
 Query lifecycle mirrors the reference (SURVEY.md §3.1): per statement we
-(a) refresh the visible catalog into temp views (reference reload_schema,
-src/context/mod.rs:89-112 — every table's log is read, but only names
-whose version moved are rebound; see engine/bindings.py), (b) rewrite
+(a) refresh what the statement reads into temp views (reference
+reload_schema, src/context/mod.rs:89-112 — only the logs of the tables
+and views the statement reads are read, and only names whose version
+moved are rebound; see engine/bindings.py), (b) rewrite
 time-travel sugar, (c) hand reads to `spark.sql`
 (Catalyst = DataFusion's role), and (d) interpret DDL/DML ourselves,
 eagerly, returning row-count style results (reference executes DML during
@@ -97,6 +98,8 @@ _LAZY_NAMES = {
     for name in names
 }
 
+_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
 # _rewrite_names' case guard: an unqualified double-quoted plain identifier
 _GUARD_PAT = re.compile(
     r'(?<![A-Za-z0-9_.`])"([A-Za-z_][A-Za-z0-9_]*)"(?![A-Za-z0-9_.`])'
@@ -178,6 +181,9 @@ class Reads:
     functions: dict[str, dict] = field(default_factory=dict)
     system: bool = False  # reads a system.* or information_schema.* frame
     staging: bool = False  # reads a staging table (those carry no version)
+    # the name resolution it was answered by (SeafowlContext._name_mapping)
+    mapping: dict[str, str] = field(default_factory=dict)
+    named: list[tuple[TableEntry, str, str | None]] = field(default_factory=list)
 
 
 class SeafowlContext:
@@ -194,14 +200,9 @@ class SeafowlContext:
         self.catalog = Catalog(catalog_path or os.path.join(self.data_dir, "catalog.sqlite"))
         self.database = DEFAULT_DB
         self.search_schema = DEFAULT_SCHEMA
-        # per-reload (entry, snapshot) by table uuid, in catalog order:
-        # information_schema, system tables and scan pruning read
-        # properties and file lists without replaying every table's log a
-        # second time per statement
-        self._snaps: dict[str, tuple[TableEntry, Snapshot]] = {}
-        # per-reload snapshot fingerprints for indexed tables (avoids a
-        # second full log replay per statement in system.search_indexes)
-        self._snap_fp_cache: dict = {}
+        # (entry, snapshot) by uuid of what the last reload bound: the
+        # statement's reads, which scan pruning serves from
+        self._bound_reads: dict[str, tuple[TableEntry, Snapshot]] = {}
         # python UDFs run arbitrary source via exec(); embedders get them by
         # default, network frontends must opt in explicitly (tools/serve.py)
         self.allow_python_udfs = allow_python_udfs
@@ -276,12 +277,10 @@ class SeafowlContext:
         dt_schema = T.StructType.fromDDL(
             "uuid string, database string, schema string, name string, drop_time bigint"
         )
+        snaps = self._catalog_snapshots()
         tf_rows = []
-        for e in self.catalog.tables(self.database):
-            t = DeltaLiteTable(self.spark, self.table_root(e))
-            if not t.exists():
-                continue
-            for fobj in t.snapshot().files:
+        for e, snap in snaps:
+            for fobj in snap.files if snap else ():
                 tf_rows.append(
                     Row(
                         table_schema=e.schema,
@@ -300,12 +299,8 @@ class SeafowlContext:
         from .matview import MATVIEW_PROP, MvSpec
 
         mv_rows = []
-        for e in self.catalog.tables(self.database):
-            props = self._cached_props(e.uuid)
-            if props is None:
-                t = DeltaLiteTable(self.spark, self.table_root(e))
-                props = t.snapshot().properties if t.exists() else {}
-            raw = (props or {}).get(MATVIEW_PROP)
+        for e, snap in snaps:
+            raw = (snap.properties if snap else {}).get(MATVIEW_PROP)
             if not raw:
                 continue
             spec = MvSpec.from_json(raw)
@@ -359,23 +354,11 @@ class SeafowlContext:
         from .search_index import load_specs as _si_load, snapshot_fp as _si_fp
 
         si_rows = []
-        for e in self.catalog.tables(self.database):
-            props = self._cached_props(e.uuid)
-            t = None
-            if props is None:
-                t = DeltaLiteTable(self.spark, self.table_root(e))
-                props = t.snapshot().properties if t.exists() else {}
-            specs = _si_load(props or {})
+        for e, snap in snaps:
+            specs = _si_load(snap.properties if snap else {})
             if not specs:
                 continue
-            cur_fp = self._snap_fp_cache.get(e.uuid)
-            if cur_fp is None:
-                if t is None:
-                    t = DeltaLiteTable(self.spark, self.table_root(e))
-                try:
-                    cur_fp = _si_fp(t.snapshot())
-                except Exception:  # noqa: BLE001 — broken storage: stale
-                    cur_fp = None
+            cur_fp = _si_fp(snap)
             for n, s in sorted(specs.items()):
                 si_rows.append(
                     Row(
@@ -424,15 +407,23 @@ class SeafowlContext:
             "search_indexes": self.spark.createDataFrame(si_rows, si_schema),
         }
 
-    def _cached_props(self, uuid: str) -> dict | None:
-        """The table's properties as this statement's reload read them."""
-        hit = self._snaps.get(uuid)
-        return hit[1].properties if hit else None
+    def _catalog_snapshots(self) -> list[tuple[TableEntry, Snapshot | None]]:
+        """Every entry of the database with its head snapshot, None where
+        the table's log cannot be read (broken storage): the one path the
+        system and information_schema frames read tables through."""
+        out = []
+        for e in self.catalog.tables(self.database):
+            try:
+                snap = DeltaLiteTable(self.spark, self.table_root(e)).snapshot()
+            except (DeltaLiteError, OSError, ValueError):
+                snap = None
+            out.append((e, snap))
+        return out
 
     def _information_schema(self) -> dict[str, DataFrame]:
         """information_schema.{tables,columns} over the metastore (A20; the
         reference inherits DataFusion's information_schema provider)."""
-        entries = self.catalog.tables(self.database)
+        snaps = self._catalog_snapshots()
         t_rows = [
             Row(
                 table_catalog=e.database,
@@ -440,15 +431,15 @@ class SeafowlContext:
                 table_name=e.name,
                 table_type=(
                     "VIEW"
-                    if (self._cached_props(e.uuid) or {}).get(VIEW_PROP)
+                    if snap and snap.properties.get(VIEW_PROP)
                     else "BASE TABLE"
                 ),
             )
-            for e in entries
+            for e, snap in snaps
         ]
         c_rows = []
-        for e in entries:
-            for pos, f in enumerate(T.StructType.fromDDL(e.schema_ddl).fields, 1):
+        for e, snap in snaps:
+            for pos, f in enumerate(snap.schema.fields if snap else (), 1):
                 c_rows.append(
                     Row(
                         table_catalog=e.database,
@@ -464,20 +455,10 @@ class SeafowlContext:
         # log is authoritative); surfacing them here gives the standard
         # table_constraints/check_constraints pair (constraint_type is
         # always CHECK — no PK/FK surface, same as the reference).
-        # reload_views snapshots every table right before calling this —
-        # its per-uuid property capture avoids a second full log replay
-        # per table per statement
         tc_rows, cc_rows = [], []
-        for e in entries:
-            props = self._cached_props(e.uuid)
-            if props is None:
-                try:
-                    props = DeltaLiteTable(
-                        self.spark, self.table_root(e)
-                    ).snapshot().properties
-                except DeltaLiteError:
-                    continue
-            for cname, expr in (props.get("constraints") or {}).items():
+        for e, snap in snaps:
+            cons = (snap.properties if snap else {}).get("constraints") or {}
+            for cname, expr in cons.items():
                 tc_rows.append(
                     Row(
                         constraint_catalog=e.database,
@@ -520,23 +501,28 @@ class SeafowlContext:
             ),
         }
 
-    def reload_views(self) -> dict[str, str]:
-        """Bind every visible catalog name to a temp view; returns the
-        mapping qualified-name -> view-name used for query rewriting.
+    def reload_views(self, sql: str) -> dict[str, str]:
+        """Bind what ``sql`` reads to temp views; returns the mapping
+        qualified-name -> view-name used for query rewriting.
 
-        Every table's log is read on every statement, so freshness is the
-        reference's always-fresh reload_schema (src/context/mod.rs:89-112),
-        writers in other processes included. The Spark side is NOT redone
-        per statement: the session's binding registry (engine/bindings.py)
-        keys each name by what it holds, and to_df, temp-view registration
-        and view re-analysis run only for names whose key moved — a table
-        whose snapshot version moved, a view whose own version, rewritten
-        SQL or any dependency's key moved. Names no longer visible
-        (dropped tables, database switch, rename) are unbound.
+        What it reads is ``_reads(sql)``: the tables it names, and the
+        views it names with whatever they read, transitively. Each of
+        those is checked against its table's head on every statement, so
+        freshness is the reference's always-fresh reload_schema
+        (src/context/mod.rs:89-112), writers in other processes
+        included; the logs of tables the statement does not read are not
+        read, and their names keep what they hold until a statement reads
+        them. The Spark side is NOT redone per statement: the session's
+        binding registry (engine/bindings.py) keys each name by what it
+        holds, and to_df, temp-view registration and view re-analysis run
+        only for names whose key moved — a table whose snapshot version
+        moved, a view whose own version, rewritten SQL or any
+        dependency's key moved. Names no longer visible (dropped tables,
+        database switch, rename) are unbound.
         """
         reg = bindings.for_session(self.spark)
         with reg.lock:
-            return self._reload_views(reg)
+            return self._reload_views(reg, self._reads(sql))
 
     def _name_mapping(
         self, entries: list[TableEntry]
@@ -548,7 +534,7 @@ class SeafowlContext:
         resolves."""
         mapping: dict[str, str] = {}
         named: list[tuple[TableEntry, str, str | None]] = []
-        ident = r"[A-Za-z_][A-Za-z0-9_]*"
+        ident = _IDENT.fullmatch
         # case-fold sibling groups: when "Foo" and "foo" both exist, only
         # the exact-lowercase one may own the bare temp-view name (the
         # unquoted-reference fold target, PG-style); the sibling stays
@@ -568,8 +554,8 @@ class SeafowlContext:
             # dialect, while Spark's temp-view namespace is
             # case-insensitive — such names get the hash-suffixed mangle
             # and resolve only via the mapping.
-            s_quoted = not re.fullmatch(ident, e.schema) or e.schema != e.schema.lower()
-            n_quoted = not re.fullmatch(ident, e.name) or e.name != e.name.lower()
+            s_quoted = not ident(e.schema) or e.schema != e.schema.lower()
+            n_quoted = not ident(e.name) or e.name != e.name.lower()
             if s_quoted or n_quoted:
                 mapping[f'"{e.schema}"."{e.name}"'] = mangled
             if s_quoted:
@@ -583,7 +569,7 @@ class SeafowlContext:
             plain = (
                 e.name
                 if e.schema == self.search_schema
-                and re.fullmatch(ident, e.name)
+                and ident(e.name)
                 and not (
                     lower_groups[(e.schema, e.name.lower())] > 1
                     and e.name != e.name.lower()
@@ -597,34 +583,29 @@ class SeafowlContext:
             mapping[f"{schema}.{name}"] = mangled
         return mapping, named
 
-    def _reload_views(self, reg: bindings.Bindings) -> dict[str, str]:
-        self._snap_fp_cache = {}
-        self._snaps = {}
+    def _reload_views(self, reg: bindings.Bindings, reads: Reads) -> dict[str, str]:
+        self._bound_reads = reads.tables
         # logical views bind AFTER every table/staging/system name is in
         # the mapping (their defining queries may reference any of them)
         deferred_views: list[tuple[str, int, str, str, str | None]] = []
         # lower-cased names this reload keeps bound; reload-owned names
         # outside it are stale
         visible: set[str] = set()
-        mapping, named = self._name_mapping(self.catalog.tables(self.database))
-        for e, mangled, plain in named:
-            root = os.path.abspath(self.table_root(e))
-            t = DeltaLiteTable(self.spark, root)
-            snap = t.snapshot()
-            self._snaps[e.uuid] = (e, snap)
-            if (snap.properties or {}).get("search_indexes"):
-                from .search_index import snapshot_fp as _sfp
-
-                self._snap_fp_cache[e.uuid] = _sfp(snap)
-            view_sql = (snap.properties or {}).get(VIEW_PROP)
+        mapping = reads.mapping
+        for e, mangled, plain in reads.named:
             names = [n for n in (mangled, plain) if n]
             visible.update(n.lower() for n in names)
+            if e.uuid not in reads.tables:
+                continue
+            snap = reads.tables[e.uuid][1]
+            root = os.path.abspath(self.table_root(e))
+            view_sql = (snap.properties or {}).get(VIEW_PROP)
             if view_sql is not None:
                 deferred_views.append((root, snap.version, view_sql, mangled, plain))
                 continue
             key = ("table", root, snap.version)
             if any(reg.key(n) != key for n in names):
-                df = t.to_df(_snap=snap)
+                df = DeltaLiteTable(self.spark, root).to_df(_snap=snap)
                 for n in names:
                     reg.bind(n, key, df)
         for name, df in self.staging.items():
@@ -1007,7 +988,7 @@ class SeafowlContext:
         try:
             # spark.sql analyzes eagerly: the returned plan holds resolved
             # relations, so the per-query aliases can be dropped here
-            mapping = self.reload_views()
+            mapping = self.reload_views(sql)
             rewritten = self._rewrite_names(sql, mapping)
             self._ensure_lazy_views(rewritten)
             rewritten, scan_aliases = self._maybe_prune_scans(rewritten)
@@ -1088,7 +1069,7 @@ class SeafowlContext:
         for name, (fmt, location, options) in self.staging_specs.items():
             if fmt in ("iceberg", "delta", "deltatable"):
                 candidates.append((name, (fmt, location, options)))
-        for e, snap in self._snaps.values():
+        for e, snap in self._bound_reads.values():
             if (snap.properties or {}).get(VIEW_PROP) is not None:
                 continue  # a logical view stores no files: nothing to prune
             # engine-native tables prune by the footer stats their adds
@@ -1230,11 +1211,9 @@ class SeafowlContext:
             )
         m = re.fullmatch(r"(?i)(?:show columns (?:from|in)|describe(?: table)?) ([\w.]+)", s)
         if m:
-            entry = self._resolve(m.group(1))
-            schema = T.StructType.fromDDL(entry.schema_ddl)
             rows = [
                 Row(column_name=f.name, data_type=f.dataType.simpleString(), nullable=True)
-                for f in schema.fields
+                for f in self.delta_table(m.group(1)).schema().fields
             ]
             return self.spark.createDataFrame(
                 rows, "column_name string, data_type string, nullable boolean"
@@ -1318,7 +1297,7 @@ class SeafowlContext:
                 return self.spark.createDataFrame(
                     [Row(create_statement=ddl)], "create_statement string"
                 )
-            schema = T.StructType.fromDDL(snap.schema_ddl)
+            schema = snap.schema
             cols = ",\n  ".join(
                 f"{f.name} {f.dataType.simpleString().upper()}"
                 for f in schema.fields
@@ -1490,7 +1469,7 @@ class SeafowlContext:
         t = DeltaLiteTable.create(
             self.spark,
             self.table_root(entry),
-            T.StructType.fromDDL(snap.schema_ddl),
+            snap.schema,
             operation="SHALLOW CLONE",
             properties=props or None,
         )
@@ -1542,10 +1521,8 @@ class SeafowlContext:
         if any(shape.group_via_alias or []):
             avail: set[str] = set()
             for ref in [base, *shape.dims]:
-                ddl = self.delta_table(ref).snapshot().schema_ddl
                 avail |= {
-                    f.name.lower()
-                    for f in T.StructType.fromDDL(ddl).fields
+                    n.lower() for n in self.delta_table(ref).schema().names
                 }
             for c, flag in zip(group_cols, shape.group_via_alias):
                 if flag and c.lower() in avail:
@@ -1642,9 +1619,9 @@ class SeafowlContext:
     def _exec_create_view(self, stmt) -> None:
         """CREATE [OR REPLACE] VIEW: a logical view — the defining query
         is stored in the catalog (the entry holds ZERO data files) and
-        re-expanded against the live catalog at every statement, so
-        reads always see the CURRENT base tables with no refresh step
-        (contrast _exec_create_matview). Beyond the reference, which
+        re-expanded against the live catalog by every statement that
+        reads it, so reads always see the CURRENT base tables with no
+        refresh step (contrast _exec_create_matview). Beyond the reference, which
         rejects CreateView outright (src/context/physical.rs:573-575,
         "Creating views is currently unsupported!").
 
@@ -1961,7 +1938,7 @@ class SeafowlContext:
                 f"unknown index method {f['method']} "
                 f"(supported: {', '.join(_METHODS)})"
             )
-        schema = T.StructType.fromDDL(snap.schema_ddl)
+        schema = snap.schema
         names = {x.name for x in schema.fields}
         col = f["column"]
         cols = f.get("columns") or col.split(",")
@@ -2153,7 +2130,7 @@ class SeafowlContext:
                     t, spec.built_version, t.latest_version()
                 )
                 if only_old or only_new:
-                    schema = T.StructType.fromDDL(snap.schema_ddl)
+                    schema = snap.schema
                     id_col = spec.params.get("id_col", "doc_id")
                     # delete/update-aware diff (r10 tombstones, r11
                     # epochs): removed rows tombstone at e_prev (plus a
@@ -2896,8 +2873,8 @@ class SeafowlContext:
                     f"columns; got: {part.strip()!r}"
                 )
             pk_cols.append(m.group(2))
-        mapping = self.reload_views()
         source_sql = stmt.source_query or f"SELECT * FROM {stmt.source_table}"
+        mapping = self.reload_views(source_sql)
         source_rw = self._rewrite_names(source_sql, mapping)
         self._ensure_lazy_views(source_rw)
         src = self.spark.sql(source_rw)
@@ -3086,8 +3063,8 @@ class SeafowlContext:
         reload_views' own mapping, then ``bindings.referenced_names`` over
         the rewritten SQL — the detector view expansion keys on. A view
         adds whatever its SQL reads, transitively, and stays in the set
-        itself. Reads only the catalog and Delta logs: no Spark, no
-        reload."""
+        itself. Reads only the catalog and the Delta logs of what it
+        finds: no Spark, no reload."""
         sql, _ = parser.extract_time_travel(sql)
         mapping, named = self._name_mapping(self.catalog.tables(self.database))
         owner = {n.lower(): e for e, *names in named for n in names if n}
@@ -3096,7 +3073,7 @@ class SeafowlContext:
             n.lower(): spec for n, spec in self.catalog.functions(self.database).items()
         }
         known = owner.keys() | staging | _LAZY_NAMES.keys()
-        out = Reads()
+        out = Reads(mapping=mapping, named=named)
 
         def snapshot(e: TableEntry) -> Snapshot:
             if e.uuid not in out.tables:

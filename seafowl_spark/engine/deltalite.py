@@ -34,6 +34,7 @@ import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
+from functools import cached_property
 from typing import Any
 
 import numpy as np
@@ -277,6 +278,13 @@ class Snapshot:
     files: list[AddFile]
     properties: dict = field(default_factory=dict)  # e.g. bucket_by/buckets
 
+    @cached_property
+    def schema(self) -> T.StructType:
+        # parsed once (a py4j round trip); shared like ``files`` and
+        # ``properties``, so callers copy before changing it
+        ddl = self.schema_ddl
+        return T.StructType.fromDDL(ddl)
+
     @property
     def num_rows(self) -> int:
         # live rows: physical minus merge-on-read deleted
@@ -412,6 +420,13 @@ def _spark_file_stats(md, table: pa.Table) -> dict[str, dict[str, Any]]:
     return stats
 
 
+# table root -> ((head version, head commit bytes), head Snapshot): the
+# latest snapshot() of each table this process read. A hit costs one log
+# listing and one read of the head commit; Snapshots are shared, never
+# changed in place.
+_HEADS: dict[str, tuple[tuple[int, bytes], Snapshot]] = {}
+
+
 class DeltaLiteTable:
     """Handle to one versioned table directory."""
 
@@ -526,6 +541,15 @@ class DeltaLiteTable:
             version = vs[-1]
         if version not in vs:
             raise DeltaLiteError(f"unknown version {version} for {self.root}")
+        head = None
+        if version == vs[-1]:
+            # the head commit's bytes are its identity: a table dropped
+            # and recreated at this root, by any process, writes another
+            # commit under the same version number
+            head = self.store.get(self._version_path(version))
+            hit = _HEADS.get(self.root_url)
+            if hit is not None and hit[0] == (version, head):
+                return hit[1]
 
         files: dict[str, AddFile] = {}
         schema_ddl = ""
@@ -556,7 +580,10 @@ class DeltaLiteTable:
                 files.pop(r, None)
             for a in c.adds:
                 files[a.path] = a
-        return Snapshot(version, ts_ms, schema_ddl, list(files.values()), properties)
+        snap = Snapshot(version, ts_ms, schema_ddl, list(files.values()), properties)
+        if head is not None:
+            _HEADS[self.root_url] = ((version, head), snap)
+        return snap
 
     # ------------------------------------------------------- log checkpoints
 
@@ -628,8 +655,7 @@ class DeltaLiteTable:
         return [self.read_commit(v) for v in self.versions()]
 
     def schema(self) -> T.StructType:
-        ddl = self.snapshot().schema_ddl
-        return T.StructType.fromDDL(ddl)
+        return self.snapshot().schema
 
     def last_app_txn_version(self, app_id: str) -> int | None:
         """Highest committed txn version for an app id (exactly-once CDC
@@ -693,11 +719,11 @@ class DeltaLiteTable:
         predicate_sql: str | None = None,
         _snap: Snapshot | None = None,
     ) -> DataFrame:
-        # _snap: caller already resolved the snapshot (reload_views reads
-        # every table's log per statement, and calls this only for tables
-        # whose version moved — one log replay, not two)
+        # _snap: the caller already resolved the snapshot (reload_views
+        # binds the one its statement's reads resolved, so the frame and
+        # the binding key name the same version)
         snap = _snap if _snap is not None else self.snapshot(version, timestamp)
-        schema = T.StructType.fromDDL(snap.schema_ddl)
+        schema = snap.schema
         files = self.pruned_files(snap, predicate_sql)
         if not files:
             return self._empty_df(schema)
@@ -1113,11 +1139,7 @@ class DeltaLiteTable:
         tests/statements/dml.rs:3-46). ``_snap`` reuses an
         already-resolved snapshot (one INSERT used to replay the log four
         times across align/constraints/write — review find, r11)."""
-        target = (
-            T.StructType.fromDDL(_snap.schema_ddl)
-            if _snap is not None
-            else self.schema()
-        )
+        target = (_snap or self.snapshot()).schema
         cols = []
         for f in target.fields:
             if f.name in df.columns:
@@ -1145,7 +1167,7 @@ class DeltaLiteTable:
         # (conservative, stats pruning already ran)
         _INT_TYPES = {"tinyint", "smallint", "int", "bigint"}
         col_fam = {}
-        for fld in T.StructType.fromDDL(snap.schema_ddl).fields:
+        for fld in snap.schema.fields:
             s_ = fld.dataType.simpleString()
             col_fam[fld.name] = (
                 "int" if s_ in _INT_TYPES else "string" if s_ == "string" else None
@@ -1222,7 +1244,7 @@ class DeltaLiteTable:
         if re.search(r"(?i)\b(or|not)\b", masked):
             return None  # only plain conjunctions are safely narrowing
         cols, n = spec
-        schema = T.StructType.fromDDL(snap.schema_ddl)
+        schema = snap.schema
         lits = []
         for c in cols:
             m = re.search(
@@ -1262,7 +1284,7 @@ class DeltaLiteTable:
         # validate assignment targets BEFORE pruning: a no-op predicate must
         # not mask a bad column (reference dml.rs test_update_statement_errors
         # expects the schema error regardless of matched rows)
-        fields = T.StructType.fromDDL(snap.schema_ddl).fieldNames()
+        fields = snap.schema.fieldNames()
         unknown = [c for c in set_exprs if c not in fields]
         if unknown:
             raise DeltaLiteError(
@@ -1275,7 +1297,7 @@ class DeltaLiteTable:
             hit = [f for f in hit if f.bucket is None or f.bucket in hot]
         if not hit:
             return self._next_commit("UPDATE", [], [], base_version=snap.version)
-        schema = T.StructType.fromDDL(snap.schema_ddl)
+        schema = snap.schema
         mode = str(
             snap.properties.get(
                 "update_mode", snap.properties.get("delete_mode", "auto")
@@ -1335,7 +1357,7 @@ class DeltaLiteTable:
         )
         if use_mor:
             return self._mor_delete(snap, hit, predicate_sql)
-        schema = T.StructType.fromDDL(snap.schema_ddl)
+        schema = snap.schema
         # DV-aware: a file may already carry a deletion vector
         df = self._scan_files(hit, schema)
         predicate = F.expr(predicate_sql)
@@ -1419,7 +1441,7 @@ class DeltaLiteTable:
         """Merge-on-read DELETE: per hit file, write a roaring deletion
         vector of the matching row indexes and re-add the file with the DV
         attached — no data bytes rewritten (see ``_encode_dvs``)."""
-        schema = T.StructType.fromDDL(snap.schema_ddl)
+        schema = snap.schema
         paths = [self._data_url(f.path) for f in hit]
         df = self.spark.read.schema(schema).parquet(*paths)
         matches = df.where(F.expr(predicate_sql)).select(
@@ -1502,7 +1524,7 @@ class DeltaLiteTable:
         column-mapping ids, old files still physically hold the dropped
         values and they would silently resurface under the new column."""
         snap = self.snapshot()
-        schema = T.StructType.fromDDL(snap.schema_ddl)
+        schema = snap.schema
         if name in schema.fieldNames():
             raise DeltaLiteError(f"column {name!r} already exists")
         dropped = snap.properties.get("dropped_columns") or []
@@ -1534,7 +1556,7 @@ class DeltaLiteTable:
         and for the last remaining column. The name is remembered in
         ``dropped_columns`` so :meth:`add_column` cannot resurrect it."""
         snap = self.snapshot()
-        schema = T.StructType.fromDDL(snap.schema_ddl)
+        schema = snap.schema
         if name not in schema.fieldNames():
             raise DeltaLiteError(f"no such column {name!r}")
         if len(schema.fields) == 1:
@@ -1674,7 +1696,7 @@ class DeltaLiteTable:
         cons = dict(snap.properties.get("constraints") or {})
         if name in cons:
             raise DeltaLiteError(f"constraint {name!r} already exists")
-        schema = T.StructType.fromDDL(snap.schema_ddl)
+        schema = snap.schema
         probe = self.spark.createDataFrame([], schema)
         try:
             probe.where(F.expr(expr_sql)).schema  # analysis-time validation
@@ -1738,7 +1760,7 @@ class DeltaLiteTable:
         # paths evaluate CHECK expressions alike
         frame = (
             self.spark.createDataFrame(
-                df, schema=T.StructType.fromDDL((_snap or self.snapshot()).schema_ddl)
+                df, schema=(_snap or self.snapshot()).schema
             )
             if cons and isinstance(df, pa.Table)
             else df
@@ -1889,7 +1911,7 @@ class DeltaLiteTable:
         if snap is not None:
             m_bits = int(snap.properties.get("bloom_bits", BLOOM_BITS_DEFAULT))
             _INT_TYPES = {"tinyint", "smallint", "int", "bigint"}
-            for fld in T.StructType.fromDDL(snap.schema_ddl).fields:
+            for fld in snap.schema.fields:
                 s_ = fld.dataType.simpleString()
                 col_fam[fld.name] = (
                     "int" if s_ in _INT_TYPES
@@ -2002,7 +2024,7 @@ class DeltaLiteTable:
         Spark join shuffles on the PK, which both sides hash-partition.
         """
         snap = self.snapshot()
-        schema = T.StructType.fromDDL(snap.schema_ddl)
+        schema = snap.schema
         spec = snap.bucket_spec
         arrow = None  # the change set as Arrow, when driver-held
         if isinstance(changes, DataFrame):
@@ -2363,7 +2385,7 @@ class DeltaLiteTable:
         ]
         if len(small) <= 1 and not any(f.dv for f in small):
             return self._next_commit("OPTIMIZE", [], [], base_version=snap.version)
-        schema = T.StructType.fromDDL(snap.schema_ddl)
+        schema = snap.schema
         df = self._scan_files(small, schema)
         total = sum(f.rows for f in small)
         n_out = max(1, (total + target_rows - 1) // target_rows)
@@ -2393,7 +2415,7 @@ class DeltaLiteTable:
             raise DeltaLiteError(
                 "z-order and hash bucketing are mutually exclusive layouts"
             )
-        schema = T.StructType.fromDDL(snap.schema_ddl)
+        schema = snap.schema
         names = {f.name for f in schema.fields}
         missing = [c for c in zorder_by if c not in names]
         if missing:
@@ -2487,6 +2509,7 @@ class DeltaLiteTable:
 
     def drop_data(self) -> None:
         """Remove the whole table directory (A12 eager object deletion)."""
+        _HEADS.pop(self.root_url, None)
         self.store.delete_dir(self.root)
 
     @staticmethod

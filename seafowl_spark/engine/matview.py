@@ -497,8 +497,6 @@ def affected_groups_via_query(
     old files)."""
     import uuid as _uuid
 
-    from pyspark.sql import types as T
-
     s_old, only_old, s_new, only_new = changed_files(base_t, v_from, v_to)
     if not only_old and not only_new:
         return []
@@ -507,8 +505,7 @@ def affected_groups_via_query(
         frames = []
         for files, snap in ((only_old, s_old), (only_new, s_new)):
             if files:
-                schema = T.StructType.fromDDL(snap.schema_ddl)
-                frames.append(base_t._scan_files(files, schema))
+                frames.append(base_t._scan_files(files, snap.schema))
         df = frames[0]
         for f in frames[1:]:
             df = df.unionByName(f)
@@ -549,8 +546,6 @@ def affected_group_values(
     view groups by aliased EXPRESSIONS (r10), ``group_exprs`` carries
     what to evaluate over the changed rows — the scan stays one
     column-pruned pass either way."""
-    from pyspark.sql import types as T
-
     exprs = group_exprs or group_cols
     sel = [
         c if e == c else f"{e} AS {c}" for c, e in zip(group_cols, exprs)
@@ -562,9 +557,8 @@ def affected_group_values(
     try:
         for files, snap in ((only_old, _s_old), (only_new, _s_new)):
             if files:
-                schema = T.StructType.fromDDL(snap.schema_ddl)
                 frames.append(
-                    base_t._scan_files(files, schema).selectExpr(*sel)
+                    base_t._scan_files(files, snap.schema).selectExpr(*sel)
                 )
         df = frames[0]
         for f in frames[1:]:

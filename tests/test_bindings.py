@@ -170,22 +170,57 @@ class TestNamespaces:
 
 class TestBindingCost:
     def test_unchanged_catalog_makes_no_to_df_calls(self, ctx, monkeypatch):
+        """On a 40-table catalog a statement reads only the logs of what
+        it reads, and an unchanged table's log is not replayed."""
         for i in range(40):
             ctx.execute(f"CREATE TABLE t{i:02d} (x int); INSERT INTO t{i:02d} VALUES ({i})")
         assert one(ctx, "SELECT x FROM t07") == 7
-        calls = []
-        orig = DeltaLiteTable.to_df
+        calls = {"to_df": [], "snapshot": [], "read_commit": []}
 
-        def counting(self, *a, **k):
-            calls.append(self.root)
-            return orig(self, *a, **k)
+        def spy(name):
+            orig = getattr(DeltaLiteTable, name)
 
-        monkeypatch.setattr(DeltaLiteTable, "to_df", counting)
+            def counting(self, *a, **k):
+                calls[name].append(self.root)
+                return orig(self, *a, **k)
+
+            monkeypatch.setattr(DeltaLiteTable, name, counting)
+
+        for name in calls:
+            spy(name)
+
+        def reset():
+            for c in calls.values():
+                c.clear()
+
+        def roots(*names):
+            return {ctx.delta_table(n).root for n in names}
+
         assert one(ctx, "SELECT x FROM t07") == 7
-        assert calls == []
+        assert calls["to_df"] == []
+        assert set(calls["snapshot"]) == roots("t07")
+        assert calls["read_commit"] == []
+        # a revalidating GET: the ETag, then the statement
+        reset()
+        q = "SELECT x FROM public.t07"
+        tag = ctx.etag_for_query(q)
+        assert rows(ctx.execute(q)) == [(7,)]
+        assert ctx.etag_for_query(q) == tag
+        assert set(calls["snapshot"]) == roots("t07")
+        assert calls["read_commit"] == []
         ctx.execute("INSERT INTO t03 VALUES (30)")
+        reset()
         assert one(ctx, "SELECT count(*) FROM t03") == 2
-        assert len(calls) == 1
+        assert len(calls["to_df"]) == 1
+        assert set(calls["snapshot"]) == set(calls["read_commit"]) == roots("t03")
+        # a view over a view reads its own logs and its innermost base's
+        ctx.execute("CREATE VIEW v1 AS SELECT x FROM t05 WHERE x >= 0")
+        ctx.execute("CREATE VIEW v2 AS SELECT sum(x) AS s FROM v1")
+        assert one(ctx, "SELECT s FROM v2") == 5
+        ctx.execute("INSERT INTO t05 VALUES (10)")
+        reset()
+        assert one(ctx, "SELECT s FROM v2") == 15
+        assert set(calls["snapshot"]) == roots("t05", "v1", "v2")
 
     def test_registry_is_per_session(self, spark):
         assert bindings.for_session(spark) is bindings.for_session(spark)
@@ -205,7 +240,7 @@ class TestBindingCost:
 
 
 def test_system_name_tuples_match_builders(ctx):
-    ctx.execute("SELECT 1")  # a reload fills the per-statement caches
+    ctx.execute("SELECT 1")
     assert set(_SYSTEM_TABLE_NAMES) == set(ctx._system_tables())
     assert set(_INFO_SCHEMA_NAMES) == set(ctx._information_schema())
 

@@ -949,6 +949,17 @@ class TestCrossProcessConcurrency:
         assert served == serve(), "postings diverged from rebuild"
         return served
 
+    def test_other_process_commit_seen_by_next_statement(self, ctx, tmp_path):
+        """The head-snapshot cache holds this process's last read of
+        ``xd``; the next statement after another process's commit still
+        reads the new head."""
+        ctx.execute("CREATE TABLE xd (doc_id BIGINT, text STRING)")
+        ctx.execute("INSERT INTO xd VALUES (1, 'spark alpha doc')")
+        assert rows(ctx.execute("SELECT doc_id FROM xd")) == [(1,)]
+        (out,) = self._race(ctx, tmp_path, [("a", "insert")])
+        assert out["insert_ok"], out
+        assert rows(ctx.execute("SELECT doc_id FROM xd")) == [(1,), (100,)]
+
     def test_two_process_refresh_vs_optimize(self, ctx, tmp_path):
         """One JVM REFRESHes while another OPTIMIZEs the same index:
         both take the `_append_pending` mutex, so each outcome must be

@@ -3,6 +3,7 @@ validation, insert/update/delete/pk-change squash, partial-column CHANGED
 semantics, exactly-once sequences, merge pruning."""
 
 import os
+import uuid
 
 import pandas as pd
 import pytest
@@ -465,7 +466,7 @@ class TestDriverMergeFacts:
 
         sc = ctx.spark.sparkContext
         tracker = sc.statusTracker()
-        group = f"pre_join_{id(fn)}"
+        group = f"pre_join_{uuid.uuid4().hex}"  # never an earlier test's group
         seen = []
         write = DeltaLiteTable._write_data
 
