@@ -44,9 +44,10 @@ def referenced_names(sql: str, names: Iterable[str]) -> set[str]:
     """The lower-cased members of ``names`` that ``sql`` may read.
 
     A name counts when it equals an identifier token of ``sql`` outside
-    its single-quoted string literals, case-insensitively (mangled view
-    names and bare search-schema names are single tokens); a name that is
-    not a single token counts when it occurs anywhere in that text. This
+    its string literals and comments (``parser.scan_quotes``),
+    case-insensitively (mangled view names and bare search-schema names
+    are single tokens); a name that is not a single token counts when it
+    occurs anywhere in that text. This
     over-detects on purpose — a column or alias spelled like a table
     counts too — because a superset only costs a re-expansion, while a
     missed name serves stale rows. A literal is a value, never a read:

@@ -753,9 +753,9 @@ class SeafowlContext:
         loop re-scanned every statement N times — linear in catalog size
         per statement, exactly the serving-layer overhead a many-table
         deployment would feel."""
-        # keep literals intact — the parser's quote scanner, not a bare
-        # regex split, so an apostrophe inside a double-quoted identifier
-        # never opens a phantom string literal
+        # keep literals and comments intact — the parser's scanner, not
+        # a bare regex split, so an apostrophe inside a double-quoted
+        # identifier or a comment never opens a phantom string literal
         parts = parser.split_on_string_literals(sql)
         if not mapping:
             return sql
@@ -2462,11 +2462,11 @@ class SeafowlContext:
     def _search_calls(self, sql: str) -> list[re.Match]:
         """The ``search_index(...)`` calls of ``sql``. The call's own
         argument strings are part of the match, but a call TEXT inside an
-        unrelated string literal or quoted identifier is not a call: a
-        match counts iff it starts outside every span of the parser's
-        quote scanner (the tokenizer _rewrite_names splits with, so an
-        apostrophe inside a double-quoted identifier never reads as a
-        literal boundary)."""
+        unrelated string literal, quoted identifier or comment is not a
+        call: a match counts iff it starts outside every span of the
+        parser's quote scanner (the tokenizer _rewrite_names splits with,
+        so an apostrophe inside a double-quoted identifier never reads as
+        a literal boundary)."""
         if "search_index" not in sql.lower():
             return []
         spans = parser.scan_quotes(sql)

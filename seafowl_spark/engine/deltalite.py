@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import base64
 import datetime
+import hashlib
 import json
 import os
 import re
@@ -420,10 +421,10 @@ def _spark_file_stats(md, table: pa.Table) -> dict[str, dict[str, Any]]:
     return stats
 
 
-# table root -> ((head version, head commit bytes), head Snapshot): the
-# latest snapshot() of each table this process read. A hit costs one log
-# listing and one read of the head commit; Snapshots are shared, never
-# changed in place.
+# table root -> ((head version, sha256 of the head commit), head
+# Snapshot): the latest snapshot() of each table this process read. A hit
+# costs one log listing and one read of the head commit; Snapshots are
+# shared, never changed in place.
 _HEADS: dict[str, tuple[tuple[int, bytes], Snapshot]] = {}
 
 
@@ -467,8 +468,11 @@ class DeltaLiteTable:
             raise DeltaLiteError(f"not a deltalite table: {self.root}")
         return vs[-1]
 
-    def read_commit(self, version: int) -> Commit:
-        d = json.loads(self.store.get(self._version_path(version)))
+    def read_commit(self, version: int, raw: bytes | None = None) -> Commit:
+        # raw: the commit file's bytes, when the caller already fetched them
+        if raw is None:
+            raw = self.store.get(self._version_path(version))
+        d = json.loads(raw)
         return Commit(
             version=d["version"],
             timestamp_ms=d["timestamp_ms"],
@@ -541,14 +545,15 @@ class DeltaLiteTable:
             version = vs[-1]
         if version not in vs:
             raise DeltaLiteError(f"unknown version {version} for {self.root}")
-        head = None
+        head = ident = None
         if version == vs[-1]:
             # the head commit's bytes are its identity: a table dropped
             # and recreated at this root, by any process, writes another
             # commit under the same version number
             head = self.store.get(self._version_path(version))
+            ident = (version, hashlib.sha256(head).digest())
             hit = _HEADS.get(self.root_url)
-            if hit is not None and hit[0] == (version, head):
+            if hit is not None and hit[0] == ident:
                 return hit[1]
 
         files: dict[str, AddFile] = {}
@@ -568,7 +573,7 @@ class DeltaLiteTable:
                 continue
             if v > version:
                 break
-            c = self.read_commit(v)
+            c = self.read_commit(v, head if v == version else None)
             ts_ms = c.timestamp_ms
             if c.metadata and c.metadata.get("schema_ddl"):
                 schema_ddl = c.metadata["schema_ddl"]
@@ -581,8 +586,8 @@ class DeltaLiteTable:
             for a in c.adds:
                 files[a.path] = a
         snap = Snapshot(version, ts_ms, schema_ddl, list(files.values()), properties)
-        if head is not None:
-            _HEADS[self.root_url] = ((version, head), snap)
+        if ident is not None:
+            _HEADS[self.root_url] = (ident, snap)
         return snap
 
     # ------------------------------------------------------- log checkpoints

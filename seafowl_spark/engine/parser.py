@@ -80,89 +80,98 @@ class Statement:
 
 
 # --------------------------------------------------------------------------
-# statement splitting (respects quotes)
+# lexing: quotes, comments, statement splitting
 # --------------------------------------------------------------------------
 
 def split_statements(sql: str) -> list[str]:
-    out, buf, i, n = [], [], 0, len(sql)
-    in_str = False
-    while i < n:
-        ch = sql[i]
-        if in_str:
-            buf.append(ch)
-            if ch == "'":
-                if i + 1 < n and sql[i + 1] == "'":
-                    buf.append("'")
-                    i += 1
-                else:
-                    in_str = False
-        elif ch == "'":
-            in_str = True
-            buf.append(ch)
-        elif ch == ";":
-            stmt = "".join(buf).strip()
-            if stmt:
-                out.append(stmt)
-            buf = []
-        elif ch == "-" and i + 1 < n and sql[i + 1] == "-":
-            while i < n and sql[i] != "\n":
-                i += 1
-            continue
+    """Split at the semicolons outside the spans of :func:`scan_quotes`;
+    ``--`` comments are dropped."""
+    for kind, a, b in reversed(scan_quotes(sql)):
+        if kind == "line_comment":
+            sql = sql[:a] + sql[b:]
+    cuts = [i for i, ch in enumerate(_masked(sql)) if ch == ";"]
+    parts = [sql[a + 1:b] for a, b in zip([-1, *cuts], [*cuts, len(sql)])]
+    return [p.strip() for p in parts if p.strip()]
+
+
+def _quoted_end(sql: str, i: int, escapes: bool) -> int:
+    """End (exclusive) of the quoted token opening at ``sql[i]``: a
+    doubled quote stays inside, and so does a backslash-escaped one where
+    ``escapes``. Unterminated, it runs to the end of ``sql``."""
+    q, j, n = sql[i], i + 1, len(sql)
+    while j < n:
+        if escapes and sql[j] == "\\":
+            j += 2
+        elif sql[j] != q:
+            j += 1
+        elif j + 1 < n and sql[j + 1] == q:
+            j += 2
         else:
-            buf.append(ch)
-        i += 1
-    stmt = "".join(buf).strip()
-    if stmt:
-        out.append(stmt)
-    return out
+            return j + 1
+    return n
+
+
+# where a span of scan_quotes can open; "/*+" opens a hint, which is code
+_LEX_START = re.compile(r"['\"`]|--|/\*(?!\+)")
 
 
 def scan_quotes(sql: str) -> list[tuple[str, int, int]]:
-    """Tokenize the quoted regions of a statement: (kind, start, end)
-    spans (end exclusive), kind in ``squote`` (single-quoted string
-    literal, '' doubling), ``dquote`` (ANSI double-quoted identifier,
-    "" doubling) or ``btick`` (Spark backtick identifier). ONE scanner
-    shared by ``_rewrite_names`` and the ``search_index()`` pre-parse,
-    so an apostrophe inside a double-quoted identifier can never be
-    mistaken for a string-literal boundary (the r9 self-review finding:
-    quote-parity counting skipped a ``search_index()`` call following
-    ``"we're"``). Unterminated quotes run to end of string."""
+    """The spans of ``sql`` that are not plain code, ended where Spark's
+    SQL lexer ends them: (kind, start, end), end exclusive, kind one of
+    ``squote`` (string literal: ``\\'`` and ``''`` stay inside, a raw
+    ``r'...'`` has no escapes), ``dquote`` (the engine's ANSI identifier,
+    escaped alike), ``btick``, ``line_comment`` (``--`` to the end of the
+    line; a backslash before the newline continues it) and
+    ``block_comment`` (nested ``/* */``; ``/*+`` opens a hint, which is
+    code). ONE scanner for name rewriting, read detection and the
+    ``search_index()`` pre-parse: a quote in a comment or behind a
+    backslash read as opening a literal would hide every table named
+    after it. Unterminated spans run to the end of the string."""
     spans: list[tuple[str, int, int]] = []
     i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in ("'", '"'):
-            j = i + 1
-            while j < n:
-                if sql[j] == ch:
-                    if j + 1 < n and sql[j + 1] == ch:
-                        j += 2  # doubled quote: escape, keep scanning
-                        continue
-                    break
-                j += 1
-            end = min(j + 1, n)
-            spans.append(("squote" if ch == "'" else "dquote", i, end))
-            i = end
-        elif ch == "`":
-            j = sql.find("`", i + 1)
-            end = n if j == -1 else j + 1
-            spans.append(("btick", i, end))
-            i = end
+    while (m := _LEX_START.search(sql, i)) is not None:
+        i, tok = m.start(), m.group()
+        if tok in "'\"":
+            # a raw literal's r is not the end of an identifier
+            raw = sql[i - 1:i] in ("r", "R") and not re.match(r"\w", sql[i - 2:i - 1])
+            end = _quoted_end(sql, i, escapes=not raw)
+            spans.append(("squote" if tok == "'" else "dquote", i, end))
+        elif tok == "`":
+            spans.append(("btick", i, _quoted_end(sql, i, escapes=False)))
+        elif tok == "--":
+            end = i + 2
+            while end < n and sql[end] not in "\r\n":
+                end += 2 if sql.startswith("\\\n", end) else 1
+            spans.append(("line_comment", i, end))
         else:
-            i += 1
+            end, depth = i + 2, 1
+            while end < n and depth:
+                step = sql[end:end + 2]
+                depth += (step == "/*" and sql[end + 2:end + 3] != "+") - (step == "*/")
+                end += 2 if step in ("*/", "/*") else 1
+            spans.append(("block_comment", i, min(end, n)))
+        i = spans[-1][2]
     return spans
+
+
+def _masked(sql: str) -> str:
+    """``sql`` with every span of :func:`scan_quotes` blanked, offsets kept."""
+    out = list(sql)
+    for _k, a, b in scan_quotes(sql):
+        out[a:b] = " " * (b - a)
+    return "".join(out)
 
 
 def split_on_string_literals(sql: str) -> list[str]:
     """Split into alternating ``[code, literal, code, ...]`` parts (even
-    indexes = code) where ONLY true single-quoted string literals —
-    per :func:`scan_quotes`, not quote-parity — count as literals.
-    Double-quoted / backtick identifiers stay inside the code parts so
-    identifier rewriting still sees them."""
+    indexes = code) where the string literals and comments of
+    :func:`scan_quotes` count as literals. Double-quoted / backtick
+    identifiers stay inside the code parts so identifier rewriting still
+    sees them."""
     parts: list[str] = []
     pos = 0
     for kind, a, b in scan_quotes(sql):
-        if kind != "squote":
+        if kind in ("dquote", "btick"):
             continue
         parts.append(sql[pos:a])
         parts.append(sql[a:b])
@@ -190,31 +199,16 @@ _QNAME = rf"{_QIDENT}(?:\.{_QIDENT}){{0,2}}"
 
 
 def _split_top(s: str, sep: str = ",") -> list[str]:
-    """Split on `sep` at paren depth 0, respecting quotes."""
-    out, buf, depth, in_str = [], [], 0, False
-    for ch in s:
-        if in_str:
-            buf.append(ch)
-            if ch == "'":
-                in_str = False
-        elif ch == "'":
-            in_str = True
-            buf.append(ch)
-        elif ch == "(":
-            depth += 1
-            buf.append(ch)
-        elif ch == ")":
-            depth -= 1
-            buf.append(ch)
-        elif ch == sep and depth == 0:
-            out.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(ch)
-    last = "".join(buf).strip()
-    if last:
-        out.append(last)
-    return out
+    """Split on `sep` at paren depth 0, outside the spans of
+    :func:`scan_quotes`."""
+    out, depth, start = [], 0, 0
+    for i, ch in enumerate(_masked(s)):
+        depth += (ch == "(") - (ch == ")")
+        if ch == sep and depth == 0:
+            out.append(s[start:i].strip())
+            start = i + 1
+    last = s[start:].strip()
+    return out + [last] if last else out
 
 
 def split_name_parts(name: str) -> list[str]:

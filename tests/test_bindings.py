@@ -102,6 +102,21 @@ class TestFreshAfterWrites:
         base.execute(f"CREATE OR REPLACE FUNCTION bump AS '{spec('x + 100')}'")
         assert one(base, "SELECT m FROM vf") == 109
 
+    @pytest.mark.parametrize("sql", [
+        "SELECT k /* don't */ FROM base",
+        "SELECT k FROM other WHERE n <> 'it\\'s' UNION ALL SELECT k FROM base",
+        "SELECT k -- don't\nFROM base",
+        "SELECT k /* /* nested */ don't */ FROM base",
+    ])
+    def test_quote_in_comment_or_escape_hides_no_table(self, base, sql):
+        # a quote Spark's lexer reads as part of a comment or an escape
+        # must not open a literal that hides the table named after it:
+        # the name would go unread and keep an earlier statement's rows
+        base.execute("CREATE TABLE other (k BIGINT, n STRING)")
+        assert sorted(r[0] for r in base.query(sql).collect()) == list(range(10))
+        base.execute("INSERT INTO base VALUES (100, 1)")
+        assert sorted(r[0] for r in base.query(sql).collect()) == [*range(10), 100]
+
     def test_view_where_returns_rows(self, base):
         # a filtered read of a view used to rebind the view's name to its
         # zero-file table directory and return nothing
@@ -237,6 +252,28 @@ class TestBindingCost:
         )
         names = ["__sfs__public__t", "t2", "x-y", "t3", "t4", "x+y"]
         assert bindings.referenced_names(sql, names) == {"__sfs__public__t", "t2", "x-y"}
+
+    def test_scan_quotes_follows_spark_lexer(self):
+        """Comments and escaped quotes end where Spark's lexer ends them,
+        so a name after them stays code; ``/*+`` hints are code."""
+        from seafowl_spark.engine.parser import scan_quotes, split_statements
+
+        def code(sql):
+            return bindings.referenced_names(sql, ["a", "b", "c", "d"])
+
+        assert code("SELECT x /* don't */ FROM a") == {"a"}
+        assert code("SELECT x /* b /* c */ d */ FROM a") == {"a"}
+        assert code("SELECT x FROM a WHERE n <> 'it\\'s b' UNION SELECT x FROM c") == {"a", "c"}
+        assert code("SELECT r'C:\\' FROM a") == {"a"}
+        assert code("SELECT x -- it's b \\\n c\nFROM a") == {"a"}
+        assert code("SELECT /*+ BROADCAST(b) */ x FROM a") == {"a", "b"}
+        sql = 'SELECT "a\\"b", `c``d` FROM a'
+        assert [(k, sql[i:j]) for k, i, j in scan_quotes(sql)] == [
+            ("dquote", '"a\\"b"'), ("btick", "`c``d`"),
+        ]
+        assert split_statements(
+            "SELECT 'a;\\'b'; SELECT 2 -- x;y\n; /* ; */ SELECT 3"
+        ) == ["SELECT 'a;\\'b'", "SELECT 2", "/* ; */ SELECT 3"]
 
 
 def test_system_name_tuples_match_builders(ctx):

@@ -112,7 +112,7 @@ class TestVersionMirror:
         orig = DeltaLiteTable.read_commit
         monkeypatch.setattr(
             DeltaLiteTable, "read_commit",
-            lambda self, v: read.append(v) or orig(self, v),
+            lambda self, v, *a: read.append(v) or orig(self, v, *a),
         )
         entry = ctx.catalog.get_table("default", "public", "t")
         ctx._record(entry, DeltaLiteTable(ctx.spark, ctx.table_root(entry)))

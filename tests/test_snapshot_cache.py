@@ -9,6 +9,7 @@ import shutil
 import pandas as pd
 from pyspark.sql import types as T
 
+from seafowl_spark.engine import deltalite
 from seafowl_spark.engine.deltalite import DeltaLiteTable
 from seafowl_spark.streaming.sync import ColumnDescriptor as CD
 from seafowl_spark.streaming.sync import SyncSchema, SyncWriter
@@ -32,6 +33,28 @@ def test_unchanged_head_serves_one_object(spark, tmp_path):
     assert t.snapshot() is b
     # an older version is replayed, never served from the cache
     assert t.snapshot(version=a.version).num_rows == 0
+
+
+def test_each_commit_is_read_once(spark, tmp_path, monkeypatch):
+    """A replay reuses the head commit the cache check fetched, and a hit
+    fetches only the head commit."""
+    root = str(tmp_path / "t")
+    t = _create(spark, root, "x int")
+    t.append(spark.createDataFrame([(1,)], "x int"))
+    gets = []
+    get = type(t.store).get
+    monkeypatch.setattr(
+        type(t.store), "get",
+        lambda self, path: gets.append(path) or get(self, path),
+    )
+    monkeypatch.setattr(deltalite, "_HEADS", {})
+    snap = t.snapshot()
+    assert sorted(p for p in gets if p.endswith(".json")) == [
+        t._version_path(v) for v in (0, 1)
+    ]
+    gets.clear()
+    assert t.snapshot() is snap
+    assert [p for p in gets if p.endswith(".json")] == [t._version_path(1)]
 
 
 def test_drop_and_recreate_at_same_root(spark, tmp_path):

@@ -1162,6 +1162,26 @@ class TestDescribeAfterEvolution:
         ]
         assert cols == ["k", "extra"]
 
+    def test_schema_surfaces_read_the_log(self, ctx):
+        """DESCRIBE and information_schema.columns read a table's schema
+        from its Delta log, the copy its queries read: a table whose log
+        cannot be read is still listed, but describes no columns, and
+        DESCRIBE fails as a read of it does."""
+        import shutil
+
+        ctx.execute("CREATE TABLE ok (k BIGINT)")
+        ctx.execute("CREATE TABLE lost (k BIGINT, v STRING)")
+        t = ctx.delta_table("lost")
+        shutil.rmtree(t.log_dir)
+        listed = rows(ctx.execute("SELECT table_name, table_type FROM information_schema.tables"))
+        assert ("lost", "BASE TABLE") in listed and ("ok", "BASE TABLE") in listed
+        cols = rows(ctx.execute("SELECT table_name, column_name FROM information_schema.columns"))
+        assert cols == [("ok", "k")]
+        with pytest.raises(Exception, match="not a deltalite table"):
+            ctx.execute("DESCRIBE lost")
+        with pytest.raises(Exception, match="not a deltalite table"):
+            ctx.execute("SELECT * FROM lost")
+
 
 class TestScopedOptimize:
     """OPTIMIZE ... WHERE (r7): compaction scoped to files the predicate

@@ -145,7 +145,7 @@ class TestSyncApply:
         read_commit = DeltaLiteTable.read_commit
         monkeypatch.setattr(
             DeltaLiteTable, "read_commit",
-            lambda self, v: reads.append(v) or read_commit(self, v),
+            lambda self, v, *a: reads.append(v) or read_commit(self, v, *a),
         )
         per_put = []
         for seq in (1, 2, 3):
