@@ -179,6 +179,9 @@ class Reads:
     indexes: set[tuple[str, str, int, str]] = field(default_factory=set)
     # lower-cased name -> spec of each persisted function named
     functions: dict[str, dict] = field(default_factory=dict)
+    # name -> spec of every persisted function of the database, as read
+    # once for the statement
+    catalog_functions: dict[str, dict] = field(default_factory=dict)
     system: bool = False  # reads a system.* or information_schema.* frame
     staging: bool = False  # reads a staging table (those carry no version)
     # the name resolution it was answered by (SeafowlContext._name_mapping)
@@ -632,7 +635,7 @@ class SeafowlContext:
             reg.drop(name)
         # persisted UDFs register before views expand, so a view over a
         # replaced function re-analyzes against the new definition
-        funcs = self._register_functions()
+        funcs = self._register_functions(reads.catalog_functions)
         self._expand_views(reg, deferred_views, mapping, funcs)
         return mapping
 
@@ -878,13 +881,13 @@ class SeafowlContext:
 
     # ------------------------------------------------------------ functions
 
-    def _register_functions(self) -> dict[str, dict]:
-        """Re-register persisted UDFs on the session (reference re-registers
+    def _register_functions(self, funcs: dict[str, dict]) -> dict[str, dict]:
+        """Re-register the persisted UDFs ``funcs`` (the statement's
+        ``Reads.catalog_functions``) on the session (reference re-registers
         from catalog in reload_schema, src/context/mod.rs:101-112); returns
         their specs by lower-cased name."""
         from .udf import UdfError, register_udf
 
-        funcs = self.catalog.functions(self.database)
         for name, spec in funcs.items():
             try:
                 register_udf(self.spark, name, spec, allow_python=self.allow_python_udfs)
@@ -3069,11 +3072,10 @@ class SeafowlContext:
         mapping, named = self._name_mapping(self.catalog.tables(self.database))
         owner = {n.lower(): e for e, *names in named for n in names if n}
         staging = {n.lower() for n in self.staging}
-        funcs = {
-            n.lower(): spec for n, spec in self.catalog.functions(self.database).items()
-        }
+        catalog_funcs = self.catalog.functions(self.database)
+        funcs = {n.lower(): spec for n, spec in catalog_funcs.items()}
         known = owner.keys() | staging | _LAZY_NAMES.keys()
-        out = Reads(mapping=mapping, named=named)
+        out = Reads(mapping=mapping, named=named, catalog_functions=catalog_funcs)
 
         def snapshot(e: TableEntry) -> Snapshot:
             if e.uuid not in out.tables:

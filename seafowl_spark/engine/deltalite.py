@@ -47,9 +47,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 
+from .parser import mask_spans
 from .types import quote_ident, to_ddl, type_sql
 
 MAX_ROWS_PER_FILE = 1_048_576  # reference src/config/schema.rs:283
+# UPDATE and copy-on-write DELETE bind hit files of up to this many rows
+# on the driver, and a LocalRelation of up to this many rows is written by
+# pyarrow there (``_local_rows``). The driver path costs about 5 us a row
+# (Arrow -> JVM, the optimizer's fold, collect, Rows -> Arrow); the Spark
+# write job costs 100-145 ms whatever the size. A point UPDATE by hit rows,
+# Spark vs driver, median of 7-9 (4-core host): 1k 142 vs 45 ms, 10k 120
+# vs 65, 15k 125 vs 116, 18k 102 vs 105, 22k 106 vs 141, 50k 111 vs 268.
+DRIVER_WRITE_MAX_ROWS = 15_000
 LOG_DIR = "_log"
 # engage per-file PK-membership pruning above this many coarse-hit rows
 # (reference FINE_GRAINED_PRUNING_ROW_CRITERIA, sync/planner.rs:612)
@@ -125,20 +134,61 @@ def _local_changes(
     return spark.createDataFrame(table, schema=change_schema), table
 
 
-def _local_relation_keys(changes: DataFrame, pk_cols: list[str]) -> pa.Table | None:
-    """The PK columns of a LocalRelation change set as an Arrow table
-    (``collect`` on a LocalRelation runs no job), else None."""
-    plan = changes._jdf.queryExecution().optimizedPlan()
-    if plan.getClass().getSimpleName() != "LocalRelation":
+_CARRIED_ATOMS = (
+    T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.FloatType, T.DoubleType, T.DecimalType, T.StringType, T.BinaryType,
+    T.DateType, T.TimestampNTZType,
+)
+
+
+def _carried(dt: T.DataType, top: bool = True) -> bool:
+    """Whether ``_local_rows`` carries a column of type ``dt``. A TIMESTAMP
+    is carried at the top level only: a Row holds it as naive local time,
+    which the converter turns back into an instant there, and nowhere
+    inside a struct, array or map."""
+    if isinstance(dt, T.TimestampType):
+        return top
+    if isinstance(dt, T.ArrayType):
+        return _carried(dt.elementType, False)
+    if isinstance(dt, T.MapType):
+        return _carried(dt.keyType, False) and _carried(dt.valueType, False)
+    if isinstance(dt, T.StructType):
+        return all(_carried(f.dataType, False) for f in dt.fields)
+    return isinstance(dt, _CARRIED_ATOMS)
+
+
+def _local_plan(df: DataFrame):
+    """The optimized plan of ``df`` when Spark's optimizer folded it into a
+    LocalRelation (rows held by the driver, which ``collect`` returns
+    without a job), else None."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan if plan.getClass().getSimpleName() == "LocalRelation" else None
+
+
+def _local_rows(df: DataFrame) -> pa.Table | None:
+    """The rows of ``df`` as an Arrow table typed by its schema, when its
+    optimized plan is a LocalRelation of at most ``DRIVER_WRITE_MAX_ROWS``
+    rows whose every column ``_carried`` takes; else None. ``collect``
+    runs no job there (``toArrow`` would run one)."""
+    fields = df.schema.fields
+    if not all(_carried(f.dataType) for f in fields):
         return None
-    keys = changes.select(*pk_cols)
-    cols = list(zip(*keys.collect())) or [()] * len(pk_cols)
+    plan = _local_plan(df)
+    if plan is None or plan.data().size() > DRIVER_WRITE_MAX_ROWS:
+        return None
+    cols = list(zip(*df.collect())) or [()] * len(fields)
     arrays = []
-    for f, vals in zip(keys.schema.fields, cols):
-        if isinstance(f.dataType, T.TimestampType):  # Row datetimes are local
-            vals = [v if v is None else v.astimezone() for v in vals]
+    for f, vals in zip(fields, cols):
+        if isinstance(f.dataType, T.TimestampType):
+            # Row datetimes are naive local time; pyarrow would read an
+            # aware one's wall clock as UTC, so hand it UTC
+            utc = datetime.timezone.utc
+            vals = [v if v is None else v.astimezone(utc) for v in vals]
         arrays.append(pa.array(vals, type=to_arrow_type(f.dataType)))
-    return pa.table(arrays, names=pk_cols)
+    # nullable, as Spark's writer leaves every column
+    return pa.Table.from_arrays(
+        arrays, schema=pa.schema([pa.field(f.name, a.type) for f, a in zip(fields, arrays)])
+    )
 
 
 def _py_value(v):
@@ -915,10 +965,18 @@ class DeltaLiteTable:
         self, df: DataFrame | pa.Table, _snap: Snapshot | None = None
     ) -> list[AddFile]:
         """Write ``df`` as new files under ``data/txn-<uuid>/`` and return
-        their Add actions. A Spark frame is written by Spark (hash-bucketed
-        for a bucketed table); an Arrow table by pyarrow on the driver,
-        through the object store, and never bucketed (merge sends only
-        unbucketed tables' rewrites this way)."""
+        their Add actions.
+
+        Rows the driver already holds are written there by pyarrow,
+        through the object store, with no Spark job: an Arrow table (a
+        driver merge's rewrite), or a Spark frame whose optimized plan is a
+        LocalRelation (``_local_rows``: INSERT VALUES, a literal SELECT, an
+        UPDATE or DELETE over hit files ``_rewrite_hit`` bound from Arrow).
+        A Spark write job was most of a one-row statement's cost: 68-91 ms
+        of a 92 ms serve_catalog write (4-core host). Every other frame is
+        written by Spark, and so is any frame for a bucketed table, whose
+        files Spark's ``xxhash64`` lays out (merge sends no Arrow table for
+        one)."""
         txn = f"data/txn-{uuid.uuid4().hex}"
         out = os.path.join(self.root, txn)
         snap = (
@@ -928,29 +986,22 @@ class DeltaLiteTable:
         )
         props = snap.properties if snap else {}
         spec = snap.bucket_spec if snap else None
+        if isinstance(df, DataFrame) and spec is None:
+            local = _local_rows(df)
+            df = df if local is None else local
         if isinstance(df, pa.Table):
             adds = self._write_arrow(df, txn)
-            self._attach_blooms(adds, props)
-            return adds
-        if spec is not None:
+        elif spec is not None:
             adds = self._write_bucketed(df, txn, out, spec)
-            self._attach_blooms(adds, props)
-            return adds
-        try:
-            plan = df._jdf.queryExecution().optimizedPlan().toString()
-            # VALUES/local relations: one file, not one per parallelism slot
-            if "LocalRelation" in plan and "FileScan" not in plan and " parquet" not in plan:
-                df = df.coalesce(1)
-        except Exception:  # noqa: BLE001 - sizing heuristic only
-            pass
-        (
-            df.write.option("maxRecordsPerFile", MAX_ROWS_PER_FILE)
-            .option("compression", "zstd")
-            .parquet(self.store.spark_url(out), mode="overwrite")
-        )
-        # drop Spark's _SUCCESS marker; log is the source of truth
-        self.store.delete(os.path.join(out, "_SUCCESS"))
-        adds = self._harvest_adds(txn)
+        else:
+            (
+                df.write.option("maxRecordsPerFile", MAX_ROWS_PER_FILE)
+                .option("compression", "zstd")
+                .parquet(self.store.spark_url(out), mode="overwrite")
+            )
+            # drop Spark's _SUCCESS marker; log is the source of truth
+            self.store.delete(os.path.join(out, "_SUCCESS"))
+            adds = self._harvest_adds(txn)
         self._attach_blooms(adds, props)
         return adds
 
@@ -1216,36 +1267,26 @@ class DeltaLiteTable:
         spec = snap.bucket_spec
         if spec is None or not predicate_sql:
             return None
-        # mask string literals FIRST: the structural scans below must
-        # never match text INSIDE a literal (WHERE note = 'id = 5' used
-        # to pin the id bucket from the quoted text and silently skip
-        # matching rows in every other bucket — review find, r11). The
-        # literal pattern covers both '' and backslash escaping.
-        # Double-quoted "..." is masked too: under the engine's pg
-        # dialect (doubleQuotedIdentifiers=true, context._ansi_dialect)
-        # it is an IDENTIFIER — its text must not feed the structural
-        # scans (a column literally named "id = 5" would pin the id
-        # bucket), and when one is the equality RHS it is a column
-        # reference, never a pinnable constant (advisor find, r11).
-        # Inside double quotes the ONLY escape is a doubled quote ("")
-        # — backslash is a literal character in pg identifiers. Using
-        # \\. here mis-tokenized identifiers ending in a backslash
-        # ("a\" = one char a-backslash, then the quote CLOSES) so a
-        # following top-level OR could be swallowed into a masked span
-        # and the OR/NOT rejection bypassed (advisor find, r12).
+        # mask quoted spans FIRST, as Spark's lexer reads them
+        # (parser.scan_quotes: a backslash escapes inside '...' and "...").
+        # The structural scans below must never match text INSIDE a
+        # literal (WHERE note = 'id = 5' used to pin the id bucket from
+        # the quoted text and silently skip matching rows in every other
+        # bucket — review find, r11) or a quoted identifier (a column
+        # literally named "id = 5"), nor in a comment, which masks to a
+        # space. Only a string literal or a number pins a bucket: a quoted
+        # identifier on the right of the equality is a column reference.
         literals: list[str] = []
 
-        def _mask(m: "re.Match[str]") -> str:
-            literals.append(m.group(0))
+        def _mask(kind: str, text: str) -> str:
+            if kind.endswith("comment"):
+                return " "
+            literals.append(text)
             return f"\x00{len(literals) - 1}\x00"
 
-        masked = re.sub(
-            r"'(?:\\.|''|[^'\\])*'|\"(?:\"\"|[^\"])*\"",
-            _mask,
-            predicate_sql,
-        )
-        if "'" in masked or '"' in masked:
-            return None  # unterminated/unrecognized quoting: be safe
+        masked = mask_spans(predicate_sql, _mask)
+        if masked is None:
+            return None  # unterminated quoting: be safe
         if re.search(r"(?i)\b(or|not)\b", masked):
             return None  # only plain conjunctions are safely narrowing
         cols, n = spec
@@ -1262,10 +1303,8 @@ class DeltaLiteTable:
             raw = m.group(1)
             if raw.startswith("\x00"):
                 raw = literals[int(raw.strip("\x00"))]
-                if raw.startswith('"'):
-                    # quoted identifier (column ref), not a constant:
-                    # col = "other_col" cannot pin a bucket
-                    return None
+                if not raw.startswith("'"):
+                    return None  # col = "other_col" cannot pin a bucket
             lits.append(f"CAST({raw} AS {schema[c].dataType.simpleString()})")
         row = (
             self.spark.range(1)
@@ -1284,6 +1323,13 @@ class DeltaLiteTable:
 
         `set_exprs` maps column -> SQL expression text; `predicate_sql` is
         the WHERE text (also used for stats pruning).
+
+        Driver-sized hit files of an unbucketed table are read by pyarrow
+        and the projection runs over them as a LocalRelation, which Spark
+        folds, so the rewrite runs no Spark job (``_rewrite_hit``); other
+        hit sets, and a projection Spark does not fold, are rewritten by a
+        Spark job. A hit set of ``MOR_DELETE_MIN_BYTES`` or more is updated
+        merge-on-read (``_mor_update``).
         """
         snap = self.snapshot()
         # validate assignment targets BEFORE pruning: a no-op predicate must
@@ -1313,10 +1359,8 @@ class DeltaLiteTable:
             and sum(f.size_bytes for f in hit) >= MOR_DELETE_MIN_BYTES
         ):
             return self._mor_update(snap, hit, set_exprs, predicate_sql, schema)
-        # DV-aware: rewriting a MoR-deleted file must not resurrect rows
-        df = self._scan_files(hit, schema)
         cond = F.expr(predicate_sql) if predicate_sql else F.lit(True)
-        projected = df.select(
+        projected = self._rewrite_hit(snap, hit, lambda df: df.select(
             *[
                 (
                     F.when(cond, F.expr(set_exprs[c]).cast(schema[c].dataType))
@@ -1325,9 +1369,9 @@ class DeltaLiteTable:
                     if c in set_exprs
                     else F.col(c)
                 )
-                for c in df.columns
+                for c in fields
             ]
-        )
+        ))
         adds = self._write_data(
             self._enforce_constraints(projected, _snap=snap), _snap=snap
         )
@@ -1343,7 +1387,12 @@ class DeltaLiteTable:
         vectors, leave data files untouched) — chosen by the table's
         ``delete_mode`` property ('cow' | 'mor' | default 'auto', which
         goes MoR once the hit set exceeds MOR_DELETE_MIN_BYTES: at 100 TB
-        a DELETE writes KB bitmaps, not rewritten GB files)."""
+        a DELETE writes KB bitmaps, not rewritten GB files).
+
+        A copy-on-write DELETE of driver-sized hit files in an unbucketed
+        table filters them as a LocalRelation read by pyarrow, which Spark
+        folds, and so runs no Spark job (``_rewrite_hit``); any other hit
+        set is filtered and written by a Spark job."""
         snap = self.snapshot()
         if predicate_sql is None:
             return self._next_commit(
@@ -1362,15 +1411,42 @@ class DeltaLiteTable:
         )
         if use_mor:
             return self._mor_delete(snap, hit, predicate_sql)
-        schema = snap.schema
-        # DV-aware: a file may already carry a deletion vector
-        df = self._scan_files(hit, schema)
         predicate = F.expr(predicate_sql)
-        kept = df.where(~predicate | predicate.isNull())
+        kept = self._rewrite_hit(
+            snap, hit, lambda df: df.where(~predicate | predicate.isNull())
+        )
         adds = self._write_data(kept, _snap=snap)
         return self._next_commit(
             "DELETE", adds, self._retire(hit), base_version=snap.version
         )
+
+    def _rewrite_hit(
+        self, snap: Snapshot, hit: list[AddFile], rows_out
+    ) -> DataFrame:
+        """``rows_out`` (UPDATE's CASE WHEN projection, DELETE's keep
+        filter) over the live rows of ``hit``: deletion-vector rows are
+        dropped, so a rewrite never resurrects them.
+
+        Hit files of an unbucketed table holding at most
+        ``DRIVER_WRITE_MAX_ROWS`` rows of carried types are bound as a
+        LocalRelation from ``_read_arrow``. Spark's optimizer folds the
+        projection or filter into a new LocalRelation, so Spark still
+        evaluates every expression, and ``_write_data`` writes the result
+        from the driver with no job: a point UPDATE of a 10k-row file took
+        65 ms against 120 ms through Spark (4-core host). A plan Spark does
+        not fold (a Python UDF), a larger hit set and a bucketed table scan
+        the files in Spark and write with a Spark job."""
+        schema = snap.schema
+        if (
+            snap.bucket_spec is None
+            and sum(f.rows for f in hit) <= DRIVER_WRITE_MAX_ROWS
+            and all(_carried(f.dataType) for f in schema.fields)
+        ):
+            arrow = self._read_arrow(hit, to_arrow_schema(schema))
+            out = rows_out(self.spark.createDataFrame(arrow, schema=schema))
+            if _local_plan(out) is not None:
+                return out
+        return rows_out(self._scan_files(hit, schema))
 
     def _encode_dvs(
         self, hit: list[AddFile], matches: DataFrame
@@ -1749,10 +1825,16 @@ class DeltaLiteTable:
         self, df: DataFrame | pa.Table, _snap: Snapshot | None = None
     ) -> DataFrame | pa.Table:
         """Validate ``df`` against every table constraint; raises on the
-        first violation (with a count). One filter+count job per
-        constraint over the data being WRITTEN — rewrites of already-
-        validated data (DELETE keeps, OPTIMIZE) skip this, so compaction
-        never re-pays it. ``_snap`` reuses a resolved snapshot."""
+        first violation (with a count). Checks the data being WRITTEN —
+        rewrites of already-validated data (DELETE keeps, OPTIMIZE) skip
+        this, so compaction never re-pays it. ``_snap`` reuses a resolved
+        snapshot.
+
+        Spark evaluates every CHECK expression, on either kind of frame. A
+        LocalRelation (an Arrow table is bound as one) collects its
+        violating rows: Spark folds the filter into the LocalRelation, so
+        no job runs. Any other frame runs one filter+count job per
+        constraint."""
         if _snap is not None:
             cons = _snap.properties.get("constraints") or {}
         else:
@@ -1761,17 +1843,17 @@ class DeltaLiteTable:
                 if self.exists()
                 else None
             ) or {}
-        # a driver-built Arrow table is checked by Spark, so both merge
-        # paths evaluate CHECK expressions alike
-        frame = (
-            self.spark.createDataFrame(
+        if not cons:
+            return df
+        frame = df
+        if isinstance(df, pa.Table):
+            frame = self.spark.createDataFrame(
                 df, schema=(_snap or self.snapshot()).schema
             )
-            if cons and isinstance(df, pa.Table)
-            else df
-        )
+        local = _local_plan(frame) is not None
         for name, expr_sql in sorted(cons.items()):
-            bad = frame.where(~F.coalesce(F.expr(expr_sql), F.lit(True))).count()
+            rows = frame.where(~F.coalesce(F.expr(expr_sql), F.lit(True)))
+            bad = len(rows.select(F.lit(1)).collect()) if local else rows.count()
             if bad:
                 raise DeltaLiteError(
                     f"CHECK constraint {name!r} violated by {bad} row(s): "
@@ -1994,8 +2076,8 @@ class DeltaLiteTable:
         the bucket set of a bucketed table, and the PK list for the fine
         prune — come from where the change set lives:
 
-        * a pandas or Arrow frame, or a Spark LocalRelation, is already on
-          the driver: bounds and the NULL check are computed there (Arrow
+        * a pandas or Arrow frame, or a Spark LocalRelation whose keys
+          ``_local_rows`` takes, is already on the driver: bounds and the NULL check are computed there (Arrow
           kernels), the fine-prune PK list is its distinct keys, and the
           bucket set is a projection over the LocalRelation, which Spark
           evaluates without a job;
@@ -2033,7 +2115,7 @@ class DeltaLiteTable:
         spec = snap.bucket_spec
         arrow = None  # the change set as Arrow, when driver-held
         if isinstance(changes, DataFrame):
-            keys = _local_relation_keys(changes, pk_cols)
+            keys = _local_rows(changes.select(*pk_cols))
         else:
             arrow = _arrow_changes(self.spark, changes, schema, delete_col)
             keys = arrow.select(pk_cols)

@@ -69,6 +69,8 @@ import json
 import re
 from dataclasses import dataclass
 
+from . import parser as _parser
+
 MATVIEW_PROP = "matview"
 MAX_INCREMENTAL_GROUPS = 10_000
 
@@ -204,25 +206,19 @@ def parse_mv_query(query: str) -> MvShape:
     # boundary (a phantom dim gets uuid-pinned and permanently forces
     # full refreshes — review find, r11). from_sql itself stays verbatim
     # for the FROM-swap machinery.
-    # Double-quoted "..." is an IDENTIFIER under the engine's pg
-    # dialect (doubleQuotedIdentifiers=true): mask it to a sentinel so
-    # its text never feeds the structural scans (a quoted identifier
-    # containing 'join x' or a comma must not register as a dim/
-    # comma-join — advisor find, r11), and any quote surviving both
-    # masks means unbalanced quoting — reject outright. Both literal
-    # kinds mask to quote-FREE sentinels so the leftover-quote check is
-    # a plain membership test: masking single literals to '' let ''' (a
-    # genuinely unterminated quote whose neighbours are all quotes)
-    # slip past the old lookaround heuristic (advisor find, r12). The
-    # double-quote alternation allows only the doubled-quote escape —
-    # backslash is a literal character in pg identifiers, so "a\" ends
-    # at the quote (advisor find, r12).
-    masked_from = re.sub(
-        r"'(?:\\.|''|[^'\\])*'|\"(?:\"\"|[^\"])*\"",
-        lambda m: "\x02" if m.group(0).startswith("'") else "\x01",
+    # Quoted identifiers ("..." under the engine's pg dialect, and
+    # `...`) mask to \x01, string literals to \x02 and comments to a
+    # space, with the spans Spark's lexer reads (parser.scan_quotes: a
+    # backslash escapes inside either quote), so a quoted 'join x' or
+    # comma never registers as a dim / comma-join, and an unterminated
+    # quote is rejected outright.
+    masked_from = _parser.mask_spans(
         from_sql,
+        lambda kind, _text: (
+            " " if kind.endswith("comment") else "\x02" if kind == "squote" else "\x01"
+        ),
     )
-    if '"' in masked_from or "'" in masked_from:
+    if masked_from is None:
         raise MatViewError(
             "unbalanced quote in materialized view FROM clause"
         )
@@ -261,8 +257,6 @@ def parse_mv_query(query: str) -> MvShape:
             join_part,
         )
     ]
-    from . import parser as _parser
-
     items = _parser._split_top(gb.group(1))
     head = q[: m.start()]  # the select list
     sel_m = re.search(r"(?i)\bselect\b", head)

@@ -154,6 +154,22 @@ def scan_quotes(sql: str) -> list[tuple[str, int, int]]:
     return spans
 
 
+def mask_spans(sql: str, repl) -> str | None:
+    """``sql`` with each span of :func:`scan_quotes` replaced by
+    ``repl(kind, text)``, or None when its last quoted span or block
+    comment is left open (Spark rejects such text; the scanner would run
+    the span to the end of the string)."""
+    spans = scan_quotes(sql + "\n")
+    if spans and spans[-1][0] != "line_comment" and spans[-1][2] > len(sql):
+        return None
+    out, i = [], 0
+    for kind, a, b in spans:
+        b = min(b, len(sql))
+        out += [sql[i:a], repl(kind, sql[a:b])]
+        i = b
+    return "".join(out) + sql[i:]
+
+
 def _masked(sql: str) -> str:
     """``sql`` with every span of :func:`scan_quotes` blanked, offsets kept."""
     out = list(sql)

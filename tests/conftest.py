@@ -44,6 +44,21 @@ def rows(df):
     return sorted((tuple(r) for r in df.collect()), key=lambda t: tuple(key_elem(v) for v in t))
 
 
+def spark_jobs(spark, fn) -> int:
+    """The number of Spark jobs ``fn()`` runs on this thread, counted
+    under a fresh job group (a uuid, so never an earlier call's group)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"spark_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 # ---------------------------------------------------------------- slow gate
 # r14 (the r13 verdict's task #3): the full suite runs ~1.3-1.9 h, which
 # overflows the driver's verify window (VERIFY_r13 truncated at ~31% and

@@ -184,6 +184,19 @@ class TestNamespaces:
 
 
 class TestBindingCost:
+    def test_statement_reads_the_function_table_once(self, ctx, monkeypatch):
+        """``_reads`` and the UDF registration share one read of the
+        catalog's function table."""
+        ctx.execute("CREATE TABLE ft (x int); INSERT INTO ft VALUES (1)")
+        calls = []
+        functions = type(ctx.catalog).functions
+        monkeypatch.setattr(
+            type(ctx.catalog), "functions",
+            lambda self, db: calls.append(db) or functions(self, db),
+        )
+        assert one(ctx, "SELECT x FROM ft") == 1
+        assert len(calls) == 1
+
     def test_unchanged_catalog_makes_no_to_df_calls(self, ctx, monkeypatch):
         """On a 40-table catalog a statement reads only the logs of what
         it reads, and an unchanged table's log is not replayed."""

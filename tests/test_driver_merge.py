@@ -8,7 +8,6 @@ stat a Spark-written file of the same rows would not."""
 
 import datetime
 import math
-import uuid
 from decimal import Decimal
 
 import numpy as np
@@ -25,6 +24,7 @@ from seafowl_spark.engine.deltalite import (
     _change_schema,
     _local_changes,
 )
+from tests.conftest import spark_jobs
 
 VALUE_DDL = (
     "v bigint, s string, st struct<x: int, y: string>, ar array<int>, mp map<string, int>"
@@ -262,16 +262,6 @@ def test_driver_file_stats_match_spark_writer(spark, tmp_path):
 class TestPathSelection:
     """Which path a merge runs, and the Spark work it costs."""
 
-    def _jobs(self, spark, fn) -> int:
-        sc = spark.sparkContext
-        group = f"merge_path_{uuid.uuid4().hex}"  # never an earlier test's group
-        sc.setJobGroup(group, "merge path job count")
-        try:
-            fn()
-        finally:
-            sc._jsc.clearJobGroup()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
     def _flush(self, ctx, table: str):
         import pandas as pd
 
@@ -299,7 +289,7 @@ class TestPathSelection:
     def test_flush_into_unbucketed_table_runs_no_job(self, ctx, paths):
         ctx.execute("CREATE TABLE u (pk bigint, a varchar)")
         ctx.execute("INSERT INTO u SELECT id AS pk, concat('r', id) AS a FROM range(200)")
-        assert self._jobs(ctx.spark, self._flush(ctx, "u")) == 0
+        assert spark_jobs(ctx.spark, self._flush(ctx, "u")) == 0
         assert paths == {"driver": 1, "spark": 0}
         self._expect(ctx, "u")
 

@@ -77,14 +77,11 @@ class TestBucketHitLiteralMasking:
         assert got == {8}
 
     def test_backslash_identifier_cannot_swallow_an_or(self, ctx):
-        """r12 advisor find: the double-quote masking branch treated
-        backslash as an escape, but in the engine's pg dialect quoted
-        identifiers escape only via doubled quotes — backslash is a
-        literal char. `"x\\" OR \\"y" AND id = 5` (identifier x\\, a real
-        top-level OR, then \\, then identifier y) used to mask as ONE
-        span with no leftover quote, hiding the OR from the rejection
-        scan and pinning id=5's bucket — DELETE/UPDATE would then skip
-        matching rows in every other bucket."""
+        """An identifier ending in an escaped backslash (`"x\\\\"`, as
+        Spark's lexer reads it) ends at its quote: the top-level OR after
+        it stays visible to the rejection scan, so the predicate pins no
+        bucket — DELETE/UPDATE would otherwise skip matching rows in
+        every other bucket."""
         ctx.execute(
             "CREATE TABLE btbs (id BIGINT, x BIGINT) "
             "WITH ('bucket_by' = 'id', 'buckets' = '8')"
@@ -93,10 +90,31 @@ class TestBucketHitLiteralMasking:
         e = ctx.catalog.get_table("default", "public", "btbs")
         t = DeltaLiteTable(ctx.spark, ctx.table_root(e))
         snap = t.snapshot()
-        assert t._bucket_hits(snap, '"x\\" OR \\"y" AND id = 5') is None
-        # identifier genuinely ending in a backslash, conjunctive-only:
-        # still unresolvable (quoted RHS = column ref), never a crash
+        assert t._bucket_hits(snap, '"x\\\\" = 1 OR id = 5') is None
+        # an identifier whose closing quote is escaped is unterminated:
+        # unresolvable, never a crash
         assert t._bucket_hits(snap, 'id = "x\\"') is None
+
+    def test_escaped_quote_stays_inside_identifier(self, ctx):
+        """Spark's lexer reads `\\"` inside a double-quoted identifier as an
+        escape (`SELECT 1 AS "a\\"b"` names one column). The mask used to
+        end the identifier there, so the `id = 5` Spark reads as part of
+        the identifier pinned id=5's bucket, and a DELETE/UPDATE with this
+        predicate skipped the bucket of id=7 that holds its rows."""
+        ctx.execute(
+            "CREATE TABLE btesc (id BIGINT, x BIGINT) "
+            "WITH ('bucket_by' = 'id', 'buckets' = '8')"
+        )
+        ctx.execute("INSERT INTO btesc VALUES (1, 1)")
+        e = ctx.catalog.get_table("default", "public", "btesc")
+        t = DeltaLiteTable(ctx.spark, ctx.table_root(e))
+        snap = t.snapshot()
+        five, seven = t._bucket_hits(snap, "id = 5"), t._bucket_hits(snap, "id = 7")
+        assert five != seven
+        pred = '"a\\" AND id = 5 AND \\"" = \'z\' AND id = 7'
+        assert t._bucket_hits(snap, pred) == seven
+        # a comment is not code either
+        assert t._bucket_hits(snap, "/* id = 5 */ id = 7") == seven
 
     def test_escaped_quote_literal_does_not_crash(self, ctx):
         ctx.execute(
@@ -304,6 +322,20 @@ class TestMatviewLiteralHygiene:
                 "SELECT g, SUM(v) AS s FROM mtq WHERE note = ''' "
                 "GROUP BY g"
             )
+
+    @pytest.mark.parametrize("query, dims", [
+        # `\\"` is an escape inside a quoted identifier, as in Spark's
+        # lexer; the mask used to end the identifier there and reject the
+        # rest as an unbalanced quote
+        ('SELECT g, SUM(v) AS s FROM fct WHERE "a\\"" > 0 GROUP BY g', []),
+        # a quote in a comment opens nothing
+        ("SELECT d.g AS g, SUM(f.v) AS s FROM fct f /* it's */ "
+         "JOIN dim d ON f.k = d.k GROUP BY d.g", ["dim"]),
+    ])
+    def test_from_clause_masks_as_spark_lexes(self, query, dims):
+        from seafowl_spark.engine.matview import parse_mv_query
+
+        assert parse_mv_query(query).dims == dims
 
     def test_binary_group_column_full_refreshes_correctly(self, ctx):
         """A binary group key has no exact SQL literal — the refresh must
