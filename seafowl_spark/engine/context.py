@@ -1015,6 +1015,11 @@ class SeafowlContext:
         (engine/pruning.py): a file is dropped only when its manifest
         column bounds prove no row can match. Everything else — and an
         engine table whose every file survives — reads the full view.
+        So does an unbucketed engine table that ``DeltaLiteTable.
+        one_partition`` reads as one partition: its single task opens
+        each small footer anyway and Spark's row-group filter still
+        applies, while the pruned frame would cost a new relation and a
+        temp view per statement. A bucketed table keeps bucket pruning.
         Returns (sql, aliases to drop).
 
         Scale: skips whole data files driver-side from manifest metadata
@@ -1112,6 +1117,10 @@ class SeafowlContext:
                 else:
                     e, snap = spec
                     t = DeltaLiteTable(self.spark, self.table_root(e))
+                    if t.one_partition(snap.files) and all(
+                        f.bucket is None for f in snap.files
+                    ):
+                        return sql, []  # one task reads it: the bound view serves it
                     if len(t.pruned_files(snap, pred)) == len(snap.files):
                         return sql, []  # nothing to skip: the bound view serves it
                     df = t.to_df(predicate_sql=pred, _snap=snap)
@@ -2783,6 +2792,7 @@ class SeafowlContext:
         entry = self._resolve(stmt.name)
         t = DeltaLiteTable(self.spark, self.table_root(entry))
         self._guard_matview(t, "UPDATE")
+        self._register_functions(self.catalog.functions(self.database))
         self._retry_conflicts(lambda: t.update(stmt.sets, stmt.where))
         self._record(entry, t)
 
@@ -2794,6 +2804,7 @@ class SeafowlContext:
         entry = self._resolve(stmt.name)
         t = DeltaLiteTable(self.spark, self.table_root(entry))
         self._guard_matview(t, "DELETE")
+        self._register_functions(self.catalog.functions(self.database))
         self._retry_conflicts(lambda: t.delete(stmt.where))
         self._record(entry, t)
 

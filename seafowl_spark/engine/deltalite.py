@@ -59,6 +59,16 @@ MAX_ROWS_PER_FILE = 1_048_576  # reference src/config/schema.rs:283
 # Spark vs driver, median of 7-9 (4-core host): 1k 142 vs 45 ms, 10k 120
 # vs 65, 15k 125 vs 116, 18k 102 vs 105, 22k 106 vs 141, 50k 111 vs 268.
 DRIVER_WRITE_MAX_ROWS = 15_000
+# A read of at most this many files holding at most this many bytes
+# scans as one partition (``DeltaLiteTable.one_partition``). The bytes are
+# None until first use, then the session's spark.sql.files.openCostInBytes
+# (4 MiB by default): Spark prices one file open at that many bytes and
+# never splits a file that small, so a table no bigger cannot repay a
+# second stage. One task opens the files one after another: an aggregate
+# over 1-4 MiB still gained at 48 files and lost 4-11 ms at 64 (4-core
+# host; the curve is in CHANGES.md).
+ONE_PARTITION_MAX_BYTES: int | None = None
+ONE_PARTITION_MAX_FILES = 32
 LOG_DIR = "_log"
 # engage per-file PK-membership pruning above this many coarse-hit rows
 # (reference FINE_GRAINED_PRUNING_ROW_CRITERIA, sync/planner.rs:612)
@@ -774,6 +784,10 @@ class DeltaLiteTable:
         predicate_sql: str | None = None,
         _snap: Snapshot | None = None,
     ) -> DataFrame:
+        """The rows of the table at a version (latest by default), or of
+        the files ``predicate_sql`` may match. A read of at most
+        ``ONE_PARTITION_MAX_BYTES`` is coalesced to one partition
+        (``one_partition``), so it plans no exchange and runs one job."""
         # _snap: the caller already resolved the snapshot (reload_views
         # binds the one its statement's reads resolved, so the frame and
         # the binding key name the same version)
@@ -782,7 +796,29 @@ class DeltaLiteTable:
         files = self.pruned_files(snap, predicate_sql)
         if not files:
             return self._empty_df(schema)
-        return self._scan_files(files, schema)
+        df = self._scan_files(files, schema)
+        return df.coalesce(1) if self.one_partition(files) else df
+
+    def one_partition(self, files: list[AddFile]) -> bool:
+        """Whether a read of ``files`` should scan as one partition: there
+        are at most ``ONE_PARTITION_MAX_FILES`` of them, holding at most
+        ``ONE_PARTITION_MAX_BYTES``.
+
+        A file scan reports unknown partitioning even with one split, so
+        Spark plans an exchange under every aggregate, window or DISTINCT
+        above it, and AQE runs that exchange as a job of its own.
+        ``coalesce(1)`` reports a single partition, which needs no
+        exchange: the read runs as one stage in one job. Filters and
+        column pruning still push into the scan. Writes scan through
+        ``_scan_files`` and keep their parallelism."""
+        global ONE_PARTITION_MAX_BYTES
+        if ONE_PARTITION_MAX_BYTES is None:
+            conf = self.spark._jsparkSession.sessionState().conf()
+            ONE_PARTITION_MAX_BYTES = int(conf.filesOpenCostInBytes())
+        return (
+            len(files) <= ONE_PARTITION_MAX_FILES
+            and sum(f.size_bytes for f in files) <= ONE_PARTITION_MAX_BYTES
+        )
 
     # ------------------------------------------------- merge-on-read scans
 

@@ -85,7 +85,6 @@ def build_session(
         # back to a us timestamp in io.table (Spark has no ns timestamps,
         # same constraint the reference coerces around in physical.rs:856-886)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # keep executor-side python workers warm for pandas UDFs

@@ -193,12 +193,35 @@ class TestPathSelection:
         })
         self._table(ctx)
         ctx.execute(f"CREATE FUNCTION bump AS '{spec}'")
-        ctx.execute("SELECT bump(1) AS b")  # a read registers persisted functions
         assert spark_jobs(ctx.spark, lambda: ctx.execute(
             "UPDATE t SET v = bump(v) WHERE id = 3"
         )) > 0
         assert arrow_writes == []
         assert rows(ctx.execute("SELECT v FROM t WHERE id = 3")) == [(31,)]
+
+    @pytest.mark.parametrize("sql, want", [
+        ("UPDATE t SET v = {f}(v) WHERE id = 1", (20, 1901)),
+        ("DELETE FROM t WHERE {f}(id) = 3", (19, 1880)),
+    ])
+    def test_dml_resolves_persisted_functions(self, ctx, sql, want):
+        """UPDATE and DELETE register the catalog's functions, as a read
+        does: here the statement is the first to name the function (a
+        fresh name, so no earlier test registered it)."""
+        import base64
+        import json
+        import uuid
+
+        name = f"bump_{uuid.uuid4().hex[:8]}"
+        spec = json.dumps({
+            "entrypoint": "f", "language": "python",
+            "input_types": ["bigint"], "return_type": "bigint",
+            "data": base64.b64encode(b"def f(x):\n    return x + 1\n").decode(),
+            "volatility": "immutable",
+        })
+        self._table(ctx)
+        ctx.execute(f"CREATE FUNCTION {name} AS '{spec}'")
+        ctx.execute(sql.format(f=name))
+        assert rows(ctx.execute("SELECT count(*), sum(v) FROM t")) == [want]
 
     def test_hit_set_over_the_bound_writes_with_spark(self, ctx, arrow_writes, monkeypatch):
         self._table(ctx)

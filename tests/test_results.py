@@ -308,9 +308,14 @@ FOUR_FILE_READ = "SELECT x, s FROM four WHERE x % 3 <> 1"
 
 
 @pytest.fixture()
-def four_files(ctx):
+def four_files(ctx, monkeypatch):
     """A table written by four INSERTs (four data files, read as four
-    partitions) and a filter that scan pruning cannot narrow."""
+    partitions) and a filter that scan pruning cannot narrow. The
+    one-partition bound is 0 here, or the small table would read as one
+    partition."""
+    from seafowl_spark.engine import deltalite
+
+    monkeypatch.setattr(deltalite, "ONE_PARTITION_MAX_BYTES", 0)
     ctx.execute("CREATE TABLE four (x int, s varchar)")
     for k in range(4):
         ctx.execute(

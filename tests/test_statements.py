@@ -9,6 +9,7 @@ import time
 
 import pytest
 
+from seafowl_spark.engine import deltalite
 from seafowl_spark.engine.context import ExecutionError
 from seafowl_spark.engine.deltalite import DeltaLiteTable
 from tests.conftest import rows
@@ -755,6 +756,12 @@ class TestLogCheckpoints:
 class TestNativeScanPruning:
     """Read-side file skipping for engine-native tables: a simple
     SELECT+WHERE scans only the files whose add-stats may match."""
+
+    @pytest.fixture(autouse=True)
+    def _no_one_partition_reads(self, monkeypatch):
+        # a table read as one partition is served by its bound view,
+        # unpruned: these small tables stand for large ones
+        monkeypatch.setattr(deltalite, "ONE_PARTITION_MAX_BYTES", 0)
 
     def test_select_prunes_files(self, ctx):
         ctx.execute("CREATE TABLE pr (k BIGINT, v STRING)")
