@@ -785,9 +785,9 @@ class DeltaLiteTable:
         _snap: Snapshot | None = None,
     ) -> DataFrame:
         """The rows of the table at a version (latest by default), or of
-        the files ``predicate_sql`` may match. A read of at most
-        ``ONE_PARTITION_MAX_BYTES`` is coalesced to one partition
-        (``one_partition``), so it plans no exchange and runs one job."""
+        the files ``predicate_sql`` may match. A small read is coalesced
+        to one partition (``one_partition``), so it plans no exchange and
+        runs one job."""
         # _snap: the caller already resolved the snapshot (reload_views
         # binds the one its statement's reads resolved, so the frame and
         # the binding key name the same version)
@@ -809,8 +809,9 @@ class DeltaLiteTable:
         above it, and AQE runs that exchange as a job of its own.
         ``coalesce(1)`` reports a single partition, which needs no
         exchange: the read runs as one stage in one job. Filters and
-        column pruning still push into the scan. Writes scan through
-        ``_scan_files`` and keep their parallelism."""
+        column pruning still push into the scan. UPDATE, DELETE, MERGE
+        and OPTIMIZE scan through ``_scan_files`` and keep their
+        parallelism."""
         global ONE_PARTITION_MAX_BYTES
         if ONE_PARTITION_MAX_BYTES is None:
             conf = self.spark._jsparkSession.sessionState().conf()
