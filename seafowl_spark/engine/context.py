@@ -2744,39 +2744,55 @@ class SeafowlContext:
             entry.uuid, [(c.version, c.timestamp_ms, c.operation) for c in commits]
         )
 
-    def _exec_insert(self, stmt) -> None:
-        entry = self._resolve(stmt.name)
+    def _write_statement(self, name: str, what: str, guard, op, ddl: bool = False) -> None:
+        """Run the write statement ``what`` on table ``name``: resolve it,
+        let ``guard`` refuse a table ``what`` must not change (a view, and
+        with ``_guard_matview`` a materialized view, whose contents would
+        desync from its definition), run ``op(t)`` under
+        ``_retry_conflicts`` and record every new version in the catalog.
+        With ``ddl`` the op may change the schema, and the catalog's cached
+        DDL (SHOW COLUMNS, DESCRIBE, information_schema) is refreshed from
+        the log first."""
+        entry = self._resolve(name)
         t = DeltaLiteTable(self.spark, self.table_root(entry))
-        self._guard_matview(t, "INSERT")
-        df = self._exec_query(parser.Statement("query", stmt.query))
-        target_cols = [f.name for f in t.schema().fields]
-        if stmt.columns:
-            if len(stmt.columns) != len(df.columns):
-                raise ExecutionError(
-                    f"INSERT column list has {len(stmt.columns)} names but query produces {len(df.columns)}"
-                )
-            unknown = [c for c in stmt.columns if c not in target_cols]
-            if unknown:
-                raise ExecutionError(f"unknown INSERT columns: {unknown}")
-            df = df.toDF(*stmt.columns)
-        elif set(df.columns) != set(target_cols):
-            # unnamed/positional source (e.g. VALUES): map by position
-            if len(df.columns) > len(target_cols):
-                raise ExecutionError("INSERT has more expressions than target columns")
-            df = df.toDF(*target_cols[: len(df.columns)])
-        if stmt.fields.get("overwrite"):
-            # INSERT OVERWRITE: one atomic commit replaces the live file
-            # set (deltalite.overwrite aligns + enforces constraints, and
-            # its OCC base-version rejects racing writers)
-            self._retry_conflicts(lambda: t.overwrite(df, operation="INSERT OVERWRITE"))
-        else:
-            t.append(df)
+        guard(t, what)
+        self._retry_conflicts(lambda: op(t))
+        if ddl:
+            self.catalog.update_schema(entry.uuid, t.snapshot().schema_ddl)
         self._record(entry, t)
+
+    def _exec_insert(self, stmt) -> None:
+        def insert(t: DeltaLiteTable) -> None:
+            df = self._exec_query(parser.Statement("query", stmt.query))
+            target_cols = [f.name for f in t.schema().fields]
+            if stmt.columns:
+                if len(stmt.columns) != len(df.columns):
+                    raise ExecutionError(
+                        f"INSERT column list has {len(stmt.columns)} names but query produces {len(df.columns)}"
+                    )
+                unknown = [c for c in stmt.columns if c not in target_cols]
+                if unknown:
+                    raise ExecutionError(f"unknown INSERT columns: {unknown}")
+                df = df.toDF(*stmt.columns)
+            elif set(df.columns) != set(target_cols):
+                # unnamed/positional source (e.g. VALUES): map by position
+                if len(df.columns) > len(target_cols):
+                    raise ExecutionError("INSERT has more expressions than target columns")
+                df = df.toDF(*target_cols[: len(df.columns)])
+            if stmt.fields.get("overwrite"):
+                # INSERT OVERWRITE: one atomic commit replaces the live file
+                # set (deltalite.overwrite aligns + enforces constraints, and
+                # its OCC base-version rejects racing writers)
+                t.overwrite(df, operation="INSERT OVERWRITE")
+            else:
+                t.append(df)
+
+        self._write_statement(stmt.name, "INSERT", self._guard_matview, insert)
 
     @staticmethod
     def _retry_conflicts(op) -> None:
-        """Statement-level retry for snapshot-based DML: losing the OCC
-        race aborts the stale commit (deltalite._next_commit), and the op
+        """Statement-level retry for write statements: losing the OCC race
+        aborts the stale commit (deltalite._next_commit), and every op
         re-snapshots on entry, so re-running it re-plans against the new
         base — lost-update safety AND availability under concurrency."""
         from .deltalite import ConcurrentCommitError
@@ -2789,24 +2805,23 @@ class SeafowlContext:
         raise ConcurrentCommitError("DML lost the commit race 8 times")
 
     def _exec_update(self, stmt) -> None:
-        entry = self._resolve(stmt.name)
-        t = DeltaLiteTable(self.spark, self.table_root(entry))
-        self._guard_matview(t, "UPDATE")
-        self._register_functions(self.catalog.functions(self.database))
-        self._retry_conflicts(lambda: t.update(stmt.sets, stmt.where))
-        self._record(entry, t)
+        def update(t: DeltaLiteTable) -> None:
+            self._register_functions(self.catalog.functions(self.database))
+            t.update(stmt.sets, stmt.where)
+
+        self._write_statement(stmt.name, "UPDATE", self._guard_matview, update)
 
     def _exec_delete(self, stmt) -> None:
         _, schema, tbl = parser.parse_qualified(stmt.name)
         if schema == STAGING_SCHEMA:
             self._delete_staging_iceberg(tbl, stmt.where)
             return
-        entry = self._resolve(stmt.name)
-        t = DeltaLiteTable(self.spark, self.table_root(entry))
-        self._guard_matview(t, "DELETE")
-        self._register_functions(self.catalog.functions(self.database))
-        self._retry_conflicts(lambda: t.delete(stmt.where))
-        self._record(entry, t)
+
+        def delete(t: DeltaLiteTable) -> None:
+            self._register_functions(self.catalog.functions(self.database))
+            t.delete(stmt.where)
+
+        self._write_statement(stmt.name, "DELETE", self._guard_matview, delete)
 
     def _delete_staging_iceberg(self, name: str, where: str | None) -> None:
         """DELETE on an iceberg staging table: commits a positional-delete
@@ -2861,8 +2876,6 @@ class SeafowlContext:
         """
         from pyspark.sql import functions as F
 
-        t = self.delta_table(stmt.name)
-        self._guard_matview(t, "MERGE")
         cl = stmt.clauses
         if cl["update"] and not cl["insert"]:
             raise ExecutionError(
@@ -2903,86 +2916,76 @@ class SeafowlContext:
         if cl["delete"]:
             delete_col = "__sfs_merge_delete"
             src = src.withColumn(delete_col, F.lit(True))
-        self._retry_conflicts(lambda: t.merge(src, pk_cols, delete_col=delete_col))
+        self._write_statement(
+            stmt.name, "MERGE", self._guard_matview,
+            lambda t: t.merge(src, pk_cols, delete_col=delete_col),
+        )
 
     def _exec_truncate(self, stmt) -> None:
-        entry = self._resolve(stmt.name)
-        t = DeltaLiteTable(self.spark, self.table_root(entry))
-        # matviews too: these rewrite derived contents / desync MvSpec
-        self._guard_matview(t, "TRUNCATE")
-        t.truncate()
-        self._record(entry, t)
+        self._write_statement(
+            stmt.name, "TRUNCATE", self._guard_matview, lambda t: t.truncate()
+        )
 
     def _exec_restore(self, stmt) -> None:
-        entry = self._resolve(stmt.name)
-        t = DeltaLiteTable(self.spark, self.table_root(entry))
-        # matviews too: these rewrite derived contents / desync MvSpec
-        self._guard_matview(t, "RESTORE")
-        t.restore(version=stmt.version, timestamp=stmt.timestamp)
         # restore can rewind schema evolution — resync the cached DDL
-        self.catalog.update_schema(entry.uuid, t.snapshot().schema_ddl)
-        self._record(entry, t)
+        self._write_statement(
+            stmt.name, "RESTORE", self._guard_matview,
+            lambda t: t.restore(version=stmt.version, timestamp=stmt.timestamp),
+            ddl=True,
+        )
 
     def _exec_add_column(self, stmt) -> None:
-        entry = self._resolve(stmt.name)
-        t = DeltaLiteTable(self.spark, self.table_root(entry))
-        # matviews too: these rewrite derived contents / desync MvSpec
-        self._guard_matview(t, "ALTER TABLE ADD COLUMN")
-        t.add_column(stmt.column, stmt.dtype)
-        # keep SHOW COLUMNS / DESCRIBE / information_schema in sync (the
-        # log is authoritative; the catalog caches the DDL)
-        self.catalog.update_schema(entry.uuid, t.snapshot().schema_ddl)
-        self._record(entry, t)
+        self._write_statement(
+            stmt.name, "ALTER TABLE ADD COLUMN", self._guard_matview,
+            lambda t: t.add_column(stmt.column, stmt.dtype), ddl=True,
+        )
 
     def _exec_drop_column(self, stmt) -> None:
-        entry = self._resolve(stmt.name)
-        t = DeltaLiteTable(self.spark, self.table_root(entry))
-        # matviews too: these rewrite derived contents / desync MvSpec
-        self._guard_matview(t, "ALTER TABLE DROP COLUMN")
-        # a search index holds the column name in its spec: dropping it
-        # would leave lookups serving a column the table no longer has
-        # and crash the NEXT refresh deep inside the rebuild — reject at
-        # the DDL boundary instead (PG-style dependent-object error)
-        from .search_index import load_specs as _si_load
+        def drop_column(t: DeltaLiteTable) -> None:
+            # a search index holds the column name in its spec: dropping it
+            # would leave lookups serving a column the table no longer has
+            # and crash the NEXT refresh deep inside the rebuild — reject at
+            # the DDL boundary instead (PG-style dependent-object error)
+            from .search_index import load_specs as _si_load
 
-        for iname, ispec in _si_load(
-            t.snapshot().properties or {}
-        ).items():
-            cols = set(ispec.column.split(","))
-            cols.add(ispec.params.get("id_col", "doc_id"))
-            if stmt.column in cols:
-                raise ExecutionError(
-                    f"column {stmt.column} is referenced by search index "
-                    f"{iname}; DROP SEARCH INDEX {iname} ON {stmt.name} "
-                    "first"
-                )
-        t.drop_column(stmt.column)
-        self.catalog.update_schema(entry.uuid, t.snapshot().schema_ddl)
-        self._record(entry, t)
+            for iname, ispec in _si_load(
+                t.snapshot().properties or {}
+            ).items():
+                cols = set(ispec.column.split(","))
+                cols.add(ispec.params.get("id_col", "doc_id"))
+                if stmt.column in cols:
+                    raise ExecutionError(
+                        f"column {stmt.column} is referenced by search index "
+                        f"{iname}; DROP SEARCH INDEX {iname} ON {stmt.name} "
+                        "first"
+                    )
+            t.drop_column(stmt.column)
+
+        self._write_statement(
+            stmt.name, "ALTER TABLE DROP COLUMN", self._guard_matview,
+            drop_column, ddl=True,
+        )
 
     def _exec_add_constraint(self, stmt) -> None:
-        entry = self._resolve(stmt.name)
-        t = DeltaLiteTable(self.spark, self.table_root(entry))
-        self._guard_view(t, "ALTER TABLE ADD CONSTRAINT")
-        t.add_constraint(stmt.constraint, stmt.expr)
-        self._record(entry, t)
+        self._write_statement(
+            stmt.name, "ALTER TABLE ADD CONSTRAINT", self._guard_view,
+            lambda t: t.add_constraint(stmt.constraint, stmt.expr),
+        )
 
     def _exec_drop_constraint(self, stmt) -> None:
-        entry = self._resolve(stmt.name)
-        t = DeltaLiteTable(self.spark, self.table_root(entry))
-        self._guard_view(t, "ALTER TABLE DROP CONSTRAINT")
-        t.drop_constraint(stmt.constraint)
-        self._record(entry, t)
+        self._write_statement(
+            stmt.name, "ALTER TABLE DROP CONSTRAINT", self._guard_view,
+            lambda t: t.drop_constraint(stmt.constraint),
+        )
 
     def _exec_optimize(self, stmt) -> None:
-        entry = self._resolve(stmt.name)
-        t = DeltaLiteTable(self.spark, self.table_root(entry))
-        self._guard_view(t, "OPTIMIZE")
-        t.optimize(
-            zorder_by=stmt.fields.get("zorder_by"),
-            predicate_sql=stmt.fields.get("predicate"),
+        self._write_statement(
+            stmt.name, "OPTIMIZE", self._guard_view,
+            lambda t: t.optimize(
+                zorder_by=stmt.fields.get("zorder_by"),
+                predicate_sql=stmt.fields.get("predicate"),
+            ),
         )
-        self._record(entry, t)
 
     def _exec_vacuum_table(self, stmt) -> None:
         entry = self._resolve(stmt.name)

@@ -42,6 +42,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -82,9 +83,7 @@ FINE_GRAINED_MAX_PK_VALUES = 250_000
 # DELETE should write KB-scale bitmaps, not rewrite GB-scale parquet.
 # Tables can force a mode with WITH ('delete_mode' 'mor'|'cow'); default
 # 'auto' applies this threshold (small local tables stay copy-on-write).
-MOR_DELETE_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_MOR_DELETE_MIN_BYTES", str(256 << 20))
-)
+MOR_DELETE_MIN_BYTES = 256 << 20
 
 
 def _fp_norm(col):
@@ -247,35 +246,59 @@ def _join_key(col):
 
 BLOOM_BITS_DEFAULT = 8192  # 1 KiB bitmap per (file, column)
 BLOOM_HASHES = 4
-_BLOOM_TYPES = "tinyint smallint int bigint string varchar".split()
+# bloomable column type -> the Python type of a value whose str() is the
+# CAST(col AS STRING) text the bitmap hashed. A value of another type can
+# equal a row yet hash differently (code = 5 on a string column holding
+# '05': Spark matches after a cast, the bitmap has bits only for '05').
+_BLOOM_FAMILY = {
+    "tinyint": int, "smallint": int, "int": int, "bigint": int, "string": str,
+}
 
 
 def _bloom_positions(value_str: str, m: int) -> list[int]:
     """Bit positions for one value: four 8-hex-digit slices of md5."""
-    import hashlib
-
     h = hashlib.md5(value_str.encode("utf-8")).hexdigest()
     return [int(h[i * 8:(i + 1) * 8], 16) % m for i in range(BLOOM_HASHES)]
 
 
-def _bloom_literal(value) -> str | None:
-    """Predicate literal -> the CAST(col AS STRING) form hashed at write
-    time; None = not safely normalizable (prune conservatively)."""
-    if isinstance(value, bool):
+def _bloom_key(dt: T.DataType, value) -> str | None:
+    """The text a bloom bitmap on a column of type ``dt`` hashed for
+    ``value``, when that text is faithful (see ``_BLOOM_FAMILY``); None
+    otherwise, and the bloom must not prune on the value."""
+    family = _BLOOM_FAMILY.get(dt.simpleString())
+    if family is None or isinstance(value, bool) or not isinstance(value, family):
         return None
-    if isinstance(value, int):
-        return str(value)
-    if isinstance(value, str):
-        return value
-    return None  # float/temporal literals: formatting is not bit-stable
+    return str(value)
 
 
-def _bloom_may_contain(bitmap_b64: str, value_str: str, m: int) -> bool:
+def _bloom_may_contain(bitmap_b64: str, positions: list[list[int]]) -> bool:
+    """Whether a bitmap may hold any of the values whose bit positions
+    (``_bloom_positions``) are listed; False means provably none."""
     bits = base64.b64decode(bitmap_b64)
-    for p in _bloom_positions(value_str, m):
-        if not (bits[p // 8] >> (p % 8)) & 1:
-            return False  # definitely absent
-    return True
+    return any(all((bits[p // 8] >> (p % 8)) & 1 for p in ps) for ps in positions)
+
+
+# ---------------------------------------------------------------- buckets
+# Every file of a bucketed table holds the rows of one bucket.
+
+
+def _bucket_id(keys: list, n: int):
+    """The bucket of rows whose bucket-key values, typed as the keys, are
+    the columns ``keys``."""
+    return F.pmod(F.xxhash64(*keys), F.lit(n)).cast("int")
+
+
+def _bucket_pin(key_type: T.DataType, value, is_string: bool):
+    """The one value of the bucket key's type ``key_type`` that a key
+    equal to ``value`` under Spark's comparison can hold, as a column;
+    None when there is no one such value: Spark compares a string key with
+    a number by casting the key, so '05', '5' and '+5' all equal 5. A key
+    of any other type can equal ``value`` only where it equals
+    ``try_cast(value AS key type)``, which is NULL for a value outside the
+    type (3000000000 for an INT key), a value no key equals."""
+    if isinstance(key_type, T.StringType):
+        return value if is_string else None
+    return value.try_cast(key_type)
 
 
 class ConcurrentCommitError(DeltaLiteError):
@@ -826,10 +849,30 @@ class DeltaLiteTable:
     def _scan_files(self, files: list[AddFile], schema: T.StructType) -> DataFrame:
         """Read a file subset with deletion vectors applied (the read-side
         half of MoR DELETE)."""
-        paths = [self._data_url(f.path) for f in files]
+        if any(f.dv for f in files):
+            return self._live_rows(files, schema).drop("__sfs_fp", "__sfs_pos")
         # explicit schema: empty-file-set and add-order independence
-        df = self.spark.read.schema(schema).parquet(*paths)
-        return self._apply_dvs(df, files)
+        return self.spark.read.schema(schema).parquet(
+            *[self._data_url(f.path) for f in files]
+        )
+
+    def _live_rows(self, files: list[AddFile], schema: T.StructType) -> DataFrame:
+        """The live rows of ``files`` plus the key a deletion vector
+        stores for each: its file (``__sfs_fp``) and its position there
+        (``__sfs_pos``). Rows a file's deletion vector names are
+        anti-joined away."""
+        df = self.spark.read.schema(schema).parquet(
+            *[self._data_url(f.path) for f in files]
+        ).select(
+            "*",
+            _fp_norm(F.col("_metadata.file_path")).alias("__sfs_fp"),
+            F.col("_metadata.row_index").alias("__sfs_pos"),
+        )
+        dv_files = [f for f in files if f.dv]
+        if not dv_files:
+            return df
+        pairs = self._dv_pairs_df(dv_files)
+        return df.join(F.broadcast(pairs), ["__sfs_fp", "__sfs_pos"], "left_anti")
 
     @staticmethod
     def _retire(files: list[AddFile]) -> list[str]:
@@ -842,19 +885,6 @@ class DeltaLiteTable:
             if f.dv:
                 out.append(f.dv["path"])
         return out
-
-    def _apply_dvs(self, df: DataFrame, files: list[AddFile]) -> DataFrame:
-        dv_files = [f for f in files if f.dv]
-        if not dv_files:
-            return df
-        out_cols = df.columns
-        pairs = self._dv_pairs_df(dv_files)
-        return (
-            df.withColumn("__sfs_fp", _fp_norm(F.col("_metadata.file_path")))
-            .withColumn("__sfs_pos", F.col("_metadata.row_index"))
-            .join(F.broadcast(pairs), ["__sfs_fp", "__sfs_pos"], "left_anti")
-            .select(*out_cols)
-        )
 
     def _dv_pairs_df(self, dv_files: list[AddFile]) -> DataFrame:
         """(file, row_index) pairs of MoR-deleted rows, decoded on
@@ -939,7 +969,7 @@ class DeltaLiteTable:
             c
             for c in cols
             if c in schema.names
-            and schema[c].dataType.simpleString() in _BLOOM_TYPES
+            and schema[c].dataType.simpleString() in _BLOOM_FAMILY
         ]
         if not cols:
             return
@@ -1012,7 +1042,7 @@ class DeltaLiteTable:
         A Spark write job was most of a one-row statement's cost: 68-91 ms
         of a 92 ms serve_catalog write (4-core host). Every other frame is
         written by Spark, and so is any frame for a bucketed table, whose
-        files Spark's ``xxhash64`` lays out (merge sends no Arrow table for
+        files Spark's bucket hash lays out (merge sends no Arrow table for
         one)."""
         txn = f"data/txn-{uuid.uuid4().hex}"
         out = os.path.join(self.root, txn)
@@ -1029,7 +1059,7 @@ class DeltaLiteTable:
         if isinstance(df, pa.Table):
             adds = self._write_arrow(df, txn)
         elif spec is not None:
-            adds = self._write_bucketed(df, txn, out, spec)
+            adds = self._write_bucketed(df, txn, out, snap)
         else:
             (
                 df.write.option("maxRecordsPerFile", MAX_ROWS_PER_FILE)
@@ -1070,23 +1100,21 @@ class DeltaLiteTable:
         return adds
 
     def _write_bucketed(
-        self, df: DataFrame, txn: str, out: str, spec: tuple[list[str], int]
+        self, df: DataFrame, txn: str, out: str, snap: Snapshot
     ) -> list[AddFile]:
         """Hash-bucketed layout: every file holds rows of exactly one
-        ``pmod(xxhash64(bucket_by), buckets)`` bucket, so DML/merge prune by
+        bucket (``_bucket_id``), so DML/merge prune by
         EXACT bucket membership instead of min/max ranges, and a change set
         touching k buckets rewrites at most k/N of the table. Spark's
         ``partitionBy`` splits the files; the bucket id moves from the
         directory name into the Add entry so the read path stays a flat
         list of plain parquet files."""
-        cols, n = spec
-        # pin the hash input types to the table schema: xxhash64(int) !=
-        # xxhash64(bigint) for the same value, and writers arrive with
+        cols, n = snap.bucket_spec
+        # pin the hash input types to the table schema: an int hashes
+        # unlike the same value as a bigint, and writers arrive with
         # whatever types the plan inferred
-        schema = self.schema()
-        bucket_col = F.pmod(
-            F.xxhash64(*[F.col(c).cast(schema[c].dataType) for c in cols]), F.lit(n)
-        ).cast("int")
+        schema = snap.schema
+        bucket_col = _bucket_id([F.col(c).cast(schema[c].dataType) for c in cols], n)
         (
             df.withColumn("__sfs_bucket", bucket_col)
             .repartition(n, "__sfs_bucket")
@@ -1184,7 +1212,7 @@ class DeltaLiteTable:
                 bad = [
                     c
                     for c in bcols
-                    if schema[c].dataType.simpleString() not in _BLOOM_TYPES
+                    if schema[c].dataType.simpleString() not in _BLOOM_FAMILY
                 ]
                 if bad:
                     raise DeltaLiteError(
@@ -1219,12 +1247,7 @@ class DeltaLiteTable:
     def overwrite(self, df: DataFrame, operation: str = "OVERWRITE") -> Commit:
         snap = self.snapshot()
         df = self._enforce_constraints(self._align(df, _snap=snap), _snap=snap)
-        adds = self._write_data(df, _snap=snap)
-        # _retire, not bare paths: a replaced file's DV sidecar must enter
-        # the remove list too, or vacuum can never GC the orphaned .bin
-        return self._next_commit(
-            operation, adds, self._retire(snap.files), base_version=snap.version
-        )
+        return self._rewrite(operation, snap, snap.files, df)
 
     def _align(self, df: DataFrame, _snap: Snapshot | None = None) -> DataFrame:
         """byName projection: pad missing columns with NULL, reorder, cast —
@@ -1252,45 +1275,23 @@ class DeltaLiteTable:
         from .pruning import equality_conjuncts, prune_files
 
         hit = prune_files(snap.files, predicate_sql)
-        # bloom bitmaps hash CAST(col AS STRING); a literal of a DIFFERENT
-        # type family can be numerically equal but textually different
-        # (code = 5 on a string column holding '05' — Spark matches after
-        # cast, the bitmap has bits only for '05'). Only same-family
-        # pairs are textually faithful; everything else skips the bloom
-        # (conservative, stats pruning already ran)
-        _INT_TYPES = {"tinyint", "smallint", "int", "bigint"}
-        col_fam = {}
-        for fld in snap.schema.fields:
-            s_ = fld.dataType.simpleString()
-            col_fam[fld.name] = (
-                "int" if s_ in _INT_TYPES else "string" if s_ == "string" else None
-            )
-
-        def _lit_fam(v) -> str | None:
-            if isinstance(v, bool):
-                return None
-            if isinstance(v, int):
-                return "int"
-            if isinstance(v, str):
-                return "string"
-            return None
-
+        schema = snap.schema
         eqs = [
             (c, s)
             for c, v in equality_conjuncts(predicate_sql)
-            if _lit_fam(v) is not None
-            and col_fam.get(c) == _lit_fam(v)
-            and (s := _bloom_literal(v)) is not None
+            if c in schema.names
+            and (s := _bloom_key(schema[c].dataType, v)) is not None
         ]
         if not eqs or not any(f.blooms for f in hit):
             return hit
         m = int(snap.properties.get("bloom_bits", BLOOM_BITS_DEFAULT))
+        probes = [(c, [_bloom_positions(s, m)]) for c, s in eqs]
         return [
             f
             for f in hit
             if all(
-                _bloom_may_contain(f.blooms[c], s, m)
-                for c, s in eqs
+                _bloom_may_contain(f.blooms[c], ps)
+                for c, ps in probes
                 if f.blooms and c in f.blooms
             )
         ]
@@ -1300,7 +1301,12 @@ class DeltaLiteTable:
         every bucket column with an equality literal to the single bucket
         it can touch; None = not resolvable, prune conservatively. This is
         the point-lookup payoff of hash bucketing: min/max stats are
-        useless on hashed layouts, exact membership is cheap."""
+        useless on hashed layouts, exact membership is cheap.
+
+        A bucket column is pinned by a conjunct ``col = literal`` standing
+        alone between AND, parentheses and the predicate's ends (not
+        ``col = 5 + 1``), whose literal ``_bucket_pin`` takes and whose
+        pinned value is not NULL."""
         spec = snap.bucket_spec
         if spec is None or not predicate_sql:
             return None
@@ -1328,11 +1334,11 @@ class DeltaLiteTable:
             return None  # only plain conjunctions are safely narrowing
         cols, n = spec
         schema = snap.schema
-        lits = []
+        pins = []
         for c in cols:
             m = re.search(
-                rf"(?i)(?<![\w.]){re.escape(c)}\s*=\s*"
-                rf"(\x00\d+\x00|-?\d+(?:\.\d+)?)",
+                rf"(?i)(?:^|\(|\band\b)\s*{re.escape(c)}\s*=\s*"
+                rf"(\x00\d+\x00|-?\d+(?:\.\d+)?)\s*(?=$|\)|\band\b)",
                 masked,
             )
             if m is None:
@@ -1342,17 +1348,21 @@ class DeltaLiteTable:
                 raw = literals[int(raw.strip("\x00"))]
                 if not raw.startswith("'"):
                     return None  # col = "other_col" cannot pin a bucket
-            lits.append(f"CAST({raw} AS {schema[c].dataType.simpleString()})")
-        row = (
-            self.spark.range(1)
-            .select(
-                F.pmod(F.xxhash64(*[F.expr(e) for e in lits]), F.lit(n))
-                .cast("int")
-                .alias("b")
+            pin = _bucket_pin(schema[c].dataType, F.expr(raw), raw.startswith("'"))
+            if pin is None:
+                return None
+            pins.append(pin)
+        try:
+            row = (
+                self.spark.range(1)
+                .select(*pins, _bucket_id(pins, n))
+                .collect()[0]
             )
-            .collect()
-        )
-        return {row[0]["b"]}
+        except AnalysisException:
+            return None  # no cast from the literal's type (5 for a DATE)
+        if any(v is None for v in row[:-1]):
+            return None
+        return {row[-1]}
 
     def update(self, set_exprs: dict[str, str], predicate_sql: str | None) -> Commit:
         """Copy-on-write UPDATE (A4): rewrite only files the predicate can
@@ -1365,7 +1375,7 @@ class DeltaLiteTable:
         and the projection runs over them as a LocalRelation, which Spark
         folds, so the rewrite runs no Spark job (``_rewrite_hit``); other
         hit sets, and a projection Spark does not fold, are rewritten by a
-        Spark job. A hit set of ``MOR_DELETE_MIN_BYTES`` or more is updated
+        Spark job. ``_merge_on_read`` may instead update the hit set
         merge-on-read (``_mor_update``).
         """
         snap = self.snapshot()
@@ -1379,23 +1389,12 @@ class DeltaLiteTable:
                 f"No field named {unknown[0]}. "
                 f"Valid fields are {', '.join(fields)}."
             )
-        hit = self._prune(snap, predicate_sql)
-        hot = self._bucket_hits(snap, predicate_sql)
-        if hot is not None:
-            hit = [f for f in hit if f.bucket is None or f.bucket in hot]
+        hit = self.pruned_files(snap, predicate_sql)
         if not hit:
-            return self._next_commit("UPDATE", [], [], base_version=snap.version)
+            return self._rewrite("UPDATE", snap, hit)
+        if self._merge_on_read(snap, hit, "UPDATE"):
+            return self._mor_update(snap, hit, set_exprs, predicate_sql)
         schema = snap.schema
-        mode = str(
-            snap.properties.get(
-                "update_mode", snap.properties.get("delete_mode", "auto")
-            )
-        ).lower()
-        if mode == "mor" or (
-            mode == "auto"
-            and sum(f.size_bytes for f in hit) >= MOR_DELETE_MIN_BYTES
-        ):
-            return self._mor_update(snap, hit, set_exprs, predicate_sql, schema)
         cond = F.expr(predicate_sql) if predicate_sql else F.lit(True)
         projected = self._rewrite_hit(snap, hit, lambda df: df.select(
             *[
@@ -1409,11 +1408,8 @@ class DeltaLiteTable:
                 for c in fields
             ]
         ))
-        adds = self._write_data(
-            self._enforce_constraints(projected, _snap=snap), _snap=snap
-        )
-        return self._next_commit(
-            "UPDATE", adds, self._retire(hit), base_version=snap.version
+        return self._rewrite(
+            "UPDATE", snap, hit, self._enforce_constraints(projected, _snap=snap)
         )
 
     def delete(self, predicate_sql: str | None) -> Commit:
@@ -1421,40 +1417,62 @@ class DeltaLiteTable:
         (reference physical.rs:370-485). With a predicate, either
         copy-on-write (rewrite hit files minus matching rows — the
         reference's only mode) or merge-on-read (write per-file deletion
-        vectors, leave data files untouched) — chosen by the table's
-        ``delete_mode`` property ('cow' | 'mor' | default 'auto', which
-        goes MoR once the hit set exceeds MOR_DELETE_MIN_BYTES: at 100 TB
-        a DELETE writes KB bitmaps, not rewritten GB files).
+        vectors, leave data files untouched) — chosen by
+        ``_merge_on_read``.
 
         A copy-on-write DELETE of driver-sized hit files in an unbucketed
         table filters them as a LocalRelation read by pyarrow, which Spark
         folds, and so runs no Spark job (``_rewrite_hit``); any other hit
         set is filtered and written by a Spark job."""
         snap = self.snapshot()
-        if predicate_sql is None:
-            return self._next_commit(
-                "DELETE", [], self._retire(snap.files), base_version=snap.version
-            )
-        hit = self._prune(snap, predicate_sql)
-        hot = self._bucket_hits(snap, predicate_sql)
-        if hot is not None:
-            hit = [f for f in hit if f.bucket is None or f.bucket in hot]
-        if not hit:
-            return self._next_commit("DELETE", [], [], base_version=snap.version)
-        mode = str(snap.properties.get("delete_mode", "auto")).lower()
-        use_mor = mode == "mor" or (
-            mode == "auto"
-            and sum(f.size_bytes for f in hit) >= MOR_DELETE_MIN_BYTES
-        )
-        if use_mor:
+        hit = self.pruned_files(snap, predicate_sql)
+        if predicate_sql is None or not hit:
+            return self._rewrite("DELETE", snap, hit)
+        if self._merge_on_read(snap, hit, "DELETE"):
             return self._mor_delete(snap, hit, predicate_sql)
         predicate = F.expr(predicate_sql)
         kept = self._rewrite_hit(
             snap, hit, lambda df: df.where(~predicate | predicate.isNull())
         )
-        adds = self._write_data(kept, _snap=snap)
+        return self._rewrite("DELETE", snap, hit, kept)
+
+    @staticmethod
+    def _merge_on_read(snap: Snapshot, hit: list[AddFile], op: str) -> bool:
+        """Whether ``op`` (UPDATE or DELETE) over the files ``hit`` writes
+        deletion vectors instead of rewriting the files. The table's
+        ``delete_mode`` decides: 'cow', 'mor', or by default 'auto', which
+        goes merge-on-read once the hit files hold
+        ``MOR_DELETE_MIN_BYTES``. An UPDATE reads ``update_mode`` first and
+        falls back to ``delete_mode``."""
+        mode = snap.properties.get("delete_mode", "auto")
+        if op == "UPDATE":
+            mode = snap.properties.get("update_mode", mode)
+        mode = str(mode).lower()
+        return mode == "mor" or (
+            mode == "auto" and sum(f.size_bytes for f in hit) >= MOR_DELETE_MIN_BYTES
+        )
+
+    def _rewrite(
+        self,
+        op: str,
+        snap: Snapshot,
+        hit: list[AddFile],
+        rows: DataFrame | pa.Table | None = None,
+        metadata: dict | None = None,
+        app_txn: dict | None = None,
+    ) -> Commit:
+        """Commit ``op`` over ``snap``: ``rows`` (if any) written as new
+        files replace the files ``hit`` and their deletion vectors. The
+        commit claims version ``snap.version + 1``, so it fails with
+        ``ConcurrentCommitError`` if any writer committed since ``snap``.
+
+        ``rows`` is written as given: a caller writing new values checks
+        them with ``_enforce_constraints`` first, while DELETE's kept rows
+        and OPTIMIZE's compaction hold rows already checked."""
+        adds = [] if rows is None else self._write_data(rows, _snap=snap)
         return self._next_commit(
-            "DELETE", adds, self._retire(hit), base_version=snap.version
+            op, adds, self._retire(hit), metadata=metadata, app_txn=app_txn,
+            base_version=snap.version,
         )
 
     def _rewrite_hit(
@@ -1559,16 +1577,12 @@ class DeltaLiteTable:
         """Merge-on-read DELETE: per hit file, write a roaring deletion
         vector of the matching row indexes and re-add the file with the DV
         attached — no data bytes rewritten (see ``_encode_dvs``)."""
-        schema = snap.schema
-        paths = [self._data_url(f.path) for f in hit]
-        df = self.spark.read.schema(schema).parquet(*paths)
-        matches = df.where(F.expr(predicate_sql)).select(
-            _fp_norm(F.col("_metadata.file_path")).alias("__sfs_fp"),
-            F.col("_metadata.row_index").alias("__sfs_pos"),
+        matches = (
+            self._live_rows(hit, snap.schema)
+            .where(F.expr(predicate_sql))
+            .select("__sfs_fp", "__sfs_pos")
         )
         adds, removes = self._encode_dvs(hit, matches)
-        if not adds and not removes:
-            return self._next_commit("DELETE", [], [], base_version=snap.version)
         return self._next_commit("DELETE", adds, removes, base_version=snap.version)
 
     def _mor_update(
@@ -1577,7 +1591,6 @@ class DeltaLiteTable:
         hit: list[AddFile],
         set_exprs: dict[str, str],
         predicate_sql: str | None,
-        schema: T.StructType,
     ) -> Commit:
         """Merge-on-read UPDATE: DV-delete the matching rows in place and
         append NEW files holding their updated versions — row-level
@@ -1586,23 +1599,11 @@ class DeltaLiteTable:
 
         One commit carries both halves (re-adds with DVs + appended
         files), so readers see the update atomically."""
-        paths = [self._data_url(f.path) for f in hit]
-        raw = self.spark.read.schema(schema).parquet(*paths)
+        schema = snap.schema
         cond = F.expr(predicate_sql) if predicate_sql else F.lit(True)
         # live matching rows only: DV-dead rows must neither re-update nor
         # resurrect through the appended copies
-        matched = raw.where(cond).select(
-            "*",
-            _fp_norm(F.col("_metadata.file_path")).alias("__sfs_fp"),
-            F.col("_metadata.row_index").alias("__sfs_pos"),
-        )
-        dv_files = [f for f in hit if f.dv]
-        if dv_files:
-            pairs = self._dv_pairs_df(dv_files)
-            matched = matched.join(
-                F.broadcast(pairs), ["__sfs_fp", "__sfs_pos"], "left_anti"
-            )
-        matched = matched.persist()
+        matched = self._live_rows(hit, schema).where(cond).persist()
         updated = matched.select(
             *[
                 (
@@ -1620,8 +1621,6 @@ class DeltaLiteTable:
             hit, matched.select("__sfs_fp", "__sfs_pos")
         )
         matched.unpersist()
-        if not new_adds and not dv_adds and not removes:
-            return self._next_commit("UPDATE", [], [], base_version=snap.version)
         return self._next_commit(
             "UPDATE", dv_adds + new_adds, removes, base_version=snap.version
         )
@@ -1658,13 +1657,7 @@ class DeltaLiteTable:
         except Exception as e:  # noqa: BLE001 — surface as engine error
             raise DeltaLiteError(f"invalid column type {dtype!r}: {e}") from None
         new_ddl = snap.schema_ddl + f", {name} {dtype}"
-        return self._next_commit(
-            "ADD COLUMN",
-            [],
-            [],
-            metadata={"schema_ddl": new_ddl, "properties": snap.properties},
-            base_version=snap.version,
-        )
+        return self._alter("ADD COLUMN", snap, new_ddl, snap.properties)
 
     def drop_column(self, name: str) -> Commit:
         """ALTER TABLE DROP COLUMN — metadata-only: the column leaves the
@@ -1708,12 +1701,15 @@ class DeltaLiteTable:
         props["dropped_columns"] = list(
             (snap.properties.get("dropped_columns") or [])
         ) + [name]
-        return self._next_commit(
-            "DROP COLUMN",
-            [],
-            [],
-            metadata={"schema_ddl": new_ddl, "properties": props},
-            base_version=snap.version,
+        return self._alter("DROP COLUMN", snap, new_ddl, props)
+
+    def _alter(
+        self, op: str, snap: Snapshot, schema_ddl: str, properties: dict
+    ) -> Commit:
+        """A metadata-only commit of ``op`` over ``snap``: the table's
+        schema and properties become these, its files stay."""
+        return self._rewrite(
+            op, snap, [], metadata={"schema_ddl": schema_ddl, "properties": properties}
         )
 
     # ------------------------------------------------- version diff (CDC)
@@ -1835,13 +1831,7 @@ class DeltaLiteTable:
                 )
         cons[name] = expr_sql
         props = dict(snap.properties, constraints=cons)
-        return self._next_commit(
-            "ADD CONSTRAINT",
-            [],
-            [],
-            metadata={"schema_ddl": snap.schema_ddl, "properties": props},
-            base_version=snap.version,
-        )
+        return self._alter("ADD CONSTRAINT", snap, snap.schema_ddl, props)
 
     def drop_constraint(self, name: str) -> Commit:
         snap = self.snapshot()
@@ -1850,13 +1840,7 @@ class DeltaLiteTable:
             raise DeltaLiteError(f"no such constraint {name!r}")
         del cons[name]
         props = dict(snap.properties, constraints=cons)
-        return self._next_commit(
-            "DROP CONSTRAINT",
-            [],
-            [],
-            metadata={"schema_ddl": snap.schema_ddl, "properties": props},
-            base_version=snap.version,
-        )
+        return self._alter("DROP CONSTRAINT", snap, snap.schema_ddl, props)
 
     def _enforce_constraints(
         self, df: DataFrame | pa.Table, _snap: Snapshot | None = None
@@ -1901,9 +1885,7 @@ class DeltaLiteTable:
     def truncate(self) -> Commit:
         """A14: new commit removing every file."""
         snap = self.snapshot()
-        return self._next_commit(
-            "TRUNCATE", [], self._retire(snap.files), base_version=snap.version
-        )
+        return self._rewrite("TRUNCATE", snap, snap.files)
 
     def restore(
         self, version: int | None = None, timestamp: str | None = None
@@ -1979,7 +1961,7 @@ class DeltaLiteTable:
         hit: list[AddFile],
         rows: list,
         pk_cols: list[str],
-        snap: Snapshot | None = None,
+        snap: Snapshot,
     ) -> list[AddFile]:
         """Per-file PK-membership pruning (reference get_prune_map,
         sync/utils.rs:321+, engaged by planner.rs:612 above the row
@@ -2027,50 +2009,18 @@ class DeltaLiteTable:
                 )
             except (TypeError, UnicodeDecodeError):
                 vals[c] = []  # unorderable type: skip this column's probe
-        # bloom probe prep: positions per change value, None when any
-        # value is not bit-stably normalizable (conservative skip) or the
-        # column's type family differs from what the bitmap hashed
-        m_bits = BLOOM_BITS_DEFAULT
-        col_fam: dict[str, str | None] = {}
-        if snap is not None:
-            m_bits = int(snap.properties.get("bloom_bits", BLOOM_BITS_DEFAULT))
-            _INT_TYPES = {"tinyint", "smallint", "int", "bigint"}
-            for fld in snap.schema.fields:
-                s_ = fld.dataType.simpleString()
-                col_fam[fld.name] = (
-                    "int" if s_ in _INT_TYPES
-                    else "string" if s_ == "string" else None
-                )
-        any_blooms = any(f.blooms for f in hit)
-        positions: dict[str, list[list[int]] | None] = {}
-        for c in pk_cols:
-            positions[c] = None
-            if not any_blooms or col_fam.get(c) is None:
+        # bloom probe: bit positions per change value of a column, kept
+        # only when every value's text is what the bitmap hashed
+        m_bits = int(snap.properties.get("bloom_bits", BLOOM_BITS_DEFAULT))
+        schema = snap.schema
+        positions: dict[str, list[list[int]]] = {}
+        for c in pk_cols if any(f.blooms for f in hit) else []:
+            if c not in schema.names:
                 continue
-            pos_lists = []
-            ok = True
-            for r in rows:
-                v = r[c]
-                if v is None:
-                    continue  # NULL never equality-matches a stored row
-                fam = (
-                    "int" if isinstance(v, int) and not isinstance(v, bool)
-                    else "string" if isinstance(v, str) else None
-                )
-                s = _bloom_literal(v)
-                if s is None or fam != col_fam.get(c):
-                    ok = False
-                    break
-                pos_lists.append(_bloom_positions(s, m_bits))
-            if ok and pos_lists:
-                positions[c] = pos_lists
-
-        def _any_may_contain(bitmap_b64: str, pos_lists: list[list[int]]) -> bool:
-            bits = base64.b64decode(bitmap_b64)
-            for ps in pos_lists:
-                if all((bits[p // 8] >> (p % 8)) & 1 for p in ps):
-                    return True
-            return False
+            # NULL never equality-matches a stored row
+            keys = [_bloom_key(schema[c].dataType, r[c]) for r in rows if r[c] is not None]
+            if keys and None not in keys:
+                positions[c] = [_bloom_positions(k, m_bits) for k in keys]
 
         kept = []
         for f in hit:
@@ -2085,7 +2035,7 @@ class DeltaLiteTable:
                         break
                 bm = (f.blooms or {}).get(c)
                 ps = positions.get(c)
-                if bm and ps and not _any_may_contain(bm, ps):
+                if bm and ps and not _bloom_may_contain(bm, ps):
                     keep = False
                     break
             if keep:
@@ -2098,7 +2048,6 @@ class DeltaLiteTable:
         pk_cols: list[str],
         delete_col: str | None = None,
         app_txn: dict | None = None,
-        fine_grained_rows: int = FINE_GRAINED_PRUNING_ROWS,
     ) -> Commit:
         """Upsert/delete merge — the apply step of the reference's CDC sync
         (reference src/sync/planner.rs:449-548): prune target files by the
@@ -2135,16 +2084,16 @@ class DeltaLiteTable:
           the Spark join and 20-40 ms on the driver (4-core host);
         * in Spark otherwise (``_merge_in_spark``): a Spark change set
           stays where it is, a bucketed table's files are laid out by
-          Spark's ``xxhash64``, and a larger rewrite is cluster work.
+          Spark's bucket hash, and a larger rewrite is cluster work.
 
         Both paths give the same rows: the join keys compare as Spark's
         do (-0.0 equals 0.0, NaN equals NaN, NULL matches nothing), and
         duplicate change keys fan out the same way.
 
         Scale: only files whose PK stats intersect the change set rewrite;
-        when the coarse min/max hit still covers > ``fine_grained_rows``
-        rows, per-file PK membership is probed so files between change
-        clusters drop too (planner.rs:552-628 two-stage pruning). The
+        when the coarse min/max hit still covers more than
+        ``FINE_GRAINED_PRUNING_ROWS`` rows, per-file PK membership is
+        probed so files between change clusters drop too (planner.rs:552-628 two-stage pruning). The
         Spark join shuffles on the PK, which both sides hash-partition.
         """
         snap = self.snapshot()
@@ -2168,10 +2117,15 @@ class DeltaLiteTable:
             # file belongs to one bucket, and only buckets the change set
             # hashes into can contain matching rows
             bcols, n = spec
-            bucket = F.pmod(
-                F.xxhash64(*[F.col(c).cast(schema[c].dataType) for c in bcols]),
-                F.lit(n),
-            ).cast("int")
+            pins = [
+                _bucket_pin(
+                    schema[c].dataType, F.col(c),
+                    isinstance(changes.schema[c].dataType, T.StringType),
+                )
+                for c in bcols
+            ]
+            if all(p is not None for p in pins):
+                bucket = _bucket_id(pins, n)
         hot = None
         if keys is not None:
             bounds = _local_pk_bounds(keys, pk_cols)
@@ -2227,8 +2181,8 @@ class DeltaLiteTable:
         hit = self._prune(snap, " AND ".join(parts) if parts else None)
         if hit and hot is not None:
             hit = [f for f in hit if f.bucket is None or f.bucket in hot]
-        if hit and sum(f.rows for f in hit) > fine_grained_rows:
-            hit = self._fine_prune(hit, pk_rows(), pk_cols, snap=snap)
+        if hit and sum(f.rows for f in hit) > FINE_GRAINED_PRUNING_ROWS:
+            hit = self._fine_prune(hit, pk_rows(), pk_cols, snap)
 
         if (
             changes is None
@@ -2240,9 +2194,6 @@ class DeltaLiteTable:
             if changes is None:
                 changes, _ = _local_changes(self.spark, arrow, schema, delete_col)
             result = self._merge_in_spark(hit, changes, schema, pk_cols, delete_col)
-        adds = self._write_data(
-            self._enforce_constraints(result, _snap=snap), _snap=snap
-        )
         # record the merge PK as a table property on first merge (enables
         # diff()'s default key and documents the table's identity column
         # set); never overwrite an explicit WITH ('merge_pk' ...) choice
@@ -2252,13 +2203,9 @@ class DeltaLiteTable:
                 "schema_ddl": snap.schema_ddl,
                 "properties": dict(snap.properties, merge_pk=",".join(pk_cols)),
             }
-        return self._next_commit(
-            "MERGE",
-            adds,
-            self._retire(hit),
-            metadata=meta,
-            app_txn=app_txn,
-            base_version=snap.version,
+        return self._rewrite(
+            "MERGE", snap, hit, self._enforce_constraints(result, _snap=snap),
+            meta, app_txn,
         )
 
     def _merge_in_spark(
@@ -2408,8 +2355,11 @@ class DeltaLiteTable:
 
     ZORDER_BITS = 8
 
-    def _zorder_column(self, df: DataFrame, cols: list[str]):
-        """Interleaved-bit z-value over ``cols`` as a pure JVM expression.
+    def _zorder(self, df: DataFrame, cols: list[str], n_out: int) -> DataFrame:
+        """``df`` range-partitioned into ``n_out`` partitions on the
+        interleaved-bit z-value over ``cols`` and sorted within each (a
+        range shuffle, no global sort), so each written file's min/max is
+        tight on every one of ``cols``.
 
         Each column is scaled to an 8-bit bucket by linear min/max (strings
         through their first 4 bytes big-endian, which preserves lexicographic
@@ -2460,7 +2410,7 @@ class DeltaLiteTable:
                 z = z + F.shiftleft(
                     F.shiftright(b, bit).bitwiseAND(F.lit(1)), bit * k + j
                 )
-        return z
+        return df.repartitionByRange(n_out, z).sortWithinPartitions(z)
 
     def optimize(
         self,
@@ -2485,87 +2435,51 @@ class DeltaLiteTable:
         gives exact point-lookup pruning on the bucket key, z-order gives
         range pruning on several keys at once.
         """
+        snap = self.snapshot()
         if zorder_by:
             if predicate_sql:
                 raise DeltaLiteError(
                     "OPTIMIZE WHERE cannot combine with ZORDER BY "
                     "(z-order is a whole-table layout)"
                 )
-            return self._optimize_zorder(target_rows, zorder_by)
-        snap = self.snapshot()
-        candidates = snap.files
-        if predicate_sql:
-            # scoped compaction (Delta's OPTIMIZE ... WHERE, generalized
-            # from partition columns to footer-stats pruning): only files
-            # the predicate can touch participate; rewriting a file never
-            # changes its content, so scoping is always safe
-            from .pruning import prune_files
+            if snap.bucket_spec is not None:
+                raise DeltaLiteError(
+                    "z-order and hash bucketing are mutually exclusive layouts"
+                )
+            missing = [c for c in zorder_by if c not in snap.schema.names]
+            if missing:
+                raise DeltaLiteError(f"ZORDER BY column(s) not in table: {missing}")
+            files, cols = snap.files, zorder_by
+            metadata = {
+                "properties": dict(snap.properties, zorder_by=",".join(zorder_by))
+            }
+        else:
+            files = snap.files
+            if predicate_sql:
+                # scoped compaction (Delta's OPTIMIZE ... WHERE, generalized
+                # from partition columns to footer-stats pruning): only files
+                # the predicate can touch participate; rewriting a file never
+                # changes its content, so scoping is always safe
+                from .pruning import prune_files
 
-            candidates = prune_files(candidates, predicate_sql)
-        # MoR-deleted files always qualify: compaction is what folds their
-        # deletion vectors back into clean data files
-        small = [
-            f for f in candidates if f.rows < target_rows // 2 or f.dv
-        ]
-        if len(small) <= 1 and not any(f.dv for f in small):
-            return self._next_commit("OPTIMIZE", [], [], base_version=snap.version)
-        schema = snap.schema
-        df = self._scan_files(small, schema)
-        total = sum(f.rows for f in small)
-        n_out = max(1, (total + target_rows - 1) // target_rows)
-        zcols = snap.properties.get("zorder_by")
-        if zcols:
+                files = prune_files(files, predicate_sql)
+            # MoR-deleted files always qualify: compaction is what folds
+            # their deletion vectors back into clean data files
+            files = [f for f in files if f.rows < target_rows // 2 or f.dv]
+            if len(files) == 1 and not files[0].dv:
+                files = []
             # the table was z-ordered: keep the compacted files clustered
             # too (only the small files are rewritten, so this stays a
             # job over the compaction subset, not the whole table)
+            zcols = snap.properties.get("zorder_by") or []
             cols = zcols.split(",") if isinstance(zcols, str) else list(zcols)
-            z = self._zorder_column(df, cols)
-            df = (
-                df.withColumn("__sfs_z", z)
-                .repartitionByRange(n_out, "__sfs_z")
-                .sortWithinPartitions("__sfs_z")
-                .drop("__sfs_z")
-            )
-        else:
-            df = df.coalesce(n_out)
-        adds = self._write_data(df)
-        return self._next_commit(
-            "OPTIMIZE", adds, self._retire(small), base_version=snap.version
-        )
-
-    def _optimize_zorder(self, target_rows: int, zorder_by: list[str]) -> Commit:
-        snap = self.snapshot()
-        if snap.bucket_spec is not None:
-            raise DeltaLiteError(
-                "z-order and hash bucketing are mutually exclusive layouts"
-            )
-        schema = snap.schema
-        names = {f.name for f in schema.fields}
-        missing = [c for c in zorder_by if c not in names]
-        if missing:
-            raise DeltaLiteError(f"ZORDER BY column(s) not in table: {missing}")
-        if not snap.files:
-            return self._next_commit("OPTIMIZE", [], [], base_version=snap.version)
-        df = self._scan_files(snap.files, schema)
-        z = self._zorder_column(df, zorder_by)
-        total = sum(f.rows for f in snap.files)
-        n_out = max(1, (total + target_rows - 1) // target_rows)
-        clustered = (
-            df.withColumn("__sfs_z", z)
-            .repartitionByRange(n_out, "__sfs_z")
-            .sortWithinPartitions("__sfs_z")
-            .drop("__sfs_z")
-        )
-        adds = self._write_data(clustered)
-        return self._next_commit(
-            "OPTIMIZE",
-            adds,
-            self._retire(snap.files),
-            metadata={
-                "properties": dict(snap.properties, zorder_by=",".join(zorder_by))
-            },
-            base_version=snap.version,
-        )
+            metadata = None
+        if not files:
+            return self._rewrite("OPTIMIZE", snap, [])
+        df = self._scan_files(files, snap.schema)
+        n_out = max(1, (sum(f.rows for f in files) + target_rows - 1) // target_rows)
+        df = self._zorder(df, cols, n_out) if cols else df.coalesce(n_out)
+        return self._rewrite("OPTIMIZE", snap, files, df, metadata)
 
     def vacuum(
         self, retention_ms: int = 0, orphan_grace_ms: int | None = None

@@ -212,6 +212,10 @@ def parse_predicate(sql: str):
 
 # ---------------------------------------------------------------- evaluation
 
+_ISO_DAY = re.compile(r"^\d{4}-\d{2}-\d{2}")
+_ISO_LITERAL = re.compile(r"^\d{4}-\d{2}-\d{2}([ T]\d{2}:\d{2}:\d{2}(\.\d+)?)?$")
+
+
 def _coerce(stat_val: Any, lit: Any):
     """Best-effort comparable pair; raises on incomparable types."""
     if isinstance(stat_val, bool) or isinstance(lit, bool):
@@ -221,6 +225,14 @@ def _coerce(stat_val: Any, lit: Any):
     if isinstance(stat_val, (int, float)) and isinstance(lit, (int, float)):
         return float(stat_val), float(lit)
     if isinstance(stat_val, str) and isinstance(lit, str):
+        if _ISO_DAY.match(stat_val) and not (
+            _ISO_LITERAL.match(lit) and (len(stat_val) > 10 or len(lit) == 10)
+        ):
+            # a DATE or TIMESTAMP column (its stats are ISO strings) casts
+            # a string literal: '2024-1-5' and '2024-01-05 10:00:00' both
+            # equal DATE'2024-01-05', which string order cannot see. Only a
+            # canonical literal, with no time against a day, compares.
+            raise TypeError
         # timestamps surface as isoformat strings; normalize the separator
         # so 'YYYY-MM-DDTHH:..' and 'YYYY-MM-DD HH:..' compare correctly
         def norm(s: str) -> str:

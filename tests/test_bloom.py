@@ -34,8 +34,8 @@ class TestBloomPrimitives:
         for p in _bloom_positions("present", m):
             bits[p // 8] |= 1 << (p % 8)
         b64 = base64.b64encode(bytes(bits)).decode()
-        assert _bloom_may_contain(b64, "present", m)
-        assert not _bloom_may_contain(b64, "absent-value", m)
+        assert _bloom_may_contain(b64, [_bloom_positions("present", m)])
+        assert not _bloom_may_contain(b64, [_bloom_positions("absent-value", m)])
 
 
 def _md5(i: int) -> str:
@@ -159,15 +159,16 @@ class TestBloomMergePruning:
             ctx.table_root(ctx.catalog.get_table("default", "public", name)),
         )
 
-    def test_merge_rewrites_fewer_files_with_blooms(self, ctx):
+    def test_merge_rewrites_fewer_files_with_blooms(self, ctx, monkeypatch):
         tb = self._twin(ctx, "msb", bloomed=True)
         tp = self._twin(ctx, "msp", bloomed=False)
         changes = ctx.spark.createDataFrame(
             [(4, "upd"), (10, "upd"), (42, "upd")], "k bigint, v string"
         )  # all EVEN ids: live in one file only
         n_files = len(tp.snapshot().files)
-        cb = tb.merge(changes, ["k"], fine_grained_rows=0)
-        cp = tp.merge(changes, ["k"], fine_grained_rows=0)
+        monkeypatch.setattr(deltalite, "FINE_GRAINED_PRUNING_ROWS", 0)
+        cb = tb.merge(changes, ["k"])
+        cp = tp.merge(changes, ["k"])
         # stats alone cannot separate the interleaved files (every file
         # spans the full range, so ALL rewrite); blooms drop the files
         # that provably lack every change key
@@ -186,24 +187,26 @@ class TestBloomMergePruning:
             ).collect()[0]["n"]
             assert n == 1000
 
-    def test_merge_bloom_insert_only_changeset_skips_all_files(self, ctx):
+    def test_merge_bloom_insert_only_changeset_skips_all_files(self, ctx, monkeypatch):
         tb = self._twin(ctx, "msi", bloomed=True)
         changes = ctx.spark.createDataFrame(
             [(5000, "new"), (5002, "new")], "k bigint, v string"
         )  # outside every bloom AND every stats range
-        c = tb.merge(changes, ["k"], fine_grained_rows=0)
+        monkeypatch.setattr(deltalite, "FINE_GRAINED_PRUNING_ROWS", 0)
+        c = tb.merge(changes, ["k"])
         assert len(c.removes) == 0  # pure insert: nothing rewrites
         n = ctx.execute("SELECT COUNT(*) AS n FROM msi").collect()[0]["n"]
         assert n == 1002
 
-    def test_merge_bloom_delete_path_correct(self, ctx):
+    def test_merge_bloom_delete_path_correct(self, ctx, monkeypatch):
         tb = self._twin(ctx, "msd", bloomed=True)
         changes = ctx.spark.createDataFrame(
             [(4, None, True), (7, None, True)],
             "k bigint, v string, __del boolean",
         )
         n_files = len(tb.snapshot().files)
-        c = tb.merge(changes, ["k"], delete_col="__del", fine_grained_rows=0)
+        monkeypatch.setattr(deltalite, "FINE_GRAINED_PRUNING_ROWS", 0)
+        c = tb.merge(changes, ["k"], delete_col="__del")
         # one even + one odd key: only their bloom-hit files rewrite
         # (strict < is layout-dependent; the pruning claim is gated by
         # test_merge_rewrites_fewer_files_with_blooms)

@@ -119,6 +119,63 @@ class TestVersionMirror:
         assert read == []
         assert versions(ctx, "t") == [0, 1, 2, 3, 4]
 
+    def test_sql_merge_records_its_version(self, ctx):
+        """SQL MERGE committed a version that system.table_versions left
+        out until the next recorded write."""
+        ctx.execute("CREATE TABLE m (k bigint, v string)")
+        ctx.execute("INSERT INTO m VALUES (1, 'a'), (2, 'b')")
+        ctx.execute(
+            "MERGE INTO m t USING (SELECT * FROM VALUES (2, 'B'), (3, 'c') "
+            "AS s(k, v)) s ON t.k = s.k "
+            "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+        )
+        assert versions(ctx, "m") == [0, 1, 2]
+        ops = ctx.execute(
+            "SELECT operation FROM system.table_versions "
+            "WHERE table_name = 'm' AND version = 2"
+        ).collect()
+        assert [r[0] for r in ops] == ["MERGE"]
+
+
+class TestLostRace:
+    """A write statement that loses the commit race re-plans against the
+    winner's version and commits on the retry; both versions are
+    recorded."""
+
+    @pytest.fixture()
+    def race_once(self, monkeypatch):
+        """The next commit attempt finds its version taken by another
+        writer's (empty) INSERT."""
+        from seafowl_spark.engine import deltalite as dl
+
+        real = dl.DeltaLiteTable._write_commit
+        armed = {"on": False}
+
+        def racing(self_t, commit):
+            if armed["on"]:
+                armed["on"] = False
+                real(self_t, dl.Commit(commit.version, commit.timestamp_ms, "INSERT"))
+            return real(self_t, commit)
+
+        monkeypatch.setattr(dl.DeltaLiteTable, "_write_commit", racing)
+        return armed
+
+    @pytest.mark.parametrize("sql, op", [
+        ("TRUNCATE r", "TRUNCATE"),
+        ("ALTER TABLE r ADD COLUMN w bigint", "ADD COLUMN"),
+        ("OPTIMIZE TABLE r", "OPTIMIZE"),
+    ])
+    def test_statement_commits_on_retry(self, ctx, race_once, sql, op):
+        ctx.execute("CREATE TABLE r (k bigint)")
+        ctx.execute("INSERT INTO r VALUES (1)")
+        ctx.execute("INSERT INTO r VALUES (2)")
+        race_once["on"] = True
+        ctx.execute(sql)
+        assert not race_once["on"]
+        t = ctx.delta_table("r")
+        assert [c.operation for c in t.history()][3:] == ["INSERT", op]
+        assert versions(ctx, "r") == [0, 1, 2, 3, 4]
+
 
 @pytest.mark.parametrize("n", [0, 1, 3])
 def test_record_versions_is_one_transaction(tmp_path, n):

@@ -202,7 +202,7 @@ class TestVacuumOrphanGrace:
 
 
 class TestFinePruneTemporalPk:
-    def test_date_pk_merge_does_not_crash(self, ctx, tmp_path):
+    def test_date_pk_merge_does_not_crash(self, ctx, tmp_path, monkeypatch):
         """Footer stats store date/timestamp bounds as ISO strings; the
         fine-prune bisect used to compare datetime objects against them
         and abort the merge with TypeError."""
@@ -220,8 +220,9 @@ class TestFinePruneTemporalPk:
         ch = ctx.spark.createDataFrame(
             [(datetime.date(2024, 1, 2), 200)], "d date, v bigint"
         )
-        # fine_grained_rows=0 forces the fine-prune probe
-        t.merge(ch, ["d"], fine_grained_rows=0)
+        # a threshold of 0 forces the fine-prune probe
+        monkeypatch.setattr("seafowl_spark.engine.deltalite.FINE_GRAINED_PRUNING_ROWS", 0)
+        t.merge(ch, ["d"])
         got = {
             (r["d"], r["v"]) for r in t.to_df().collect()
         }

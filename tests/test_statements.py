@@ -168,6 +168,18 @@ class TestDML:
         out = ctx.execute("SELECT k, v FROM p ORDER BY k")
         assert rows(out) == [(1, "a"), (2, "b"), (100, "x"), (200, "Z")]
 
+    def test_update_by_date_spellings_rewrites_the_matching_file(self, ctx):
+        """A DATE column equals a string literal after casting it, so
+        '2024-1-5' and '2024-01-05 10:00:00' both match DATE'2024-01-05';
+        stats pruning compared the text and skipped the file holding it."""
+        ctx.execute("CREATE TABLE pd (d date, v bigint)")
+        ctx.execute("INSERT INTO pd VALUES (DATE'2024-01-05', 1)")
+        ctx.execute("INSERT INTO pd VALUES (DATE'2024-01-06', 2)")
+        for lit in ("2024-1-5", "2024-01-05 10:00:00"):
+            ctx.execute(f"UPDATE pd SET v = v + 10 WHERE d = '{lit}'")
+        out = ctx.execute("SELECT d, v FROM pd ORDER BY d").collect()
+        assert [(str(r.d), r.v) for r in out] == [("2024-01-05", 21), ("2024-01-06", 2)]
+
 
 # ----------------------------------------------------------------- queries
 

@@ -620,7 +620,7 @@ class TestDriverMergeFacts:
 
 
 class TestFineGrainedPruning:
-    def test_file_between_clusters_dropped(self, ctx):
+    def test_file_between_clusters_dropped(self, ctx, monkeypatch):
         """Coarse [min,max] keeps a file that sits between two change
         clusters; fine-grained PK membership drops it (reference
         planner.rs:552-628 two-stage pruning), with identical results."""
@@ -638,7 +638,8 @@ class TestFineGrainedPruning:
             "pk bigint, v string, __delete__ boolean",
         )
         # force the fine-grained stage (threshold 0)
-        commit = t.merge(changes, ["pk"], delete_col="__delete__", fine_grained_rows=0)
+        monkeypatch.setattr("seafowl_spark.engine.deltalite.FINE_GRAINED_PRUNING_ROWS", 0)
+        commit = t.merge(changes, ["pk"], delete_col="__delete__")
         # coarse range [1,95] would rewrite all 3 files; fine-grained
         # drops the middle one (50 is not in the change set)
         assert len(commit.removes) == 2
@@ -647,7 +648,7 @@ class TestFineGrainedPruning:
             (1, "LO"), (5, "lo2"), (50, "mid"), (95, "HI"), (100, "hi2"),
         ]
 
-    def test_fine_grained_keeps_results_identical(self, ctx):
+    def test_fine_grained_keeps_results_identical(self, ctx, monkeypatch):
         ctx.execute("CREATE TABLE fg2 (pk bigint, v double)")
         ctx.execute("INSERT INTO fg2 SELECT id, id * 1.0 FROM range(0, 200)")
         root = ctx.table_root(ctx.catalog.get_table("default", "public", "fg2"))
@@ -658,7 +659,8 @@ class TestFineGrainedPruning:
             [(10, -1.0, False), (190, -2.0, False), (500, -3.0, False)],
             "pk bigint, v double, __delete__ boolean",
         )
-        t.merge(changes, ["pk"], delete_col="__delete__", fine_grained_rows=0)
+        monkeypatch.setattr("seafowl_spark.engine.deltalite.FINE_GRAINED_PRUNING_ROWS", 0)
+        t.merge(changes, ["pk"], delete_col="__delete__")
         out = rows(ctx.execute("SELECT pk, v FROM fg2 WHERE pk IN (10, 190, 500)"))
         assert out == [(10, -1.0), (190, -2.0), (500, -3.0)]
 
