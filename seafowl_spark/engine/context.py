@@ -32,7 +32,7 @@ from hashlib import sha256
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
 
-from . import bindings, parser
+from . import bindings, parser, results
 from .catalog import (
     DEFAULT_DB,
     DEFAULT_SCHEMA,
@@ -42,7 +42,7 @@ from .catalog import (
     CatalogError,
     TableEntry,
 )
-from .deltalite import DeltaLiteTable, DeltaLiteError, Snapshot
+from .deltalite import DeltaLiteTable, DeltaLiteError, Snapshot, held_bytes
 from .types import columns_to_schema, to_ddl
 
 
@@ -206,6 +206,9 @@ class SeafowlContext:
         # (entry, snapshot) by uuid of what the last reload bound: the
         # statement's reads, which scan pruning serves from
         self._bound_reads: dict[str, tuple[TableEntry, Snapshot]] = {}
+        # whether the last reload bound every table the statement reads
+        # on the driver, and it reads nothing else
+        self._driver_only = False
         # python UDFs run arbitrary source via exec(); embedders get them by
         # default, network frontends must opt in explicitly (tools/serve.py)
         self.allow_python_udfs = allow_python_udfs
@@ -595,6 +598,14 @@ class SeafowlContext:
         # outside it are stale
         visible: set[str] = set()
         mapping = reads.mapping
+        keys = {
+            u: ("table", os.path.abspath(self.table_root(e)), snap.version)
+            for u, (e, snap) in reads.tables.items()
+            if (snap.properties or {}).get(VIEW_PROP) is None
+        }
+        # bytes a small table may hold on the driver (DeltaLiteTable.
+        # to_df) without unbinding what this statement reads
+        room = reg.read(keys.values())
         for e, mangled, plain in reads.named:
             names = [n for n in (mangled, plain) if n]
             visible.update(n.lower() for n in names)
@@ -606,11 +617,17 @@ class SeafowlContext:
             if view_sql is not None:
                 deferred_views.append((root, snap.version, view_sql, mangled, plain))
                 continue
-            key = ("table", root, snap.version)
+            key = keys[e.uuid]
             if any(reg.key(n) != key for n in names):
-                df = DeltaLiteTable(self.spark, root).to_df(_snap=snap)
+                df = DeltaLiteTable(self.spark, root).to_df(_snap=snap, _room=room)
+                room -= held_bytes(df) or 0
                 for n in names:
                     reg.bind(n, key, df)
+        self._driver_only = (
+            bool(keys)
+            and not (reads.system or reads.staging or reads.indexes)
+            and all(reg.held(k) for k in keys.values())
+        )
         for name, df in self.staging.items():
             reg.bind(name, ("staging", id(df)), df)
             visible.add(name.lower())
@@ -995,7 +1012,10 @@ class SeafowlContext:
             rewritten = self._rewrite_names(sql, mapping)
             self._ensure_lazy_views(rewritten)
             rewritten, scan_aliases = self._maybe_prune_scans(rewritten)
-            return self.spark.sql(rewritten)
+            df = self.spark.sql(rewritten)
+            if self._driver_only and not (travels or si_aliases or scan_aliases):
+                results.driver_held(df)
+            return df
         finally:
             for alias in [a for a, _, _ in travels] + si_aliases + scan_aliases:
                 self.spark.catalog.dropTempView(alias)

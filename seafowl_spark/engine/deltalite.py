@@ -34,8 +34,9 @@ import re
 import shutil
 import time
 import uuid
+import weakref
 from dataclasses import dataclass, field
-from functools import cached_property
+from functools import cached_property, lru_cache
 from typing import Any
 
 import numpy as np
@@ -174,6 +175,58 @@ def _local_plan(df: DataFrame):
     return plan if plan.getClass().getSimpleName() == "LocalRelation" else None
 
 
+# the Arrow bytes of each frame ``DeltaLiteTable.to_df`` held on the driver
+_HELD: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def held_bytes(df: DataFrame) -> int | None:
+    """The Arrow bytes ``df`` holds on the driver when ``DeltaLiteTable.
+    to_df`` built it from rows it read there, else None."""
+    return _HELD.get(df)
+
+
+# the operators Spark's ConvertToLocalRelation folds over a LocalRelation
+_FOLDED = frozenset({"Project", "Filter", "GlobalLimit", "LocalLimit"})
+
+
+def driver_rows(df: DataFrame) -> pa.Table | None:
+    """The rows of a read of driver-held tables (``held_bytes``),
+    collected on the driver by ``_local_rows`` with no Spark job; None
+    when Spark must run the read.
+
+    Such a table is bound as a one-partition coalesce of a LocalRelation.
+    Spark folds a filter or a column pruning below the coalesce, so a
+    point read optimizes to ``Repartition(1, shuffle=false)`` over a
+    LocalRelation; a computed column or a LIMIT stays above it. When only
+    operators Spark folds (``_FOLDED``) stand above the coalesce, the plan
+    is rebuilt without it and optimized again, which folds them too: Spark
+    still evaluates every expression, over the one partition (index 0)
+    the coalesce would have run them in. Any other plan (an aggregate, a
+    sort, a join, a Python UDF) keeps its job."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    chain = []
+    while plan.getClass().getSimpleName() in _FOLDED:
+        chain.append(plan)
+        plan = plan.child()
+    kind = plan.getClass().getSimpleName()
+    if kind == "Repartition" and plan.numPartitions() == 1 and not plan.shuffle():
+        plan = plan.child()
+        if plan.getClass().getSimpleName() != "LocalRelation":
+            return None
+        spark = df.sparkSession
+        for node in reversed(chain):
+            plan = node.withNewChildren(spark._jvm.PythonUtils.toSeq([plan]))
+        df = DataFrame(
+            spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+                spark._jsparkSession, plan
+            ),
+            spark,
+        )
+    elif kind != "LocalRelation" or chain:
+        return None
+    return _local_rows(df)
+
+
 def _local_rows(df: DataFrame) -> pa.Table | None:
     """The rows of ``df`` as an Arrow table typed by its schema, when its
     optimized plan is a LocalRelation of at most ``DRIVER_WRITE_MAX_ROWS``
@@ -197,6 +250,18 @@ def _local_rows(df: DataFrame) -> pa.Table | None:
     # nullable, as Spark's writer leaves every column
     return pa.Table.from_arrays(
         arrays, schema=pa.schema([pa.field(f.name, a.type) for f, a in zip(fields, arrays)])
+    )
+
+
+def _driver_sized(snap: Snapshot, files: list[AddFile]) -> bool:
+    """Whether the driver reads ``files`` of ``snap`` through
+    ``_read_arrow``: the table is unbucketed, ``_carried`` takes every
+    column, and the files hold at most ``DRIVER_WRITE_MAX_ROWS`` rows,
+    deletion-vector rows included (``_read_arrow`` reads those too)."""
+    return (
+        snap.bucket_spec is None
+        and sum(f.rows for f in files) <= DRIVER_WRITE_MAX_ROWS
+        and all(_carried(f.dataType) for f in snap.schema.fields)
     )
 
 
@@ -364,10 +429,9 @@ class Snapshot:
 
     @cached_property
     def schema(self) -> T.StructType:
-        # parsed once (a py4j round trip); shared like ``files`` and
-        # ``properties``, so callers copy before changing it
-        ddl = self.schema_ddl
-        return T.StructType.fromDDL(ddl)
+        # shared like ``files`` and ``properties``, so callers copy before
+        # changing it
+        return _parse_ddl(self.schema_ddl)
 
     @property
     def num_rows(self) -> int:
@@ -385,6 +449,15 @@ class Snapshot:
             return None
         cols = [c.strip() for c in by.split(",")] if isinstance(by, str) else list(by)
         return cols, int(n)
+
+
+@lru_cache(maxsize=256)
+def _parse_ddl(ddl: str) -> T.StructType:
+    """The schema a DDL string declares, parsed once per string: a parse is
+    a py4j round trip of about 1.3 ms, which every new version of an
+    unchanged schema would pay again. Shared, so callers copy before
+    changing it."""
+    return T.StructType.fromDDL(ddl)
 
 
 def _footer_stats(md) -> dict[str, dict[str, Any]]:
@@ -806,11 +879,24 @@ class DeltaLiteTable:
         timestamp: str | None = None,
         predicate_sql: str | None = None,
         _snap: Snapshot | None = None,
+        _room: int | None = None,
     ) -> DataFrame:
         """The rows of the table at a version (latest by default), or of
         the files ``predicate_sql`` may match. A small read is coalesced
         to one partition (``one_partition``), so it plans no exchange and
-        runs one job."""
+        runs one job.
+
+        With ``_room``, the bytes a statement's binding may hold on the
+        driver, a small table is held there (``held_bytes``): when the
+        driver reads its files (``_driver_sized``), ``one_partition``
+        takes them and their Arrow bytes fit in ``_room``, the rows are
+        read by ``_read_arrow`` and bound as a LocalRelation coalesced to
+        one partition. Spark folds a filter, a column pruning or a LIMIT
+        over it while optimizing, so such a read runs no job
+        (``results.fetch``). An aggregate, GROUP BY, DISTINCT or window
+        runs one job, as over the parquet scan: a bare LocalRelation
+        reports unknown partitioning, and AQE would run the exchange Spark
+        plans above it as a second job. Every other read scans parquet."""
         # _snap: the caller already resolved the snapshot (reload_views
         # binds the one its statement's reads resolved, so the frame and
         # the binding key name the same version)
@@ -818,14 +904,25 @@ class DeltaLiteTable:
         schema = snap.schema
         files = self.pruned_files(snap, predicate_sql)
         if not files:
-            return self._empty_df(schema)
+            df = self._empty_df(schema)
+            if _room is not None:
+                _HELD[df] = 0
+            return df
+        one = self.one_partition(files)
+        if _room is not None and one and _driver_sized(snap, files):
+            arrow = self._read_arrow(files, to_arrow_schema(schema))
+            if arrow.nbytes <= _room:
+                df = self.spark.createDataFrame(arrow, schema=schema).coalesce(1)
+                _HELD[df] = arrow.nbytes
+                return df
         df = self._scan_files(files, schema)
-        return df.coalesce(1) if self.one_partition(files) else df
+        return df.coalesce(1) if one else df
 
     def one_partition(self, files: list[AddFile]) -> bool:
         """Whether a read of ``files`` should scan as one partition: there
         are at most ``ONE_PARTITION_MAX_FILES`` of them, holding at most
-        ``ONE_PARTITION_MAX_BYTES``.
+        ``ONE_PARTITION_MAX_BYTES``. The bytes bound also caps the parquet
+        a driver-held binding reads (``to_df``).
 
         A file scan reports unknown partitioning even with one split, so
         Spark plans an exchange under every aggregate, window or DISTINCT
@@ -1352,12 +1449,11 @@ class DeltaLiteTable:
             if pin is None:
                 return None
             pins.append(pin)
+        # over a one-row LocalRelation Spark folds the projection, so it
+        # still hashes with xxhash64 and collect() runs no job
+        one = self.spark.createDataFrame(pa.table({"__sfs_one": [0]}))
         try:
-            row = (
-                self.spark.range(1)
-                .select(*pins, _bucket_id(pins, n))
-                .collect()[0]
-            )
+            row = one.select(*pins, _bucket_id(pins, n)).collect()[0]
         except AnalysisException:
             return None  # no cast from the literal's type (5 for a DATE)
         if any(v is None for v in row[:-1]):
@@ -1482,8 +1578,7 @@ class DeltaLiteTable:
         filter) over the live rows of ``hit``: deletion-vector rows are
         dropped, so a rewrite never resurrects them.
 
-        Hit files of an unbucketed table holding at most
-        ``DRIVER_WRITE_MAX_ROWS`` rows of carried types are bound as a
+        Hit files the driver reads (``_driver_sized``) are bound as a
         LocalRelation from ``_read_arrow``. Spark's optimizer folds the
         projection or filter into a new LocalRelation, so Spark still
         evaluates every expression, and ``_write_data`` writes the result
@@ -1492,11 +1587,7 @@ class DeltaLiteTable:
         not fold (a Python UDF), a larger hit set and a bucketed table scan
         the files in Spark and write with a Spark job."""
         schema = snap.schema
-        if (
-            snap.bucket_spec is None
-            and sum(f.rows for f in hit) <= DRIVER_WRITE_MAX_ROWS
-            and all(_carried(f.dataType) for f in schema.fields)
-        ):
+        if _driver_sized(snap, hit):
             arrow = self._read_arrow(hit, to_arrow_schema(schema))
             out = rows_out(self.spark.createDataFrame(arrow, schema=schema))
             if _local_plan(out) is not None:

@@ -1,8 +1,9 @@
 """One result path for the serving frontends.
 
 A read fetches its whole result in **one Spark job** as Arrow record
-batches (``fetch``); HTTP, pgwire and Flight all fetch through
-``fetch``. HTTP and pgwire then take Python values per batch from
+batches (``fetch``), or in none when Spark folded a read of driver-held
+tables into rows the driver holds; HTTP, pgwire and Flight all fetch
+through ``fetch``. HTTP and pgwire then take Python values per batch from
 ``row_batches``: the same values ``Row`` carries (what ``collect`` gives),
 so the JSON-lines and DataRow bytes do not depend on the fetch path.
 
@@ -21,6 +22,7 @@ from __future__ import annotations
 
 import datetime
 import struct
+import weakref
 from collections.abc import Callable, Iterator
 
 import pyarrow as pa
@@ -28,14 +30,35 @@ from pyspark.errors import PySparkNotImplementedError
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from .deltalite import driver_rows
+
+# results of statements that read nothing but driver-held tables
+_DRIVER_HELD: weakref.WeakSet = weakref.WeakSet()
+
+
+def driver_held(df: DataFrame) -> DataFrame:
+    """Mark ``df``, the result of a statement that read nothing but
+    driver-held tables (``deltalite.held_bytes``), so that ``fetch``
+    looks at its plan; returns ``df``."""
+    _DRIVER_HELD.add(df)
+    return df
+
 
 def fetch(df: DataFrame) -> pa.Table:
-    """The result of ``df``, fetched in one Spark job.
+    """The result of ``df``, fetched in one Spark job, or in none when
+    ``df`` is ``driver_held`` and Spark folded it into rows the driver
+    holds (``deltalite.driver_rows``): a point, filter or LIMIT read of a
+    small table. Only such a marked result looks at its plan, so any other
+    read pays no extra round trip to the JVM.
 
-    This is ``df.toArrow()`` without its final cast to the Python-built
+    The job is ``df.toArrow()`` without its final cast to the Python-built
     Arrow schema: the JVM's batches already carry that schema under the
     engine's UTC session, and the cast rejects a NULL struct whose fields
     are NOT NULL (every NULL variant)."""
+    if df in _DRIVER_HELD:
+        table = driver_rows(df)
+        if table is not None:
+            return table
     return pa.Table.from_batches(df._collect_as_arrow(empty_list_if_zero_records=False))
 
 

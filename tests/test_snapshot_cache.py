@@ -77,6 +77,8 @@ def test_recreate_behind_the_cache(spark, tmp_path):
 
 
 def test_cdc_flush_parses_its_schema_once(ctx, monkeypatch):
+    """The table's DDL is parsed once, before the flushes: each flush's new
+    version of the unchanged schema reuses that parse."""
     ctx.execute("CREATE TABLE s (pk bigint, a varchar, b double)")
     ctx.execute("INSERT INTO s VALUES (1, 'one', 1.0), (2, 'two', 2.0)")
     root = ctx.table_root(ctx.catalog.get_table("default", "public", "s"))
@@ -100,7 +102,7 @@ def test_cdc_flush_parses_its_schema_once(ctx, monkeypatch):
         w.enqueue(root, schema, batch, origin="o1", sequence=seq)
         parses.clear()
         assert w.flush(root)
-        assert len(parses) == 1, parses
+        assert parses == []
     monkeypatch.undo()
     assert rows(ctx.execute("SELECT pk, a FROM s")) == [
         (1, "one"), (2, "two"), (3, "three"), (4, "four"),
