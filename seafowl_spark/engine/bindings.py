@@ -8,8 +8,10 @@ Spark work (building the frame is the caller's, registering it is
 
 * a catalog table: ``("table", root, snapshot version)``;
 * a logical view: ``("view", root, version, rewritten SQL, conf, specs
-  of the functions it names, keys of every name it reads)`` — a view over
-  a view invalidates transitively;
+  of the functions it names, keys of every name it reads)`` — the names
+  and functions come from Spark's parse of its SQL
+  (``parser.parse_query``), so a view over a view invalidates
+  transitively;
 * a staging table: ``("staging", id(frame))``, the frame itself being
   held by the registry while bound;
 * a lazily built system frame or a Flight inline table: a key holding a
@@ -31,47 +33,20 @@ back would be served under a key it no longer holds.
 
 from __future__ import annotations
 
-import re
 import threading
 from functools import cached_property
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from . import parser
 from .deltalite import held_bytes
 
 # key kinds that reload_views owns: a reload unbinds such a name once the
 # catalog it reads no longer shows it
 RELOAD_KINDS = frozenset({"table", "view", "staging", "system"})
 
-_TOKEN = re.compile(r"[A-Za-z0-9_]+")
 _SESSION_ATTR = "_sfs_bindings"
 _CREATE_LOCK = threading.Lock()
-
-
-def referenced_names(sql: str, names: Iterable[str]) -> set[str]:
-    """The lower-cased members of ``names`` that ``sql`` may read.
-
-    A name counts when it equals an identifier token of ``sql`` outside
-    its string literals and comments (``parser.scan_quotes``),
-    case-insensitively (mangled view names and bare search-schema names
-    are single tokens); a name that is not a single token counts when it
-    occurs anywhere in that text. This
-    over-detects on purpose — a column or alias spelled like a table
-    counts too — because a superset only costs a re-expansion, while a
-    missed name serves stale rows. A literal is a value, never a read:
-    ``search_index('t', ...)`` reads are found from the call itself
-    (``SeafowlContext._search_calls``)."""
-    code = " ".join(parser.split_on_string_literals(sql)[::2])
-    tokens = {t.lower() for t in _TOKEN.findall(code)}
-    low = code.lower()
-    out = set()
-    for n in names:
-        nl = n.lower()
-        if nl in tokens or (not _TOKEN.fullmatch(nl) and nl in low):
-            out.add(nl)
-    return out
 
 
 class Bindings:

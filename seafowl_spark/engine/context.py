@@ -18,15 +18,15 @@ before parsing — same effect as the reference's schema providers.
 
 from __future__ import annotations
 
-import base64
+import itertools
 import json
 import os
 import re
 import threading
+import uuid
 from collections import Counter
 from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Any
 from hashlib import sha256
 
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -43,7 +43,7 @@ from .catalog import (
     TableEntry,
 )
 from .deltalite import DeltaLiteTable, DeltaLiteError, Snapshot, held_bytes
-from .types import columns_to_schema, to_ddl
+from .types import columns_to_schema, quote_ident, to_ddl
 
 
 class ExecutionError(Exception):
@@ -100,10 +100,45 @@ _LAZY_NAMES = {
 
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
-# _rewrite_names' case guard: an unqualified double-quoted plain identifier
-_GUARD_PAT = re.compile(
-    r'(?<![A-Za-z0-9_.`])"([A-Za-z_][A-Za-z0-9_]*)"(?![A-Za-z0-9_.`])'
+# what the statements _meta_query answers read (Spark would parse DESCRIBE
+# HISTORY t as column t of a table HISTORY)
+_META_READS = re.compile(
+    r"(?is)\s*(?:explain\s+analyze\s+(?P<q>.+)|(?:describe(?:\s+(?:history|detail"
+    r"|table))?|show\s+(?:columns\s+(?:from|in)|create\s+table))\s+(?P<t>[\w.]+)\s*;?\s*)"
 )
+
+
+def _plain_lower(part: str) -> bool:
+    """Whether a name part reads the same quoted or not."""
+    return bool(_IDENT.fullmatch(part)) and part == part.lower()
+
+
+def _key(parts, quoted) -> tuple:
+    """A relation name as the dialect compares it: a quoted part exactly
+    (unless plain lower case), an unquoted one folded to lower case."""
+    return tuple(
+        (p, True) if q and not _plain_lower(p) else (p.lower(), False)
+        for p, q in zip(parts, quoted)
+    )
+
+
+class NameMap(dict):
+    """``_key`` -> temp-view name of each spelling of a visible relation
+    (``SeafowlContext._name_mapping``); ``cased``: the plain-charset
+    search-schema table names by lower case (the quoted-case guard)."""
+
+    def __init__(self) -> None:
+        super().__init__()
+        self.cased: dict[str, set[str]] = {}
+
+    def add(self, parts, view: str) -> None:
+        """Map each spelling of ``parts``: every part folded, and exact too
+        where it needs quoting. Of two names that fold alike, the one
+        already lower case keeps the folded spelling (PG-style)."""
+        opts = [[(p.lower(), False)] + ([] if _plain_lower(p) else [(p, True)]) for p in parts]
+        for key in itertools.product(*opts):
+            if key not in self or all(p == k for p, (k, exact) in zip(parts, key) if not exact):
+                self[key] = view
 
 
 # One WHERE conjunct that Spark reliably offers to pushFilters AND
@@ -185,7 +220,7 @@ class Reads:
     system: bool = False  # reads a system.* or information_schema.* frame
     staging: bool = False  # reads a staging table (those carry no version)
     # the name resolution it was answered by (SeafowlContext._name_mapping)
-    mapping: dict[str, str] = field(default_factory=dict)
+    mapping: NameMap = field(default_factory=NameMap)
     named: list[tuple[TableEntry, str, str | None]] = field(default_factory=list)
 
 
@@ -220,8 +255,8 @@ class SeafowlContext:
         self.staging_specs: dict[str, tuple[str, str, dict]] = {}
         # system/information_schema names not yet built this reload
         self._lazy_views: dict = {}
-        # _rewrite_names' patterns for the last (search schema, mapping)
-        self._rewrite_cache: tuple | None = None
+        # whether this context's statement holds the ANSI dialect scope
+        self._dialect_depth = 0
         # Statement execution is serialized: the threaded frontends share one
         # context, and view refresh / search-path / catalog writes are shared
         # state. Heavy work stays parallel — execute() only ANALYZES (plans
@@ -238,8 +273,10 @@ class SeafowlContext:
     def table_root(self, entry: TableEntry) -> str:
         return os.path.join(self.data_dir, entry.uuid)
 
-    def _resolve(self, name: str) -> TableEntry:
-        db, schema, table = parser.parse_qualified(name)
+    def _resolve(self, name: str | tuple[str, ...]) -> TableEntry:
+        db, schema, table = (
+            parser.parse_qualified(name) if isinstance(name, str) else parser.qualified(name)
+        )
         db = db or self.database
         if schema == STAGING_SCHEMA:
             raise ExecutionError("staging tables are read-only external tables")
@@ -507,12 +544,13 @@ class SeafowlContext:
             ),
         }
 
-    def reload_views(self, sql: str) -> dict[str, str]:
+    def reload_views(self, sql: str) -> NameMap:
         """Bind what ``sql`` reads to temp views; returns the mapping
-        qualified-name -> view-name used for query rewriting.
+        relation name -> view-name used for query rewriting.
 
-        What it reads is ``_reads(sql)``: the tables it names, and the
-        views it names with whatever they read, transitively. Each of
+        What it reads is ``_reads(sql)``: the relations Spark's parse of
+        it names, and the views among them with whatever they read,
+        transitively. Each of
         those is checked against its table's head on every statement, so
         freshness is the reference's always-fresh reload_schema
         (src/context/mod.rs:89-112), writers in other processes
@@ -532,13 +570,13 @@ class SeafowlContext:
 
     def _name_mapping(
         self, entries: list[TableEntry]
-    ) -> tuple[dict[str, str], list[tuple[TableEntry, str, str | None]]]:
+    ) -> tuple[NameMap, list[tuple[TableEntry, str, str | None]]]:
         """Every spelling a statement may use for a visible relation,
         mapped to its temp-view name, plus each catalog entry's (mangled,
         plain) temp-view names. reload_views binds by it and _reads
-        resolves by it, so the ETag sees exactly the names the rewriter
+        resolves by it, so the ETag sees exactly the names the rewrite
         resolves."""
-        mapping: dict[str, str] = {}
+        mapping = NameMap()
         named: list[tuple[TableEntry, str, str | None]] = []
         ident = _IDENT.fullmatch
         # case-fold sibling groups: when "Foo" and "foo" both exist, only
@@ -548,30 +586,21 @@ class SeafowlContext:
         lower_groups = Counter((x.schema, x.name.lower()) for x in entries)
         for e in entries:
             mangled = _mangle(e.schema, e.name)
-            mapping[f"{e.schema}.{e.name}"] = mangled
-            mapping[f"{e.database}.{e.schema}.{e.name}"] = mangled
-            # ANSI double-quoted reference forms, ONLY for names that need
-            # quoting (the reference dialect writes special-char names as
-            # SELECT ... FROM "new_./-~:schema".t; restricting to these
-            # avoids touching plain double-quoted STRING literals, which
-            # Spark SQL still parses as strings). A plain-charset name
-            # containing UPPERCASE also needs the quoted forms: "Foo"
+            # a name that needs quoting (special characters, such as the
+            # reference's "new_./-~:schema", or UPPERCASE letters: "Foo"
             # and "foo" are distinct case-sensitive identifiers in the
             # dialect, while Spark's temp-view namespace is
-            # case-insensitive — such names get the hash-suffixed mangle
-            # and resolve only via the mapping.
-            s_quoted = not ident(e.schema) or e.schema != e.schema.lower()
-            n_quoted = not ident(e.name) or e.name != e.name.lower()
-            if s_quoted or n_quoted:
-                mapping[f'"{e.schema}"."{e.name}"'] = mangled
-            if s_quoted:
-                mapping[f'"{e.schema}".{e.name}'] = mangled
-            if n_quoted:
-                mapping[f'{e.schema}."{e.name}"'] = mangled
-                if e.schema == self.search_schema:
-                    # unqualified quoted reference resolves against the
+            # case-insensitive) gets the hash-suffixed mangle and resolves
+            # only through its quoted spellings here
+            mapping.add((e.schema, e.name), mangled)
+            mapping.add((e.database, e.schema, e.name), mangled)
+            if e.schema == self.search_schema:
+                if ident(e.name):
+                    mapping.cased.setdefault(e.name.lower(), set()).add(e.name)
+                if not _plain_lower(e.name):
+                    # an unqualified quoted reference resolves against the
                     # search schema, like unquoted names do
-                    mapping[f'"{e.name}"'] = mangled
+                    mapping[((e.name, True),)] = mangled
             plain = (
                 e.name
                 if e.schema == self.search_schema
@@ -584,12 +613,36 @@ class SeafowlContext:
             )
             named.append((e, mangled, plain))
         for name in self.staging:
-            mapping[f"{STAGING_SCHEMA}.{name}"] = name
+            mapping.add((STAGING_SCHEMA, name), name)
         for mangled, (schema, name) in _LAZY_NAMES.items():
-            mapping[f"{schema}.{name}"] = mangled
+            mapping.add((schema, name), mangled)
         return mapping, named
 
-    def _reload_views(self, reg: bindings.Bindings, reads: Reads) -> dict[str, str]:
+    def _target(self, rel: parser.Relation, mapping: NameMap) -> str | None:
+        """The temp-view name ``rel`` reads: its spelling's in ``mapping``,
+        else a one-part name as written (the temp-view lookup folds case),
+        else None (a name Spark resolves itself). A quoted one-part name
+        that only a case variant of a search-schema table matches is an
+        error: quoted identifiers are case-sensitive in the dialect, and
+        with only "Foo" in the catalog "foo" would resolve to it."""
+        view = mapping.get(_key(rel.parts, rel.quoted))
+        if view is not None or len(rel.parts) != 1:
+            return view
+        name = rel.parts[0]
+        variants = mapping.cased.get(name.lower())
+        if rel.quoted[0] and variants and _IDENT.fullmatch(name) and name not in variants:
+            raise ExecutionError(
+                f'relation "{name}" does not exist (quoted identifiers '
+                f"are case-sensitive; did you mean one of "
+                f"{sorted(variants)}?)"
+            )
+        return name
+
+    def _targets(self, q: parser.QueryParse, mapping: NameMap) -> set[str]:
+        """The lower-cased temp-view names the relations of ``q`` read."""
+        return {t.lower() for r in q.relations if (t := self._target(r, mapping))}
+
+    def _reload_views(self, reg: bindings.Bindings, reads: Reads) -> NameMap:
         self._bound_reads = reads.tables
         # logical views bind AFTER every table/staging/system name is in
         # the mapping (their defining queries may reference any of them)
@@ -631,17 +684,10 @@ class SeafowlContext:
         for name, df in self.staging.items():
             reg.bind(name, ("staging", id(df)), df)
             visible.add(name.lower())
-        # system.* / information_schema.* register LAZILY (r14, guide §5/
-        # §1.2): these are driver-built createDataFrames whose rebuild +
-        # re-registration ran on EVERY statement (profiled: 9 frames per
-        # reload, ~26% of q_matview_refresh's statement time) while the
-        # overwhelming majority of statements never read them. The NAMES
-        # are in the rewrite mapping — the rewriter needs them — and the
-        # frames build the first time a statement's rewritten SQL
-        # actually references one (_ensure_lazy_views), i.e. at the same
-        # catalog state a per-statement eager build would have seen
-        # (reload and execution happen inside one statement, nothing
-        # mutates between them).
+        # system.* / information_schema.* frames are driver-built, and
+        # few statements read them: their names are in the mapping, and a
+        # frame builds when a parsed statement reads it
+        # (_ensure_lazy_views), at the catalog state of its reload
         self._lazy_views = dict(_LAZY_NAMES)
         visible.update(self._lazy_views)
         # stale names go BEFORE any view expands: a renamed base table
@@ -661,8 +707,8 @@ class SeafowlContext:
         reads. A view re-analyzes only when its key moved: its own
         (root, version), its rewritten SQL, the session conf that analysis
         captures, the definitions of the functions it names, or the key of
-        any name it reads (bindings.referenced_names over the rewritten
-        SQL — a view over a view invalidates transitively). A view reading
+        any name it reads (the relations of Spark's parse of its SQL — a
+        view over a view invalidates transitively). A view reading
         a system table always re-analyzes (those frames rebuild per
         statement). Views that fail to expand are unbound and drop out of
         the mapping, so only statements REFERENCING them fail."""
@@ -675,10 +721,10 @@ class SeafowlContext:
         unfinished = {
             n.lower() for *_, m, p in deferred_views for n in (m, p) if n
         }
-        # over-detected dependencies can form a cycle (a column spelled
-        # like another view): once no view can progress, the remaining
-        # views are unbound and tried regardless of order, so none can
-        # expand against a stale binding
+        # dependencies can form a cycle (a CTE spelled like another view
+        # counts as a read of it): once no view can progress, the
+        # remaining views are unbound and tried regardless of order, so
+        # none can expand against a stale binding
         forced = False
         todo = deferred_views
         while todo:
@@ -690,12 +736,12 @@ class SeafowlContext:
                 own = {n.lower() for n in names}
                 try:
                     view_rw = self._rewrite_names(view_sql, mapping)
-                except ExecutionError:
+                    vq = self._parse(view_sql)
+                except Exception:  # noqa: BLE001 — fails the statements reading it
                     still.append(item)
                     continue
                 deps = sorted(
-                    bindings.referenced_names(view_rw, reg.names() | unfinished)
-                    - own
+                    self._targets(vq, mapping) & (reg.names() | unfinished) - own
                 )
                 if not forced and unfinished.intersection(deps):
                     blocked = True
@@ -703,11 +749,7 @@ class SeafowlContext:
                     continue
                 key = (
                     "view", root, version, view_rw, conf,
-                    tuple(
-                        (n, funcs[n]) for n in sorted(
-                            bindings.referenced_names(view_rw, funcs)
-                        )
-                    ),
+                    tuple((n, funcs[n]) for n in sorted(vq.functions & funcs.keys())),
                     tuple(
                         (d, object() if d in self._lazy_views else reg.key(d))
                         for d in deps
@@ -715,7 +757,7 @@ class SeafowlContext:
                 )
                 if any(reg.key(n) != key for n in names):
                     try:
-                        self._ensure_lazy_views(view_rw)
+                        self._ensure_lazy_views(vq, mapping)
                         df = self.spark.sql(view_rw)
                     except Exception:
                         still.append(item)
@@ -741,14 +783,13 @@ class SeafowlContext:
             for k in [k for k, v in mapping.items() if v == mangled]:
                 del mapping[k]
 
-    def _ensure_lazy_views(self, rewritten_sql: str) -> None:
+    def _ensure_lazy_views(self, q: parser.QueryParse, mapping: NameMap) -> None:
         """Materialize any lazily-registered system/information_schema
-        temp views the REWRITTEN statement references (r14 — see
-        reload_views), detected as _reads detects them; builds happen at
-        most once per reload, at the same catalog state an eager
-        per-statement build saw."""
+        temp views the parsed query ``q`` reads (r14 — see reload_views);
+        builds happen at most once per reload, at the same catalog state
+        an eager per-statement build saw."""
         lazy = self._lazy_views
-        hits = bindings.referenced_names(rewritten_sql, lazy)
+        hits = self._targets(q, mapping) & lazy.keys()
         if not hits:
             return
         sys_frames = info_frames = None
@@ -766,135 +807,28 @@ class SeafowlContext:
                 mangled, ("system", object()), df
             )
 
-    def _rewrite_names(self, sql: str, mapping: dict[str, str]) -> str:
-        """Replace qualified table references with mangled view names,
-        outside string literals, longest-first. ONE combined alternation
-        pass instead of one regex pass per key: with N tables the old
-        loop re-scanned every statement N times — linear in catalog size
-        per statement, exactly the serving-layer overhead a many-table
-        deployment would feel."""
-        # keep literals and comments intact — the parser's scanner, not
-        # a bare regex split, so an apostrophe inside a double-quoted
-        # identifier or a comment never opens a phantom string literal
-        parts = parser.split_on_string_literals(sql)
-        if not mapping:
-            return sql
-        pats, guard, guard_repl = self._rewrite_patterns(mapping)
-        for i in range(0, len(parts), 2):
-            for pat, repl in pats:
-                parts[i] = pat.sub(repl, parts[i])
-            if guard:
-                parts[i] = _GUARD_PAT.sub(guard_repl, parts[i])
-        return "".join(parts)
-
-    def _rewrite_patterns(self, mapping: dict[str, str]):
-        """The compiled alternations, fold tables and case guard for one
-        (mapping, search_schema). A statement rewrites several times
-        (``_reads``, ``_exec_query``, each view expansion) against the
-        same mapping, which only changes with the catalog, so they are
-        built once and kept until either input changes (the key keeps
-        the mapping's order: fold-collision winners depend on it)."""
-        key = (self.search_schema, tuple(mapping.items()))
-        cached = self._rewrite_cache
-        if cached is not None and cached[0] == key:
-            return cached[1]
-        # Bare identifiers match case-insensitively (the engine's unquoted
-        # names fold, like the reference dialect's); double-quoted forms
-        # are CASE-SENSITIVE identifiers — "Foo" and "foo" are distinct
-        # tables and must not collapse through a lowercase lookup.
-        bare = sorted((k for k in mapping if '"' not in k), key=len, reverse=True)
-        quoted = sorted((k for k in mapping if '"' in k), key=len, reverse=True)
-        # bare-key fold target: on a case-fold collision (public.Foo vs
-        # public.foo) the ALL-LOWERCASE original wins — an unquoted
-        # reference folds to lowercase, PG-style
-        by_lower: dict[str, str] = {}
-        for k, v in mapping.items():
-            if '"' in k:
+    def _rewrite_names(self, sql: str, mapping: NameMap, edits=()) -> str:
+        """``sql`` with each relation ``mapping`` resolves spliced to its
+        temp view at the span Spark's parse gave it, and with ``edits``
+        (``((start, end), text)``) applied, which take what they span."""
+        edits = list(edits)
+        for rel in self._parse(sql).relations:
+            view = self._target(rel, mapping)
+            if view is None or rel.parts == (view,):
                 continue
-            kl = k.lower()
-            if kl not in by_lower or k == kl:
-                by_lower[kl] = v
+            if not any(a <= rel.span[0] < b for (a, b), _ in edits):
+                edits.append((rel.span, f"`{view}`"))
+        return parser.splice(sql, edits)
 
-        # quoted keys: QUOTED segments match case-sensitively, the
-        # unquoted segments of a mixed reference still fold (`public` in
-        # public."my-Table" may appear as PUBLIC)
-        def _qsegs(k: str) -> list[str]:
-            return [s for s in re.split(r'("(?:[^"]|"")*")', k) if s]
+    def _parse(self, sql: str) -> parser.QueryParse:
+        """``sql`` parsed by the session's parser (``parser.parse_query``,
+        cached by text), in the engine's dialect."""
+        return parser.parse_query(self.spark, sql, self._parse_scope)
 
-        def _qpat(k: str) -> str:
-            return "".join(
-                re.escape(s) if s.startswith('"') else f"(?i:{re.escape(s)})"
-                for s in _qsegs(k)
-            )
-
-        def _qnorm(k: str) -> str:
-            return "".join(
-                s if s.startswith('"') else s.lower() for s in _qsegs(k)
-            )
-
-        by_qnorm = {_qnorm(k): mapping[k] for k in quoted}
-        pats: list[tuple[re.Pattern, Any]] = []
-        if quoted:
-            pats.append((
-                re.compile(
-                    r"(?<![A-Za-z0-9_.`])(?:"
-                    + "|".join(_qpat(k) for k in quoted)
-                    + r")(?![A-Za-z0-9_.`])"
-                ),
-                lambda m: f"`{by_qnorm[_qnorm(m.group(0))]}`",
-            ))
-        if bare:
-            pats.append((
-                re.compile(
-                    r"(?<![A-Za-z0-9_.`\"])(?:"
-                    + "|".join(re.escape(k) for k in bare)
-                    + r")(?![A-Za-z0-9_.`\"])",
-                    re.IGNORECASE,
-                ),
-                lambda m: f"`{by_lower[m.group(0).lower()]}`",
-            ))
-        # Case-variant guard: an UNQUALIFIED quoted plain-charset reference
-        # that survived the exact-case rewrite above would fall through to
-        # Spark's case-INSENSITIVE temp-view lookup and silently resolve a
-        # case-variant table (with only "Foo" in the catalog, "foo" resolved
-        # to it — the exact collapse the hash-mangling set out to prevent;
-        # qualified wrong-case refs already fail because temp views only
-        # resolve unqualified). For any quoted name that case-insensitively
-        # matches a search-schema table: an exact-case hit passes through
-        # untouched (mixed-case exact hits were already rewritten by the
-        # quoted alternation above; all-lowercase ones resolve correctly
-        # via their bare temp view — leaving them alone also keeps quoted
-        # COLUMN refs that share a lowercase table's exact name working),
-        # and a case-variant MISS is rejected (quoted identifiers are
-        # case-sensitive in the dialect). Only fires on names colliding
-        # with a table name, so quoted column references stay untouched
-        # unless they shadow a table case-variant — the same (accepted)
-        # clobber scope the exact-case quoted keys already have.
-        guard: dict[str, dict[str, str]] = {}
-        pref = f"{self.search_schema}."
-        for k, v in mapping.items():
-            if '"' in k or not k.startswith(pref):
-                continue
-            nm = k[len(pref):]
-            if "." not in nm and re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", nm):
-                guard.setdefault(nm.lower(), {})[nm] = v
-
-        def _guard_repl(m: re.Match) -> str:
-            inner = m.group(1)
-            variants = guard.get(inner.lower())
-            if variants is None:
-                return m.group(0)  # no table of that name: not ours
-            if inner in variants:
-                return m.group(0)  # exact case: resolves correctly as-is
-            raise ExecutionError(
-                f'relation "{inner}" does not exist (quoted identifiers '
-                f"are case-sensitive; did you mean one of "
-                f"{sorted(variants)}?)"
-            )
-
-        built = (pats, guard, _guard_repl)
-        self._rewrite_cache = (key, built)
-        return built
+    @contextmanager
+    def _parse_scope(self):
+        with self._session_lock(), self._ansi_dialect():
+            yield
 
     # ------------------------------------------------------------ functions
 
@@ -949,13 +883,19 @@ class SeafowlContext:
         IDENTIFIERS ("date field"), not strings (query.rs:163-280 queries
         a quoted column). Spark's default silently parses "x" as the
         string 'x' — set/restore under the execution lock, so embedders
-        using the same session outside the engine keep Spark defaults."""
+        using the same session outside the engine keep Spark defaults.
+        A scope inside another (a parse inside a statement) sets nothing."""
+        if self._dialect_depth:
+            yield
+            return
         conf_key = "spark.sql.ansi.doubleQuotedIdentifiers"
         prev = self.spark.conf.get(conf_key, "false")
+        self._dialect_depth = 1
         try:
             self.spark.conf.set(conf_key, "true")
             yield
         finally:
+            self._dialect_depth = 0
             self.spark.conf.set(conf_key, prev)
 
     def execute_statement(self, sql: str) -> DataFrame | None:
@@ -986,14 +926,48 @@ class SeafowlContext:
         meta = self._meta_query(stmt.text)
         if meta is not None:
             return meta
-        sql, travels = parser.extract_time_travel(stmt.text)
-        sql, si_aliases = self._expand_search_index_calls(sql)
-        for alias, name, ts in travels:
-            _, schema_name, tbl = parser.parse_qualified(name)
+        sql = stmt.text
+        # per-statement temp views (time travels, search calls, a pruned
+        # scan): spark.sql analyzes eagerly, so the returned plan holds
+        # resolved relations and they can be dropped once it returns
+        aliases: list[str] = []
+        try:
+            mapping = self.reload_views(sql)
+            q = self._parse(sql)
+            edits = self._bind_travels(q, aliases)
+            edits += self._expand_search_index_calls(q, aliases)
+            edits += self._maybe_prune_scans(q, mapping, aliases)
+            rewritten = self._rewrite_names(sql, mapping, edits)
+            self._ensure_lazy_views(q, mapping)
+            df = self.spark.sql(rewritten)
+            if self._driver_only and not aliases:
+                results.driver_held(df)
+            return df
+        finally:
+            for alias in aliases:
+                self.spark.catalog.dropTempView(alias)
+
+    def _bind_alias(self, prefix: str, df: DataFrame, aliases: list[str]) -> str:
+        """Bind ``df`` under a fresh per-statement temp view, recorded in
+        ``aliases`` for the caller to drop."""
+        alias = f"{prefix}_{len(aliases)}_{uuid.uuid4().hex[:8]}"
+        df.createOrReplaceTempView(alias)
+        aliases.append(alias)
+        return alias
+
+    def _bind_travels(self, q: parser.QueryParse, aliases: list[str]) -> list:
+        """Bind the snapshot each time travel of ``q`` reads (reference
+        src/version.rs:28-106 registers ``name:version`` aliases alike) and
+        return the splices that read it, re-exposing the table's own name
+        as the qualifier unless the query aliases the relation."""
+        edits = []
+        for tt in parser.extract_time_travel(q):
+            parts, ts = tt.relation.parts, tt.spec
+            _db, schema_name, tbl = parser.qualified(parts)
             if schema_name == STAGING_SCHEMA:
                 df = self._staging_travel(tbl, ts)
             else:
-                t = self.delta_table(name)
+                t = DeltaLiteTable(self.spark, self.table_root(self._resolve(parts)))
                 if (t.snapshot().properties or {}).get(VIEW_PROP):
                     raise ExecutionError(
                         "time travel over a view is not supported (the "
@@ -1003,165 +977,113 @@ class SeafowlContext:
                     df = t.to_df(version=int(ts[len("version="):]))
                 else:
                     df = t.to_df(timestamp=ts)
-            df.createOrReplaceTempView(alias)
-        scan_aliases: list[str] = []
+            alias = self._bind_alias("__sfs_tt", df, aliases)
+            expose = "" if tt.aliased else f" AS {quote_ident(parts[-1])}"
+            edits.append((tt.span, f"`{alias}`{expose}"))
+        return edits
+
+    def _maybe_prune_scans(self, q: parser.QueryParse, mapping: NameMap, aliases: list[str]) -> list:
+        """Stats-level scan pruning (the reference gets it from
+        DataFusion's PruningPredicate over its providers): engine tables
+        and delta staging tables prune by per-file stats, iceberg by
+        manifest column bounds, so whole files are skipped driver-side
+        before Spark plans the scan.
+
+        Only fires for the provably-safe shape of ``parser.Scan``: one
+        SELECT over one table with a WHERE, no set operation, subquery or
+        join. The pruned frame binds under a per-statement alias (in
+        ``aliases``, for the caller to drop) and the returned splice puts
+        it in place of the relation; the shared name keeps its binding.
+        Pruning is conservative (engine/pruning.py). An engine table whose
+        every file survives reads the full view, and so does an unbucketed
+        one that ``DeltaLiteTable.one_partition`` reads as one partition:
+        its one task opens each small footer anyway, while a pruned frame
+        costs a relation and a temp view per statement."""
+        s = q.scan
+        name = s and self._target(s.relation, mapping)
         try:
-            # spark.sql analyzes eagerly: the returned plan holds resolved
-            # relations, so the per-query aliases can be dropped here
-            mapping = self.reload_views(sql)
-            rewritten = self._rewrite_names(sql, mapping)
-            self._ensure_lazy_views(rewritten)
-            rewritten, scan_aliases = self._maybe_prune_scans(rewritten)
-            df = self.spark.sql(rewritten)
-            if self._driver_only and not (travels or si_aliases or scan_aliases):
-                results.driver_held(df)
-            return df
-        finally:
-            for alias in [a for a, _, _ in travels] + si_aliases + scan_aliases:
-                self.spark.catalog.dropTempView(alias)
+            df = name and self._pruned_frame(q, name)
+        except Exception:  # best-effort: the full view is already registered
+            df = None
+        if df is None:
+            return []
+        span = parser.scan_spans(self.spark, q, self._parse_scope)[0]
+        alias, edit = self._bind_scan_alias(span, s.alias is not None, name, df)
+        aliases.append(alias)
+        return [edit]
 
-    def _maybe_prune_scans(self, sql: str) -> tuple[str, list[str]]:
-        """Stats-level scan pruning for iceberg and delta staging tables
-        (the reference gets the equivalent from DataFusion's
-        PruningPredicate over its providers): iceberg prunes from manifest
-        column bounds, delta from per-add stats JSON.
-
-        Only fires for the provably-safe shape — a single SELECT over one
-        table with a WHERE clause (no set ops, no subqueries, no joins).
-        The predicate-pruned frame binds under a per-statement alias that
-        replaces the relation in the returned SQL; the caller drops the
-        alias once the statement is analyzed. The shared name keeps the
-        binding reload_views gave it. Pruning itself is conservative
-        (engine/pruning.py): a file is dropped only when its manifest
-        column bounds prove no row can match. Everything else — and an
-        engine table whose every file survives — reads the full view.
-        So does an unbucketed engine table that ``DeltaLiteTable.
-        one_partition`` reads as one partition: its single task opens
-        each small footer anyway and Spark's row-group filter still
-        applies, while the pruned frame would cost a new relation and a
-        temp view per statement. A bucketed table keeps bucket pruning.
-        Returns (sql, aliases to drop).
-
-        Scale: skips whole data files driver-side from manifest metadata
-        before Spark plans the scan — at 100 TB this is the difference
-        between opening every parquet footer and opening only candidates.
-        """
-        if re.search(r"(?i)\b(UNION|INTERSECT|EXCEPT|JOIN)\b", sql):
-            return sql, []
-        if len(re.findall(r"(?i)\bSELECT\b", sql)) != 1:
-            return sql, []
-        s = sql.strip().rstrip("; \n")
-        # a bare LIMIT is an over-fetch cap; under ORDER BY it would
-        # truncate BEFORE the sort — never push those
-        limit_safe = not re.search(r"(?i)\b(ORDER|GROUP|HAVING|WINDOW|DISTINCT)\b", s)
-        for name, (fmt, location, options) in self.staging_specs.items():
-            if fmt != "table" or not limit_safe:
-                continue
-            # remote tables: re-push a bare trailing LIMIT into the remote
-            # SQL. Projection-only select list (no parens = no aggregates),
-            # no GROUP/ORDER — a pushed LIMIT is an over-fetch cap,
-            # semantics-preserving, but ONLY when the remote applies the
-            # FULL WHERE before capping: Spark's pushFilters offers just
-            # the shippable conjuncts (disjunctions and cast-wrapped
-            # predicates stay Spark-side), and a remote LIMIT applied
-            # before a residual Spark-side filter can silently drop
-            # matching rows. So require no WHERE at all, or a WHERE whose
-            # every top-level conjunct is provably shippable against the
-            # table's schema (_where_fully_shippable).
-            m = re.match(
-                rf"(?is)^\s*SELECT\s+[\w\s,.*`]+?\sFROM\s+(?P<rel>`?{re.escape(name)}`?)"
-                rf"(?:\s+(?:AS\s+)?(?P<alias>\w+))?(?:\s+WHERE\s+(?P<where>.+?))?"
-                rf"\s+LIMIT\s+(?P<n>\d+)\s*$",
-                s,
-            )
-            if not m:
-                continue
-            where = m.group("where")
-            if where is not None:
-                frame = self.staging.get(name)
-                if frame is None or not _where_fully_shippable(
-                    where, frame.schema
+    def _pruned_frame(self, q: parser.QueryParse, name: str) -> DataFrame | None:
+        """The frame ``_maybe_prune_scans`` binds for ``q.scan``'s relation,
+        the temp view ``name``, or None to read the full view."""
+        s = q.scan
+        staging = {n.lower(): n for n in self.staging_specs}.get(name.lower())
+        if staging is not None:
+            fmt, location, options = self.staging_specs[staging]
+            if fmt == "table":
+                # remote tables: re-push a bare trailing LIMIT into the
+                # remote SQL. Projection-only select list, no GROUP/ORDER
+                # — a pushed LIMIT is an over-fetch cap, semantics-
+                # preserving, but ONLY when the remote applies the FULL
+                # WHERE before capping: Spark's pushFilters offers just the
+                # shippable conjuncts (disjunctions and cast-wrapped
+                # predicates stay Spark-side), and a remote LIMIT applied
+                # before a residual Spark-side filter can silently drop
+                # matching rows. So require no WHERE at all, or a WHERE
+                # whose every top-level conjunct is provably shippable
+                # against the table's schema (_where_fully_shippable).
+                if s.limit is None or s.where and not _where_fully_shippable(
+                    self._scan_where(q), self.staging[staging].schema
                 ):
-                    continue
-            from ..sources.external import read_external
+                    return None
+                from ..sources.external import read_external
 
-            try:
-                df = read_external(
-                    self.spark, "table", location,
-                    options={**options, "limit": m.group("n")},
+                return read_external(
+                    self.spark, "table", location, options={**options, "limit": str(s.limit)}
                 )
-            except Exception:
-                continue
-            return self._bind_scan_alias(s, m, name, df)
-        candidates: list[tuple[str, Any]] = []
-        for name, (fmt, location, options) in self.staging_specs.items():
-            if fmt in ("iceberg", "delta", "deltatable"):
-                candidates.append((name, (fmt, location, options)))
+            if fmt == "iceberg" and s.where:
+                from ..sources.iceberg import read_iceberg
+
+                return read_iceberg(self.spark, location, options, predicate_sql=self._scan_where(q))
+            if fmt in ("delta", "deltatable") and s.where:
+                from ..sources.delta_log import read_any_delta
+
+                return read_any_delta(self.spark, location, predicate_sql=self._scan_where(q))
+            return None
         for e, snap in self._bound_reads.values():
-            if (snap.properties or {}).get(VIEW_PROP) is not None:
-                continue  # a logical view stores no files: nothing to prune
             # engine-native tables prune by the footer stats their adds
             # already carry — the read-side twin of DML pruning
-            candidates.append((_mangle(e.schema, e.name), (e, snap)))
-            if e.schema == self.search_schema:
-                candidates.append((e.name, (e, snap)))
-        for name, spec in candidates:
-            pat = re.compile(
-                rf"(?is)^\s*SELECT\s+.*?\sFROM\s+(?P<rel>`?{re.escape(name)}`?)"
-                rf"(?:\s+(?:AS\s+)?(?P<alias>[A-Za-z_]\w*))?"
-                rf"\s+WHERE\s+(?P<pred>.*?)"
-                rf"(?:\s+(?:GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT|WINDOW)\b.*)?$"
-            )
-            m = pat.match(s)
-            if not m:
+            if not s.where or name.lower() not in (
+                _mangle(e.schema, e.name).lower(),
+                e.schema == self.search_schema and e.name.lower(),
+            ):
                 continue
-            pred = m.group("pred")
-            for q in filter(None, (m.group("alias"), name)):
-                # qualified refs -> bare names for the stats evaluator
-                pred = re.sub(rf"(?<![\w.`])`?{re.escape(q)}`?\.", "", pred)
-            try:
-                if len(spec) == 3:
-                    fmt, location, options = spec
-                    if fmt == "iceberg":
-                        from ..sources.iceberg import read_iceberg
+            t = DeltaLiteTable(self.spark, self.table_root(e))
+            if (snap.properties or {}).get(VIEW_PROP) is not None or (
+                t.one_partition(snap.files) and all(f.bucket is None for f in snap.files)
+            ):
+                return None  # a logical view has no files; one task reads a small table
+            files = t.pruned_files(snap, self._scan_where(q))
+            # nothing to skip: the bound view serves it
+            return t.to_df(_snap=snap, _files=files) if len(files) < len(snap.files) else None
+        return None
 
-                        df = read_iceberg(
-                            self.spark, location, options, predicate_sql=pred
-                        )
-                    else:
-                        from ..sources.delta_log import read_any_delta
-
-                        df = read_any_delta(
-                            self.spark, location, predicate_sql=pred
-                        )
-                else:
-                    e, snap = spec
-                    t = DeltaLiteTable(self.spark, self.table_root(e))
-                    if t.one_partition(snap.files) and all(
-                        f.bucket is None for f in snap.files
-                    ):
-                        return sql, []  # one task reads it: the bound view serves it
-                    if len(t.pruned_files(snap, pred)) == len(snap.files):
-                        return sql, []  # nothing to skip: the bound view serves it
-                    df = t.to_df(predicate_sql=pred, _snap=snap)
-            except Exception:
-                continue  # best-effort: the full view is already registered
-            return self._bind_scan_alias(s, m, name, df)
-        return sql, []
+    def _scan_where(self, q: parser.QueryParse) -> str:
+        """The WHERE text of ``q.scan``, without the column qualifiers
+        that name its relation (the stats evaluators read bare names)."""
+        rel, cond = parser.scan_spans(self.spark, q, self._parse_scope)
+        pred = q.sql[cond[0]:cond[1]]
+        for name in filter(None, (q.scan.alias, q.sql[rel[0]:rel[1]], q.scan.relation.parts[-1])):
+            pred = re.sub(rf"(?<![\w.`])`?{re.escape(name)}`?\.", "", pred)
+        return pred
 
     @staticmethod
-    def _bind_scan_alias(sql: str, m: re.Match, name: str, df) -> tuple[str, list[str]]:
-        """Bind ``df`` under a fresh per-statement alias and splice it over
-        the relation ``m`` matched in ``sql``. Without an alias in the
-        query the relation keeps its old name as one, so qualified column
-        references still resolve."""
-        import uuid as _uuid
-
-        alias = f"__sfs_scan_{_uuid.uuid4().hex[:12]}"
+    def _bind_scan_alias(span, aliased: bool, name: str, df) -> tuple[str, tuple]:
+        """Bind ``df`` under a fresh alias; returns it and its splice over
+        the relation at ``span``, which keeps its view name as an alias
+        unless the query gives it one."""
+        alias = f"__sfs_scan_{uuid.uuid4().hex[:12]}"
         df.createOrReplaceTempView(alias)
-        a, b = m.span("rel")
-        swap = f"`{alias}`" if m.group("alias") else f"`{alias}` AS `{name}`"
-        return sql[:a] + swap + sql[b:], [alias]
+        return alias, (span, f"`{alias}`" if aliased else f"`{alias}` AS `{name}`")
 
     def _staging_travel(self, name: str, ts: str) -> DataFrame:
         """Time travel over an iceberg staging table: FOR TIMESTAMP AS OF
@@ -1657,43 +1579,36 @@ class SeafowlContext:
         rejects CreateView outright (src/context/physical.rs:573-575,
         "Creating views is currently unsupported!").
 
-        Views may reference tables and previously created views.
-        Staging tables are session-scoped, so a persistent view over
-        one is refused at creation."""
+        Views may reference tables and previously created views."""
         db, schema, name = parser.parse_qualified(stmt.name)
         self._guard_staging(schema)
         db, schema = db or self.database, schema or self.search_schema
+        q = self._parse(stmt.query)
+        mapping, _named = self._name_mapping(self.catalog.tables(self.database))
+        reads = self._targets(q, mapping)
         # staging tables are session-scoped: a persistent view over one
-        # would break on the next session. Textual check (qualified form
-        # plus every live staging table's bare name) — conservative: a
-        # string literal containing a staging name also rejects, which
-        # beats silently creating a view that dies with the session.
-        # bare names must not be schema-qualified references to a managed
-        # table that merely shares the name — the lookbehind exempts
-        # `public.docs` while still catching `FROM docs`
-        staging_names = [re.escape(STAGING_SCHEMA) + r"\s*\."] + [
-            rf"(?<![\w.]){re.escape(n)}\b" for n in self.staging
-        ]
-        for pat in staging_names:
-            if re.search(rf"(?i){pat}", stmt.query):
-                raise ExecutionError(
-                    "a view cannot reference session-scoped staging "
-                    "tables (CREATE TABLE ... AS SELECT them into a "
-                    "managed table first)"
-                )
+        # would break on the next session (a staging.* name is refused
+        # whether or not it exists)
+        if reads & {n.lower() for n in self.staging} or any(
+            len(r.parts) > 1 and r.parts[-2].lower() == STAGING_SCHEMA for r in q.relations
+        ):
+            raise ExecutionError(
+                "a view cannot reference session-scoped staging "
+                "tables (CREATE TABLE ... AS SELECT them into a "
+                "managed table first)"
+            )
         # time-travel clauses pin a snapshot through a code path raw
         # reload expansion does not run — reject rather than create a
         # view that can never re-expand
-        _, travels = parser.extract_time_travel(stmt.query)
-        if travels:
+        if parser.extract_time_travel(q):
             raise ExecutionError(
                 "a view cannot use time travel in its defining query "
                 "(materialize the snapshot with CTAS instead)"
             )
         # search_index() relations expand through the same query-only
-        # pre-pass time travel does — a view holding one would validate
+        # pass time travel does — a view holding one would validate
         # here and then break on every reload
-        if re.search(r"(?i)\bsearch_index\s*\(", stmt.query):
+        if q.search_calls:
             raise ExecutionError(
                 "a view cannot use search_index() in its defining query "
                 "(materialize the lookup with CTAS instead)"
@@ -1712,19 +1627,8 @@ class SeafowlContext:
             # would VALIDATE against the old view's temp registration, then
             # persist a self-referential defining query that reload_views'
             # fixpoint can never expand (its own temp view is dropped
-            # first) — silently destroying a working view. Textual check,
-            # same conservative style as the staging guard: a string
-            # literal containing the name also rejects, which beats the
-            # silent destruction.
-            self_forms = [
-                rf"(?i)(?<![\w.\"]){re.escape(name)}\b",
-                rf'"{re.escape(name)}"',
-            ]
-            if any(re.search(p, stmt.query) for p in self_forms) or re.search(
-                rf"(?i)(?<![\w.]){re.escape(schema)}\s*\.\s*"
-                rf"(?:\"{re.escape(name)}\"|{re.escape(name)}\b)",
-                stmt.query,
-            ):
+            # first) — silently destroying a working view.
+            if reads & {name.lower(), _mangle(schema, name).lower()}:
                 raise ExecutionError(
                     f"CREATE OR REPLACE VIEW {schema}.{name} cannot "
                     "reference the view it replaces (a view cannot be "
@@ -2484,122 +2388,55 @@ class SeafowlContext:
         )
         self._commit_index_specs(entry, t, specs, "DROP SEARCH INDEX")
 
-    _SEARCH_CALL = re.compile(
-        r"(?i)\bsearch_index\s*\(\s*"
-        r"'((?:[^']|'')*)'\s*,\s*"
-        r"'((?:[^']|'')*)'\s*,\s*"
-        r"'((?:[^']|'')*)'\s*,\s*(\d+)\s*\)"
-    )
-
-    def _search_calls(self, sql: str) -> list[re.Match]:
-        """The ``search_index(...)`` calls of ``sql``. The call's own
-        argument strings are part of the match, but a call TEXT inside an
-        unrelated string literal, quoted identifier or comment is not a
-        call: a match counts iff it starts outside every span of the
-        parser's quote scanner (the tokenizer _rewrite_names splits with,
-        so an apostrophe inside a double-quoted identifier never reads as
-        a literal boundary)."""
-        if "search_index" not in sql.lower():
-            return []
-        spans = parser.scan_quotes(sql)
-        return [
-            m for m in self._SEARCH_CALL.finditer(sql)
-            if not any(a <= m.start() < b for _k, a, b in spans)
-        ]
-
-    def _expand_search_index_calls(self, sql: str) -> tuple[str, list[str]]:
-        """Rewrite ``search_index('tbl', 'idx', 'query', k)`` relations to
-        temp views holding the top-k lookup result (result_id, score,
-        rank). Lookup cost is proportional to the probed partitions —
-        the persisted-index serving shape in plain SQL.
-
-        r14 (guide §5): calls sharing one (table, index, k) BATCH into a
-        single multi-probe plan (search_index.lookup_many) — one snapshot
-        replay, one sidecar read and one partition-pruned probe join for
-        the whole group instead of per call; each call's rows (bounded at
-        k by construction) re-bind as a LocalRelation temp view, so the
-        outer query's references are LocalTableScans. A statement fanning
-        N queries over one index (the q_index_serving shape: 12 calls
-        over 4 indexes) runs 4 probe plans, not 12."""
-        # pass 1: collect the calls, grouped by (table, index, k)
-        calls: list[tuple[int, str, str, str, int]] = [  # (start, ...)
-            (
-                m.start(),
-                m.group(1).replace("''", "'"),
-                m.group(2).replace("''", "'"),
-                m.group(3).replace("''", "'"),
-                int(m.group(4)),
-            )
-            for m in self._search_calls(sql)
-        ]
+    def _expand_search_index_calls(self, q: parser.QueryParse, aliases: list[str]) -> list:
+        """Bind each ``search_index('tbl', 'idx', 'query', k)`` relation of
+        ``q`` as a temp view holding the top-k lookup result (result_id,
+        score, rank) and return the splices that read them. Lookup cost is
+        proportional to the probed partitions. Calls sharing one (table,
+        index, k) batch into one multi-probe plan
+        (search_index.lookup_many) whose rows re-bind per call as
+        LocalRelations: the q_index_serving shape, 12 calls over 4
+        indexes, runs 4 probe plans, not 12."""
+        calls = q.search_calls
         if not calls:
-            return sql, []
-        import uuid as _uuid
-
+            return []
         from .search_index import index_dir, load_specs, lookup, lookup_many
 
-        groups: dict[tuple[str, str, int], list[int]] = {}
-        for ci, (_s, tbl, idx, _q, k) in enumerate(calls):
-            groups.setdefault((tbl, idx, k), []).append(ci)
-
-        aliases: list[str] = []
-        view_at: dict[int, str] = {}  # match start -> alias
-
-        def _bind(df, start: int) -> None:
-            alias = f"__sfs_si_{len(aliases)}_{_uuid.uuid4().hex[:8]}"
-            df.createOrReplaceTempView(alias)
-            aliases.append(alias)
-            view_at[start] = alias
-
-        try:
-            for (tbl, idx, k), cis in groups.items():
-                entry = self._resolve(tbl)
-                t = DeltaLiteTable(self.spark, self.table_root(entry))
-                specs = load_specs(t.snapshot().properties or {})
-                spec = specs.get(idx)
-                if spec is None:
-                    raise ExecutionError(
-                        f"search index {idx} does not exist on {tbl} "
-                        f"(existing: {sorted(specs) or 'none'})"
-                    )
-                path = index_dir(self.table_root(entry), idx)
-                if not os.path.isdir(path):
-                    # a RESTORE past the index's DROP resurrects the spec
-                    # without the artifact — fail with the remedy, not a
-                    # parquet file-not-found
-                    raise ExecutionError(
-                        f"search index {idx} on {tbl} has no artifact on "
-                        "disk (dropped or restored past it); DROP SEARCH "
-                        "INDEX and re-CREATE it"
-                    )
-                if len(cis) == 1:
-                    start, _t, _i, qtext, _k = calls[cis[0]]
-                    _bind(lookup(self.spark, path, spec, qtext, k), start)
-                else:
-                    per_slot = lookup_many(
-                        self.spark,
-                        path,
-                        spec,
-                        [(slot, calls[ci][3]) for slot, ci in enumerate(cis)],
-                        k,
-                    )
-                    for slot, ci in enumerate(cis):
-                        _bind(per_slot[slot], calls[ci][0])
-
-            def repl(m: re.Match) -> str:
-                alias = view_at.get(m.start())
-                return f"`{alias}`" if alias else m.group(0)
-
-            return self._SEARCH_CALL.sub(repl, sql), aliases
-        except Exception:
-            # a later call's failure must not leak the earlier calls'
-            # already-registered temp views
-            for alias in aliases:
-                try:
-                    self.spark.catalog.dropTempView(alias)
-                except Exception:  # noqa: BLE001
-                    pass
-            raise
+        groups: dict[tuple[str, str, int], list[parser.SearchCall]] = {}
+        for c in calls:
+            groups.setdefault((c.table, c.index, c.k), []).append(c)
+        edits = []
+        for (tbl, idx, k), group in groups.items():
+            entry = self._resolve(tbl)
+            t = DeltaLiteTable(self.spark, self.table_root(entry))
+            specs = load_specs(t.snapshot().properties or {})
+            spec = specs.get(idx)
+            if spec is None:
+                raise ExecutionError(
+                    f"search index {idx} does not exist on {tbl} "
+                    f"(existing: {sorted(specs) or 'none'})"
+                )
+            path = index_dir(self.table_root(entry), idx)
+            if not os.path.isdir(path):
+                # a RESTORE past the index's DROP resurrects the spec
+                # without the artifact — fail with the remedy, not a
+                # parquet file-not-found
+                raise ExecutionError(
+                    f"search index {idx} on {tbl} has no artifact on "
+                    "disk (dropped or restored past it); DROP SEARCH "
+                    "INDEX and re-CREATE it"
+                )
+            if len(group) == 1:
+                frames = [lookup(self.spark, path, spec, group[0].query, k)]
+            else:
+                per_slot = lookup_many(
+                    self.spark, path, spec,
+                    [(slot, c.query) for slot, c in enumerate(group)], k,
+                )
+                frames = [per_slot[slot] for slot in range(len(group))]
+            for c, df in zip(group, frames):
+                edits.append((c.span, f"`{self._bind_alias('__sfs_si', df, aliases)}`"))
+        return edits
 
     def _exec_create_external_table(self, stmt) -> None:
         from ..sources.external import read_external
@@ -2920,11 +2757,9 @@ class SeafowlContext:
                     f"columns; got: {part.strip()!r}"
                 )
             pk_cols.append(m.group(2))
-        source_sql = stmt.source_query or f"SELECT * FROM {stmt.source_table}"
-        mapping = self.reload_views(source_sql)
-        source_rw = self._rewrite_names(source_sql, mapping)
-        self._ensure_lazy_views(source_rw)
-        src = self.spark.sql(source_rw)
+        src = self._exec_query(parser.Statement(
+            "query", stmt.source_query or f"SELECT * FROM {stmt.source_table}"
+        ))
         missing = [c for c in pk_cols if c not in src.columns]
         if missing:
             raise ExecutionError(f"MERGE source lacks ON column(s) {missing}")
@@ -3094,21 +2929,21 @@ class SeafowlContext:
     # ------------------------------------------------------------ ETag
 
     def _reads(self, sql: str) -> Reads:
-        """Which relations ``sql`` reads, answered by the name resolution
-        statements use: time travel stripped (a traveled table counts
-        through the alias it re-exposes, as before), names rewritten by
-        reload_views' own mapping, then ``bindings.referenced_names`` over
-        the rewritten SQL — the detector view expansion keys on. A view
-        adds whatever its SQL reads, transitively, and stays in the set
-        itself. Reads only the catalog and the Delta logs of what it
-        finds: no Spark, no reload."""
-        sql, _ = parser.extract_time_travel(sql)
+        """Which relations ``sql`` reads: each relation Spark's parse of it
+        names (``_parse``: in subqueries, CTE bodies and under EXPLAIN too,
+        time-traveled ones included), resolved as statements resolve them
+        (``_target``), and the tables and indexes of its ``search_index()``
+        calls. A relation spelled like both a CTE and a table counts as a
+        read of the table: a superset only costs a re-expansion, a missed
+        read serves stale rows. A view adds what its SQL reads,
+        transitively. Reads the catalog, the Delta logs of what it finds
+        and, for a text not parsed before, Spark's parser, whose
+        ParseException it raises as executing the text would."""
         mapping, named = self._name_mapping(self.catalog.tables(self.database))
         owner = {n.lower(): e for e, *names in named for n in names if n}
         staging = {n.lower() for n in self.staging}
         catalog_funcs = self.catalog.functions(self.database)
         funcs = {n.lower(): spec for n, spec in catalog_funcs.items()}
-        known = owner.keys() | staging | _LAZY_NAMES.keys()
         out = Reads(mapping=mapping, named=named, catalog_functions=catalog_funcs)
 
         def snapshot(e: TableEntry) -> Snapshot:
@@ -3117,36 +2952,41 @@ class SeafowlContext:
                 out.tables[e.uuid] = (e, t.snapshot())
             return out.tables[e.uuid][1]
 
-        todo = [self._rewrite_names(sql, mapping)]
+        m = _META_READS.fullmatch(sql)
+        if m:
+            sql = m.group("q") or f"TABLE {m.group('t')}"
+        todo = [(self._parse(sql), True)]
         while todo:
-            rewritten = todo.pop()
-            hits = bindings.referenced_names(rewritten, known)
+            q, top = todo.pop()
+            try:
+                hits = self._targets(q, mapping)
+            except ExecutionError:
+                if top:
+                    raise
+                continue  # a broken view fails the statements that read it
             out.system |= not hits.isdisjoint(_LAZY_NAMES)
             out.staging |= not hits.isdisjoint(staging)
-            for n in bindings.referenced_names(rewritten, funcs):
+            for n in q.functions & funcs.keys():
                 out.functions[n] = funcs[n]
             for n in hits & owner.keys():
                 if owner[n].uuid in out.tables:
                     continue
                 view_sql = (snapshot(owner[n]).properties or {}).get(VIEW_PROP)
-                if view_sql is None:
-                    continue
-                try:
-                    todo.append(self._rewrite_names(view_sql, mapping))
-                except ExecutionError:
-                    pass  # a broken view fails the statements that read it
-        for m in self._search_calls(sql):
-            from .search_index import load_specs
+                if view_sql is not None:
+                    try:
+                        todo.append((self._parse(view_sql), False))
+                    except Exception:  # noqa: BLE001
+                        pass
+            for c in q.search_calls:
+                from .search_index import load_specs
 
-            tbl = m.group(1).replace("''", "'")
-            idx = m.group(2).replace("''", "'")
-            try:
-                entry = self._resolve(tbl)
-                spec = load_specs(snapshot(entry).properties or {}).get(idx)
-            except Exception:  # noqa: BLE001 — the query itself will
-                continue  # surface the real unresolved-relation error
-            if spec is not None:
-                out.indexes.add((entry.uuid, idx, spec.built_version, spec.file_fp))
+                try:
+                    entry = self._resolve(c.table)
+                    spec = load_specs(snapshot(entry).properties or {}).get(c.index)
+                except Exception:  # noqa: BLE001 — the query itself will
+                    continue  # surface the real unresolved-relation error
+                if spec is not None:
+                    out.indexes.add((entry.uuid, c.index, spec.built_version, spec.file_fp))
         return out
 
     def etag_for_query(self, sql: str) -> str:
@@ -3168,7 +3008,8 @@ class SeafowlContext:
 
         An unchanged read hashes the same across calls and restarts. Runs
         under the execution lock, so a concurrent per-call search_path
-        never leaks into the resolution."""
+        never leaks into the resolution. A text parsed before (the GET's
+        own execution parses it again) makes no Spark call here."""
         with self._exec_lock:
             r = self._reads(sql)
             h = sha256()

@@ -877,14 +877,14 @@ class DeltaLiteTable:
         self,
         version: int | None = None,
         timestamp: str | None = None,
-        predicate_sql: str | None = None,
         _snap: Snapshot | None = None,
         _room: int | None = None,
+        _files: list[AddFile] | None = None,
     ) -> DataFrame:
         """The rows of the table at a version (latest by default), or of
-        the files ``predicate_sql`` may match. A small read is coalesced
-        to one partition (``one_partition``), so it plans no exchange and
-        runs one job.
+        ``_files`` of ``_snap`` (``pruned_files`` of a filtered read). A
+        small read is coalesced to one partition (``one_partition``), so
+        it plans no exchange and runs one job.
 
         With ``_room``, the bytes a statement's binding may hold on the
         driver, a small table is held there (``held_bytes``): when the
@@ -902,7 +902,7 @@ class DeltaLiteTable:
         # the binding key name the same version)
         snap = _snap if _snap is not None else self.snapshot(version, timestamp)
         schema = snap.schema
-        files = self.pruned_files(snap, predicate_sql)
+        files = snap.files if _files is None else _files
         if not files:
             df = self._empty_df(schema)
             if _room is not None:

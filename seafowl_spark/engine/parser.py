@@ -3,17 +3,24 @@ the engine implements itself (SURVEY.md §2.A; reference src/datafusion/
 parser.rs:147-186 does the same dispatch in its sqlparser wrapper).
 
 Queries (SELECT / WITH / VALUES / EXPLAIN / SHOW / DESCRIBE) pass through to
-`spark.sql` untouched except for the time-travel sugar rewrite
-(`t('<timestamp>')` -> versioned temp view, reference src/version.rs:61-106).
-Everything else parses into a Statement the executor (context.py) interprets.
+`spark.sql` once the executor (context.py) has spliced the spans
+``parse_query`` finds with the session's own Spark parser: relation names
+to temp views, time travel (`t('<timestamp>')`, reference
+src/version.rs:61-106) and ``search_index()`` calls to per-statement views.
+Everything else parses into a Statement the executor interprets.
 """
 
 from __future__ import annotations
 
+import json
 import re
-import uuid
+import threading
+from collections import OrderedDict
+from contextlib import nullcontext
 from dataclasses import dataclass, field
 from typing import Any
+
+from py4j.protocol import Py4JError
 
 READ_PREFIXES = ("select", "with", "values", "explain", "show", "describe", "table")
 
@@ -123,10 +130,10 @@ def scan_quotes(sql: str) -> list[tuple[str, int, int]]:
     escaped alike), ``btick``, ``line_comment`` (``--`` to the end of the
     line; a backslash before the newline continues it) and
     ``block_comment`` (nested ``/* */``; ``/*+`` opens a hint, which is
-    code). ONE scanner for name rewriting, read detection and the
-    ``search_index()`` pre-parse: a quote in a comment or behind a
-    backslash read as opening a literal would hide every table named
-    after it. Unterminated spans run to the end of the string."""
+    code). Statement splitting and the structural scans of
+    ``deltalite._bucket_hits`` and matview's ``parse_mv_query`` mask with
+    it; what a query reads comes from Spark's own parse
+    (``parse_query``). Unterminated spans run to the end of the string."""
     spans: list[tuple[str, int, int]] = []
     i, n = 0, len(sql)
     while (m := _LEX_START.search(sql, i)) is not None:
@@ -178,24 +185,6 @@ def _masked(sql: str) -> str:
     return "".join(out)
 
 
-def split_on_string_literals(sql: str) -> list[str]:
-    """Split into alternating ``[code, literal, code, ...]`` parts (even
-    indexes = code) where the string literals and comments of
-    :func:`scan_quotes` count as literals. Double-quoted / backtick
-    identifiers stay inside the code parts so identifier rewriting still
-    sees them."""
-    parts: list[str] = []
-    pos = 0
-    for kind, a, b in scan_quotes(sql):
-        if kind in ("dquote", "btick"):
-            continue
-        parts.append(sql[pos:a])
-        parts.append(sql[a:b])
-        pos = b
-    parts.append(sql[pos:])
-    return parts
-
-
 def is_read_only(stmt: str) -> bool:
     """Read-only detection for the multi-statement / cached-GET rules
     (reference src/context/logical.rs:36-58)."""
@@ -214,12 +203,13 @@ _QIDENT = rf'(?:"[^"]+"|{_IDENT})'
 _QNAME = rf"{_QIDENT}(?:\.{_QIDENT}){{0,2}}"
 
 
-def _split_top(s: str, sep: str = ",") -> list[str]:
-    """Split on `sep` at paren depth 0, outside the spans of
+def _split_top(s: str, sep: str = ",", nest: str = "()") -> list[str]:
+    """Split on `sep` outside the bracket pairs of `nest` (a column list
+    also nests `<>`: STRUCT<x: INT, y: STRING>) and outside the spans of
     :func:`scan_quotes`."""
     out, depth, start = [], 0, 0
     for i, ch in enumerate(_masked(s)):
-        depth += (ch == "(") - (ch == ")")
+        depth += (ch in nest[::2]) - (ch in nest[1::2])
         if ch == sep and depth == 0:
             out.append(s[start:i].strip())
             start = i + 1
@@ -246,94 +236,326 @@ def split_name_parts(name: str) -> list[str]:
 
 
 def parse_qualified(name: str) -> tuple[str | None, str | None, str]:
-    parts = split_name_parts(name)
-    if len(parts) == 1:
-        return None, None, parts[0]
-    if len(parts) == 2:
-        return None, parts[0], parts[1]
-    if len(parts) == 3:
-        return parts[0], parts[1], parts[2]
-    raise ParseError(f"too many name parts: {name}")
+    return qualified(split_name_parts(name))
+
+
+def qualified(parts) -> tuple[str | None, str | None, str]:
+    """(database, schema, table) of a one- to three-part name."""
+    if not 1 <= len(parts) <= 3:
+        raise ParseError(f"too many name parts: {'.'.join(parts)}")
+    return (None,) * (3 - len(parts)) + tuple(parts)
 
 
 # --------------------------------------------------------------------------
-# time-travel sugar:  FROM t('2022-01-01T20:01:01Z')  (A16)
+# query reads: what a query names, from one parse by the session's parser
 # --------------------------------------------------------------------------
 
-_TT = re.compile(
-    rf"(?i)\b(FROM|JOIN)\s+({_QNAME})\s*\(\s*'([^']+)'\s*\)", re.DOTALL
-)
-# standard syntax: FROM t FOR TIMESTAMP AS OF '<ts>'
-_TT_STD = re.compile(
-    rf"(?i)\b(FROM|JOIN)\s+({_QNAME})\s+FOR\s+TIMESTAMP\s+AS\s+OF\s+'([^']+)'",
-    re.DOTALL,
-)
-# Delta-standard complement: FROM t FOR VERSION AS OF <n> (the reference is
-# timestamp-only; versions are first-class in our commit log, so expose them)
-_TT_VER = re.compile(
-    rf"(?i)\b(FROM|JOIN)\s+({_QNAME})\s+FOR\s+VERSION\s+AS\s+OF\s+(\d+)",
-    re.DOTALL,
-)
+@dataclass(frozen=True)
+class Relation:
+    """A table a query names: its parts, whether each was quoted, and its
+    ``[start, end)`` (None for an unquoted one-part plain name)."""
+
+    parts: tuple[str, ...]
+    quoted: tuple[bool, ...]
+    span: tuple[int, int] | None
 
 
-# tokens that can follow a table reference WITHOUT being its alias —
-# used to decide whether a time-travel rewrite must re-expose the
-# table's own name as the relation alias (standard SQL keeps `t`
-# addressable in `FROM t FOR VERSION AS OF 3 JOIN d ON t.k = d.k`)
-_POST_REF_KEYWORDS = {
-    "join", "inner", "left", "right", "full", "cross", "natural",
-    "anti", "semi", "on", "using", "where", "group", "having",
-    "order", "limit", "offset", "union", "intersect", "except",
-    "window", "qualify", "tablesample", "pivot", "unpivot", "lateral",
-    "fetch", "for",
-}
+@dataclass(frozen=True)
+class TimeTravel:
+    """``t FOR VERSION|TIMESTAMP AS OF x`` or ``t('<ts>')``: ``spec`` is
+    ``version=<n>`` or the timestamp, ``span`` what a rewrite replaces (an
+    alias after it stays), ``aliased`` whether the query aliases it."""
+
+    relation: Relation
+    spec: str
+    span: tuple[int, int]
+    aliased: bool
 
 
-def extract_time_travel(sql: str) -> tuple[str, list[tuple[str, str, str]]]:
-    """Rewrite `FROM t('<ts>')` references to sanitized versioned view
-    aliases and return [(alias, table_name, timestamp)] so the executor can
-    register each snapshot as a temp view (reference src/version.rs:28-106
-    registers `name:version` aliases the same way)."""
-    found: list[tuple[str, str, str]] = []
-    # unique per call: deterministic aliases would let two concurrent
-    # time-travel reads of the same table clobber each other's temp view
-    tok = uuid.uuid4().hex[:8]
+@dataclass(frozen=True)
+class SearchCall:
+    """A ``search_index('<table>', '<index>', '<query>', k)`` relation."""
 
-    def make_sub(kind: str):
-        def sub(m: re.Match) -> str:
-            name, val = m.group(2), m.group(3)
-            alias = f"__sfs_tt_{len(found)}_{tok}_{name.replace('.', '_')}"
-            # version travels carry a "version=<n>" spec; the executor
-            # branches on the prefix (timestamps can't start with it)
-            found.append((alias, name, f"version={val}" if kind == "v" else val))
-            # standard SQL keeps the table's own name as the relation
-            # qualifier — re-expose it as the alias unless the user wrote
-            # an explicit alias right after (which then wins, unchanged).
-            # Only plain-identifier last segments are re-exposed: quoted
-            # names go through the engine's name mangling and would not
-            # round-trip as a bare alias.
-            tail = m.string[m.end():]
-            nxt = re.match(
-                r"(?is)\s*(?:as\s+)?([A-Za-z_][A-Za-z0-9_]*)", tail
-            )
-            has_user_alias = bool(
-                nxt and nxt.group(1).lower() not in _POST_REF_KEYWORDS
-            )
-            last = name.split(".")[-1]
-            expose = (
-                f" AS {last}"
-                if not has_user_alias
-                and re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", last)
-                else ""
-            )
-            return f"{m.group(1)} `{alias}`{expose}"
+    table: str
+    index: str
+    query: str
+    k: int
+    span: tuple[int, int]
 
-        return sub
 
-    out = _TT.sub(make_sub("t"), sql)
-    out = _TT_STD.sub(make_sub("t"), out)
-    out = _TT_VER.sub(make_sub("v"), out)
-    return out, found
+@dataclass
+class Scan:
+    """A query that is one SELECT over one relation, with no join, set
+    operation, CTE or subquery: its alias, whether a WHERE (a Filter)
+    sits right above the relation, and ``limit`` when it is only plain
+    columns, that WHERE and ``LIMIT n``. ``spans`` (the relation's, the
+    WHERE's) are read on first use (``scan_spans``)."""
+
+    relation: Relation
+    alias: str | None
+    where: bool
+    limit: int | None
+    paths: tuple[tuple, tuple | None]
+    spans: tuple | None = None
+
+
+@dataclass(frozen=True)
+class QueryParse:
+    """What one query text names (``parse_query``): every relation (in
+    subqueries, CTE bodies and under EXPLAIN too, a CTE's own name where
+    the body reads it included), its time travels and ``search_index()``
+    calls, CTE names and (lower-cased) function names."""
+
+    sql: str
+    relations: tuple[Relation, ...]
+    travels: tuple[TimeTravel, ...]
+    search_calls: tuple[SearchCall, ...]
+    ctes: frozenset[str]
+    functions: frozenset[str]
+    scan: Scan | None
+
+
+# parses by text, Python values only: a view's SQL, or a GET's ETag and
+# then its execution, parse once
+_PARSED: OrderedDict[str, QueryParse] = OrderedDict()
+_PARSED_MAX = 256
+_PARSED_LOCK = threading.Lock()
+_THREAD = threading.local()
+
+_PLAIN = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+_RELATIONS = {"UnresolvedRelation", "UnresolvedTableOrView", "UnresolvedTable", "UnresolvedView"}
+# Origin(line, startPosition, startIndex, stopIndex, sqlText, ...)
+_ORIGIN = re.compile(r"Origin\((?:Some\(\d+\)|None),(?:Some\(\d+\)|None),Some\((\d+)\),Some\((\d+)\)")
+_NAME_PART = re.compile(r'\s*(?:"((?:[^"\\]|""|\\.)*)"|`((?:[^`]|``)*)`|(\w+))')
+_DOT = re.compile(r"\s*\.")
+
+
+def parse_query(spark, sql: str, scope=nullcontext) -> QueryParse:
+    """``sql`` parsed by the session's own parser: ``parsePlan`` and
+    ``toJSON`` (two py4j calls) in ``scope``, plus an origin read for each
+    relation, time travel or ``search_index()`` call a rewrite may splice;
+    a text parsed before makes no call. Raises Spark's ParseException."""
+    with _PARSED_LOCK:
+        if (hit := _PARSED.get(sql)) is not None:
+            _PARSED.move_to_end(sql)
+            return hit
+    with scope():
+        plan = _parse_plan(spark, sql)
+        q = _read_plan(sql, plan, json.loads(plan.toJSON()))
+    with _PARSED_LOCK:
+        _PARSED[sql] = q
+        if len(_PARSED) > _PARSED_MAX:
+            _PARSED.popitem(last=False)
+    return q
+
+
+def scan_spans(spark, q: QueryParse, scope=nullcontext) -> tuple:
+    """The spans of ``q.scan``'s relation and WHERE (a second parse)."""
+    s = q.scan
+    if s.spans is None:
+        with scope():
+            plan = _parse_plan(spark, q.sql)
+            s.spans = (s.relation.span or _span(plan, s.paths[0]),
+                       s.paths[1] and _span(plan, s.paths[1]))
+    return s.spans
+
+
+def _parse_plan(spark, sql: str):
+    """The unresolved plan of ``sql``. The parser reads the conf of the
+    thread's active session, which a new JVM thread lacks until set."""
+    jss = spark._jsparkSession
+    if getattr(_THREAD, "session", None) is not jss:
+        spark._jvm.SparkSession.setActiveSession(jss)
+        _THREAD.session = jss
+    if (jparser := getattr(spark, "_sfs_sql_parser", None)) is None:
+        jparser = spark._sfs_sql_parser = jss.sessionState().sqlParser()
+    return jparser.parsePlan(sql)
+
+
+def _read_plan(sql: str, plan, tree: list) -> QueryParse:
+    rels, travels, calls, ctes, funcs, top = [], [], [], set(), set(), []
+    subqueries = False
+    for node, path, parent in _nodes(tree):
+        cls = _cls(node)
+        if all(k == "c" for k, _ in path):
+            top.append((cls, node, path))
+        subqueries |= "plan" in node or "logicalPlan" in node
+        if cls in _RELATIONS and parent != "RelationTimeTravel":
+            rels.append(_relation(sql, plan, node["multipartIdentifier"], path))
+        elif cls == "RelationTimeTravel":
+            rel = _relation(sql, plan, node["relation"][0]["multipartIdentifier"],
+                            (*path, ("f", "relation")), spanned=True)
+            rels.append(rel)
+            version, ts = str(node.get("version")), _literal(node.get("timestamp"))
+            spec = f"version={version}" if version.isdigit() else ts
+            if isinstance(spec, str):
+                span = (rel.span[0], _span(plan, path)[1])
+                travels.append(TimeTravel(rel, spec, span, parent == "SubqueryAlias"))
+        elif cls == "UnresolvedTableValuedFunction":
+            name, args = _parts(node["name"]), [_literal(a) for a in node["functionArgs"]]
+            if name == ["search_index"] and [type(a) for a in args] == [str, str, str, int]:
+                calls.append(SearchCall(*args, _call_span(sql, plan, path, 4)))
+            elif len(args) == 1 and isinstance(args[0], str):
+                span = _call_span(sql, plan, path, 1)
+                parts, quoted, end = _name_parts(sql, span[0])
+                rel = Relation(tuple(parts), tuple(quoted), (span[0], end))
+                rels.append(rel)
+                travels.append(TimeTravel(rel, args[0], span, parent == "SubqueryAlias"))
+        elif cls == "UnresolvedWith":
+            ctes.update(c["_1"].lower() for c in node["cteRelations"])
+        elif cls == "UnresolvedFunction":
+            funcs.add(_parts(node["nameParts"])[-1].lower())
+    one = len(rels) == 1 and not (travels or calls or ctes or subqueries)
+    return QueryParse(sql, tuple(rels), tuple(travels), tuple(calls), frozenset(ctes),
+                      frozenset(funcs), _scan(rels[0], top) if one else None)
+
+
+def _scan(rel: Relation, top: list) -> Scan | None:
+    """The ``Scan`` of a query whose one relation is the only leaf of its
+    main plan (``top``, in pre-order: a chain down to the relation)."""
+    classes = [c for c, *_ in top]
+    if [n["num-children"] for _c, n, _p in top].count(0) != 1 or classes[-1] not in _RELATIONS:
+        return None
+    i, alias = len(top) - 1, None
+    if classes[i - 1:i] == ["SubqueryAlias"]:
+        i -= 1
+        alias = top[i][1]["identifier"]["name"]
+    where = top[i - 1] if i and classes[i - 1] == "Filter" else None
+    limit = None
+    if classes[:3] == ["GlobalLimit", "LocalLimit", "Project"] and i == 3 + bool(where):
+        columns = ([_cls(n) for n in e] for e in top[2][1]["projectList"])
+        if all(c in (["UnresolvedAttribute"], ["UnresolvedStar"], ["Alias", "UnresolvedAttribute"])
+               for c in columns):
+            limit = _literal(top[0][1]["limitExpr"])
+    if where is None and type(limit) is not int:
+        return None
+    cond = where and (*where[2], ("f", "condition"))
+    return Scan(rel, alias, where is not None, limit if type(limit) is int else None,
+                (top[-1][2], cond))
+
+
+def _cls(node: dict) -> str:
+    return node["class"].rsplit(".", 1)[-1]
+
+
+def _nodes(tree: list, path: tuple = (), owner: str | None = None) -> list:
+    """(node, path, parent class) of each node of a ``toJSON`` tree in
+    pre-order, and of the trees its fields hold (subqueries, CTE bodies,
+    expressions). A path steps to a child ``("c", i)``, a field
+    ``("f", name)`` or into a sequence ``("i", i)``, as ``_span`` does."""
+    out = []
+
+    def visit(i: int, path: tuple, parent: str | None) -> int:
+        node = tree[i]
+        out.append((node, path, parent))
+        for k, v in node.items():
+            for sub, p in _trees(v, (*path, ("f", k))):
+                out.extend(_nodes(sub, p, _cls(node)))
+        j = i + 1
+        for c in range(node["num-children"]):
+            j = visit(j, (*path, ("c", c)), _cls(node))
+        return j
+
+    visit(0, path, owner)
+    return out
+
+
+def _trees(value, path: tuple):
+    """The ``toJSON`` trees inside one field value, with their paths."""
+    if isinstance(value, list) and value and isinstance(value[0], dict) and "class" in value[0]:
+        yield value, path
+    elif isinstance(value, (list, dict)):
+        items = value.items() if isinstance(value, dict) else enumerate(value)
+        for k, v in items:
+            yield from _trees(v, (*path, ("f" if isinstance(value, dict) else "i", k)))
+
+
+def _literal(tree):
+    """The str, int or float value of a ``toJSON`` tree that is one literal."""
+    if not tree or len(tree) != 1 or _cls(tree[0]) != "Literal":
+        return None
+    v, t = tree[0].get("value"), tree[0].get("dataType")
+    if v is None or t == "string":
+        return v
+    return int(v) if t in ("integer", "long", "short", "byte") else float(v) if t in ("double", "float") else None
+
+
+def _parts(text: str) -> list[str]:
+    """The parts of ``[a, b]``, a name as ``toJSON`` writes it."""
+    return text[1:-1].split(", ")
+
+
+def _relation(sql: str, plan, name: str, path: tuple, spanned: bool = False) -> Relation:
+    """Parts and quoting come from the span's text (the JSON form is
+    ambiguous for a part holding ", "); a quoted plain name is spelled
+    verbatim, so one absent so was unquoted and needs no span."""
+    parts = _parts(name)
+    if not spanned and len(parts) == 1 and _PLAIN.fullmatch(parts[0]) and not (
+        f'"{parts[0]}"' in sql or f"`{parts[0]}`" in sql
+    ):
+        return Relation(tuple(parts), (False,), None)
+    start, end = _span(plan, path)
+    got, quoted, stop = _name_parts(sql, start)
+    if "[" + ", ".join(got) + "]" != name or stop != end:  # a comment inside
+        got, quoted = parts, [not _PLAIN.fullmatch(p) for p in parts]
+    return Relation(tuple(got), tuple(quoted), (start, end))
+
+
+def _name_parts(sql: str, i: int) -> tuple[list[str], list[bool], int]:
+    """The dotted name starting at ``sql[i]``: its parts unquoted, whether
+    each was quoted (``"..."`` or a backtick), and where it ends."""
+    parts, quoted = [], []
+    while (m := _NAME_PART.match(sql, i)) is not None:
+        dq, bt, bare = m.groups()
+        parts.append(dq.replace('""', '"') if dq is not None
+                     else bt.replace("``", "`") if bt is not None else bare)
+        quoted.append(bare is None)
+        i = m.end()
+        if (d := _DOT.match(sql, i)) is None:
+            break
+        i = d.end()
+    return parts, quoted, i
+
+
+def _call_span(sql: str, plan, path: tuple, nargs: int) -> tuple[int, int]:
+    """A table-valued call through its ``)`` (its origin spans an alias)."""
+    last = _span(plan, (*path, ("f", "functionArgs"), ("i", nargs - 1)))[1]
+    return _span(plan, path)[0], sql.index(")", last) + 1
+
+
+def _span(plan, path: tuple) -> tuple[int, int]:
+    """``[start, end)`` of the node at ``path`` (``_nodes``) under
+    ``plan``, from its parse origin (whose stop index is inclusive)."""
+    obj = plan
+    for kind, arg in path:
+        obj = (_jcall(obj, "children").apply(arg) if kind == "c"
+               else _jcall(obj, arg) if kind == "f" else _jcall(obj, "apply", arg))
+    m = _ORIGIN.match(_jcall(obj, "origin").toString())
+    return int(m.group(1)), int(m.group(2)) + 1
+
+
+def _jcall(obj, method: str, *args):
+    """``obj.method(*args)``, through ``obj.get()`` when ``obj`` is a Scala
+    Option (``toJSON`` writes Some(x) as x)."""
+    try:
+        return getattr(obj, method)(*args)
+    except Py4JError:
+        return getattr(obj.get(), method)(*args)
+
+
+def extract_time_travel(q: QueryParse) -> list[TimeTravel]:
+    """The time travels of a parsed query (reference src/version.rs:28-106)."""
+    return list(q.travels)
+
+
+def splice(sql: str, edits) -> str:
+    """``sql`` with each ``((start, end), text)`` of ``edits`` (which do
+    not overlap) in place of its span."""
+    out, i = [], 0
+    for (a, b), text in sorted(edits):
+        out += [sql[i:a], text]
+        i = b
+    return "".join(out) + sql[i:]
 
 
 # --------------------------------------------------------------------------
@@ -769,7 +991,7 @@ def parse_statement(sql: str) -> Statement:
 
 def _parse_columns(body: str) -> list[tuple[str, str]]:
     cols = []
-    for item in _split_top(body):
+    for item in _split_top(body, nest="()<>"):
         m = re.match(rf"^({_IDENT}|\"[^\"]+\")\s+(.+)$", item.strip(), re.DOTALL)
         if not m:
             raise ParseError(f"bad column definition: {item!r}")

@@ -97,23 +97,6 @@ class _Parser:
             raise ValueError(f"expected {kind} {val}, got {k} {v}")
         return v
 
-    def parse_or(self):
-        left = self.parse_and()
-        while self.peek() == ("kw", "AND") or self.peek() == ("kw", "OR"):
-            if self.peek() == ("kw", "OR"):
-                self.next()
-                left = BoolOp("or", [left, self.parse_and()])
-            else:
-                break
-        return left
-
-    def parse_and(self):
-        left = self.parse_unary()
-        while self.peek() == ("kw", "AND"):
-            self.next()
-            left = BoolOp("and", [left, self.parse_unary()])
-        return left
-
     def parse_unary(self):
         if self.peek() == ("kw", "NOT"):
             self.next()

@@ -255,31 +255,34 @@ class TestBindingCost:
         other = spark.newSession()
         assert bindings.for_session(other) is not bindings.for_session(spark)
 
-    def test_referenced_names_over_detects(self):
-        """Names count wherever the SQL text outside string literals spells
-        them (a column or alias spelled like a table too); a literal is a
-        value, ``''`` escapes included."""
-        sql = (
-            "SELECT `__sfs__public__t`.x, T2.y, `x-y` FROM `__sfs__public__t`, T2 "
+    def test_reads_follow_spark_parse(self, ctx):
+        """``_reads`` counts what Spark's parser reads as a relation: a
+        literal (``''`` and ``\\'`` escapes included), a comment (nested,
+        or a ``--`` one continued by a backslash), a hint or a column is
+        not a read, and a name after them is."""
+        for n in ("a", "b", "c", "d", "t2", "t3", "t4"):
+            ctx.execute(f"CREATE TABLE {n} (x INT, y INT, name STRING, n STRING)")
+
+        def reads(sql):
+            return {e.name for e, _snap in ctx._reads(sql).tables.values()}
+
+        assert reads(
+            "SELECT `__sfs__public__a`.x, T2.y, b FROM `__sfs__public__a`, T2 "
             "WHERE name = 't3' AND 'it''s t4' <> 'x+y'"
-        )
-        names = ["__sfs__public__t", "t2", "x-y", "t3", "t4", "x+y"]
-        assert bindings.referenced_names(sql, names) == {"__sfs__public__t", "t2", "x-y"}
+        ) == {"a", "t2"}
+        assert reads("SELECT x /* don't */ FROM a") == {"a"}
+        assert reads("SELECT x /* b /* c */ d */ FROM a") == {"a"}
+        assert reads("SELECT x FROM a WHERE n <> 'it\\'s b' UNION SELECT x FROM c") == {"a", "c"}
+        assert reads("SELECT r'C:\\' FROM a") == {"a"}
+        assert reads("SELECT x -- it's b \\\n c\nFROM a") == {"a"}
+        assert reads("SELECT /*+ BROADCAST(b) */ x FROM a") == {"a"}
 
     def test_scan_quotes_follows_spark_lexer(self):
-        """Comments and escaped quotes end where Spark's lexer ends them,
-        so a name after them stays code; ``/*+`` hints are code."""
+        """Quoted identifiers end where Spark's lexer ends them, and
+        statements split at the semicolons outside literals and
+        comments."""
         from seafowl_spark.engine.parser import scan_quotes, split_statements
 
-        def code(sql):
-            return bindings.referenced_names(sql, ["a", "b", "c", "d"])
-
-        assert code("SELECT x /* don't */ FROM a") == {"a"}
-        assert code("SELECT x /* b /* c */ d */ FROM a") == {"a"}
-        assert code("SELECT x FROM a WHERE n <> 'it\\'s b' UNION SELECT x FROM c") == {"a", "c"}
-        assert code("SELECT r'C:\\' FROM a") == {"a"}
-        assert code("SELECT x -- it's b \\\n c\nFROM a") == {"a"}
-        assert code("SELECT /*+ BROADCAST(b) */ x FROM a") == {"a", "b"}
         sql = 'SELECT "a\\"b", `c``d` FROM a'
         assert [(k, sql[i:j]) for k, i, j in scan_quotes(sql)] == [
             ("dquote", '"a\\"b"'), ("btick", "`c``d`"),
