@@ -18,6 +18,7 @@ before parsing — same effect as the reference's schema providers.
 
 from __future__ import annotations
 
+import functools
 import itertools
 import json
 import os
@@ -100,12 +101,26 @@ _LAZY_NAMES = {
 
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
-# what the statements _meta_query answers read (Spark would parse DESCRIBE
-# HISTORY t as column t of a table HISTORY)
-_META_READS = re.compile(
-    r"(?is)\s*(?:explain\s+analyze\s+(?P<q>.+)|(?:describe(?:\s+(?:history|detail"
-    r"|table))?|show\s+(?:columns\s+(?:from|in)|create\s+table))\s+(?P<t>[\w.]+)\s*;?\s*)"
-)
+# the statements _meta_query answers, each with what it reads (the query
+# of EXPLAIN ANALYZE, else a table; Spark would parse DESCRIBE HISTORY t as
+# column t of a table HISTORY)
+_META = {
+    "tables": r"show tables()",
+    "history": r"describe history ([\w.]+)",
+    "columns": r"(?:show columns (?:from|in)|describe(?: table)?) ([\w.]+)",
+    "analyze": r"explain analyze (.+)",
+    "detail": r"describe detail ([\w.]+)",
+    "create": r"show create table ([\w.]+)",
+}
+
+
+def _meta_form(sql: str) -> tuple[str | None, str | None]:
+    """(``_META`` kind, what it reads) of ``sql``, or (None, None)."""
+    s = re.sub(r"\s+", " ", sql.strip()).rstrip(";")
+    for kind, pattern in _META.items():
+        if m := re.fullmatch(f"(?is){pattern}", s):
+            return kind, m.group(1)
+    return None, None
 
 
 def _plain_lower(part: str) -> bool:
@@ -257,6 +272,9 @@ class SeafowlContext:
         self._lazy_views: dict = {}
         # whether this context's statement holds the ANSI dialect scope
         self._dialect_depth = 0
+        # the last 256 parses by text, Python values only: a view's SQL,
+        # or a GET's ETag and then its execution, parse once
+        self._parse = functools.lru_cache(256)(self._parse_text)
         # Statement execution is serialized: the threaded frontends share one
         # context, and view refresh / search-path / catalog writes are shared
         # state. Heavy work stays parallel — execute() only ANALYZES (plans
@@ -820,15 +838,11 @@ class SeafowlContext:
                 edits.append((rel.span, f"`{view}`"))
         return parser.splice(sql, edits)
 
-    def _parse(self, sql: str) -> parser.QueryParse:
-        """``sql`` parsed by the session's parser (``parser.parse_query``,
-        cached by text), in the engine's dialect."""
-        return parser.parse_query(self.spark, sql, self._parse_scope)
-
-    @contextmanager
-    def _parse_scope(self):
+    def _parse_text(self, sql: str, spans: bool = False) -> parser.QueryParse:
+        """``sql`` parsed by the session's parser (``parser.parse_query``)
+        in the engine's dialect; ``self._parse`` caches it by text."""
         with self._session_lock(), self._ansi_dialect():
-            yield
+            return parser.parse_query(self.spark, sql, spans)
 
     # ------------------------------------------------------------ functions
 
@@ -1003,12 +1017,12 @@ class SeafowlContext:
         name = s and self._target(s.relation, mapping)
         try:
             df = name and self._pruned_frame(q, name)
+            if df is None:
+                return []
+            span = self._parse(q.sql, True).scan.spans[0]
+            alias, edit = self._bind_scan_alias(span, s.alias is not None, name, df)
         except Exception:  # best-effort: the full view is already registered
-            df = None
-        if df is None:
             return []
-        span = parser.scan_spans(self.spark, q, self._parse_scope)[0]
-        alias, edit = self._bind_scan_alias(span, s.alias is not None, name, df)
         aliases.append(alias)
         return [edit]
 
@@ -1070,9 +1084,10 @@ class SeafowlContext:
     def _scan_where(self, q: parser.QueryParse) -> str:
         """The WHERE text of ``q.scan``, without the column qualifiers
         that name its relation (the stats evaluators read bare names)."""
-        rel, cond = parser.scan_spans(self.spark, q, self._parse_scope)
-        pred = q.sql[cond[0]:cond[1]]
-        for name in filter(None, (q.scan.alias, q.sql[rel[0]:rel[1]], q.scan.relation.parts[-1])):
+        s = self._parse(q.sql, True).scan
+        (r0, r1), (c0, c1) = s.spans
+        pred = q.sql[c0:c1]
+        for name in filter(None, (s.alias, q.sql[r0:r1], s.relation.parts[-1])):
             pred = re.sub(rf"(?<![\w.`])`?{re.escape(name)}`?\.", "", pred)
         return pred
 
@@ -1131,8 +1146,8 @@ class SeafowlContext:
         """SHOW TABLES / SHOW COLUMNS / DESCRIBE against our catalog (A20;
         the reference delegates these to DataFusion's information_schema,
         logical.rs:109-117 — ours answer from the metastore)."""
-        s = re.sub(r"\s+", " ", sql.strip()).rstrip(";")
-        if re.fullmatch(r"(?i)show tables", s):
+        kind, arg = _meta_form(sql)
+        if kind == "tables":
             rows = [
                 Row(table_schema=e.schema, table_name=e.name)
                 for e in self.catalog.tables(self.database)
@@ -1143,11 +1158,10 @@ class SeafowlContext:
             return self.spark.createDataFrame(
                 rows, "table_schema string, table_name string"
             )
-        m = re.fullmatch(r"(?i)describe history ([\w.]+)", s)
-        if m:
+        if kind == "history":
             # Delta-parity commit history (our extension; complements
             # system.table_versions with per-commit add/remove counts)
-            t = self.delta_table(m.group(1))
+            t = self.delta_table(arg)
             rows = [
                 Row(
                     version=c.version,
@@ -1163,17 +1177,15 @@ class SeafowlContext:
                 "version long, timestamp_ms long, operation string, "
                 "n_adds long, n_removes long",
             )
-        m = re.fullmatch(r"(?i)(?:show columns (?:from|in)|describe(?: table)?) ([\w.]+)", s)
-        if m:
+        if kind == "columns":
             rows = [
                 Row(column_name=f.name, data_type=f.dataType.simpleString(), nullable=True)
-                for f in self.delta_table(m.group(1)).schema().fields
+                for f in self.delta_table(arg).schema().fields
             ]
             return self.spark.createDataFrame(
                 rows, "column_name string, data_type string, nullable boolean"
             )
-        m = re.match(r"(?is)^explain\s+analyze\s+(.+)$", s)
-        if m:
+        if kind == "analyze":
             # DataFusion-dialect parity (the reference passes EXPLAIN
             # ANALYZE through to DataFusion): EXECUTE the query, then
             # report the FINAL plan — under AQE that is the re-planned
@@ -1181,7 +1193,7 @@ class SeafowlContext:
             # which plain EXPLAIN cannot show — plus row/time totals.
             import time as _time
 
-            inner = self._exec_query(parser.Statement("query", m.group(1)))
+            inner = self._exec_query(parser.Statement("query", arg))
             qe = inner._jdf.queryExecution()
             t0 = _time.perf_counter()
             # execute the query's OWN physical plan (an RDD count — no
@@ -1201,10 +1213,9 @@ class SeafowlContext:
             return self.spark.createDataFrame(
                 [Row(plan_line=ln) for ln in lines], "plan_line string"
             )
-        m = re.fullmatch(r"(?i)describe detail ([\w.]+)", s)
-        if m:
+        if kind == "detail":
             # Delta-parity one-row table summary from the live snapshot
-            entry = self._resolve(m.group(1))
+            entry = self._resolve(arg)
             t = DeltaLiteTable(self.spark, self.table_root(entry))
             snap = t.snapshot()
             rows = [
@@ -1226,9 +1237,8 @@ class SeafowlContext:
                 "num_files long, size_bytes long, num_rows long, "
                 "num_deletion_vectors long, properties string",
             )
-        m = re.fullmatch(r"(?i)show create table ([\w.]+)", s)
-        if m:
-            entry = self._resolve(m.group(1))
+        if kind == "create":
+            entry = self._resolve(arg)
             t = DeltaLiteTable(self.spark, self.table_root(entry))
             snap = t.snapshot()
             from .matview import MATVIEW_PROP, MvSpec
@@ -1600,7 +1610,7 @@ class SeafowlContext:
         # time-travel clauses pin a snapshot through a code path raw
         # reload expansion does not run — reject rather than create a
         # view that can never re-expand
-        if parser.extract_time_travel(q):
+        if q.travels:
             raise ExecutionError(
                 "a view cannot use time travel in its defining query "
                 "(materialize the snapshot with CTAS instead)"
@@ -2952,9 +2962,9 @@ class SeafowlContext:
                 out.tables[e.uuid] = (e, t.snapshot())
             return out.tables[e.uuid][1]
 
-        m = _META_READS.fullmatch(sql)
-        if m:
-            sql = m.group("q") or f"TABLE {m.group('t')}"
+        kind, arg = _meta_form(sql)
+        if arg:
+            sql = arg if kind == "analyze" else f"TABLE {arg}"
         todo = [(self._parse(sql), True)]
         while todo:
             q, top = todo.pop()

@@ -14,13 +14,8 @@ from __future__ import annotations
 
 import json
 import re
-import threading
-from collections import OrderedDict
-from contextlib import nullcontext
 from dataclasses import dataclass, field
 from typing import Any
-
-from py4j.protocol import Py4JError
 
 READ_PREFIXES = ("select", "with", "values", "explain", "show", "describe", "table")
 
@@ -283,20 +278,19 @@ class SearchCall:
     span: tuple[int, int]
 
 
-@dataclass
+@dataclass(frozen=True)
 class Scan:
     """A query that is one SELECT over one relation, with no join, set
     operation, CTE or subquery: its alias, whether a WHERE (a Filter)
     sits right above the relation, and ``limit`` when it is only plain
     columns, that WHERE and ``LIMIT n``. ``spans`` (the relation's, the
-    WHERE's) are read on first use (``scan_spans``)."""
+    WHERE's or None) are read only when asked for (``parse_query``)."""
 
     relation: Relation
     alias: str | None
     where: bool
     limit: int | None
-    paths: tuple[tuple, tuple | None]
-    spans: tuple | None = None
+    spans: tuple | None
 
 
 @dataclass(frozen=True)
@@ -315,64 +309,36 @@ class QueryParse:
     scan: Scan | None
 
 
-# parses by text, Python values only: a view's SQL, or a GET's ETag and
-# then its execution, parse once
-_PARSED: OrderedDict[str, QueryParse] = OrderedDict()
-_PARSED_MAX = 256
-_PARSED_LOCK = threading.Lock()
-_THREAD = threading.local()
-
-_PLAIN = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+_PLAIN = re.compile(_IDENT)
 _RELATIONS = {"UnresolvedRelation", "UnresolvedTableOrView", "UnresolvedTable", "UnresolvedView"}
+# the fields holding a tree that Spark keeps in a Scala Option (toJSON
+# writes Some(x) as x): a path steps into them with ("o", name)
+_OPTIONS = {("Join", "condition"), ("LateralJoin", "condition"), ("CaseWhen", "elseValue"),
+            ("UnresolvedFunction", "filter"), ("Unpivot", "values"), ("Unpivot", "ids"),
+            ("RelationTimeTravel", "version"), ("RelationTimeTravel", "timestamp")}
 # Origin(line, startPosition, startIndex, stopIndex, sqlText, ...)
 _ORIGIN = re.compile(r"Origin\((?:Some\(\d+\)|None),(?:Some\(\d+\)|None),Some\((\d+)\),Some\((\d+)\)")
 _NAME_PART = re.compile(r'\s*(?:"((?:[^"\\]|""|\\.)*)"|`((?:[^`]|``)*)`|(\w+))')
 _DOT = re.compile(r"\s*\.")
 
 
-def parse_query(spark, sql: str, scope=nullcontext) -> QueryParse:
-    """``sql`` parsed by the session's own parser: ``parsePlan`` and
-    ``toJSON`` (two py4j calls) in ``scope``, plus an origin read for each
-    relation, time travel or ``search_index()`` call a rewrite may splice;
-    a text parsed before makes no call. Raises Spark's ParseException."""
-    with _PARSED_LOCK:
-        if (hit := _PARSED.get(sql)) is not None:
-            _PARSED.move_to_end(sql)
-            return hit
-    with scope():
-        plan = _parse_plan(spark, sql)
-        q = _read_plan(sql, plan, json.loads(plan.toJSON()))
-    with _PARSED_LOCK:
-        _PARSED[sql] = q
-        if len(_PARSED) > _PARSED_MAX:
-            _PARSED.popitem(last=False)
-    return q
+def parse_query(spark, sql: str, spans: bool = False) -> QueryParse:
+    """``sql`` parsed by the session's own parser, in the dialect the
+    caller has set: ``parsePlan`` and ``toJSON``, plus an origin read for
+    each relation, time travel or ``search_index()`` call a rewrite may
+    splice and, with ``spans``, for a ``Scan``'s relation and WHERE.
+    Raises Spark's ParseException."""
+    if (jp := getattr(spark, "_sfs_parser", None)) is None:
+        jss = spark._jsparkSession
+        jp = spark._sfs_parser = (spark._jvm.SparkSession.setActiveSession, jss,
+                                  jss.sessionState().sqlParser())
+    activate, jss, jparser = jp
+    activate(jss)  # the parser reads the conf of the thread's active session
+    plan = jparser.parsePlan(sql)
+    return _read_plan(sql, plan, json.loads(plan.toJSON()), spans)
 
 
-def scan_spans(spark, q: QueryParse, scope=nullcontext) -> tuple:
-    """The spans of ``q.scan``'s relation and WHERE (a second parse)."""
-    s = q.scan
-    if s.spans is None:
-        with scope():
-            plan = _parse_plan(spark, q.sql)
-            s.spans = (s.relation.span or _span(plan, s.paths[0]),
-                       s.paths[1] and _span(plan, s.paths[1]))
-    return s.spans
-
-
-def _parse_plan(spark, sql: str):
-    """The unresolved plan of ``sql``. The parser reads the conf of the
-    thread's active session, which a new JVM thread lacks until set."""
-    jss = spark._jsparkSession
-    if getattr(_THREAD, "session", None) is not jss:
-        spark._jvm.SparkSession.setActiveSession(jss)
-        _THREAD.session = jss
-    if (jparser := getattr(spark, "_sfs_sql_parser", None)) is None:
-        jparser = spark._sfs_sql_parser = jss.sessionState().sqlParser()
-    return jparser.parsePlan(sql)
-
-
-def _read_plan(sql: str, plan, tree: list) -> QueryParse:
+def _read_plan(sql: str, plan, tree: list, spans: bool) -> QueryParse:
     rels, travels, calls, ctes, funcs, top = [], [], [], set(), set(), []
     subqueries = False
     for node, path, parent in _nodes(tree):
@@ -407,10 +373,10 @@ def _read_plan(sql: str, plan, tree: list) -> QueryParse:
             funcs.add(_parts(node["nameParts"])[-1].lower())
     one = len(rels) == 1 and not (travels or calls or ctes or subqueries)
     return QueryParse(sql, tuple(rels), tuple(travels), tuple(calls), frozenset(ctes),
-                      frozenset(funcs), _scan(rels[0], top) if one else None)
+                      frozenset(funcs), _scan(rels[0], top, plan if spans else None) if one else None)
 
 
-def _scan(rel: Relation, top: list) -> Scan | None:
+def _scan(rel: Relation, top: list, plan) -> Scan | None:
     """The ``Scan`` of a query whose one relation is the only leaf of its
     main plan (``top``, in pre-order: a chain down to the relation)."""
     classes = [c for c, *_ in top]
@@ -429,9 +395,9 @@ def _scan(rel: Relation, top: list) -> Scan | None:
             limit = _literal(top[0][1]["limitExpr"])
     if where is None and type(limit) is not int:
         return None
-    cond = where and (*where[2], ("f", "condition"))
-    return Scan(rel, alias, where is not None, limit if type(limit) is int else None,
-                (top[-1][2], cond))
+    spans = plan is not None and (rel.span or _span(plan, top[-1][2]),
+                                  where and _span(plan, (*where[2], ("f", "condition"))))
+    return Scan(rel, alias, where is not None, limit if type(limit) is int else None, spans or None)
 
 
 def _cls(node: dict) -> str:
@@ -442,14 +408,15 @@ def _nodes(tree: list, path: tuple = (), owner: str | None = None) -> list:
     """(node, path, parent class) of each node of a ``toJSON`` tree in
     pre-order, and of the trees its fields hold (subqueries, CTE bodies,
     expressions). A path steps to a child ``("c", i)``, a field
-    ``("f", name)`` or into a sequence ``("i", i)``, as ``_span`` does."""
+    ``("f", name)`` (``"o"`` if an Option) or into a sequence ``("i", i)``."""
     out = []
 
     def visit(i: int, path: tuple, parent: str | None) -> int:
         node = tree[i]
         out.append((node, path, parent))
         for k, v in node.items():
-            for sub, p in _trees(v, (*path, ("f", k))):
+            step = ("o" if (_cls(node), k) in _OPTIONS else "f", k)
+            for sub, p in _trees(v, (*path, step)):
                 out.extend(_nodes(sub, p, _cls(node)))
         j = i + 1
         for c in range(node["num-children"]):
@@ -528,19 +495,12 @@ def _span(plan, path: tuple) -> tuple[int, int]:
     ``plan``, from its parse origin (whose stop index is inclusive)."""
     obj = plan
     for kind, arg in path:
-        obj = (_jcall(obj, "children").apply(arg) if kind == "c"
-               else _jcall(obj, arg) if kind == "f" else _jcall(obj, "apply", arg))
-    m = _ORIGIN.match(_jcall(obj, "origin").toString())
+        obj = (obj.children().apply(arg) if kind == "c" else obj.apply(arg) if kind == "i"
+               else getattr(obj, arg)())
+        obj = obj.get() if kind == "o" else obj
+    if (m := _ORIGIN.match(origin := obj.origin().toString())) is None:
+        raise ParseError(f"no source span in {origin}")
     return int(m.group(1)), int(m.group(2)) + 1
-
-
-def _jcall(obj, method: str, *args):
-    """``obj.method(*args)``, through ``obj.get()`` when ``obj`` is a Scala
-    Option (``toJSON`` writes Some(x) as x)."""
-    try:
-        return getattr(obj, method)(*args)
-    except Py4JError:
-        return getattr(obj.get(), method)(*args)
 
 
 def extract_time_travel(q: QueryParse) -> list[TimeTravel]:

@@ -10,7 +10,7 @@ import random
 import pytest
 from pyspark.errors import AnalysisException
 
-from seafowl_spark.engine import bindings, parser
+from seafowl_spark.engine import bindings
 from seafowl_spark.engine.deltalite import DeltaLiteTable
 
 SEED = 1701
@@ -106,7 +106,7 @@ def test_reads_match_the_analyzed_plan(ctx, monkeypatch):
         got = {e.name for e, _snap in ctx._reads(sql).tables.values()}
         travels.clear()
         want = _analyzed_reads(ctx, ctx.execute(sql), travels)
-        shadows = {c for c in parser.parse_query(ctx.spark, sql).ctes}
+        shadows = set(ctx._parse(sql).ctes)
         assert want <= got and got - want <= shadows, (
             f"seed {SEED}: {sql!r} read {sorted(got)}, Spark resolved {sorted(want)}"
         )
