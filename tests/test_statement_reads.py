@@ -8,6 +8,7 @@ import os
 import random
 
 import pytest
+from py4j.protocol import Py4JError
 from pyspark.errors import AnalysisException
 
 from seafowl_spark.engine import bindings
@@ -150,6 +151,25 @@ def test_bucketed_point_read_prunes_once(ctx, monkeypatch):
     df = ctx.execute("SELECT * FROM bt WHERE pk = 5")
     assert [tuple(r) for r in df.collect()] == [(5, "v5")]
     assert calls == ["pk = 5"]
+
+
+def test_scan_pruning_falls_back_when_spans_fail(ctx, monkeypatch):
+    """Scan pruning is best-effort: when the relation's span cannot be
+    read once a pruned frame is built (as for a remote table's pushed
+    LIMIT), the statement reads the bound view instead."""
+    ctx.execute("CREATE TABLE sp (x INT)")
+    ctx.execute("INSERT INTO sp VALUES (1), (2)")
+    parse = ctx._parse
+
+    def no_spans(sql, spans=False):
+        if spans:
+            raise Py4JError("no origin")
+        return parse(sql)
+
+    monkeypatch.setattr(ctx, "_parse", no_spans)
+    monkeypatch.setattr(type(ctx), "_pruned_frame", lambda self, q, name: self.spark.range(0))
+    rows = ctx.execute("SELECT x FROM sp WHERE x > 0 LIMIT 5").collect()
+    assert sorted(r.x for r in rows) == [1, 2]
 
 
 def test_driver_held_file_metadata(ctx):
